@@ -163,7 +163,7 @@ def _subset_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     # re-create from pandas: the files backing the lazy plan are gone
-    # once the temp dir is removed (same pattern as _mode_build_gate)
+    # once the temp dir is removed (same pattern as _build_index_gate)
     return spark.createDataFrame(pdf, "doc_id long, text_len long")
 
 
@@ -307,13 +307,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "block_meta": lambda spark, sf: lexicon_from_blocks(_block_index(spark, sf)),
         # S11: first-N corpus subset written to parquet and read back
         "subset_extract": _subset_extract,
-        # opt-in pipeline shapes under the hard gate (VERDICT r4 #4):
-        # full build_index in each mode, written blocks decoded back to
-        # postings — same oracle as tf_postings
-        "build_fused_postings": _mode_build_gate("fused", "sql"),
-        "build_mapcombine_postings": _mode_build_gate("mapcombine", "pandas"),
-        "build_sqlenc_postings": _mode_build_gate("sqlenc", "sql"),
-        "build_split_tokenizer_postings": _mode_build_gate("agg", "split"),
+        # the build as users run it: default build_index, written blocks
+        # decoded back to postings — same oracle as tf_postings
+        "build_index_postings": _build_index_gate,
         # J3/J5/O6: on-disk index + block-max WAND serving path
         "wand_top10": _wand_top10,
         # J3/A8: same physical path, AND mode (galloping intersection
@@ -409,45 +405,30 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _mode_build_gate(mode: str, tokenizer: str):
-    """Hard-gate a full build_index under an opt-in pipeline shape
-    (VERDICT r4 #4: WSE_BUILD_MODE / WSE_TOKENIZER variants were
-    pytest-differential only and could silently rot). The entire index
-    builds in that mode into a temp dir; the written blocks decode back
-    to (term, doc_id, tf) and hash-compare against the SAME tf oracle
-    as tf_postings — codec, sharding, and the mode's whole pipeline sit
-    on the compared path."""
+def _build_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-gate the default build_index (pandas tokenizer, 4 shards):
+    the entire index builds into a temp dir, the written blocks decode
+    back to (term, doc_id, tf) and hash-compare against the SAME tf
+    oracle as tf_postings — tokenizer, postings aggregation, salted
+    blocks exchange, codec and sharding all sit on the compared path."""
+    import shutil
+    import tempfile
 
-    def gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
+    from web_search_engine_spark.plans.build_index import build_index
 
-        import web_search_engine_spark.plans.build_index as B
-
-        tmp = tempfile.mkdtemp(prefix=f"mode_gate_{mode}_")
-        saved = B._BUILD_MODE
-        B._BUILD_MODE = mode
-        try:
-            # dense rank over the existing dense doc_id = identity map
-            src = _docs(spark, sf_dir).select(
-                F.col("doc_id").alias("orig_id"), "text"
-            )
-            B.build_index(
-                spark, src, tmp,
-                key_cols=("orig_id",), text_col="text",
-                tokenizer=tokenizer, num_shards=4,
-            )
-            pdf = blocks_to_postings(
-                spark.read.parquet(f"{tmp}/blocks")
-            ).toPandas()
-        finally:
-            B._BUILD_MODE = saved
-            shutil.rmtree(tmp, ignore_errors=True)
-        # re-create from pandas: the files backing the lazy plan are
-        # gone once the temp dir is removed
-        return spark.createDataFrame(pdf, "term string, doc_id long, tf long")
-
-    return gate
+    tmp = tempfile.mkdtemp(prefix="build_gate_")
+    try:
+        # dense rank over the existing dense doc_id = identity map
+        src = _docs(spark, sf_dir).select(F.col("doc_id").alias("orig_id"), "text")
+        build_index(
+            spark, src, tmp, key_cols=("orig_id",), text_col="text", num_shards=4
+        )
+        pdf = blocks_to_postings(spark.read.parquet(f"{tmp}/blocks")).toPandas()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    # re-create from pandas: the files backing the lazy plan are gone
+    # once the temp dir is removed
+    return spark.createDataFrame(pdf, "term string, doc_id long, tf long")
 
 
 def _ivf_probe_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -953,14 +934,8 @@ def oracle_sql() -> dict[str, str]:
     out = _pipeline_oracles()
     out.update({
         "tf_postings": f"WITH {_CTES} SELECT term, doc_id, tf FROM tf",
-        # the mode gates decode the written blocks back to postings, so
-        # every mode's oracle is the same tf relation
-        "build_fused_postings": f"WITH {_CTES} SELECT term, doc_id, tf FROM tf",
-        "build_mapcombine_postings": f"WITH {_CTES} SELECT term, doc_id, tf FROM tf",
-        "build_sqlenc_postings": f"WITH {_CTES} SELECT term, doc_id, tf FROM tf",
-        "build_split_tokenizer_postings": (
-            f"WITH {_CTES} SELECT term, doc_id, tf FROM tf"
-        ),
+        # the build gate decodes the written blocks back to postings
+        "build_index_postings": f"WITH {_CTES} SELECT term, doc_id, tf FROM tf",
         "lexicon": f"WITH {_CTES} SELECT term, df FROM dft",
         # encode -> decode identity: same oracle as tf_postings
         "block_roundtrip": f"WITH {_CTES} SELECT term, doc_id, tf FROM tf",

@@ -50,8 +50,8 @@ BATCH_QUERIES = [
 # lets a reader separate engine regressions from VM weather (VERDICT
 # r3 #3: the r3 artifact landed in a degraded window and read 3.1x
 # worse than the controlled same-window evidence). One implementation,
-# shared with the scaling harness (scripts/ab_oversub.py and
-# scripts/size_probe.py import from the same place).
+# shared with the scaling harness (scripts/size_probe.py imports from
+# the same place).
 from scaling_bench import _cpu_stat
 
 

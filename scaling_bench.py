@@ -92,37 +92,18 @@ else:
     # -> postings (two-phase hash agg) -> hash shuffle -> varbyte block
     # encode -> partitioned parquet write; source rows pre-cached (as in
     # the resident build), no driver-side metadata jobs in the window.
-    from pyspark.sql import functions as F
-    from web_search_engine_spark.operators.blocks import (
-        build_block_index, build_block_index_sql, identity_partition_key)
+    from web_search_engine_spark.operators.blocks import build_block_index
     from web_search_engine_spark.operators.postings import (
         assign_doc_ids_counted, build_postings, with_tokens)
     docs, n, handle = assign_doc_ids_counted(src, ["repo", "path"])
     docs = docs.cache(); docs.count(); handle.unpersist()
     shard_size = max(1, -(-n_docs // num_shards))
-    # WSE_BUILD_MODE=sqlenc routes the datapath through the all-JVM
-    # encoder (VERDICT r4 #2 A/B: does removing the Python/Arrow
-    # crossing from the reduce change the 4->16 pair efficiency?)
-    sqlenc = os.environ.get("WSE_BUILD_MODE") == "sqlenc"
     def trial():
         out = tempfile.mkdtemp(prefix=f"wse_dp_{cores}_", dir="/dev/shm")
         t0 = time.perf_counter()
-        if sqlenc:
-            par = spark.sparkContext.defaultParallelism
-            sub = max(1, (4 * par + num_shards - 1) // num_shards)
-            blocks = build_block_index_sql(
-                build_postings(with_tokens(docs, "content")),
-                codec="varbyte", shard_size=shard_size,
-            ).repartition(
-                par,
-                identity_partition_key(
-                    F.col("shard"), F.pmod(F.xxhash64("term"), F.lit(sub)),
-                    sub, par),
-            ).sortWithinPartitions("shard", "term", "block_id")
-        else:
-            blocks = build_block_index(
-                build_postings(with_tokens(docs, "content")),
-                codec="varbyte", shard_size=shard_size, shards_hint=num_shards)
+        blocks = build_block_index(
+            build_postings(with_tokens(docs, "content")),
+            codec="varbyte", shard_size=shard_size, shards_hint=num_shards)
         blocks.write.mode("overwrite").partitionBy("shard").parquet(out)
         dt = time.perf_counter() - t0
         shutil.rmtree(out, ignore_errors=True)

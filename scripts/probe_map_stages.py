@@ -10,16 +10,12 @@ leaks across levels):
   M1_explode    + explode (token-occurrence row blowup)
   M2_postings   + both hash aggregations + the exchange — the full
                 build_postings relation
-  M3_mapcombine build_postings_mapcombine — tokenize + per-doc tf
-                counting fused in the Python worker, zero JVM aggs
 
 The M1->M2 DELTA prices Spark's aggregation machinery in isolation;
-M0 and M3 price the Python/Arrow worker boundary at two widths.
-Round-4 readings (3M docs): the delta scales at 0.94 across 4->16
-cores while M0 reads 0.70 and M3 0.34 — post-Arrow-fix, the JVM is
-not the scaling problem; the worker boundary is, and widening it
-(M3) makes the ratio worse. A sanity pass asserts the M3 relation is
-row-identical to build_postings first.
+M0 prices the Python/Arrow worker boundary. Round-4 readings (3M
+docs): the delta scales at 0.94 across 4->16 cores while M0 reads
+0.70 — post-Arrow-fix, the JVM is not the scaling problem; the worker
+boundary is.
 
 Usage: python scripts/probe_map_stages.py [--docs 3000000]
                                           [--levels 4,16]
@@ -34,8 +30,7 @@ import sys, time
 cores = int(sys.argv[1]); n_docs = int(sys.argv[2])
 from web_search_engine_spark.session import get_spark
 from web_search_engine_spark.operators.postings import (
-    assign_doc_ids_counted, build_postings, build_postings_mapcombine,
-    with_tokens)
+    assign_doc_ids_counted, build_postings, with_tokens)
 from web_search_engine_spark.sources.corpus import generate_corpus_pdf_fast
 from pyspark.sql import functions as F
 
@@ -67,20 +62,8 @@ def m1():
         "doc_id", F.explode("tokens").alias("term")))
 def m2():
     noop(build_postings(with_tokens(docs, "content")))
-def m3():
-    noop(build_postings_mapcombine(docs, "content"))
-
-# sanity: the fused map must equal build_postings exactly (small slice)
-chk = docs.limit(2000).cache(); chk.count()
-a = build_postings(with_tokens(chk, "content"))
-b = build_postings_mapcombine(chk, "content")
-diff = a.exceptAll(b).count() + b.exceptAll(a).count()
-print(f"SANITY mapcombine-vs-postings diff={diff}", flush=True)
-assert diff == 0
-chk.unpersist()
-
 for name, fn in (("M0_tokenize", m0), ("M1_explode", m1),
-                 ("M2_postings", m2), ("M3_mapcombine", m3)):
+                 ("M2_postings", m2)):
     fn()
     best = 1e9
     for _ in range(2):

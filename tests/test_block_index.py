@@ -149,11 +149,14 @@ def test_index_tables_consistent(spark, index_dir, oracle):
 def test_sequential_writes_match_overlapped(
     spark, index_dir, tmp_path, monkeypatch
 ):
-    """WSE_OVERLAP_WRITES=0 (the A/B knob for the guide-§2.6 overlapped
-    writes) must produce the identical index in the tokenize-derived-dl
-    shape — regression: docs_meta was only defined inside the overlap
-    branch, so the sequential path crashed with UnboundLocalError."""
-    monkeypatch.setenv("WSE_OVERLAP_WRITES", "0")
+    """The sequential write schedule (blocks, then docs_meta — the shape
+    a postings-derived dl build takes) must produce the identical index
+    to the overlapped schedule of the index_dir fixture (both writes
+    submitted concurrently on the tokenize-derived dl)."""
+    import web_search_engine_spark.plans.build_index as B
+
+    monkeypatch.setattr(B, "_DL_AUTO_MIN_DOCS", 0)
+    assert B._dl_source(400) == "postings"
     d = str(tmp_path / "seq_index")
     src = corpus_df(spark, n_docs=400, seed=42)
     build_index(spark, src, d, codec="varbyte", block_size=16, num_shards=4)
@@ -321,373 +324,156 @@ def test_manifest_metrics_match_tables(spark, tmp_path):
     assert abs(st["avgdl"] - total_dl / st["n_docs"]) < 1e-9
 
 
+def _sorted_rows(spark, d, table, cols):
+    return sorted(
+        tuple(r) for r in spark.read.parquet(f"{d}/{table}").select(*cols).collect()
+    )
+
+
+BLOCK_COLS = [
+    "term", "shard", "block_id", "n", "last_docid", "base_docid",
+    "max_tf", "doc_bytes", "freq_bytes",
+]
+META_COLS = ["shard", "doc_id", "repo", "path", "dl", "content_sha256"]
+
+
 def test_dl_from_postings_matches_tokenize(spark, tmp_path, monkeypatch):
     """ADVICE r3: the dl-from-postings docs_meta derivation (the path
     every >=200k-doc production build takes) was only exercised by
-    benchmarks. Force it on a small build and assert docs_meta —
-    including zero-token docs, which have NO postings rows and must
-    come back dl=0 via the left join coalesce — is row-identical to
-    the tokenize-path build."""
+    benchmarks. Force it on a small build by lowering the _dl_source
+    threshold and assert docs_meta — including zero-token docs, which
+    have NO postings rows and must come back dl=0 via the left join
+    coalesce — is row-identical to the tokenize-path build. The two
+    builds also differ in write scheduling (the postings side writes
+    blocks then docs_meta, the tokenize side overlaps them), so the
+    blocks tables must match too, payload bytes included."""
     import web_search_engine_spark.plans.build_index as B
     from web_search_engine_spark.sources.catalog import read_stats
 
     src = corpus_df(spark, n_docs=150, seed=42)  # kind==7 rows: dl=0
     d_tok = str(tmp_path / "tok")
     d_post = str(tmp_path / "post")
-    monkeypatch.setattr(B, "_DL_SOURCE", "tokenize")
+    assert B._dl_source(150) == "tokenize"
     B.build_index(spark, src, d_tok, num_shards=3)
-    monkeypatch.setattr(B, "_DL_SOURCE", "postings")
+    monkeypatch.setattr(B, "_DL_AUTO_MIN_DOCS", 0)
+    assert B._dl_source(150) == "postings"
     B.build_index(spark, src, d_post, num_shards=3)
 
-    cols = ["shard", "doc_id", "repo", "path", "dl", "content_sha256"]
-    a = sorted(
-        tuple(r) for r in spark.read.parquet(f"{d_tok}/docs_meta").select(*cols).collect()
-    )
-    b = sorted(
-        tuple(r) for r in spark.read.parquet(f"{d_post}/docs_meta").select(*cols).collect()
-    )
-    assert a == b
+    a = _sorted_rows(spark, d_tok, "docs_meta", META_COLS)
+    assert a == _sorted_rows(spark, d_post, "docs_meta", META_COLS)
     assert any(t[4] == 0 for t in a)  # the zero-token docs are present
+    blocks = _sorted_rows(spark, d_tok, "blocks", BLOCK_COLS)
+    assert blocks == _sorted_rows(spark, d_post, "blocks", BLOCK_COLS)
+    assert len(blocks) > 0
     sa, sb = read_stats(d_tok), read_stats(d_post)
     assert sa["n_docs"] == sb["n_docs"] and sa["avgdl"] == sb["avgdl"]
 
 
-def test_term_dict_build_bit_identical(spark, tmp_path, monkeypatch):
-    """The dictionary-encoded build (term -> lexical int64 id before the
-    blocks shuffle, strings joined back after encoding) must reproduce
-    the direct string build's block TABLE row-for-row — including the
-    varbyte payload bytes — and keep every written file lexically
-    term-clustered (the row-group min/max property the serving
-    directory prunes on)."""
-    import pyarrow.parquet as pq
+def _record_rule(monkeypatch, module, name):
+    """Wrap an auto-rule function so a test can see what it decided."""
+    decided = []
+    rule = getattr(module, name)
 
-    import web_search_engine_spark.plans.build_index as B
+    def spy(*args):
+        decided.append(rule(*args))
+        return decided[-1]
 
-    src = corpus_df(spark, n_docs=300, seed=11)
-    monkeypatch.setattr(B, "_DL_SOURCE", "postings")  # dict needs postings
-    d_str = str(tmp_path / "strs")
-    d_dict = str(tmp_path / "dict")
-    monkeypatch.setattr(B, "_TERM_DICT", "off")
-    B.build_index(spark, src, d_str, num_shards=3)
-    monkeypatch.setattr(B, "_TERM_DICT", "on")
-    B.build_index(spark, src, d_dict, num_shards=3)
-
-    cols = [
-        "term", "shard", "block_id", "n", "last_docid", "base_docid",
-        "max_tf", "doc_bytes", "freq_bytes",
-    ]
-    a = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_str}/blocks").select(*cols).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_dict}/blocks").select(*cols).collect()
-    )
-    assert a == b and len(a) > 0
-
-    # Term->partition assignment differs (the bucket key hashes the id,
-    # not the string), so file contents need not match file-for-file.
-    # The property serving's row-group pruning needs is that WITHIN each
-    # written file terms stay lexically clustered (the partition sort on
-    # term_id == lexical order): per (shard, file), the term sequence
-    # must be non-decreasing with doc_id runs ascending inside a term.
-    checked = 0
-    for shard_dir in sorted(os.listdir(f"{d_dict}/blocks")):
-        if not shard_dir.startswith("shard="):
-            continue
-        for fname in sorted(os.listdir(f"{d_dict}/blocks/{shard_dir}")):
-            if not fname.endswith(".parquet"):
-                continue
-            t = pq.read_table(
-                f"{d_dict}/blocks/{shard_dir}/{fname}",
-                columns=["term", "block_id"],
-            )
-            terms = t.column("term").to_pylist()
-            assert terms == sorted(terms), f"{shard_dir}/{fname} not term-sorted"
-            checked += 1
-    assert checked > 0
-
-
-def test_fused_build_matches_agg(spark, tmp_path, monkeypatch):
-    """WSE_BUILD_MODE=fused (single shuffle of raw token occurrences,
-    tf aggregated as sorted-run lengths inside the encoder) must produce
-    the same index as the default two-shuffle aggregated build: block
-    table row-identical including payload bytes, docs_meta and stats
-    identical. The corpus includes empty docs (dl=0, no postings) and
-    repeated terms per doc (tf > 1 run collapsing)."""
-    import web_search_engine_spark.plans.build_index as B
-    from web_search_engine_spark.sources.catalog import read_stats
-
-    src = corpus_df(spark, n_docs=250, seed=5)
-    d_agg = str(tmp_path / "agg")
-    d_fused = str(tmp_path / "fused")
-    monkeypatch.setattr(B, "_BUILD_MODE", "agg")
-    B.build_index(spark, src, d_agg, num_shards=3)
-    monkeypatch.setattr(B, "_BUILD_MODE", "fused")
-    B.build_index(spark, src, d_fused, num_shards=3)
-
-    bcols = [
-        "term", "shard", "block_id", "n", "last_docid", "base_docid",
-        "max_tf", "doc_bytes", "freq_bytes",
-    ]
-    a = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_agg}/blocks").select(*bcols).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_fused}/blocks").select(*bcols).collect()
-    )
-    assert a == b and len(a) > 0
-    assert any(t[6] > 1 for t in a)  # max_tf>1 blocks exercise run collapsing
-
-    mcols = ["shard", "doc_id", "repo", "path", "dl", "content_sha256"]
-    ma = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_agg}/docs_meta").select(*mcols).collect()
-    )
-    mb = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_fused}/docs_meta").select(*mcols).collect()
-    )
-    assert ma == mb
-    sa, sb = read_stats(d_agg), read_stats(d_fused)
-    assert sa["n_docs"] == sb["n_docs"] and sa["avgdl"] == sb["avgdl"]
-
-
-def test_mapcombine_build_matches_agg(spark, tmp_path, monkeypatch):
-    """WSE_BUILD_MODE=mapcombine (tokenize + per-doc tf counting + dl +
-    sha256 fused into ONE mapInArrow pass; docs_meta from sentinel rows;
-    zero hash aggregations in the plan) must produce the same index as
-    the default aggregated build: block table row-identical including
-    payload bytes, docs_meta (incl. dl=0 + sha for EMPTY docs and the
-    passthrough key cols) identical, stats identical."""
-    import web_search_engine_spark.plans.build_index as B
-    from web_search_engine_spark.sources.catalog import read_stats
-
-    src = corpus_df(spark, n_docs=250, seed=5)
-    d_agg = str(tmp_path / "agg")
-    d_mc = str(tmp_path / "mc")
-    monkeypatch.setattr(B, "_BUILD_MODE", "agg")
-    B.build_index(spark, src, d_agg, num_shards=3)
-    monkeypatch.setattr(B, "_BUILD_MODE", "mapcombine")
-    B.build_index(spark, src, d_mc, num_shards=3)
-
-    bcols = [
-        "term", "shard", "block_id", "n", "last_docid", "base_docid",
-        "max_tf", "doc_bytes", "freq_bytes",
-    ]
-    a = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_agg}/blocks").select(*bcols).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_mc}/blocks").select(*bcols).collect()
-    )
-    assert a == b and len(a) > 0
-
-    mcols = ["shard", "doc_id", "repo", "path", "dl", "content_sha256"]
-    ma = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_agg}/docs_meta").select(*mcols).collect()
-    )
-    mb = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_mc}/docs_meta").select(*mcols).collect()
-    )
-    assert ma == mb
-    assert any(t[4] == 0 for t in mb)  # empty docs kept with dl=0
-    sa, sb = read_stats(d_agg), read_stats(d_mc)
-    assert sa["n_docs"] == sb["n_docs"] and sa["avgdl"] == sb["avgdl"]
-
-
-def test_sqlenc_build_matches_agg(spark, tmp_path, monkeypatch):
-    """WSE_BUILD_MODE=sqlenc (all-JVM block encode: collect_list +
-    higher-order functions + hex/unhex varbyte, zero Python workers in
-    the reduce — VERDICT r4 #2) must produce the same index as the
-    default build: block table row-identical including payload bytes,
-    docs_meta and stats identical."""
-    import web_search_engine_spark.plans.build_index as B
-    from web_search_engine_spark.sources.catalog import read_stats
-
-    src = corpus_df(spark, n_docs=250, seed=5)
-    d_agg = str(tmp_path / "agg")
-    d_sql = str(tmp_path / "sqlenc")
-    monkeypatch.setattr(B, "_BUILD_MODE", "agg")
-    B.build_index(spark, src, d_agg, num_shards=3)
-    monkeypatch.setattr(B, "_BUILD_MODE", "sqlenc")
-    B.build_index(spark, src, d_sql, num_shards=3)
-
-    bcols = [
-        "term", "shard", "block_id", "n", "last_docid", "base_docid",
-        "max_tf", "doc_bytes", "freq_bytes",
-    ]
-    a = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_agg}/blocks").select(*bcols).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_sql}/blocks").select(*bcols).collect()
-    )
-    assert a == b and len(a) > 0
-    assert any(t[6] > 1 for t in a)  # max_tf>1 blocks exercise gap+tf paths
-
-    mcols = ["shard", "doc_id", "repo", "path", "dl", "content_sha256"]
-    ma = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_agg}/docs_meta").select(*mcols).collect()
-    )
-    mb = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{d_sql}/docs_meta").select(*mcols).collect()
-    )
-    assert ma == mb
-    sa, sb = read_stats(d_agg), read_stats(d_sql)
-    assert sa["n_docs"] == sb["n_docs"] and sa["avgdl"] == sb["avgdl"]
-
-    # the reduce stage is Python-free: no Arrow/Python eval node in the
-    # sqlenc block plan (the tokenizer pandas_udf is upstream of the
-    # postings agg, not in the encode)
-    from web_search_engine_spark.operators.blocks import build_block_index_sql
-    from web_search_engine_spark.operators.postings import build_postings, with_tokens
-
-    plan_df = build_block_index_sql(
-        build_postings(with_tokens(src.limit(50).withColumn("doc_id", F.lit(0)), "content")),
-        shard_size=100,
-    )
-    plan = plan_df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" not in plan
-
-
-def test_sqlenc_rejects_term_dict_on(spark, tmp_path, monkeypatch):
-    """WSE_TERM_DICT=on requires the string-term mapInArrow build; the
-    SQL encoder must refuse loudly."""
-    import pytest
-
-    import web_search_engine_spark.plans.build_index as B
-
-    src = corpus_df(spark, n_docs=30, seed=5)
-    monkeypatch.setattr(B, "_BUILD_MODE", "sqlenc")
-    monkeypatch.setattr(B, "_TERM_DICT", "on")
-    with pytest.raises(ValueError, match="sqlenc"):
-        B.build_index(spark, src, str(tmp_path / "x"), num_shards=1)
-
-
-def test_vb_hex_expr_edge_values(spark):
-    """JVM varbyte expression vs the numpy codec on boundary values:
-    0, 127/128 (1->2 byte), every 7-bit boundary, and large longs."""
-    from web_search_engine_spark.functions import codec as C
-    from web_search_engine_spark.operators.blocks import _vb_hex_expr
-
-    vals = [0, 1, 127, 128, 129, (1 << 14) - 1, 1 << 14, (1 << 21) - 1,
-            1 << 21, (1 << 28) - 1, 1 << 28, (1 << 35), (1 << 42) + 17,
-            (1 << 49) + 3, (1 << 56) + 9, (1 << 62) + 5]
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    got = {
-        r["v"]: bytes(r["b"])
-        for r in df.select("v", F.unhex(_vb_hex_expr(F.col("v"))).alias("b")).collect()
-    }
-    for v in vals:
-        want = C.vb_encode(np.array([v], dtype=np.uint64))
-        assert got[v] == want, (v, got[v].hex(), want.hex())
+    monkeypatch.setattr(module, name, spy)
+    return decided
 
 
 def test_dl_join_strategies_identical(spark, tmp_path, monkeypatch):
-    """WSE_DL_JOIN broadcast vs shuffle (VERDICT r4 #3: the docs_meta
-    join was always sort-merge; small corpora now broadcast the dl
-    side) must produce identical docs_meta. Force dl_source=postings so
-    the join exists at this corpus size."""
+    """dl join broadcast vs shuffle (VERDICT r4 #3: the docs_meta join
+    was always sort-merge; small corpora now broadcast the dl side) must
+    produce identical docs_meta. The postings-derived dl is forced so
+    the join exists at this corpus size; each side is forced through
+    the _dl_join threshold."""
     import web_search_engine_spark.plans.build_index as B
 
     src = corpus_df(spark, n_docs=200, seed=9)
-    monkeypatch.setattr(B, "_DL_SOURCE", "postings")
+    monkeypatch.setattr(B, "_DL_AUTO_MIN_DOCS", 0)
+    decided = _record_rule(monkeypatch, B, "_dl_join")
     outs = {}
-    for strat in ("broadcast", "shuffle"):
-        monkeypatch.setattr(B, "_DL_JOIN", strat)
+    for strat, cap in (("broadcast", 10**9), ("shuffle", -1)):
+        monkeypatch.setattr(B, "_DL_BROADCAST_MAX_DOCS", cap)
         d = str(tmp_path / strat)
         B.build_index(spark, src, d, num_shards=2)
-        outs[strat] = sorted(
-            tuple(r)
-            for r in spark.read.parquet(f"{d}/docs_meta")
-            .select("shard", "doc_id", "repo", "path", "dl", "content_sha256")
-            .collect()
-        )
+        assert decided[-1] == strat
+        outs[strat] = _sorted_rows(spark, d, "docs_meta", META_COLS)
     assert outs["broadcast"] == outs["shuffle"] and len(outs["broadcast"]) == 200
 
 
 def test_dl_agg_strategies_identical(spark, tmp_path, monkeypatch):
-    """WSE_DL_AGG partial vs repartition (round-5 docs_meta fix): the
-    repartition-first dl plan — project (doc_id, tf), hash-repartition
-    by doc_id, then aggregate — must produce docs_meta row-identical to
-    the stock partial-agg plan. The partial plan's exchange grows as
-    P x n_docs (anti-scaling at wide parallelism, BENCH.md round-5
-    decomposition); the repartition plan's is constant |postings|.
-    Zero-token docs (no postings rows) must survive both via the left
-    join coalesce."""
+    """dl aggregation partial vs repartition (round-5 docs_meta fix):
+    the repartition-first dl plan — project (doc_id, tf),
+    hash-repartition by doc_id, then aggregate — must produce docs_meta
+    row-identical to the stock partial-agg plan. The partial plan's
+    exchange grows as P x n_docs (anti-scaling at wide parallelism,
+    BENCH.md round-5 decomposition); the repartition plan's is constant
+    |postings|. Zero-token docs (no postings rows) must survive both via
+    the left join coalesce. Each side is forced through the _dl_agg
+    reduction threshold."""
     import web_search_engine_spark.plans.build_index as B
 
     src = corpus_df(spark, n_docs=150, seed=42)  # kind==7 rows: dl=0
-    monkeypatch.setattr(B, "_DL_SOURCE", "postings")
+    monkeypatch.setattr(B, "_DL_AUTO_MIN_DOCS", 0)
+    decided = _record_rule(monkeypatch, B, "_dl_agg")
     outs = {}
-    for strat in ("partial", "repartition"):
-        monkeypatch.setattr(B, "_DL_AGG", strat)
+    for strat, reduction in (("partial", 0), ("repartition", 10**9)):
+        monkeypatch.setattr(B, "_DL_AGG_MIN_REDUCTION", reduction)
         d = str(tmp_path / strat)
         B.build_index(spark, src, d, num_shards=3)
-        outs[strat] = sorted(
-            tuple(r)
-            for r in spark.read.parquet(f"{d}/docs_meta")
-            .select("shard", "doc_id", "repo", "path", "dl", "content_sha256")
-            .collect()
-        )
+        assert decided[-1] == strat
+        outs[strat] = _sorted_rows(spark, d, "docs_meta", META_COLS)
     assert outs["partial"] == outs["repartition"]
     assert len(outs["partial"]) == 150
     assert any(t[4] == 0 for t in outs["partial"])  # dl=0 docs kept
 
 
-def test_dl_agg_rejects_unknown_value(spark, tmp_path, monkeypatch):
-    import pytest
-
+def test_failed_blocks_write_releases_caches_and_resumes(
+    spark, tmp_path, monkeypatch
+):
+    """Fault injection on the postings-derived dl path: the blocks write
+    completes its job and then raises. The build must release every
+    handle it persisted (the source-row cache and the postings) on the
+    way out, and a resumed build over the same directory must write the
+    same tables as a clean build."""
     import web_search_engine_spark.plans.build_index as B
 
-    src = corpus_df(spark, n_docs=30, seed=3)
-    monkeypatch.setattr(B, "_DL_SOURCE", "postings")
-    monkeypatch.setattr(B, "_DL_AGG", "bogus")
-    with pytest.raises(ValueError, match="WSE_DL_AGG"):
-        B.build_index(spark, src, str(tmp_path / "x"), num_shards=2)
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
 
+    src = corpus_df(spark, n_docs=120, seed=21)
+    monkeypatch.setattr(B, "_DL_AUTO_MIN_DOCS", 0)
+    spark.catalog.clearCache()
+    assert persisted() == 0
+    real_write = B.write_blocks
 
-def test_dl_join_rejects_unknown_value(spark, tmp_path, monkeypatch):
-    """Knob validation runs at build_index ENTRY, so a typo'd value
-    fails every build shape — including small corpora whose dl_source
-    resolves to tokenize and never reaches the join branch."""
-    import pytest
+    def failing_write(blocks, index_dir):
+        real_write(blocks, index_dir)
+        assert persisted() >= 2  # the source rows and the postings
+        raise RuntimeError("injected blocks-write failure")
 
-    import web_search_engine_spark.plans.build_index as B
+    d = str(tmp_path / "resumed")
+    monkeypatch.setattr(B, "write_blocks", failing_write)
+    with pytest.raises(RuntimeError, match="injected"):
+        B.build_index(spark, src, d, num_shards=3)
+    assert persisted() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert not os.path.exists(os.path.join(d, "manifest"))
 
-    src = corpus_df(spark, n_docs=30, seed=3)
-    monkeypatch.setattr(B, "_DL_JOIN", "brodcast")
-    with pytest.raises(ValueError, match="WSE_DL_JOIN"):
-        B.build_index(spark, src, str(tmp_path / "x"), num_shards=2)
-
-
-def test_dl_source_conflicts_with_fused_modes(spark, tmp_path, monkeypatch):
-    """ADVICE r4: an explicitly pinned WSE_DL_SOURCE=postings must fail
-    loudly under fused/mapcombine (no standalone postings relation
-    exists there), mirroring the WSE_TERM_DICT=on contract — not
-    silently build a different shape."""
-    import pytest
-
-    import web_search_engine_spark.plans.build_index as B
-
-    src = corpus_df(spark, n_docs=30, seed=5)
-    monkeypatch.setattr(B, "_DL_SOURCE", "postings")
-    for mode in ("fused", "mapcombine"):
-        monkeypatch.setattr(B, "_BUILD_MODE", mode)
-        with pytest.raises(ValueError, match="WSE_DL_SOURCE=postings"):
-            B.build_index(spark, src, str(tmp_path / mode), num_shards=1)
+    monkeypatch.setattr(B, "write_blocks", real_write)
+    B.build_index(spark, src, d, num_shards=3)
+    clean = str(tmp_path / "clean")
+    B.build_index(spark, src, clean, num_shards=3)
+    for table, cols in (
+        ("blocks", BLOCK_COLS),
+        ("docs_meta", META_COLS),
+        ("lexicon", ["term", "df", "nblocks", "max_tf"]),
+    ):
+        assert _sorted_rows(spark, d, table, cols) == _sorted_rows(
+            spark, clean, table, cols
+        ), table
 
 
 def test_arrow_records_cap_derives_from_row_bound(monkeypatch):
@@ -810,13 +596,27 @@ def test_fast_term_decode_matches_per_block(spark, index_dir):
 def test_lexicon_driver_merge_matches_spark(spark, tmp_path, monkeypatch):
     """Small-delta lexicon merges run driver-side via pyarrow (round 6);
     the table must be row-identical to the Spark aggregation on BOTH the
-    full-rebuild and the additive-append paths."""
+    full-rebuild and the additive-append paths. The append folds df and
+    nblocks by sum and max_tf by max: one term's max_tf rises in the
+    appended batch, another's stays below its old value."""
+    import pandas as pd
+
     import web_search_engine_spark.plans.build_index as B
     from web_search_engine_spark.streaming.incremental import append_batch
 
     full = corpus_df(spark, n_docs=200, seed=13).cache()
-    first = full.limit(120)
-    rest = full.subtract(first)
+
+    def one_doc(path, text):
+        row = full.limit(1).toPandas().assign(path=path, content=text)
+        return spark.createDataFrame(pd.DataFrame(row), full.schema)
+
+    # base: rise tf 2, keep tf 6; appended: rise tf 7, keep tf 1
+    first = full.limit(120).unionByName(
+        one_doc("zz/base.txt", "maxtfrise " * 2 + "maxtfkeep " * 6)
+    )
+    rest = full.subtract(full.limit(120)).unionByName(
+        one_doc("zz/append.txt", "maxtfrise " * 7 + "maxtfkeep")
+    )
 
     def build_and_append(d):
         B.build_index(spark, first, d, num_shards=2)
@@ -830,3 +630,7 @@ def test_lexicon_driver_merge_matches_spark(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(B, "_LEXICON_DRIVER_MAX_BLOCKS", -1)  # force Spark
     spk = build_and_append(str(tmp_path / "spark_path"))
     assert drv == spk and len(drv) > 0
+    # (df, nblocks, max_tf): one posting and one block on each side
+    assert drv["maxtfrise"] == (2, 2, 7)
+    assert drv["maxtfkeep"] == (2, 2, 6)
+    full.unpersist()

@@ -181,12 +181,11 @@ def test_assign_doc_ids_dense_key_fast_path(spark, monkeypatch):
     produce the identical dense-rank ids. Which path fired is read off
     the cache handle: the range path's handle carries the internal
     _pid column, the projection path's does not."""
-    import web_search_engine_spark.operators.postings as P
     from web_search_engine_spark.operators.postings import (
         assign_doc_ids_counted,
     )
 
-    monkeypatch.setattr(P, "_DENSE_IDS", "auto")
+    monkeypatch.delenv("WSE_DENSE_IDS", raising=False)  # default: auto
 
     def ids(rows, schema, keys):
         out, n, handle = assign_doc_ids_counted(
@@ -233,3 +232,50 @@ def test_assign_doc_ids_dense_key_fast_path(spark, monkeypatch):
         [(None, "x"), (0, "y"), (1, "z")], "orig long, t string", ["orig"]
     )
     assert n == 3 and used_range
+
+
+def test_dense_ids_env_read_per_call(spark, monkeypatch):
+    """WSE_DENSE_IDS is read when assign_doc_ids_counted runs, not at
+    import (ADVICE): a value set after import takes effect, and an
+    invalid value is the one the error names."""
+    from web_search_engine_spark.operators.postings import (
+        assign_doc_ids_counted,
+    )
+
+    df = spark.createDataFrame(
+        [(k, "t") for k in range(20)], "orig long, text string"
+    )
+    monkeypatch.setenv("WSE_DENSE_IDS", "0")
+    out, n, handle = assign_doc_ids_counted(df, ["orig"])
+    try:
+        # a dense key, yet the range path ran: the probe is disabled
+        assert n == 20 and "_pid" in handle.columns
+        assert sorted(r["doc_id"] for r in out.collect()) == list(range(20))
+    finally:
+        handle.unpersist()
+    monkeypatch.setenv("WSE_DENSE_IDS", "bogus")
+    with pytest.raises(ValueError, match="'bogus'"):
+        assign_doc_ids_counted(df, ["orig"])
+
+
+def test_dense_probe_failure_releases_cache(spark, monkeypatch):
+    """If a job of the overlapped dense-key probe raises, the persisted
+    projection is released before the error propagates — the caller
+    never receives its handle, so nobody else could (ADVICE)."""
+    from web_search_engine_spark.operators.postings import (
+        assign_doc_ids_counted,
+    )
+
+    monkeypatch.delenv("WSE_DENSE_IDS", raising=False)
+    df = spark.createDataFrame(
+        [(k, "t") for k in range(20)], "orig long, text string"
+    )
+    spark.catalog.clearCache()
+
+    def failing_count(self):
+        raise RuntimeError("injected cache-fill failure")
+
+    monkeypatch.setattr(type(df), "count", failing_count)
+    with pytest.raises(RuntimeError, match="injected"):
+        assign_doc_ids_counted(df, ["orig"])
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

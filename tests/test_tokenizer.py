@@ -52,29 +52,6 @@ def test_sql_tokenizer_matches_on_entity_free_text(spark):
         assert got[i] == oracle_tokenize(s), s
 
 
-def test_split_tokenizer_matches_pandas(spark):
-    """with_tokens(method='split') — JVM codegen for ASCII entity-free
-    rows, pandas_udf for NULL/'&'/non-ASCII rows — must be row-identical
-    to the all-pandas path on adversarial text (entities, unicode,
-    empty, NULL)."""
-    from web_search_engine_spark.operators.postings import with_tokens
-
-    rows = [(i, s) for i, s in enumerate(ADVERSARIAL)] + [
-        (len(ADVERSARIAL), None)
-    ]
-    df = spark.createDataFrame(rows, "id long, content string")
-    a = {
-        r["id"]: r["tokens"]
-        for r in with_tokens(df, "content", method="pandas").collect()
-    }
-    b = {
-        r["id"]: r["tokens"]
-        for r in with_tokens(df, "content", method="split").collect()
-    }
-    assert a == b
-    assert a[len(ADVERSARIAL)] == []  # NULL text -> [] on both paths
-
-
 def test_ftfy_parity():
     """P1 closure: when ftfy is installed, the engine's tokenizer must
     match the reference's ftfy.fix_text + unescape + regex pipeline on

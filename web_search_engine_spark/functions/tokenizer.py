@@ -15,9 +15,9 @@ exactly:
    The asymmetry (a query term "u.s." never matches the indexed "u.s")
    is reference behavior and preserved.
 
-Implementations:
-  - tokenize_udf: Arrow-vectorized pandas_udf (north-star mandated path)
-    with optional HTML unescape.
+Implementations (operators/postings.with_tokens method 'pandas' / 'sql'):
+  - tokenize_udf: Arrow-vectorized pandas_udf (north-star mandated path,
+    the build default) with HTML unescape.
   - tokens_sql_col: pure-JVM ``regexp_extract_all`` column — stays inside
     whole-stage codegen, no Python worker; used when the input needs no
     entity unescaping (and by the DuckDB-checked driver queries, where the
@@ -63,11 +63,10 @@ def tokenize_series(texts: pd.Series) -> pd.Series:
     """Vectorized batch tokenizer: pd.Series[str|None] -> pd.Series[list].
 
     The single source of truth for corpus tokenization semantics —
-    ``tokenize_udf`` (pandas_udf path) and the map-combine postings
-    builder (operators/postings.build_postings_mapcombine) both call it,
-    so the two build pipelines cannot drift. pandas' ``str`` ops run the
-    regex in C; ftfy (when installed) and html.unescape are the only
-    per-row Python — unescape short-circuits when no '&' is present.
+    ``tokenize_udf`` (the build's pandas_udf path) is a thin wrapper.
+    pandas' ``str`` ops run the regex in C; ftfy (when installed) and
+    html.unescape are the only per-row Python — unescape short-circuits
+    when no '&' is present.
     """
     if _fix_text is not None:
         cleaned = texts.fillna("").map(

@@ -9,17 +9,17 @@ the block directory (last_docid per block, HW2/engine/listio.py:176-196)
 becomes ordinary columns that parquet min/max stats can skip on.
 
 Scale design:
-  - The build is `repartitionByRange(shard, term) + sortWithinPartitions
-    + mapInPandas`: the explicit re-expression of the reference's
-    sort->k-way-merge pipeline (north star) — the range shuffle IS the
-    merge, every partition writes independently, no serial final writer
-    (HW2/engine/merger.py's bottleneck).
-  - mapInPandas (not groupBy(term).applyInPandas): one Arrow batch holds
+  - The build is a salted hash `repartition(shard, term-bucket) +
+    sortWithinPartitions + mapInArrow`: the explicit re-expression of
+    the reference's sort->k-way-merge pipeline (north star) — the
+    shuffle IS the merge, every partition writes independently, no
+    serial final writer (HW2/engine/merger.py's bottleneck).
+  - mapInArrow (not groupBy(term).applyInPandas): one Arrow batch holds
     THOUSANDS of term groups, encoded with two vectorized codec calls
     per batch instead of one tiny pandas DataFrame per term. A term
-    group split across batch boundaries is carried over; range
-    partitioning guarantees a (shard, term) group never splits across
-    partitions.
+    group split across batch boundaries is carried over; the (shard,
+    term-bucket) key guarantees a (shard, term) group never splits
+    across partitions.
   - Hot-term skew is bounded by DOC-SHARDING: shard = doc_id //
     shard_size. Every (shard, term) group has at most shard_size
     postings, so a stopword term at 100 TB splits into many bounded
@@ -35,7 +35,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -51,26 +50,6 @@ BLOCK_SCHEMA = (
     "term string, shard int, block_id int, n int, last_docid long, "
     "base_docid long, max_tf long, doc_bytes binary, freq_bytes binary"
 )
-
-# target distinct partition-keys per shuffle partition (see
-# build_block_index docstring: bounds hash-assignment stragglers);
-# env-overridable for same-window A/B benchmarking
-_KEY_OVERSUB = int(os.environ.get("WSE_KEY_OVERSUB", "64"))
-
-# how (shard, term-bucket) keys map to shuffle partitions:
-#   salted  — exact round-robin via murmur3-inverted salt values:
-#             perfect key balance AND minimal output files
-#   oversub — plain hash keys, ~_KEY_OVERSUB keys per partition
-#   plain   — plain hash keys, ~1 key per partition (round-2 shape)
-_PARTITION_MODE = os.environ.get("WSE_PARTITION_MODE", "salted")
-
-# shuffle-partition multiple for the blocks exchange: n_part =
-# defaultParallelism * this. >1 makes tasks finer so the scheduler can
-# route around uneven core availability (CPU steal, stragglers) at the
-# cost of proportionally more output files per shard dir; 1 keeps
-# task count == core count (the default; A/B via scripts/ab_oversub.py)
-_PART_MULT = int(os.environ.get("WSE_PART_MULT", "1"))
-
 
 def _mmh3_int32(value: int, seed: int = 42) -> int:
     """Murmur3 x86_32 of one int32 block — bit-identical to Spark's
@@ -133,27 +112,19 @@ def identity_partition_key(shard_col, bucket_col, sub: int, n_part: int):
     ).cast("int")
     return F.element_at(F.array(*[F.lit(s) for s in salts]), key_idx + F.lit(1))
 
-def _arrow_block_schema(term_col: str, term_type: pa.DataType) -> pa.Schema:
-    return pa.schema(
-        [
-            (term_col, term_type),
-            ("shard", pa.int32()),
-            ("block_id", pa.int32()),
-            ("n", pa.int32()),
-            ("last_docid", pa.int64()),
-            ("base_docid", pa.int64()),
-            ("max_tf", pa.int64()),
-            ("doc_bytes", pa.binary()),
-            ("freq_bytes", pa.binary()),
-        ]
-    )
-
-
-_ARROW_BLOCK_SCHEMA = _arrow_block_schema("term", pa.string())
-# dictionary-encoded build: the shuffle carries term_id (int64, lexical
-# rank of the term) instead of the term string — see build_block_index
-_ARROW_BLOCK_ID_SCHEMA = _arrow_block_schema("term_id", pa.int64())
-BLOCK_ID_SCHEMA = BLOCK_SCHEMA.replace("term string", "term_id long", 1)
+_ARROW_BLOCK_SCHEMA = pa.schema(
+    [
+        ("term", pa.string()),
+        ("shard", pa.int32()),
+        ("block_id", pa.int32()),
+        ("n", pa.int32()),
+        ("last_docid", pa.int64()),
+        ("base_docid", pa.int64()),
+        ("max_tf", pa.int64()),
+        ("doc_bytes", pa.binary()),
+        ("freq_bytes", pa.binary()),
+    ]
+)
 
 
 def _encode_batch(pdf: pd.DataFrame, block_size: int, codec: str) -> pd.DataFrame:
@@ -233,9 +204,10 @@ def _encode_batch(pdf: pd.DataFrame, block_size: int, codec: str) -> pd.DataFram
     )
 
 
-def _empty_block_batch(schema: pa.Schema = _ARROW_BLOCK_SCHEMA) -> pa.RecordBatch:
+def _empty_block_batch() -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
-        [pa.array([], type=f.type) for f in schema], schema=schema
+        [pa.array([], type=f.type) for f in _ARROW_BLOCK_SCHEMA],
+        schema=_ARROW_BLOCK_SCHEMA,
     )
 
 
@@ -257,14 +229,13 @@ def _binary_from_slices(values: np.ndarray, byte_offsets: np.ndarray) -> pa.Arra
     )
 
 
-def _group_change_mask(batch: pa.RecordBatch, term_col: str = "term") -> np.ndarray:
+def _group_change_mask(batch: pa.RecordBatch) -> np.ndarray:
     """bool[n-1]: row i+1 starts a new (shard, term) group — computed
-    with Arrow kernels, no Python string materialization. term_col is
-    'term_id' on the dictionary-encoded path (int64 compares)."""
+    with Arrow kernels, no Python string materialization."""
     import pyarrow.compute as pc
 
     n = batch.num_rows
-    term = batch.column(term_col)
+    term = batch.column("term")
     shard = batch.column("shard")
     chg = pc.or_(
         pc.not_equal(term.slice(1), term.slice(0, n - 1)),
@@ -273,57 +244,24 @@ def _group_change_mask(batch: pa.RecordBatch, term_col: str = "term") -> np.ndar
     return chg.to_numpy(zero_copy_only=False)
 
 
-def _encode_arrow(
-    batch: pa.RecordBatch,
-    block_size: int,
-    codec: str,
-    term_col: str = "term",
-    occurrences: bool = False,
-) -> pa.RecordBatch:
+def _encode_arrow(batch: pa.RecordBatch, block_size: int, codec: str) -> pa.RecordBatch:
     """Arrow-native block builder: one sorted (shard, term, doc_id)
     RecordBatch -> block rows, with payload columns built zero-copy from
     (values-buffer, offsets) pairs. Same block arithmetic and byte
     format as _encode_batch (the pandas spec implementation — tested
-    identical). term_col='term_id' runs the identical arithmetic over
-    dictionary-encoded int64 term ids.
-
-    occurrences=True is the FUSED single-shuffle build: the batch holds
-    one row per raw token occurrence (no tf column), sorted by (shard,
-    term, doc_id) — tf aggregation is the run length of equal
-    (term, doc_id) in the sorted stream (two numpy diffs), replacing the
-    relational groupBy's hash aggregation entirely. The sort makes the
-    aggregation free; this is the reference's sorted-runs merge
-    (HW2/engine/merger.py tf-summing on merge) done inside the encoder."""
+    identical)."""
     import pyarrow.compute as pc
 
-    out_schema = (
-        _ARROW_BLOCK_SCHEMA if term_col == "term" else _ARROW_BLOCK_ID_SCHEMA
-    )
     n = batch.num_rows
     if n == 0:
-        return _empty_block_batch(out_schema)
+        return _empty_block_batch()
     docids = np.asarray(batch.column("doc_id"), dtype=np.int64)
+    tfs = np.asarray(batch.column("tf"), dtype=np.int64)
 
-    row_new_group = np.empty(n, dtype=bool)
-    row_new_group[0] = True
+    new_group = np.empty(n, dtype=bool)
+    new_group[0] = True
     if n > 1:
-        row_new_group[1:] = _group_change_mask(batch, term_col)
-
-    if occurrences:
-        # collapse runs of equal (group, doc_id) -> one posting with
-        # tf = run length; all downstream arithmetic sees postings
-        new_posting = row_new_group.copy()
-        if n > 1:
-            new_posting[1:] |= docids[1:] != docids[:-1]
-        take_rows = np.flatnonzero(new_posting)
-        tfs = np.diff(np.append(take_rows, n)).astype(np.int64)
-        docids = docids[take_rows]
-        new_group = row_new_group[take_rows]
-        n = len(take_rows)
-    else:
-        tfs = np.asarray(batch.column("tf"), dtype=np.int64)
-        new_group = row_new_group
-        take_rows = None
+        new_group[1:] = _group_change_mask(batch)
     group_starts = np.flatnonzero(new_group)
     group_of_row = np.cumsum(new_group) - 1
     row_in_group = np.arange(n) - group_starts[group_of_row]
@@ -359,12 +297,10 @@ def _encode_arrow(
         doc_bytes = _binary_from_slices(d32, bounds * 4)
         freq_bytes = _binary_from_slices(f32, bounds * 4)
 
-    idx = pa.array(
-        block_starts if take_rows is None else take_rows[block_starts]
-    )
+    idx = pa.array(block_starts)
     return pa.RecordBatch.from_arrays(
         [
-            pc.take(batch.column(term_col), idx).cast(out_schema.field(0).type),
+            pc.take(batch.column("term"), idx).cast(pa.string()),
             pc.take(batch.column("shard"), idx).cast(pa.int32()),
             pa.array(block_id),
             pa.array(n_in_block),
@@ -374,16 +310,11 @@ def _encode_arrow(
             doc_bytes,
             freq_bytes,
         ],
-        schema=out_schema,
+        schema=_ARROW_BLOCK_SCHEMA,
     )
 
 
-def _block_builder(
-    block_size: int,
-    codec: str,
-    term_col: str = "term",
-    occurrences: bool = False,
-):
+def _block_builder(block_size: int, codec: str):
     """mapInArrow function: stream RecordBatches, carry the trailing
     (shard, term) group so a group split across Arrow batches is
     encoded exactly once. All slicing is zero-copy Arrow."""
@@ -402,17 +333,15 @@ def _block_builder(
                 continue
             # hold back the final group — it may continue in the next batch
             if n > 1:
-                starts = np.flatnonzero(_group_change_mask(batch, term_col))
+                starts = np.flatnonzero(_group_change_mask(batch))
                 cut = int(starts[-1]) + 1 if len(starts) else 0
             else:
                 cut = 0
             leftover = batch.slice(cut)
             if cut:
-                yield _encode_arrow(
-                    batch.slice(0, cut), block_size, codec, term_col, occurrences
-                )
+                yield _encode_arrow(batch.slice(0, cut), block_size, codec)
         if leftover is not None and leftover.num_rows:
-            yield _encode_arrow(leftover, block_size, codec, term_col, occurrences)
+            yield _encode_arrow(leftover, block_size, codec)
 
     return build
 
@@ -424,41 +353,13 @@ def build_block_index(
     shard_size: int | None = None,
     num_partitions: int | None = None,
     shards_hint: int | None = None,
-    term_col: str = "term",
-    from_occurrences: bool = False,
 ) -> DataFrame:
     """(term, doc_id, tf) -> block rows (BLOCK_SCHEMA).
 
-    from_occurrences=True is the FUSED SINGLE-SHUFFLE build: input is
-    raw (term, doc_id) token occurrences (one row per token, NO tf
-    column, duplicates expected). The occurrences are exchanged ONCE on
-    the salted key and sorted by (shard, term, doc_id); the encoder
-    collapses runs of equal (term, doc_id) into tf counts as it streams
-    (see _encode_arrow). Relative to build_postings -> build_block_index
-    this moves the un-deduplicated token stream through the exchange
-    (~1.6-1.9x the rows of the aggregated postings) but ELIMINATES both
-    hash aggregations (whose spill traffic is GBs at corpus scale), the
-    second corpus-sized exchange, and the postings cache round-trip —
-    the sorted-run architecture of the reference build taken literally
-    (HW2/engine/build_runs_mp.py sorted runs; merger.py tf-sum on
-    merge), with the shuffle as the run exchange.
-
-    term_col='term_id' is the DICTIONARY-ENCODED build (see
-    build_term_dictionary): input is (term_id, doc_id, tf) where
-    term_id is the lexical rank of the term, output is BLOCK_ID_SCHEMA
-    rows. Because ids are lexical, the within-partition sort on
-    (shard, term_id, doc_id) clusters terms exactly as the string sort
-    would, so after the strings are joined back the block TABLE is
-    row-identical to the string build — payload bytes included — and
-    every written file stays lexically term-clustered for row-group
-    pruning (differentially tested; term->partition bucketing hashes
-    the id, so file-level grouping may differ). The win: the
-    corpus-sized shuffle carries an int64 instead of a term string —
-    smaller exchange payload, fixed-width sort keys, int group-change
-    compares in the encoder.
-
     shard_size: max docs per shard (hot-term skew bound). None = single
     shard 0 (byte-identical to the reference whole-corpus build).
+    num_partitions: shuffle partitions of the blocks exchange (default:
+    the session's parallelism).
     shards_hint: approximate shard count, used to size term sub-buckets.
 
     Partitioning: HASH on (shard, term-bucket), then sort within
@@ -480,19 +381,17 @@ def build_block_index(
     full write parallelism at the cost of min(sub, n_part) files per
     shard dir.
 
-    KEY->PARTITION ASSIGNMENT (round 3): hash repartitioning assigns
-    KEYS to partitions randomly, so with distinct (shard, bucket) keys
-    ~= the partition count the max-loaded partition carries ~3x the
-    mean (balls in bins) and the encode/write stage runs on a fraction
-    of the cores, while oversubscribing keys (many buckets) multiplies
-    output files per task. The default 'salted' mode escapes the
+    KEY->PARTITION ASSIGNMENT (round 3): stock hash repartitioning
+    assigns KEYS to partitions randomly, so with distinct (shard,
+    bucket) keys ~= the partition count the max-loaded partition
+    carries ~3x the mean (balls in bins) and the encode/write stage
+    runs on a fraction of the cores, while oversubscribing keys (many
+    buckets) multiplies output files per task. Salted keys escape the
     trade-off: key index i = shard * sub + bucket is round-robined to
     target partition t = i % n_part by repartitioning on a SALT value
     precomputed to murmur3-hash onto exactly t (_identity_salts) —
     perfect key balance with only a few keys per partition and O(keys)
-    total output files. 'oversub' / 'plain' keep the stock hash
-    assignment (~_KEY_OVERSUB / ~1 keys per partition) for same-window
-    A/B comparison (scripts/ab_oversub.py).
+    total output files.
     """
     spark = postings.sparkSession
     if shard_size:
@@ -501,171 +400,18 @@ def build_block_index(
         )
     else:
         sharded = postings.withColumn("shard", F.lit(0).cast("int"))
-    n_part = num_partitions or (
-        spark.sparkContext.defaultParallelism * _PART_MULT
-    )
+    n_part = num_partitions or spark.sparkContext.defaultParallelism
     shards = max(1, shards_hint or 1)
-    if _PARTITION_MODE == "salted":
-        # a few keys per partition smooths per-bucket byte skew; exact
-        # balance comes from the round-robin, not the key count
-        sub = max(1, (4 * n_part + shards - 1) // shards)
-        pk = identity_partition_key(
-            F.col("shard"), F.pmod(F.xxhash64(term_col), F.lit(sub)), sub, n_part
-        )
-        ordered = sharded.repartition(n_part, pk)
-    else:
-        oversub = _KEY_OVERSUB if _PARTITION_MODE == "oversub" else 1
-        sub = max(1, (oversub * n_part + shards - 1) // shards)
-        ordered = sharded.repartition(
-            n_part, "shard", F.pmod(F.xxhash64(term_col), F.lit(sub))
-        )
-    ordered = ordered.sortWithinPartitions("shard", term_col, "doc_id")
-    out_schema = BLOCK_SCHEMA if term_col == "term" else BLOCK_ID_SCHEMA
-    return ordered.mapInArrow(
-        _block_builder(block_size, codec, term_col, from_occurrences), out_schema
+    # a few keys per partition smooths per-bucket byte skew; exact
+    # balance comes from the round-robin, not the key count
+    sub = max(1, (4 * n_part + shards - 1) // shards)
+    pk = identity_partition_key(
+        F.col("shard"), F.pmod(F.xxhash64("term"), F.lit(sub)), sub, n_part
     )
-
-
-def _vb_hex_expr(v):
-    """Catalyst expression: hex string of the varbyte encoding of a
-    non-negative long `v` — little-endian 7-bit groups, MSB (0x80) on
-    the LAST byte (functions/codec.py / HW2/engine/listio.py:229-321).
-
-    Byte j exists iff j == 0 or v >= 2^(7j); it is the last byte iff
-    v < 2^(7(j+1)) (always true at j=8: every long < 2^63). Each byte
-    renders as two hex digits; unhex() of the concatenation is the
-    payload. All-JVM: no Python worker, no Arrow crossing.
-    """
-    parts = []
-    for j in range(9):
-        byte = F.shiftright(v, 7 * j).bitwiseAND(F.lit(127))
-        if j == 8:
-            byte_val = byte + F.lit(128)
-        else:
-            byte_val = byte + F.when(
-                v < F.lit(1 << (7 * (j + 1))), F.lit(128)
-            ).otherwise(F.lit(0))
-        piece = F.lpad(F.hex(byte_val), 2, "0")
-        if j == 0:
-            parts.append(piece)
-        else:
-            parts.append(
-                F.when(v >= F.lit(1 << (7 * j)), piece).otherwise(F.lit(""))
-            )
-    return F.concat(*parts)
-
-
-def _u4_hex_expr(v):
-    """Catalyst expression: hex of `v` as a little-endian uint32 (the
-    raw codec, functions/codec.py raw_encode)."""
-    return F.concat(
-        *[
-            F.lpad(F.hex(F.shiftright(v, 8 * k).bitwiseAND(F.lit(255))), 2, "0")
-            for k in range(4)
-        ]
+    ordered = sharded.repartition(n_part, pk).sortWithinPartitions(
+        "shard", "term", "doc_id"
     )
-
-
-def build_block_index_sql(
-    postings: DataFrame,
-    block_size: int = BLOCK_SIZE,
-    codec: str = CODEC_VARBYTE,
-    shard_size: int | None = None,
-) -> DataFrame:
-    """(term, doc_id, tf) -> block rows with the ENCODE entirely
-    JVM-side — zero Python workers, zero Arrow crossings in the reduce
-    stage (the round-4 scaling forensics isolated the mapInArrow
-    encode's Python/Arrow boundary as a non-scaling residual; this is
-    the A/B that answers it).
-
-    Shape: groupBy(shard, term) collects each group's postings into a
-    doc_id-sorted array (ObjectHashAggregate, one exchange — the same
-    logical merge as the mapInArrow build's repartition+sort), then
-    pure column expressions chunk the array into <=block_size blocks
-    (transform + slice + posexplode) and render the delta-gap varbyte
-    payloads as hex strings folded through unhex (_vb_hex_expr). Output
-    rows are byte-identical to build_block_index (differentially
-    tested).
-
-    Trade-offs vs the mapInArrow build, by design:
-      - group arrays are bounded by shard_size postings (the same skew
-        bound), ~16 B/posting of agg buffer;
-      - output partitioning is hash(shard, term), so a partitionBy
-        write would emit tasks x shards files; the caller re-applies
-        the salted identity repartition over the (index-sized, ~10x
-        smaller than postings) block rows before writing;
-      - per-element work runs through Catalyst higher-order functions
-        (interpreted per element, but JVM-threaded — the point of the
-        A/B is whether removing the Python boundary beats the numpy
-        kernel's per-core speed at scale).
-    """
-    if shard_size:
-        sharded = postings.withColumn(
-            "shard", (F.col("doc_id") / F.lit(int(shard_size))).cast("int")
-        )
-    else:
-        sharded = postings.withColumn("shard", F.lit(0).cast("int"))
-    bs = int(block_size)
-    grouped = sharded.groupBy("shard", "term").agg(
-        F.array_sort(F.collect_list(F.struct("doc_id", "tf"))).alias("ps")
-    )
-    blocks = grouped.select(
-        "term",
-        "shard",
-        F.posexplode(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.floor((F.size("ps") - F.lit(1)) / F.lit(bs)).cast("int"),
-                ),
-                lambda i: F.struct(
-                    F.slice("ps", i * bs + 1, bs).alias("chunk"),
-                    F.when(i == F.lit(0), F.lit(0).cast("long"))
-                    .otherwise(
-                        F.element_at(
-                            F.col("ps"), F.greatest(i * bs, F.lit(1))
-                        )["doc_id"]
-                    )
-                    .alias("base"),
-                ),
-            )
-        ).alias("block_id", "blk"),
-    )
-    chunk = F.col("blk")["chunk"]
-    base = F.col("blk")["base"]
-    # gaps: continuous delta chain — first gap of block b>0 is the diff
-    # against the previous block's last docid (= base), block 0 starts
-    # absolute from base 0 (same spec as _encode_arrow)
-    gaps = F.transform(
-        chunk,
-        lambda x, j: x["doc_id"]
-        - F.when(j == F.lit(0), base).otherwise(
-            F.element_at(chunk, F.greatest(j, F.lit(1)))["doc_id"]
-        ),
-    )
-    if codec == CODEC_VARBYTE:
-        doc_hex = F.array_join(F.transform(gaps, _vb_hex_expr), "")
-        freq_hex = F.array_join(
-            F.transform(chunk, lambda x: _vb_hex_expr(x["tf"])), ""
-        )
-    else:
-        doc_hex = F.array_join(
-            F.transform(chunk, lambda x: _u4_hex_expr(x["doc_id"])), ""
-        )
-        freq_hex = F.array_join(
-            F.transform(chunk, lambda x: _u4_hex_expr(x["tf"])), ""
-        )
-    return blocks.select(
-        "term",
-        "shard",
-        F.col("block_id").cast("int").alias("block_id"),
-        F.size(chunk).cast("int").alias("n"),
-        F.element_at(chunk, -1)["doc_id"].cast("long").alias("last_docid"),
-        base.cast("long").alias("base_docid"),
-        F.array_max(chunk["tf"]).cast("long").alias("max_tf"),
-        F.unhex(doc_hex).alias("doc_bytes"),
-        F.unhex(freq_hex).alias("freq_bytes"),
-    )
+    return ordered.mapInArrow(_block_builder(block_size, codec), BLOCK_SCHEMA)
 
 
 def build_block_index_grouped(

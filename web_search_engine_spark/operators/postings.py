@@ -83,42 +83,11 @@ def with_tokens(df: DataFrame, text_col: str = "content", method: str = "pandas"
     """Add a ``tokens: array<string>`` column.
 
     method='pandas': Arrow-vectorized pandas_udf incl. HTML unescape
-    (the north-star path). method='sql': pure-JVM regexp_extract_all —
-    stays in whole-stage codegen; identical output on entity-free text.
-    method='split': plan-level hybrid — rows that can NEED the Python
-    cleanup (NULL, containing '&', or any non-ASCII byte, i.e. anything
-    html.unescape or ftfy could alter) route through the pandas_udf;
-    every other row tokenizes fully JVM-side inside whole-stage codegen.
-    Output is row-identical to 'pandas' (differential-tested) but the
-    Python worker boundary — measured as the build's worst-scaling
-    component (BENCH.md round 4) — is paid only for the row fraction
-    that semantically requires it. At 100 TB this is the difference
-    between every executor streaming the whole corpus through Python
-    workers and streaming only the entity/non-ASCII slice.
+    (the north-star path, and the build default). method='sql': pure-JVM
+    regexp_extract_all — stays in whole-stage codegen; identical output
+    on entity-free text.
     """
     df = _spread_input(df)
-    if method == "split":
-        from ..functions import tokenizer as _tok
-
-        if _tok._fix_text is not None:
-            # ftfy also rewrites pure-ASCII text (control chars,
-            # terminal escapes), so no JVM-side guard can prove a row
-            # unaffected — the split would silently diverge from the
-            # pandas path. Degrade to all-pandas and keep the
-            # row-identity contract.
-            return df.withColumn("tokens", tokenize_udf(F.col(text_col)))
-        needs_py = (
-            F.col(text_col).isNull()
-            | F.col(text_col).contains("&")
-            | F.col(text_col).rlike("[^\\x00-\\x7F]")
-        )
-        jvm = df.filter(~needs_py).withColumn(
-            "tokens", tokens_sql_col(text_col)
-        )
-        py = df.filter(needs_py).withColumn(
-            "tokens", tokenize_udf(F.col(text_col))
-        )
-        return jvm.unionByName(py)
     col = tokenize_udf(F.col(text_col)) if method == "pandas" else tokens_sql_col(text_col)
     return df.withColumn("tokens", col)
 
@@ -198,127 +167,6 @@ def build_postings(
     return agg
 
 
-def build_postings_mapcombine(
-    docs: DataFrame,
-    text_col: str = "content",
-    doc_id_col: str = "doc_id",
-    doc_rows: bool = False,
-    passthrough_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(term, doc_id, tf) via ONE mapInArrow pass — map-side combine
-    fused into the tokenizer.
-
-    Row-identical to ``build_postings(with_tokens(docs))`` (differential
-    test: tests/test_block_index.py::test_mapcombine_build_matches_agg)
-    but with a different physical shape: tokenize AND per-doc tf
-    counting happen inside one Arrow batch in Python, so the plan has
-    no array<string> column crossing Arrow->JVM row conversion, no
-    explode row blowup, and NO hash aggregation at all — a doc lives in
-    exactly one input row, so per-doc counts are already exact and the
-    output feeds the blocks exchange directly — the two corpus-sized
-    aggregation hash tables (and their spill traffic) vanish from the
-    plan, leaving the blocks shuffle as the only exchange.
-
-    Kept OPT-IN (WSE_BUILD_MODE=mapcombine): the sandbox A/B (BENCH.md
-    round 4, e10 probe) measured it 1.4x faster than the agg path at 4
-    cores but WORSE-scaling (0.34 vs 0.82 pair efficiency at 3M docs) —
-    post-Arrow-fix, Spark's JVM aggregation machinery thread-scales
-    better on one box than the widened Python/Arrow worker boundary
-    this mode leans on. The trade may invert on memory-constrained
-    executors where agg spill traffic dominates; measure before
-    enabling.
-
-    doc_rows=True additionally emits ONE sentinel row per document
-    (``term IS NULL``) carrying doc-level columns computed in the same
-    pass: tf = dl (token count, 0 for empty docs), content_sha256
-    (hex, == F.sha2(text, 256)), and ``passthrough_cols`` copied from
-    the input. Consumers split the stream with a term-null filter:
-    postings = term IS NOT NULL, docs_meta = term IS NULL — the corpus
-    is read, tokenized, and hashed exactly once for both tables.
-    """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    from ..functions.tokenizer import tokenize_series
-
-    in_cols = [doc_id_col, text_col, *passthrough_cols]
-    fields = {f.name: f for f in docs.schema.fields}
-    out_ddl = "term string, doc_id long, tf long"
-    _out_names = ["term", "doc_id", "tf"]
-    _extra_types: list = []  # arrow types of [sha, *passthrough] cols
-    if doc_rows:
-        out_ddl += ", content_sha256 string"
-        _out_names.append("content_sha256")
-        _extra_types.append(pa.string())
-        for c in passthrough_cols:
-            out_ddl += f", {c} {fields[c].dataType.simpleString()}"
-            _out_names.append(c)
-            _extra_types.append(to_arrow_type(fields[c].dataType))
-
-    def fused(batches):
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            doc_ids = b.column(0).to_numpy(zero_copy_only=False)
-            texts = b.column(1).to_pandas()
-            toks = tokenize_series(texts)
-            lens = toks.map(len).to_numpy()
-            total = int(lens.sum())
-            if total:
-                flat = np.concatenate(
-                    [v for v in toks.to_numpy() if v]
-                )
-                # integer-key counting: factorize terms once (C hash
-                # table), then ONE int64 sort-unique over the packed
-                # (batch-local doc index << 32 | term code) key — ~3x
-                # cheaper than hashing 2-column string groups
-                codes, uniques = pd.factorize(flat, sort=False)
-                doc_local = np.repeat(
-                    np.arange(len(lens), dtype=np.int64), lens
-                )
-                key = (doc_local << 32) | codes.astype(np.int64)
-                ukey, counts = np.unique(key, return_counts=True)
-                terms_out = np.asarray(uniques, dtype=object)[
-                    ukey & 0xFFFFFFFF
-                ]
-                docs_out = doc_ids[ukey >> 32]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(terms_out, type=pa.string()),
-                        pa.array(docs_out, type=pa.int64()),
-                        pa.array(counts.astype("int64"), type=pa.int64()),
-                    ]
-                    + [pa.nulls(len(ukey), t) for t in _extra_types],
-                    names=_out_names,
-                )
-            if doc_rows:
-                sha = pa.array(
-                    [
-                        None if t is None
-                        else hashlib.sha256(t.encode("utf-8")).hexdigest()
-                        for t in texts
-                    ],
-                    type=pa.string(),
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.nulls(b.num_rows, pa.string()),
-                        b.column(0).cast(pa.int64()),
-                        pa.array(lens.astype("int64"), type=pa.int64()),
-                        sha,
-                    ]
-                    + [b.column(2 + i)
-                       for i in range(len(passthrough_cols))],
-                    names=_out_names,
-                )
-
-    return docs.select(*in_cols).mapInArrow(fused, out_ddl)
-
-
 def lexicon_df(postings: DataFrame) -> DataFrame:
     """(term, df) — exact document frequency per term.
 
@@ -349,35 +197,20 @@ def salted_term_counts(postings: DataFrame, n_salts: int = 16) -> DataFrame:
     return phase1.groupBy("term").agg(F.sum("partial_df").cast("long").alias("df"))
 
 
-def build_term_dictionary(
-    postings: DataFrame,
-) -> tuple[DataFrame, int, DataFrame]:
-    """(term, term_id) with term_id = dense LEXICAL rank of the term.
+# dense-integer-key fast path for assign_doc_ids_counted: WSE_DENSE_IDS
+# "auto" (the default) probes a single integral key and, when the keys
+# are provably dense (no nulls, exact distinct count == max-min+1 ==
+# row count), assigns doc_id = key - min as a pure projection — NO
+# range exchange of the corpus rows at all (guide §2.4 "remove shuffles
+# outright"). "0" disables the probe and always takes the range-partition
+# path. Read per call (_dense_ids_mode), so the value in effect is the
+# one a validation error names.
+def _dense_ids_mode() -> str:
+    mode = os.environ.get("WSE_DENSE_IDS", "auto")
+    if mode not in ("auto", "0"):
+        raise ValueError(f"WSE_DENSE_IDS must be auto|0, got {mode!r}")
+    return mode
 
-    Feeds the dictionary-encoded block build (blocks.build_block_index
-    term_col='term_id'): because ids are assigned in lexical term order,
-    sorting postings by term_id reproduces the term-string sort order
-    exactly, so the encoded blocks are identical after the strings are
-    joined back — while the corpus-sized shuffle moves int64 ids
-    instead of strings. The vocabulary is tiny relative to the corpus
-    (Heaps' law), so the distinct + rank here is a rounding error next
-    to the postings shuffle it shrinks.
-
-    Returns (dict_df, n_terms, cache_handle) — same caller-owns-cache
-    contract as assign_doc_ids_counted.
-    """
-    vocab = postings.select("term").distinct()
-    ranked, n_terms, handle = assign_doc_ids_counted(vocab, ["term"])
-    return ranked.withColumnRenamed("doc_id", "term_id"), n_terms, handle
-
-
-# dense-integer-key fast path for assign_doc_ids_counted: "auto"
-# probes a single integral key and, when the keys are provably dense
-# (no nulls, exact distinct count == max-min+1 == row count), assigns
-# doc_id = key - min as a pure projection — NO range exchange of the
-# corpus rows at all (guide §2.4 "remove shuffles outright"). "0"
-# disables the probe and always takes the range-partition path.
-_DENSE_IDS = os.environ.get("WSE_DENSE_IDS", "auto")
 
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
@@ -401,7 +234,7 @@ def _dense_key_ids(
     over the cache 384 -> 320 ms (the spread sizes the cache by input
     bytes instead of inheriting 32 near-empty range partitions).
     """
-    if _DENSE_IDS == "0" or len(key_cols) != 1:
+    if len(key_cols) != 1:
         return None
     key = key_cols[0]
     if dict(df.dtypes).get(key) not in _INTEGRAL_TYPES:
@@ -429,15 +262,19 @@ def _dense_key_ids(
     # the probe reads the raw plan, not the persisted relation.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_distinct = pool.submit(
-            lambda: int(
-                df.agg(F.count_distinct(key).alias("d")).collect()[0]["d"]
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_distinct = pool.submit(
+                lambda: int(
+                    df.agg(F.count_distinct(key).alias("d")).collect()[0]["d"]
+                )
             )
-        )
-        f_fill = pool.submit(handle.count)
-        d = f_distinct.result()
-        f_fill.result()
+            f_fill = pool.submit(handle.count)
+            d = f_distinct.result()
+            f_fill.result()
+    except BaseException:
+        handle.unpersist()  # the caller never receives the handle
+        raise
     if d != c:  # spoofed density (dups+gaps cancelling): fall back
         handle.unpersist()
         return None
@@ -479,13 +316,10 @@ def assign_doc_ids_counted(
     the single integral key is provably dense the id is key - min — a
     projection, zero exchanges; see _dense_key_ids.
     """
-    if _DENSE_IDS not in ("auto", "0"):
-        raise ValueError(
-            f"WSE_DENSE_IDS must be auto|0, got {_DENSE_IDS!r}"
-        )
-    fast = _dense_key_ids(df, key_cols)
-    if fast is not None:
-        return fast
+    if _dense_ids_mode() == "auto":
+        fast = _dense_key_ids(df, key_cols)
+        if fast is not None:
+            return fast
     n_part = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n_part, *key_cols).withColumn(
         "_pid", F.spark_partition_id()

@@ -3,19 +3,26 @@
 Replaces the reference's three CLI stages (build_runs_mp -> parallel_merge
 -> merger, SURVEY.md §3.1) with one declarative pipeline:
 
-  read source -> assign dense docids -> tokenize ONCE -> explode ->
-  groupBy(term, doc_id).count() [persisted postings] -> salted identity
-  repartition (shard, term-bucket) + sortWithinPartitions + mapInArrow
-  block build -> parquet; docs_meta (dl + sha256 + lineage) derives dl
-  from the persisted postings (SUM(tf) per doc == the token count by
-  definition; dl=0 docs rejoin via left join)
+  read source -> assign dense docids -> tokenize -> explode ->
+  groupBy(term, doc_id).count() -> salted identity repartition (shard,
+  term-bucket) + sortWithinPartitions + mapInArrow block build ->
+  parquet; docs_meta (dl + sha256 + lineage) written alongside
+
+There is one build shape. Three auto rules pick its physical details
+from what the pass observes; each is a small pure function below with
+its threshold as a module constant:
+  - _dl_source: below _DL_AUTO_MIN_DOCS pending docs, dl = size(tokens)
+    from a second (cheap, fully parallel) tokenize pass, and the
+    docs_meta write overlaps the blocks write. At or above it the
+    postings are persisted and dl = SUM(tf) per doc (definitionally the
+    token count; dl=0 docs rejoin via a left join), so a large corpus is
+    TOKENIZED ONCE and the two writes run in sequence.
+  - _dl_agg / _dl_join: the aggregation plan and the join strategy of
+    that postings-derived dl.
 
 Pass discipline (this is what scales): the SOURCE ROWS are read once and
-cached (assign_doc_ids_counted persists its range-partitioned input;
-unpersisted at the end of the build) and large corpora are TOKENIZED
-ONCE per build (auto-selected above _DL_AUTO_MIN_DOCS — a rule round 4
-re-confirmed in-sequence after the Arrow fix; WSE_DL_SOURCE forces
-either shape). The only corpus-sized shuffles are the postings
+cached (assign_doc_ids_counted persists its input; unpersisted at the
+end of the build). The only corpus-sized shuffles are the postings
 aggregation and the blocks exchange itself.
 
 Job discipline: every Spark action costs seconds of fixed scheduling
@@ -43,23 +50,20 @@ import os
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import BLOCK_SIZE, CODEC_VARBYTE
 from ..operators.blocks import (
-    _PART_MULT,
     build_block_index,
-    build_block_index_sql,
     identity_partition_key,
     lexicon_from_blocks,
 )
 from ..operators.postings import (
     assign_doc_ids_counted,
     build_postings,
-    build_postings_mapcombine,
-    build_term_dictionary,
     with_tokens,
 )
 from ..sources.catalog import IndexCatalog, read_stats, write_stats
@@ -68,119 +72,28 @@ from ..sources.catalog import IndexCatalog, read_stats, write_stats
 # aggregates get wide; fall back to one tiny post-hoc aggregation job.
 OBSERVE_MAX_SHARDS = 64
 
-# doc-length derivation for docs_meta: "postings" reuses the cached
-# postings relation (dl = SUM(tf) per doc — definitionally equal to the
-# token count) so the corpus is TOKENIZED ONCE per build; "tokenize"
-# re-tokenizes (second fully-parallel map pass, no extra shuffle).
-# "auto" picks by corpus size — re-confirmed by a round-4 in-sequence
-# A/B after the Arrow fix (see the resolution-site comment).
-_DL_SOURCE = os.environ.get("WSE_DL_SOURCE", "auto")
+# _dl_source threshold. Round 4 RE-TESTED this rule after the Arrow fix
+# (isolated probes suggested the second tokenize pass had become cheaper
+# than the dl join) and the in-sequence e2e A/B said otherwise:
+# tokenize-derived dl read 52-82 s at 16 cores inside a full build (vs
+# 16-34 s for the join; BENCH.md round-4 §4), the isolated 9.5 s number
+# not surviving heap/worker pressure from the preceding blocks stage.
 _DL_AUTO_MIN_DOCS = 200_000
 
-# dictionary-encoded block build: replace the term string with its dense
-# lexical rank (int64) BEFORE the corpus-sized blocks shuffle, and join
-# the strings back onto the (tiny) block rows after encoding. The block
-# table comes out row-identical with files still term-clustered (lexical
-# ids sort exactly like the strings — see blocks.build_block_index); the
-# exchange payload and the sort keys
-# shrink to fixed-width ints, which is where the bandwidth-bound
-# sort+encode stage spends its time. MEASURED NEGATIVE at sandbox scale
-# (BENCH.md round 4): with the synthetic corpus's 450-term vocabulary the
-# lz4 shuffle compresses repeated short strings as well as int64 ids
-# (exchange bytes unchanged, 383 vs 386 MB), the sort+encode stage CPU
-# drops only ~17%, and the broadcast map join adds more than that back —
-# so the DEFAULT IS OFF. "auto"/"on" keep the path available (with the
-# bit-identical differential test) for corpora where it pays: large
-# vocabularies of long terms, where the string payload dominates the
-# exchange and dictionary pages can't absorb it.
-_TERM_DICT = os.environ.get("WSE_TERM_DICT", "off")
-_TERM_DICT_MAX_VOCAB = int(
-    os.environ.get("WSE_TERM_DICT_MAX_VOCAB", str(2_000_000))
-)
+# _dl_agg thresholds: the stock partial aggregate must still shrink the
+# dl exchange this many times over; without a postings count, this
+# parallelism alone picks the repartition-first plan.
+_DL_AGG_MIN_REDUCTION = 2
+_DL_AGG_WIDE_PARALLELISM = 16
 
-# build pipeline shape:
-#   "agg"   — explode -> hash-aggregated postings -> second exchange ->
-#             sort + encode (two corpus-sized shuffles; postings cached
-#             and reused for dl when dl_source=postings)
-#   "fused" — single-shuffle: raw token occurrences exchanged once on
-#             the salted key, sorted, tf aggregated as run lengths in
-#             the encoder (blocks.build_block_index from_occurrences).
-#             No hash aggs, no second exchange, no postings cache; dl
-#             comes from the tokenize pass. See BENCH.md round 4 for the
-#             measured comparison.
-#   "mapcombine" — ONE mapInArrow pass does tokenize + per-doc tf
-#             counting + dl + sha256 (postings.build_postings_mapcombine);
-#             sentinel rows carry docs_meta. No explode, no hash aggs,
-#             no dl join anywhere: the blocks exchange is the only
-#             corpus-sized shuffle left, and docs_meta is a filter of
-#             the persisted fused relation. See BENCH.md round 4.
-#   "sqlenc" — the agg pipeline with the block ENCODE entirely JVM-side
-#             (blocks.build_block_index_sql: collect_list + higher-order
-#             functions + hex/unhex varbyte) — zero Python workers and
-#             zero Arrow crossings in the reduce stage. The round-5
-#             scaling A/B answering VERDICT r4 #2; byte-identical rows
-#             (differentially tested). Incompatible with WSE_TERM_DICT=on.
-_BUILD_MODE = os.environ.get("WSE_BUILD_MODE", "agg")
+# _dl_join threshold: 16 B/row -> ~320 MB broadcast at the cap; beyond
+# that the executors' and driver's memory pay more than the avoided
+# exchange.
+_DL_BROADCAST_MAX_DOCS = 20_000_000
 
-# corpus tokenizer for the build (operators/postings.with_tokens):
-#   "pandas" — DEFAULT: every row through the Arrow pandas_udf.
-#   "split"  — JVM regexp codegen for ASCII entity-free rows,
-#              pandas_udf only for rows that can need Python cleanup
-#              (NULL / '&' / non-ASCII). Row-identical to "pandas"
-#              (tests/test_tokenizer.py::test_split_tokenizer_matches_pandas).
-#   "sql"    — every row pure JVM (diverges on HTML entities).
-# The default is "pandas" because the same-window A/B (BENCH.md round
-# 4, scripts/probe_tokenizer_ab.py) measured the JVM regexp path
-# SLOWER at BOTH parallelism levels (1.5M-doc datapath: 94.7 vs
-# 123.5 s at 4 cores, 35.1 vs 59.3 s at 16) — java.util.regex loses
-# more than the Python worker boundary costs. "split" stays available
-# for corpora where the regex balance differs.
-_TOKENIZER = os.environ.get("WSE_TOKENIZER", "pandas")
-
-# how the per-doc dl (SUM tf over the persisted postings) joins back
-# onto the source rows for docs_meta:
-#   "auto"      — broadcast below _DL_BROADCAST_MAX_DOCS, else shuffle
-#   "broadcast" — force broadcast-hash (dl side = n_docs rows of
-#                 (long, long); Catalyst can't SEE that the agg output
-#                 is join-key-unique and small, so it plans sort-merge
-#                 with two exchanges + sorts unless told)
-#   "shuffle"   — force the stock sort-merge (the 100-TB shape: at
-#                 billions of docs the dl relation outgrows the driver)
-_DL_JOIN = os.environ.get("WSE_DL_JOIN", "auto")
-# 16 B/row -> ~320 MB broadcast at the cap; beyond that the executors'
-# and driver's memory pay more than the avoided exchange
-_DL_BROADCAST_MAX_DOCS = int(
-    os.environ.get("WSE_DL_BROADCAST_MAX_DOCS", str(20_000_000))
-)
-
-# physical plan for the dl aggregation itself (SUM(tf) GROUP BY doc_id
-# over the persisted postings — the docs_meta stage's dominant cost,
-# BENCH.md round-5 decomposition):
-#   "partial"     — the stock plan: partial hash agg on the
-#                 (term,doc_id)-hashed postings, exchange, final agg.
-#                 At high parallelism the partial agg is structurally
-#                 anti-scaling: each map task's hash map holds up to
-#                 n_docs entries and emits ~one row per key per
-#                 PARTITION, so exchanged rows grow as P x n_docs.
-#   "repartition" — project to the 16-byte (doc_id, tf) rows and
-#                 hash-repartition them by doc_id FIRST: the exchange
-#                 is a constant |postings| compact rows regardless of
-#                 P, and every agg map shrinks to n_docs/P entries.
-#                 Measured 1.04 pair efficiency 4->16 cores vs 0.46
-#                 for "partial" (scripts/probe_docsmeta.py) — the
-#                 1000-executor plan.
-#   "auto"        — partial only while it still reduces the exchange
-#                 >= 2x (P x n_docs <= |postings| / 2, i.e. narrow
-#                 parallelism relative to avgdl); repartition
-#                 otherwise. |postings| comes from the blocks-stage
-#                 Observation already paid for; without it (>64
-#                 pending shards) wide parallelism implies the
-#                 repartition plan.
-_DL_AGG = os.environ.get("WSE_DL_AGG", "auto")
-
-# encode/write task sizing: ~this many docs' worth of postings per
-# blocks-encode or docs_meta-write task. The task count is derived from
-# the docs actually tokenized in THIS pass (scale-adaptive, guide §2):
+# encode/write task sizing (_write_parallelism): ~this many docs' worth
+# of postings per blocks-encode or docs_meta-write task, derived from the
+# docs actually tokenized in THIS pass (scale-adaptive, guide §2):
 # floor = one task per pending shard (the partitioned writes key on
 # shard), cap = the session's parallelism — at corpus scale the cap
 # binds and the plan is unchanged; at tiny scale this collapses 32
@@ -189,16 +102,123 @@ _DL_AGG = os.environ.get("WSE_DL_AGG", "auto")
 # few-large-documents corpora (100 docs x 10 MB must not encode on
 # len(pending) tasks): the optimizer's size estimate, pro-rated to the
 # pending fraction, adds ~1 task per _BYTES_PER_WRITE_TASK of source.
-_DOCS_PER_WRITE_TASK = int(os.environ.get("WSE_DOCS_PER_WRITE_TASK", "1000"))
-_BYTES_PER_WRITE_TASK = int(
-    os.environ.get("WSE_BYTES_PER_WRITE_TASK", str(1 << 20))
-)
+_DOCS_PER_WRITE_TASK = 1000
+_BYTES_PER_WRITE_TASK = 1 << 20
+
+# parquet row-group size of the blocks table: the serving directory
+# prunes per ROW GROUP on term min/max, and with hash-bucketed files a
+# term range spans each bucket's whole sorted run — 4 MB groups keep the
+# false-positive read per probe bounded at a few MB instead of a 128 MB
+# default group.
+_BLOCKS_ROW_GROUP_BYTES = 4 * 1024 * 1024
+
+
+def _dl_source(pending_docs: int) -> str:
+    """Where docs_meta's dl comes from: "postings" (SUM(tf) over the
+    persisted postings; the corpus is tokenized once) at or above
+    _DL_AUTO_MIN_DOCS docs in the pass, else "tokenize" (size(tokens)
+    from a second map pass, which lets the two writes overlap)."""
+    return "postings" if pending_docs >= _DL_AUTO_MIN_DOCS else "tokenize"
+
+
+def _dl_agg(pending_docs: int, n_postings: int | None, parallelism: int) -> str:
+    """Physical plan of SUM(tf) GROUP BY doc_id over the postings.
+
+    "partial" — the stock plan: partial hash agg on the (term,
+    doc_id)-hashed postings, exchange, final agg. Each map task emits up
+    to one row per doc, so its output is ~min(|postings|, P x docs) rows:
+    structurally anti-scaling at high parallelism.
+    "repartition" — hash-repartition the 16-byte (doc_id, tf) projection
+    by doc_id FIRST: a constant |postings| exchange, agg maps shrinking
+    with P (1.04 vs 0.46 pair efficiency 4->16 cores,
+    scripts/probe_docsmeta.py).
+
+    Partial wins only while it still reduces the exchange
+    _DL_AGG_MIN_REDUCTION-fold. Without a postings count (more than
+    OBSERVE_MAX_SHARDS pending shards) wide parallelism alone decides.
+    """
+    if n_postings is None:
+        wide = parallelism >= _DL_AGG_WIDE_PARALLELISM
+        return "repartition" if wide else "partial"
+    if _DL_AGG_MIN_REDUCTION * parallelism * pending_docs <= n_postings:
+        return "partial"
+    return "repartition"
+
+
+def _dl_join(pending_docs: int) -> str:
+    """Join strategy of the per-doc dl relation (one row per doc in the
+    pass) onto the source rows: "broadcast" up to _DL_BROADCAST_MAX_DOCS
+    (Catalyst cannot see that the agg output is key-unique and small, so
+    unhinted it plans a sort-merge with two exchanges and sorts), else
+    "shuffle" (at billions of docs the dl relation outgrows the driver)."""
+    return "broadcast" if pending_docs <= _DL_BROADCAST_MAX_DOCS else "shuffle"
+
+
+def _write_parallelism(
+    parallelism: int, n_pending: int, pending_docs: int, pending_bytes: int
+) -> int:
+    """Encode/write task count of one pass — see _DOCS_PER_WRITE_TASK."""
+    return min(
+        parallelism,
+        max(
+            n_pending,
+            -(-pending_docs // _DOCS_PER_WRITE_TASK),
+            -(-pending_bytes // _BYTES_PER_WRITE_TASK),
+        ),
+    )
+
+
+def _pending_bytes(source: DataFrame, n_docs: int, pending_docs: int) -> int:
+    """The optimizer's size estimate of ``source``, pro-rated to the
+    pending docs; 0 when the estimate is unknown."""
+    try:
+        sz = int(source._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return 0
+    if 0 < sz < (1 << 60) and n_docs:
+        return sz * pending_docs // n_docs
+    return 0
+
+
+def write_blocks(blocks: DataFrame, index_dir: str) -> None:
+    """Shard-partitioned write of block rows with small row groups (see
+    _BLOCKS_ROW_GROUP_BYTES); the build and streaming appends share it."""
+    blocks.write.mode("overwrite").option(
+        "parquet.block.size", str(_BLOCKS_ROW_GROUP_BYTES)
+    ).partitionBy("shard").parquet(os.path.join(index_dir, "blocks"))
+
+
+def write_docs_meta(
+    docs_meta: DataFrame, index_dir: str, n_part: int, n_shards: int
+) -> None:
+    """Shard-partitioned docs_meta write on ``n_part`` tasks for rows of
+    ``n_shards`` shards; the build and streaming appends share it.
+
+    Repartition by (shard, doc_id-bucket) before the partitioned write:
+    plain task-output writes put a file from every task into every shard
+    dir (tasks x shards small files; measured 14x slower at 32 cores),
+    while repartition("shard") alone caps the write stage at num_shards
+    tasks — fewer than the cores when shards < cores (at 100 TB shards
+    >> cores and sub collapses to 1). Keys round-robin onto partitions
+    via murmur3-inverted salts — exact balance, no balls-in-bins
+    stragglers, O(keys) output files (operators/blocks.identity_partition_key).
+    """
+    sub = max(1, (4 * n_part + n_shards - 1) // max(1, n_shards))
+    docs_meta.repartition(
+        n_part,
+        identity_partition_key(
+            F.col("shard"), F.pmod(F.col("doc_id"), F.lit(sub)), sub, n_part
+        ),
+    ).write.mode("overwrite").partitionBy("shard").parquet(
+        os.path.join(index_dir, "docs_meta")
+    )
 
 
 def _action_timer():
     """WSE_BUILD_TIMINGS=1 -> print per-action wall times (the build is
     exactly 4 Spark actions; this attributes wall clock to each for
-    scaling diagnosis with zero overhead when off)."""
+    scaling diagnosis with zero overhead when off). The build path's
+    only environment knob."""
     if os.environ.get("WSE_BUILD_TIMINGS") != "1":
         return lambda label: None
     state = {"t": time.perf_counter()}
@@ -209,11 +229,6 @@ def _action_timer():
         state["t"] = now
 
     return mark
-
-_MANIFEST_COLS = [
-    "shard", "n_docs", "sum_dl", "n_postings", "n_blocks",
-    "build_sec", "finished_unix", "codec", "block_size", "shard_size",
-]
 
 
 def _read_manifest_rows(index_dir: str) -> list[dict]:
@@ -268,9 +283,7 @@ def _append_manifest_rows(index_dir: str, rows: list[dict]) -> None:
 # Spark path runs unchanged. File-count short-circuit: past
 # _LEXICON_DRIVER_MAX_FILES footers the footer census itself is no
 # longer cheap, so skip straight to Spark.
-_LEXICON_DRIVER_MAX_BLOCKS = int(
-    os.environ.get("WSE_LEXICON_DRIVER_MAX_BLOCKS", str(262_144))
-)
+_LEXICON_DRIVER_MAX_BLOCKS = 262_144
 _LEXICON_DRIVER_MAX_FILES = 256
 
 
@@ -306,8 +319,10 @@ def _merge_lexicon_driver(
     """Driver-side merge: aggregate (term, n, max_tf) over ``files`` with
     pyarrow, fold into the existing lexicon when ``fold_old`` (the
     append case; a full rebuild ignores any stale table), atomic-swap.
-    Sums/maxes of integers are order-independent, so the table is
-    row-identical to the Spark aggregation (differentially tested)."""
+    df and nblocks fold by sum, max_tf by max. Sums/maxes of integers are
+    order-independent, so the table is row-identical to the Spark
+    aggregation (differentially tested)."""
+    import numpy as np
     import pandas as pd
     import pyarrow as pa
     import pyarrow.dataset as pads
@@ -323,7 +338,7 @@ def _merge_lexicon_driver(
         )
     else:
         agg = pd.DataFrame(
-            {"df": [], "nblocks": [], "max_tf": []},
+            {c: pd.Series([], dtype="int64") for c in ("df", "nblocks", "max_tf")},
             index=pd.Index([], name="term"),
         )
     if fold_old:
@@ -333,12 +348,19 @@ def _merge_lexicon_driver(
             .to_pandas()
             .set_index("term")
         )
-        both = old.add(agg, fill_value=0)  # aligned elementwise sum
-        # max_tf merges by MAX, not sum — recompute it from the inputs
-        both["max_tf"] = old["max_tf"].combine(
-            agg["max_tf"], max, fill_value=0
+        # align both sides on the union of terms (a term absent from one
+        # side contributes 0), then fold each column by its own operator
+        terms = old.index.union(agg.index)
+        o = old.reindex(terms, fill_value=0)
+        a = agg.reindex(terms, fill_value=0)
+        agg = pd.DataFrame(
+            {
+                "df": o["df"] + a["df"],
+                "nblocks": o["nblocks"] + a["nblocks"],
+                "max_tf": np.maximum(o["max_tf"], a["max_tf"]),
+            },
+            index=terms.rename("term"),
         )
-        agg = both
     agg = agg.reset_index()
     out = pa.table(
         {
@@ -491,31 +513,19 @@ def build_index(
     codec: str = CODEC_VARBYTE,
     block_size: int = BLOCK_SIZE,
     num_shards: int = 8,
-    tokenizer: str | None = None,
+    tokenizer: str = "pandas",
     key_cols: tuple[str, ...] = ("repo", "path"),
     text_col: str = "content",
     resume: bool = True,
 ) -> IndexCatalog:
     """Build (or resume) the blocked index under ``index_dir``.
 
-    tokenizer=None resolves to the WSE_TOKENIZER env knob (default
-    "pandas" — see _TOKENIZER above); pass "pandas"/"sql"/"split"
-    explicitly to pin a path.
+    tokenizer: "pandas" (the Arrow pandas_udf with HTML unescape; the
+    same-window A/B in BENCH.md round 4 measured the JVM regexp path
+    slower at both parallelism levels) or "sql" (pure-JVM regexp,
+    identical on entity-free text) — see operators/postings.with_tokens.
     """
     t_start = time.time()
-    if tokenizer is None:
-        tokenizer = _TOKENIZER
-    # validate env knobs up front, not inside the branch that happens to
-    # read them — a typo'd value must fail every build shape loudly, not
-    # only the shapes that reach that branch
-    if _DL_AGG not in ("auto", "partial", "repartition"):
-        raise ValueError(
-            f"WSE_DL_AGG must be auto|partial|repartition, got {_DL_AGG!r}"
-        )
-    if _DL_JOIN not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(
-            f"WSE_DL_JOIN must be auto|broadcast|shuffle, got {_DL_JOIN!r}"
-        )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     prior = _read_manifest_rows(index_dir) if resume else []
@@ -553,12 +563,16 @@ def build_index(
 
         meta_cols = [c for c in ("commit", "lang") if c in source.columns]
 
-        if n_docs == 0:
-            empty_meta = with_tokens(docs, text_col, method=tokenizer).select(
+        def tokenize_meta(toks: DataFrame) -> DataFrame:
+            # docs_meta with dl = the token count of the tokenize pass
+            return toks.select(
                 "shard", "doc_id", *key_cols, *meta_cols,
                 F.size("tokens").cast("long").alias("dl"),
                 F.sha2(F.col(text_col), 256).alias("content_sha256"),
             )
+
+        if n_docs == 0:
+            empty_meta = tokenize_meta(with_tokens(docs, text_col, method=tokenizer))
             return _write_empty_index(
                 spark, index_dir, empty_meta, codec, block_size, shard_size
             )
@@ -579,376 +593,113 @@ def build_index(
             use_observe = len(pending) <= OBSERVE_MAX_SHARDS
             docs_obs = blocks_obs = None
 
-            # docs actually tokenized in THIS pass: every auto rule below
-            # (dl_source, dl_agg, dl_join) sizes against the pending
-            # shards' docs, not the full corpus — a resumed build with
-            # one small shard left must not pick plans calibrated for
-            # full-corpus passes (ADVICE r5)
+            # docs actually tokenized in THIS pass: every auto rule sizes
+            # against the pending shards' docs, not the full corpus — a
+            # resumed build with one small shard left must not pick plans
+            # calibrated for full-corpus passes (ADVICE r5)
             pending_docs = sum(
                 max(0, min((s + 1) * shard_size, n_docs) - s * shard_size)
                 for s in pending
             )
+            parallelism = spark.sparkContext.defaultParallelism
+            par_pass = _write_parallelism(
+                parallelism, len(pending), pending_docs,
+                _pending_bytes(source, n_docs, pending_docs),
+            )
+            dl_from_postings = _dl_source(pending_docs) == "postings"
 
-            # see _DOCS_PER_WRITE_TASK / _BYTES_PER_WRITE_TASK:
-            # encode/write parallelism derived from this pass's size
-            # (docs AND estimated bytes), capped at session parallelism
-            pending_bytes_tasks = 0
+            # cluster_by_doc=False: the blocks exchange re-partitions on
+            # the salted (shard, term-bucket) key right after, and the dl
+            # aggregation has its own plan rule (_dl_agg) over the narrow
+            # (doc_id, tf) projection — a doc_id exchange of the FULL
+            # postings rows here would be strictly more shuffled bytes
+            postings = build_postings(toks, cluster_by_doc=False)
+            if dl_from_postings:
+                # tokenize ONCE: the blocks write materializes the
+                # postings and the dl aggregation reuses them
+                postings = postings.persist()
             try:
-                sz = int(
-                    source._jdf.queryExecution()
-                    .optimizedPlan().stats().sizeInBytes()
-                )
-                if 0 < sz < (1 << 60) and n_docs:
-                    est = sz * pending_docs // n_docs
-                    pending_bytes_tasks = -(-est // _BYTES_PER_WRITE_TASK)
-            except Exception:
-                pass
-            par_pass = min(
-                spark.sparkContext.defaultParallelism,
-                max(
-                    len(pending),
-                    -(-pending_docs // max(1, _DOCS_PER_WRITE_TASK)),
-                    pending_bytes_tasks,
-                ),
-            )
-
-            dl_source = _DL_SOURCE
-            if dl_source == "auto":
-                # postings above 200k docs: round 4 RE-TESTED this rule
-                # after the Arrow fix (isolated probes suggested the
-                # second tokenize pass had become cheaper than the dl
-                # join) and the in-sequence e2e A/B said otherwise —
-                # tokenize-derived dl read 52-82 s at 16 cores inside a
-                # full build (vs 16-34 s for the join; BENCH.md round-4
-                # §4), the isolated 9.5 s M0 number not surviving heap/
-                # worker pressure from the preceding blocks stage. Keep
-                # the round-3 rule; both shapes stay env-forceable and
-                # differentially tested.
-                dl_source = (
-                    "postings" if pending_docs >= _DL_AUTO_MIN_DOCS else "tokenize"
-                )
-            if _BUILD_MODE in ("fused", "mapcombine") and _DL_SOURCE == "postings":
-                # honor an explicitly pinned dl source loudly (the same
-                # contract as WSE_TERM_DICT=on below) — these build modes
-                # have no standalone postings relation to derive dl from,
-                # and silently switching shapes hides the conflict
-                raise ValueError(
-                    "WSE_DL_SOURCE=postings is incompatible with "
-                    f"WSE_BUILD_MODE={_BUILD_MODE!r}: no standalone "
-                    "postings relation exists in this build shape"
-                )
-            if _BUILD_MODE == "fused":
-                # no postings relation exists to derive dl from — dl
-                # rides the tokenize pass that feeds docs_meta
-                dl_source = "tokenize"
-            fused_mc = None
-            if _BUILD_MODE == "mapcombine":
-                # tokenize + per-doc tf counting + dl + sha256 in ONE
-                # Arrow pass (operators/postings.build_postings_mapcombine):
-                # sentinel rows (term IS NULL) carry the doc-level
-                # columns, so NO hash aggregation and NO dl join exist
-                # anywhere in the build — dl_source is moot here.
-                if tokenizer == "sql":
-                    raise ValueError(
-                        "WSE_BUILD_MODE=mapcombine implements the "
-                        "'pandas'/'split' tokenizer semantics only"
-                    )
-                fused_mc = build_postings_mapcombine(
-                    work, text_col=text_col, doc_rows=True,
-                    passthrough_cols=(*key_cols, *meta_cols),
-                ).persist()
-                dl_source = "mapcombine"
-            postings = None
-            if dl_source == "postings":
-                # tokenize ONCE: dl comes from the postings relation
-                # (SUM(tf) per doc == the token count by definition);
-                # persist so the blocks write materializes it and the
-                # dl aggregation reuses it instead of re-tokenizing.
-                # cluster_by_doc=False: the blocks exchange re-partitions
-                # on the salted (shard, term-bucket) key right after, and
-                # the dl aggregation has its own measured plan choice
-                # (WSE_DL_AGG) over the narrow (doc_id, tf) projection —
-                # a doc_id exchange of the FULL postings rows here would
-                # be strictly more shuffled bytes
-                postings = build_postings(toks, cluster_by_doc=False).persist()
-                blocks_input = postings
-            elif _BUILD_MODE == "mapcombine":
-                blocks_input = fused_mc.filter(
-                    F.col("term").isNotNull()
-                ).select("term", "doc_id", "tf")
-            elif _BUILD_MODE == "fused":
-                blocks_input = None  # the occurrence stream feeds blocks
-            else:
-                # cluster_by_doc=False: feeds the salted blocks exchange
-                blocks_input = build_postings(toks, cluster_by_doc=False)
-
-            vocab = vocab_handle = None
-            if _TERM_DICT == "on" and _BUILD_MODE == "sqlenc":
-                raise ValueError(
-                    "WSE_TERM_DICT=on is incompatible with "
-                    "WSE_BUILD_MODE=sqlenc (the SQL encoder builds from "
-                    "term strings)"
-                )
-            if _TERM_DICT == "on" and postings is None:
-                # the dictionary build consumes the persisted postings
-                # relation, which only exists when dl_source resolved to
-                # "postings" — honor the explicit knob loudly instead of
-                # silently running the plain string build
-                raise ValueError(
-                    "WSE_TERM_DICT=on requires the postings-backed build "
-                    "shape (WSE_DL_SOURCE=postings, and not "
-                    "WSE_BUILD_MODE=fused/mapcombine); got "
-                    f"dl_source={dl_source!r}, build_mode={_BUILD_MODE!r}"
-                )
-            if postings is not None and _TERM_DICT != "off" and _BUILD_MODE != "sqlenc":
-                vocab, n_terms, vocab_handle = build_term_dictionary(postings)
-                if _TERM_DICT == "auto" and n_terms > _TERM_DICT_MAX_VOCAB:
-                    # vocabulary too big to broadcast onto every block row
-                    # — fall back to the direct string build (at cluster
-                    # scale this would instead become a shuffle join of
-                    # the block rows, still far smaller than the postings)
-                    vocab_handle.unpersist()
-                    vocab = vocab_handle = None
-
-            # postings -> blocks (the shuffle IS the merge); shard derives
-            # from doc_id inside build_block_index with the same shard_size.
-            if _BUILD_MODE == "fused":
-                # explode_outer + not-null filter: a non-outer explode
-                # makes the optimizer infer size(tokens)>0 below the
-                # generate and re-evaluate the tokenizer per row (guide
-                # §4.4); see operators/postings.build_postings
-                occurrences = toks.select(
-                    "doc_id", F.explode_outer("tokens").alias("term")
-                ).filter(F.col("term").isNotNull())
+                # postings -> blocks (the shuffle IS the merge); shard
+                # derives from doc_id with the same shard_size
                 blocks = build_block_index(
-                    occurrences,
+                    postings,
                     block_size=block_size,
                     codec=codec,
                     shard_size=shard_size,
-                    num_partitions=par_pass * _PART_MULT,
-                    shards_hint=len(pending),
-                    from_occurrences=True,
-                )
-            elif vocab is not None:
-                enc = postings.join(F.broadcast(vocab), "term").select(
-                    "term_id", "doc_id", "tf"
-                )
-                blocks = build_block_index(
-                    enc,
-                    block_size=block_size,
-                    codec=codec,
-                    shard_size=shard_size,
-                    num_partitions=par_pass * _PART_MULT,
-                    shards_hint=len(pending),
-                    term_col="term_id",
-                ).join(F.broadcast(vocab), "term_id").select(
-                    "term", "shard", "block_id", "n", "last_docid",
-                    "base_docid", "max_tf", "doc_bytes", "freq_bytes",
-                )
-            elif _BUILD_MODE == "sqlenc":
-                # all-JVM encode (VERDICT r4 #2 A/B). The agg's output
-                # partitioning is hash(shard, term) — writing that
-                # directly would emit tasks x shards files — so the
-                # salted identity repartition is re-applied over the
-                # BLOCK rows (index-sized, ~10x smaller than postings),
-                # and the within-partition sort restores the term
-                # clustering the 4 MB row-group pruning relies on.
-                par_b = par_pass
-                sub_b = max(
-                    1, (4 * par_b + len(pending) - 1) // max(1, len(pending))
-                )
-                blocks = build_block_index_sql(
-                    blocks_input,
-                    block_size=block_size,
-                    codec=codec,
-                    shard_size=shard_size,
-                ).repartition(
-                    par_b,
-                    identity_partition_key(
-                        F.col("shard"),
-                        F.pmod(F.xxhash64("term"), F.lit(sub_b)),
-                        sub_b,
-                        par_b,
-                    ),
-                ).sortWithinPartitions("shard", "term", "block_id")
-            else:
-                blocks = build_block_index(
-                    blocks_input,
-                    block_size=block_size,
-                    codec=codec,
-                    shard_size=shard_size,
-                    num_partitions=par_pass * _PART_MULT,
+                    num_partitions=par_pass,
                     shards_hint=len(pending),
                 )
-            if use_observe:
-                blocks_obs = Observation("blocks_per_shard")
-                blocks = blocks.observe(
-                    blocks_obs, *_per_shard_observe_exprs(pending, "blocks")
-                )
-            def _write_blocks():
-                # small parquet row groups for the block table: the
-                # serving directory prunes per ROW GROUP on term min/max,
-                # and with hash-bucketed files a term range spans each
-                # bucket's whole sorted run — 4 MB groups keep the
-                # false-positive read per probe bounded at a few MB
-                # instead of a 128 MB default group
-                blocks.write.mode("overwrite").option(
-                    "parquet.block.size", str(4 * 1024 * 1024)
-                ).partitionBy("shard").parquet(
-                    os.path.join(index_dir, "blocks")
-                )
-
-            def _write_docs_meta(dm):
-                # repartition by (shard, doc_id-bucket) before the
-                # partitioned write: plain task-output writes put a file
-                # from every task into every shard dir (tasks x shards
-                # small files; measured 14x slower at 32 cores), while
-                # repartition("shard") alone caps the write stage at
-                # num_shards tasks — fewer than the cores when shards <
-                # cores (the sandbox shape; at 100 TB shards >> cores and
-                # sub collapses to 1). Keys round-robin onto partitions
-                # via murmur3-inverted salts — exact balance, no
-                # balls-in-bins stragglers, O(keys) output files (see
-                # operators/blocks.identity_partition_key).
-                nonlocal docs_obs
                 if use_observe:
-                    docs_obs = Observation("docs_meta_per_shard")
-                    dm = dm.observe(
-                        docs_obs, *_per_shard_observe_exprs(pending, "docs")
+                    blocks_obs = Observation("blocks_per_shard")
+                    blocks = blocks.observe(
+                        blocks_obs, *_per_shard_observe_exprs(pending, "blocks")
                     )
-                par = par_pass
-                sub = max(1, (4 * par + len(pending) - 1) // max(1, len(pending)))
-                dm.repartition(
-                    par,
-                    identity_partition_key(
-                        F.col("shard"), F.pmod(F.col("doc_id"), F.lit(sub)),
-                        sub, par,
-                    ),
-                ).write.mode("overwrite").partitionBy("shard").parquet(
-                    os.path.join(index_dir, "docs_meta")
-                )
 
-            overlapped = (
-                postings is None and fused_mc is None
-                and os.environ.get("WSE_OVERLAP_WRITES", "1") != "0"
-            )
-            if postings is None and fused_mc is None:
-                # tokenize-derived dl: docs_meta depends only on the
-                # cached source rows (also the WSE_OVERLAP_WRITES=0
-                # sequential shape — defined outside the overlap branch)
-                docs_meta = toks.select(
-                    "shard", "doc_id", *key_cols, *meta_cols,
-                    F.size("tokens").cast("long").alias("dl"),
-                    F.sha2(F.col(text_col), 256).alias("content_sha256"),
-                )
-            if overlapped:
-                # docs_meta depends only on the cached source rows, NOT
-                # on the blocks job — submit both writes concurrently so
-                # docs_meta back-fills executor slots freed by the blocks
-                # stage's tail (guide §2.6 "overlap independent jobs").
-                # The shapes that share a persisted relation
-                # (dl_source=postings, mapcombine) stay sequential:
-                # racing two jobs to materialize one cache would
-                # double-compute it.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fa = pool.submit(_write_blocks)
-                    fb = pool.submit(_write_docs_meta, docs_meta)
-                    fa.result()
-                    fb.result()
-                mark("blocks+docs_meta_overlapped")
-            else:
-                _write_blocks()
-                mark("blocks_write")
-
-            # one combined doc-level table: stats + lineage + sha invariant
-            if overlapped:
-                pass  # written above, concurrently with the blocks job
-            elif fused_mc is not None:
-                # sentinel rows already carry dl (=tf), sha256, and the
-                # key/meta columns; shard is a pure projection of doc_id
-                docs_meta = fused_mc.filter(F.col("term").isNull()).select(
-                    (F.col("doc_id") / F.lit(shard_size))
-                    .cast("int").alias("shard"),
-                    "doc_id", *key_cols, *meta_cols,
-                    F.col("tf").alias("dl"), "content_sha256",
-                )
-            elif postings is not None:
-                dl_agg = _DL_AGG  # validated at build_index entry
-                par_dl = spark.sparkContext.defaultParallelism
-                # BOTH auto rules below size against pending_docs
-                # (computed above): on a resumed build `work` (and so
-                # postings and dl) holds only the PENDING shards' docs,
-                # and comparing the full-corpus n_docs against a
-                # pending-shards-only postings count (or the broadcast
-                # cap) would mis-pick the plan — e.g. reject a cheap
-                # broadcast when 1 of 16 shards remains.
-                if dl_agg == "auto":
-                    # partial agg earns its keep only while it still
-                    # SHRINKS the exchange: it emits up to one row per
-                    # doc per map partition, so its output is
-                    # ~min(|postings|, P x pending_docs) rows. Below a
-                    # 2x reduction the repartition-first plan wins (and
-                    # keeps winning at any scale — constant exchange,
-                    # per-partition maps shrink with P). |postings| is
-                    # read from the blocks-stage Observation, already
-                    # materialized by the blocks write above.
-                    n_post = None
-                    if use_observe and blocks_obs is not None:
-                        _bv = blocks_obs.get
-                        n_post = sum(int(_bv[f"p_{s}"]) for s in pending)
-                    if n_post is not None:
-                        dl_agg = (
-                            "partial"
-                            if 2 * par_dl * pending_docs <= n_post
-                            else "repartition"
+                def observed_meta(dm: DataFrame) -> DataFrame:
+                    nonlocal docs_obs
+                    if use_observe:
+                        docs_obs = Observation("docs_meta_per_shard")
+                        dm = dm.observe(
+                            docs_obs, *_per_shard_observe_exprs(pending, "docs")
                         )
-                    else:
-                        # no cheap postings count (>OBSERVE_MAX_SHARDS
-                        # pending): wide parallelism means the partial
-                        # agg is structurally anti-scaling — switch on P
-                        dl_agg = "repartition" if par_dl >= 16 else "partial"
-                dl_base = postings.select("doc_id", "tf")
-                if dl_agg == "repartition":
-                    dl_base = dl_base.repartition(F.col("doc_id"))
-                dl = dl_base.groupBy("doc_id").agg(
-                    F.sum("tf").cast("long").alias("dl")
-                )
-                dl_join = _DL_JOIN  # validated at build_index entry
-                if dl_join == "auto":
-                    # dl has one row per doc IN THIS PASS (pending
-                    # shards), not per corpus doc — size against that
-                    dl_join = (
-                        "broadcast"
-                        if pending_docs <= _DL_BROADCAST_MAX_DOCS
-                        else "shuffle"
+                    return dm
+
+                if not dl_from_postings:
+                    # docs_meta depends only on the cached source rows,
+                    # NOT on the blocks job — submit both writes
+                    # concurrently so docs_meta back-fills executor slots
+                    # freed by the blocks stage's tail (guide §2.6
+                    # "overlap independent jobs"). The postings-derived
+                    # shape stays sequential: racing two jobs to
+                    # materialize one cache would double-compute it.
+                    docs_meta = observed_meta(tokenize_meta(toks))
+                    with ThreadPoolExecutor(max_workers=2) as pool:
+                        fa = pool.submit(write_blocks, blocks, index_dir)
+                        fb = pool.submit(
+                            write_docs_meta, docs_meta, index_dir,
+                            par_pass, len(pending),
+                        )
+                        fa.result()
+                        fb.result()
+                    mark("blocks+docs_meta_overlapped")
+                else:
+                    write_blocks(blocks, index_dir)
+                    mark("blocks_write")
+                    # |postings| comes from the blocks-stage Observation,
+                    # already materialized by the write above
+                    n_post = (
+                        sum(int(blocks_obs.get[f"p_{s}"]) for s in pending)
+                        if use_observe else None
                     )
-                if dl_join == "broadcast":
-                    dl = F.broadcast(dl)
-                docs_meta = (
-                    work.select(
-                        "shard", "doc_id", *key_cols, *meta_cols,
-                        F.sha2(F.col(text_col), 256).alias("content_sha256"),
+                    dl_base = postings.select("doc_id", "tf")
+                    if _dl_agg(pending_docs, n_post, parallelism) == "repartition":
+                        dl_base = dl_base.repartition(F.col("doc_id"))
+                    dl = dl_base.groupBy("doc_id").agg(
+                        F.sum("tf").cast("long").alias("dl")
                     )
-                    .join(dl, "doc_id", "left")
-                    # empty docs have no postings rows but stay in
-                    # N/avgdl with dl=0 (reference P4 semantics)
-                    .withColumn("dl", F.coalesce("dl", F.lit(0).cast("long")))
-                    .select(
-                        "shard", "doc_id", *key_cols, *meta_cols,
-                        "dl", "content_sha256",
+                    if _dl_join(pending_docs) == "broadcast":
+                        dl = F.broadcast(dl)
+                    docs_meta = (
+                        work.select(
+                            "shard", "doc_id", *key_cols, *meta_cols,
+                            F.sha2(F.col(text_col), 256).alias("content_sha256"),
+                        )
+                        .join(dl, "doc_id", "left")
+                        # empty docs have no postings rows but stay in
+                        # N/avgdl with dl=0 (reference P4 semantics)
+                        .withColumn("dl", F.coalesce("dl", F.lit(0).cast("long")))
+                        .select(
+                            "shard", "doc_id", *key_cols, *meta_cols,
+                            "dl", "content_sha256",
+                        )
                     )
-                )
-            if not overlapped:
-                _write_docs_meta(docs_meta)
-                mark("docs_meta_write")
-            if vocab_handle is not None:
-                vocab_handle.unpersist()
-            if postings is not None:
-                postings.unpersist()
-            if fused_mc is not None:
-                fused_mc.unpersist()
+                    write_docs_meta(
+                        observed_meta(docs_meta), index_dir, par_pass, len(pending)
+                    )
+                    mark("docs_meta_write")
+            finally:
+                if dl_from_postings:
+                    postings.unpersist()
 
             if use_observe:
                 dv, bv = docs_obs.get, blocks_obs.get

@@ -50,9 +50,14 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.blocks import build_block_index, identity_partition_key
+from ..operators.blocks import build_block_index
 from ..operators.postings import assign_doc_ids_counted, build_postings, with_tokens
-from ..plans.build_index import _read_manifest_rows, merge_lexicon
+from ..plans.build_index import (
+    _read_manifest_rows,
+    merge_lexicon,
+    write_blocks,
+    write_docs_meta,
+)
 from ..sources.catalog import read_stats, write_stats
 
 SOURCE_SCHEMA = "repo string, path string, commit string, lang string, content string"
@@ -188,19 +193,13 @@ def append_batch(
         docs_meta = docs_meta.observe(
             obs, F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl")
         )
-        # salted identity partitioning, same as the batch build's
-        # docs_meta write (plans/build_index.py): repartition("shard")
-        # alone caps the write stage at num_shards tasks — measured 14x
-        # slower at 32 cores when shards < cores (VERDICT r3 #4)
-        par = spark.sparkContext.defaultParallelism
-        sub = max(1, (4 * par + len(new_shards) - 1) // max(1, len(new_shards)))
-        docs_meta.repartition(
-            par,
-            identity_partition_key(
-                F.col("shard"), F.pmod(F.col("doc_id"), F.lit(sub)), sub, par
-            ),
-        ).write.mode("overwrite").partitionBy("shard").parquet(
-            os.path.join(index_dir, "docs_meta")
+        # same salted write as the batch build, on the session's
+        # parallelism (repartition("shard") alone caps the write stage at
+        # num_shards tasks — measured 14x slower at 32 cores when
+        # shards < cores, VERDICT r3 #4)
+        write_docs_meta(
+            docs_meta, index_dir, spark.sparkContext.defaultParallelism,
+            len(new_shards),
         )
         sum_dl = int(obs.get["sum_dl"])
 
@@ -213,11 +212,7 @@ def append_batch(
             block_size=block_size, codec=codec, shard_size=shard_size,
             shards_hint=len(new_shards),
         )
-        # 4 MB row groups: see plans/build_index.py — per-row-group term
-        # pruning granularity for the serving directory
-        blocks.write.mode("overwrite").option(
-            "parquet.block.size", str(4 * 1024 * 1024)
-        ).partitionBy("shard").parquet(os.path.join(index_dir, "blocks"))
+        write_blocks(blocks, index_dir)
     finally:
         cached_src.unpersist()
 
