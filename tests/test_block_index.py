@@ -634,3 +634,85 @@ def test_lexicon_driver_merge_matches_spark(spark, tmp_path, monkeypatch):
     assert drv["maxtfrise"] == (2, 2, 7)
     assert drv["maxtfkeep"] == (2, 2, 6)
     full.unpersist()
+
+
+def _blocks_files(index_dir):
+    for d, _dirs, files in sorted(os.walk(os.path.join(index_dir, "blocks"))):
+        for f in sorted(files):
+            if f.endswith(".parquet"):
+                yield os.path.join(d, f)
+
+
+def test_blocks_row_groups_are_lookup_sized_and_routes_agree(spark, tmp_path):
+    """With the default blocks row-group size a blocks file holds several
+    row groups with ordered term ranges (the unit of a serving lookup),
+    and SearchEngine answers identically over its default kernels, the
+    unpruned DAAT, and a copy of the index rewritten to one row group
+    per file."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus_df(spark, n_docs=6000, seed=7), d, num_shards=1)
+    most_groups = 0
+    for path in _blocks_files(d):
+        md = pq.read_metadata(path)
+        term_idx = md.schema.to_arrow_schema().get_field_index("term")
+        ranges = [
+            (st.min, st.max)
+            for st in (md.row_group(i).column(term_idx).statistics
+                       for i in range(md.num_row_groups))
+        ]
+        for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+            assert hi <= lo, (path, ranges)
+        most_groups = max(most_groups, md.num_row_groups)
+    assert most_groups >= 2
+
+    one = str(tmp_path / "one_row_group")
+    shutil.copytree(d, one)
+    for path in _blocks_files(one):
+        tbl = pq.ParquetFile(path).read()
+        pq.write_table(tbl, path, row_group_size=max(1, tbl.num_rows))
+        assert pq.read_metadata(path).num_row_groups == 1
+
+    eng, eng_one = SearchEngine(d), SearchEngine(one)
+    rng = random.Random(2024)
+    vocab = sorted(eng._df)
+    n_nonempty = 0
+    for mode in ("OR", "AND"):
+        for _ in range(30):
+            q = " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 3)))
+            want = eng.search(q, mode=mode, topk=10)
+            assert eng.search(q, mode=mode, topk=10, use_wand=False) == want, q
+            assert eng_one.search(q, mode=mode, topk=10) == want, q
+            n_nonempty += bool(want)
+    assert n_nonempty >= 30
+
+
+def test_term_dfs_falls_back_to_spark_probe(spark, index_dir, monkeypatch):
+    """When pyarrow cannot open the lexicon path, batch_score's df lookup
+    runs as a Spark job over the lexicon and scores identically."""
+    import pyarrow.dataset as pads
+
+    import web_search_engine_spark.plans.query as Q
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    want = batch_score(IndexCatalog(spark, index_dir), QUERIES, topk=10).collect()
+
+    def unreachable(*args, **kwargs):
+        raise OSError("no local filesystem for the lexicon path")
+
+    probes = []
+    real_probe = Q.probe_lexicon
+    monkeypatch.setattr(pads, "dataset", unreachable)
+    monkeypatch.setattr(
+        Q, "probe_lexicon", lambda lex, terms: probes.append(terms) or real_probe(lex, terms)
+    )
+    cat = IndexCatalog(spark, index_dir)
+    got = batch_score(cat, QUERIES, topk=10).collect()
+    assert probes, "the Spark lexicon probe did not run"
+    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+    assert sorted(got, key=key) == sorted(want, key=key)
+    assert len(want) > 0
+    assert cat.term_dfs([]) == {}

@@ -96,7 +96,12 @@ def test_cli_build_query_inspect(tmp_path):
         capture_output=True, text=True, env=env, timeout=60, cwd="/root/repo",
     )
     assert out.returncode == 0
-    assert json.loads(out.stdout)["n_docs"] == 200
+    info = json.loads(out.stdout)
+    assert info["n_docs"] == 200
+    layout = info["blocks_layout"]
+    assert layout["files"] >= 2  # one blocks dir per shard
+    assert layout["row_groups"] >= layout["files"]
+    assert layout["median_rows_per_row_group"] > 0 and layout["bytes"] > 0
 
 
 def test_cli_subset(spark, tmp_path):

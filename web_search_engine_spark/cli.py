@@ -95,9 +95,10 @@ def cmd_query(args) -> None:
 
 
 def cmd_inspect(args) -> None:
-    from .sources.catalog import read_stats
+    from .sources.catalog import blocks_layout, read_stats
 
     stats = read_stats(args.index)
+    stats["blocks_layout"] = blocks_layout(args.index)
     print(json.dumps(stats, indent=1))
 
 
@@ -202,7 +203,7 @@ def main(argv: list[str] | None = None) -> None:
     q.add_argument("--no-wand", action="store_true")
     q.set_defaults(fn=cmd_query)
 
-    i = sub.add_parser("inspect", help="print index stats")
+    i = sub.add_parser("inspect", help="print index stats and blocks layout")
     i.add_argument("--index", required=True)
     i.set_defaults(fn=cmd_inspect)
 

@@ -20,8 +20,9 @@ insensitive to the difference.
     BLOCK DIRECTORY built from parquet footers at init (per-row-group
     term min/max ranges, binary-searched per query term — the
     table-format analog of the reference's lexicon byte offset + block
-    directory seek, HW2/engine/listio.py:176-196) and only the matching
-    row groups are read. A small LRU caches decoded term block-rows for
+    directory seek, HW2/engine/listio.py:176-196): a term's lookup
+    reads about one small row group per blocks file (see
+    _BlockDirectory). A small LRU caches decoded term block-rows for
     repeated terms. No Spark job in the hot path; latency is
     milliseconds like the reference's.
 
@@ -41,7 +42,8 @@ Driver-memory scale notes:
     shards' docs_meta + blocks), which this layout already supports
     since both tables are hive-partitioned by shard.
   - block directory: one (term_min, term_max, path, row_group) entry
-    per row group — footer metadata only, no payload read at init.
+    per row group plus one open memory-mapped file per blocks file —
+    footer metadata only, no payload read at init.
 """
 
 from __future__ import annotations
@@ -49,6 +51,7 @@ from __future__ import annotations
 import os
 from bisect import bisect_right
 from collections import OrderedDict
+from itertools import accumulate
 
 import numpy as np
 import pyarrow as pa
@@ -131,18 +134,25 @@ _BLOCK_COLS = [
 class _BlockDirectory:
     """Per-row-group (term_min, term_max) directory over blocks/.
 
-    Built once from parquet FOOTERS (no payload I/O). Fetches read only
-    the row groups whose term range can contain a query term, found by
-    binary search — O(log #row_groups + matches) per term, the scale
-    behavior of the reference's lexicon-offset seek. Files are
-    memory-mapped and ParquetFile handles cached, so a warm fetch costs
-    one row-group decode."""
+    Built once from parquet FOOTERS (no payload I/O). Blocks files are
+    hash-bucketed by term, so every file spans the whole term range, but
+    each file is one term-sorted partition cut into small row groups
+    (build_index._BLOCKS_ROW_GROUP_BYTES): a term falls in about one row
+    group per file. Entries are sorted by term_min with a running max of
+    term_max, so a term's candidates are found by a binary search plus a
+    leftward scan that stops once no entry further left reaches the
+    term — exact for any layout, O(log #row_groups + #files) per term on
+    the build's layout. Row groups without term statistics are read for
+    every query. Each file is memory-mapped and its footer parsed once,
+    at init, so a fetch costs the matching row-group decodes."""
 
     def __init__(self, blocks_dir: str):
         import pyarrow.parquet as pq
 
-        self._pq = pq
-        entries = []  # (term_min, term_max, path, rg_idx, shard)
+        entries = []  # (term_min, term_max, path, rg_idx)
+        self._unranged: list[tuple[str, int]] = []  # no term stats
+        self._files: dict[str, pq.ParquetFile] = {}
+        self._shard: dict[str, int] = {}
         for shard_dir in sorted(os.listdir(blocks_dir)):
             full = os.path.join(blocks_dir, shard_dir)
             if not (shard_dir.startswith("shard=") and os.path.isdir(full)):
@@ -152,47 +162,36 @@ class _BlockDirectory:
                 if not fname.endswith(".parquet"):
                     continue
                 path = os.path.join(full, fname)
-                md = pq.ParquetFile(path).metadata
+                pf = pq.ParquetFile(path, memory_map=True)
+                self._files[path] = pf
+                self._shard[path] = shard
+                md = pf.metadata
                 term_idx = md.schema.to_arrow_schema().get_field_index("term")
                 for rg in range(md.num_row_groups):
                     stats = md.row_group(rg).column(term_idx).statistics
                     if stats is None or not stats.has_min_max:
-                        entries.append(("", "\U0010ffff", path, rg, shard))
+                        self._unranged.append((path, rg))
                     else:
-                        entries.append((stats.min, stats.max, path, rg, shard))
+                        entries.append((stats.min, stats.max, path, rg))
         entries.sort(key=lambda e: (e[0], e[1]))
         self._entries = entries
         self._mins = [e[0] for e in entries]
-        self._maxs_sorted_prefix_ok = all(
-            entries[i][1] <= entries[i + 1][1] for i in range(len(entries) - 1)
-        )
-        self._files: dict[str, object] = {}
+        # _prefix_max[i] = max term_max over entries[0..i]
+        self._prefix_max = list(accumulate((e[1] for e in entries), max))
 
-    def _file(self, path: str):
-        pf = self._files.get(path)
-        if pf is None:
-            pf = self._pq.ParquetFile(path, memory_map=True)
-            self._files[path] = pf
-        return pf
-
-    def _row_groups_for(self, terms: list[str]) -> dict[tuple[str, int], int]:
-        """-> {(path, rg_idx): shard} for row groups possibly holding any
-        query term."""
-        hit: dict[tuple[str, int], int] = {}
-        n = len(self._entries)
+    def _row_groups_for(self, terms: list[str]) -> set[tuple[str, int]]:
+        """-> {(path, rg_idx)} of row groups possibly holding any query
+        term: term_min <= t <= term_max, or no term statistics."""
+        hit: set[tuple[str, int]] = set()
         for t in terms:
-            # candidates: entries with term_min <= t <= term_max. mins are
-            # sorted; scan left from the insertion point until term ranges
-            # cannot cover t anymore (ranges of a sorted write overlap only
-            # at file/row-group boundaries, so this scan is short).
             i = bisect_right(self._mins, t) - 1
-            while i >= 0:
-                tmin, tmax, path, rg, shard = self._entries[i]
+            while i >= 0 and self._prefix_max[i] >= t:
+                _tmin, tmax, path, rg = self._entries[i]
                 if tmax >= t:
-                    hit[(path, rg)] = shard
-                elif self._maxs_sorted_prefix_ok:
-                    break  # maxs nondecreasing -> nothing further left covers t
+                    hit.add((path, rg))
                 i -= 1
+        if terms:
+            hit.update(self._unranged)
         return hit
 
     def fetch(self, terms: list[str]) -> dict[str, list]:
@@ -201,19 +200,18 @@ class _BlockDirectory:
         import pyarrow.compute as pc
 
         rows: dict[str, list] = {}
-        want = self._row_groups_for(terms)
         by_path: dict[str, list[int]] = {}
-        shard_of: dict[tuple[str, int], int] = {}
-        for (path, rg), shard in want.items():
+        for path, rg in sorted(self._row_groups_for(terms)):
             by_path.setdefault(path, []).append(rg)
-            shard_of[(path, rg)] = shard
-        term_set = set(terms)
+        value_set = pa.array(sorted(set(terms)))
         for path, rgs in by_path.items():
-            pf = self._file(path)
-            shard = shard_of[(path, rgs[0])]
-            tbl = pf.read_row_groups(sorted(rgs), columns=_BLOCK_COLS)
-            mask = pc.is_in(tbl.column("term"), value_set=pa.array(sorted(term_set)))
-            tbl = tbl.filter(mask)
+            shard = self._shard[path]
+            # small row groups: the reader's thread pool costs more CPU
+            # than it saves in latency
+            tbl = self._files[path].read_row_groups(
+                rgs, columns=_BLOCK_COLS, use_threads=False
+            )
+            tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=value_set))
             if tbl.num_rows == 0:
                 continue
             cols = [tbl.column(c).to_pylist() for c in _BLOCK_COLS]

@@ -4,10 +4,13 @@ On a cluster these would be Iceberg tables (the north rule's target);
 in the sandbox they are parquet directories with the same logical
 schema. Layout under <index_dir>/:
 
-  blocks/      block rows (operators/blocks.BLOCK_SCHEMA), written
-               range-partitioned + sorted by (shard, term) so parquet
-               row-group min/max stats prune `term IN (...)` scans —
-               the table-format analog of the reference's lexicon byte
+  blocks/      block rows (operators/blocks.BLOCK_SCHEMA), hash-
+               partitioned on (shard, term-bucket) and sorted by term
+               within each file, in small row groups: every file spans
+               the whole term range, but a term falls in about one row
+               group per file, so row-group min/max stats prune a
+               `term IN (...)` read to one small group per file — the
+               table-format analog of the reference's lexicon byte
                offsets + block directory binary search
                (HW2/engine/listio.py:176-196).
   lexicon/     (term, df, nblocks, max_tf)
@@ -48,6 +51,33 @@ def read_stats(index_dir: str) -> dict:
         return json.load(f)
 
 
+def blocks_layout(index_dir: str) -> dict:
+    """Parquet layout of the blocks table from file footers only (no
+    payload read): file and row-group counts, median rows per row
+    group, and bytes on disk."""
+    import statistics
+
+    import pyarrow.parquet as pq
+
+    rows: list[int] = []
+    n_files = n_bytes = 0
+    for d, _dirs, files in os.walk(os.path.join(index_dir, "blocks")):
+        for fname in files:
+            if not fname.endswith(".parquet"):
+                continue
+            path = os.path.join(d, fname)
+            md = pq.read_metadata(path)
+            rows.extend(md.row_group(i).num_rows for i in range(md.num_row_groups))
+            n_files += 1
+            n_bytes += os.path.getsize(path)
+    return {
+        "files": n_files,
+        "row_groups": len(rows),
+        "median_rows_per_row_group": statistics.median(rows) if rows else 0,
+        "bytes": n_bytes,
+    }
+
+
 class IndexCatalog:
     """Read-side handle on a built index.
 
@@ -67,6 +97,7 @@ class IndexCatalog:
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
         self._tables: dict[str, DataFrame] = {}
+        # pyarrow lexicon dataset; False when pyarrow cannot open it
         self._lex_dataset = None
 
     def refresh(self) -> "IndexCatalog":
@@ -108,16 +139,29 @@ class IndexCatalog:
         with the same snapshot semantics as the Spark table handles: it
         pins the files present at first touch, so df values stay
         consistent with the memoized blocks/docs_meta snapshots across
-        a concurrent append; call refresh() to see new data."""
+        a concurrent append; call refresh() to see new data.
+
+        When pyarrow cannot open the lexicon path in this process (e.g.
+        an object store it holds no credentials for), the lookup runs
+        as a Spark job over the lexicon table instead (probe_lexicon),
+        until the next refresh()."""
+        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
         if self._lex_dataset is None:
-            self._lex_dataset = pads.dataset(
-                os.path.join(self.index_dir, "lexicon"), format="parquet"
-            )
+            try:
+                self._lex_dataset = pads.dataset(
+                    os.path.join(self.index_dir, "lexicon"), format="parquet"
+                )
+            except (OSError, pa.ArrowException):
+                self._lex_dataset = False
         if not terms:
             return {}
+        if self._lex_dataset is False:
+            from ..plans.query import probe_lexicon
+
+            return probe_lexicon(self.lexicon(), terms)
         tbl = self._lex_dataset.to_table(
             columns=["term", "df"], filter=pc.field("term").isin(terms)
         )
