@@ -11,7 +11,8 @@ doc_id asc) so the float hash-compare is deterministic.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -85,25 +86,16 @@ def _block_index(spark: SparkSession, sf_dir: str):
     return build_block_index(_postings(spark, sf_dir), shard_size=100)
 
 
-def _wand_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataFrame:
-    """Full physical path under the gate: build a blocked on-disk index
-    (resumable build plan), serve the query through SearchEngine's
-    cursor kernels (block-max WAND for OR, galloping intersection for
-    AND), return (rank, doc_id, score).
-
-    Mirrors the reference's merged-vs-direct differential
-    (HW2/engine/testrun.py:80-104): the oracle is the same relational
-    BM25 SQL the non-physical bm25_* rows use — so varbyte codec, block
-    directory seeks, and the pruned kernels are all on the hash-compared
-    path.
-    """
+@contextmanager
+def _gate_index(spark: SparkSession, sf_dir: str) -> Iterator[str]:
+    """Build a blocked on-disk index of documents.text (resumable build
+    plan) in a temp dir, yield its path, remove it on exit."""
     import shutil
     import tempfile
 
     from web_search_engine_spark.plans.build_index import build_index
-    from web_search_engine_spark.plans.search import SearchEngine
 
-    tmp = tempfile.mkdtemp(prefix="wand_gate_")
+    tmp = tempfile.mkdtemp(prefix="gate_index_")
     try:
         # rank over the dense existing doc_id is the identity mapping
         src = _docs(spark, sf_dir).select(F.col("doc_id").alias("orig_id"), "text")
@@ -112,6 +104,40 @@ def _wand_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataF
             key_cols=("orig_id",), text_col="text",
             tokenizer="sql", num_shards=4,
         )
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _top10_frame(spark: SparkSession, hits: list[tuple[int, float]]) -> DataFrame:
+    """(doc_id, score) hits -> local (rank, doc_id, score) top-10,
+    re-ranked on the ROUNDED score (tie doc_id asc) so the boundary
+    policy matches the oracle exactly."""
+    import pandas as pd
+
+    rows = sorted(((round(s, 6), d) for d, s in hits), key=lambda r: (-r[0], r[1]))
+    pdf = pd.DataFrame(
+        [(i + 1, d, s) for i, (s, d) in enumerate(rows[:10])],
+        columns=["rank", "doc_id", "score"],
+    )
+    return spark.createDataFrame(pdf, "rank int, doc_id long, score double")
+
+
+def _wand_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataFrame:
+    """Full physical path under the gate: build a blocked on-disk index,
+    serve the query through SearchEngine's cursor kernels (block-max
+    WAND for OR, galloping intersection for AND), return (rank, doc_id,
+    score).
+
+    Mirrors the reference's merged-vs-direct differential
+    (HW2/engine/testrun.py:80-104): the oracle is the same relational
+    BM25 SQL the non-physical bm25_* rows use — so varbyte codec, block
+    directory seeks, and the pruned kernels are all on the hash-compared
+    path.
+    """
+    from web_search_engine_spark.plans.search import SearchEngine
+
+    with _gate_index(spark, sf_dir) as tmp:
         eng = SearchEngine(tmp)
         # force the CURSOR kernels (not the small-index TAAT shortcut):
         # the gate must cover the seek/prune machinery itself
@@ -120,21 +146,24 @@ def _wand_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataF
         saved = W.TAAT_MAX_POSTINGS
         W.TAAT_MAX_POSTINGS = 0
         try:
-            # fetch extra, then re-rank on the ROUNDED score (tie doc_id
-            # asc) so the boundary policy matches the oracle exactly
+            # fetch extra, then re-rank on the rounded score
             hits = eng.search(query, mode=mode, topk=50, use_wand=True)
         finally:
             W.TAAT_MAX_POSTINGS = saved
-        rows = sorted(((round(s, 6), d) for d, s in hits), key=lambda r: (-r[0], r[1]))
-        import pandas as pd
+    return _top10_frame(spark, hits)
 
-        pdf = pd.DataFrame(
-            [(i + 1, d, s) for i, (s, d) in enumerate(rows[:10])],
-            columns=["rank", "doc_id", "score"],
-        )
-        return spark.createDataFrame(pdf, "rank int, doc_id long, score double")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+def _batch_score_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataFrame:
+    """The distributed block-table read path under the gate: batch_score
+    over the same on-disk index, so the Python decode stage
+    (blocks_to_postings) and the query_id top-k are hash-compared to
+    the relational BM25 SQL."""
+    from web_search_engine_spark.plans.search import batch_score
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    with _gate_index(spark, sf_dir) as tmp:
+        top = batch_score(IndexCatalog(spark, tmp), [("q", query)], mode, 10).collect()
+    return _top10_frame(spark, [(r.doc_id, r.score) for r in top])
 
 
 def _subset_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,6 +344,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # J3/A8: same physical path, AND mode (galloping intersection
         # with sorted-term summation — the pinned-order invariant)
         "wand_top10_and": _wand_top10_and,
+        # distributed read path: batch_score decodes the on-disk blocks
+        # in a Python stage, then scores and ranks per query_id
+        "batch_score_top10_or": lambda spark, sf: _batch_score_gate(
+            spark, sf, Q_OR, "OR"
+        ),
         # ---- training-data pipeline operators (beyond the reference) ----
         # dedup: exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding
         "exact_dups": lambda spark, sf: _dedup.exact_duplicates(_docs(spark, sf)),
@@ -962,6 +996,7 @@ FROM pershard GROUP BY term
         # BM25 ranking exactly (reference testrun.py:80-104 differential)
         "wand_top10": _bm25_sql(Q_OR, "OR"),
         "wand_top10_and": _bm25_sql(Q_AND, "AND"),
+        "batch_score_top10_or": _bm25_sql(Q_OR, "OR"),
         # append-mode emits exactly the windows finalized under the
         # final watermark (max ts - 2 h); event-time jitter keeps that
         # watermark off every hour boundary, so <= is unambiguous
