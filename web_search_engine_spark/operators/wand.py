@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import heapq
 import math
+from collections import Counter, OrderedDict
+from contextlib import suppress
 
 import numpy as np
 
@@ -355,26 +357,47 @@ def decode_term_postings_fast(rows: list, codec: str) -> tuple[np.ndarray, np.nd
     return docids, tfs
 
 
-def _topk_by_score(union, scores, topk):
-    """(score desc, doc_id asc) top-k rows of (union, scores) as the
-    kernels' return list. Above a small size an argpartition pass finds
-    the k-th score, and only the >= threshold subset (boundary ties
-    included) is lexsorted — identical output to the full lexsort, but
-    O(n + t log t) instead of O(n log n) (measured 30 ms -> ~2 ms per
-    hot query over a 240k-doc union)."""
-    n = len(union)
-    if n == 0 or topk <= 0:
+def bm25_impacts(ids, tfs, idf, dl_lookup, avgdl, k1, b):
+    """One term's float64 BM25 score per posting, in posting order: the
+    exact expression of BlockCursor.score_current, so a kernel summing
+    impacts in sorted-term order reproduces the cursor DAAT scores bit
+    for bit. Postings on dl=0 docs get 0.0 — such docs are never scored
+    (daat_ranker.py:121-123), and every real contribution is > 0 (idf >
+    0, tf >= 1), so a zero accumulator slot means "not a result".
+
+    dl_lookup is a dl store (plans.search._DenseDL / _SortedDL)."""
+    dls = dl_lookup.take_ids(ids)
+    tf = tfs.astype(np.float64)
+    denom = tf + k1 * (1.0 - b + b * (dls / avgdl))
+    impacts = idf * (tf * (k1 + 1.0)) / denom
+    impacts[dls <= 0.0] = 0.0
+    return impacts
+
+
+def _weighted(w, impacts):
+    # w * x == x exactly when w is 1.0: skip the pass, keep the bits
+    return impacts if w == 1.0 else w * impacts
+
+
+def _topk_by_score(scores, topk, ids=None):
+    """(score desc, doc_id asc) top-k of the POSITIVE slots of ``scores``
+    (zero = unmatched slot or dl=0 doc) as the kernels' return list;
+    slot i is doc ``ids[i]``, or doc i itself when ids is None (the
+    dense accumulator). np.partition finds the k-th score in O(n); only
+    the slots at or above it (boundary ties included) are lexsorted —
+    the full lexsort's output in O(n + t log t). With fewer than k
+    positive slots the k-th score is 0 and every positive slot ranks."""
+    n = len(scores)
+    kth = n - min(topk, n)
+    if kth >= n:
         return []
-    if n > max(64, 8 * topk):
-        kth = min(topk, n) - 1
-        part = np.argpartition(-scores, kth)[: kth + 1]
-        thr = scores[part].min()
-        cand = np.flatnonzero(scores >= thr)
-        order = cand[np.lexsort((union[cand], -scores[cand]))][:topk]
-    else:
-        # lexsort: last key is primary
-        order = np.lexsort((union, -scores))[:topk]
-    return [(int(union[i]), float(scores[i])) for i in order]
+    thr = np.partition(scores, kth)[kth]
+    cand = np.flatnonzero(scores >= thr if thr > 0.0 else scores > 0.0)
+    docs = cand if ids is None else ids[cand]
+    cand_scores = scores[cand]
+    # lexsort: last key is primary
+    order = np.lexsort((docs, -cand_scores))[:topk]
+    return [(int(docs[i]), float(cand_scores[i])) for i in order]
 
 
 def _dense_dl_array(dl_lookup, term_entries):
@@ -384,18 +407,15 @@ def _dense_dl_array(dl_lookup, term_entries):
     allocates and scans len(arr) slots per query — a win when the
     candidate set is a meaningful fraction of the corpus (hot queries),
     a regression for a rare 100-posting query on an 8.84M-doc index
-    (70+ MB of zeros and a full-array flatnonzero for microseconds of
+    (70+ MB of zeros and a full-array partition for microseconds of
     real work) — so it is gated on total postings >= len(arr) / 8."""
-    arr = (
-        dl_lookup
-        if isinstance(dl_lookup, np.ndarray)
-        else getattr(dl_lookup, "arr", None)
-    )
-    if arr is None or not isinstance(arr, np.ndarray):
+    arr = getattr(dl_lookup, "arr", None)
+    if not isinstance(arr, np.ndarray):
         return None
     m = len(arr)
     total = 0
-    for _idf, _w, ids, _tfs in term_entries:
+    for entry in term_entries:
+        ids = entry[2]
         if len(ids) and int(ids[-1]) >= m:  # ids ascending by decode order
             return None
         total += len(ids)
@@ -404,61 +424,66 @@ def _dense_dl_array(dl_lookup, term_entries):
     return arr
 
 
-def taat_or(term_entries, dl_lookup, avgdl, topk, k1=BM25_K1, b=BM25_B):
-    """Vectorized term-at-a-time OR scoring — the reference's TAAT
-    ranker (HW2/engine/ranker.py:52-74) as numpy array passes.
-
-    term_entries = [(idf, weight, docids, tfs)] in SORTED-TERM order.
-    Bit-identical to the DAAT kernels: for each doc the per-term score
-    additions happen in the same (sorted-term) order the tied-cursor sum
-    uses, and each term score is computed with the exact expression of
-    BlockCursor.score_current.
-
-    With a dense dl store the accumulator is indexed directly by doc_id
-    (scatter-add over the id space): no candidate union, no per-term
-    searchsorted — the same additions in the same order land at
-    arr[doc_id] instead of arr[searchsorted(union, doc_id)], so scores
-    are bit-identical (kernel differential tests assert it). Measured
-    80 -> ~25 ms per hot query at a 250k-doc index.
-    """
+def _taat(term_entries, dl_lookup, topk, is_and):
+    """Shared body of taat_or / taat_and (see taat_or)."""
     if not term_entries:
         return []
     dense = _dense_dl_array(dl_lookup, term_entries)
-    if dense is not None:
-        scores = np.zeros(len(dense), dtype=np.float64)
-        for idf, w, ids, tfs in term_entries:
-            tf = tfs.astype(np.float64)
-            denom = tf + k1 * (1.0 - b + b * (dense[ids] / avgdl))
-            scores[ids] += w * (idf * (tf * (k1 + 1.0)) / denom)
-        # every contribution is > 0 (idf > 0, tf >= 1, weight >= 1), so
-        # matched docs are exactly the nonzero slots
-        cand = np.flatnonzero(scores)
-        dls = dense[cand]
-        live = dls > 0.0  # dl=0 docs are never scored (daat_ranker.py:121-123)
-        return _topk_by_score(cand[live], scores[cand][live], topk)
-    union = np.unique(np.concatenate([ids for _, _, ids, _ in term_entries]))
-    if isinstance(dl_lookup, np.ndarray):
-        dls = dl_lookup[union]
-    elif hasattr(dl_lookup, "take_ids"):
-        dls = dl_lookup.take_ids(union)
+    if dense is None:
+        ids = np.unique(np.concatenate([e[2] for e in term_entries]))
+        slots = len(ids)
     else:
-        dls = np.array([float(dl_lookup[int(d)]) for d in union])
-    scores = np.zeros(len(union), dtype=np.float64)
-    for idf, w, ids, tfs in term_entries:
-        pos = np.searchsorted(union, ids)
-        tf = tfs.astype(np.float64)
-        denom = tf + k1 * (1.0 - b + b * (dls[pos] / avgdl))
-        scores[pos] += w * (idf * (tf * (k1 + 1.0)) / denom)
-    live = dls > 0.0  # dl=0 docs are never scored (daat_ranker.py:121-123)
-    return _topk_by_score(union[live], scores[live], topk)
+        ids, slots = None, len(dense)
+    scores = np.zeros(slots, dtype=np.float64)
+    nmatch = np.zeros(slots, dtype=np.int64) if is_and else None
+    for _term, w, t_ids, impacts in term_entries:
+        at = t_ids if ids is None else np.searchsorted(ids, t_ids)
+        scores[at] += _weighted(w, impacts)
+        if is_and:
+            nmatch[at] += 1
+    if is_and:
+        scores[nmatch < len(term_entries)] = 0.0
+    return _topk_by_score(scores, topk, ids)
+
+
+def taat_or(term_entries, dl_lookup, topk):
+    """Vectorized term-at-a-time OR scoring — the reference's TAAT
+    ranker (HW2/engine/ranker.py:52-74) as numpy array passes.
+
+    term_entries = [(term, weight, docids, impacts)] in SORTED-TERM
+    order, impacts from bm25_impacts. Bit-identical to the DAAT kernels:
+    for each doc the per-term impacts are added in the same
+    (sorted-term) order the tied-cursor sum uses, and each impact is
+    computed with the exact expression of BlockCursor.score_current.
+
+    With a dense dl store (and enough postings, see _dense_dl_array) the
+    accumulator is indexed directly by doc_id (scatter-add over the id
+    space): no candidate union, no per-term searchsorted — the same
+    additions in the same order land at acc[doc_id] instead of
+    acc[searchsorted(union, doc_id)], so scores are bit-identical
+    (kernel differential tests assert it). The top-k is then taken from
+    the accumulator itself. Memory: 8 bytes per id slot (plus 8 for
+    taat_and's per-slot match counter). Scoring time per hot query on
+    a 100k-doc index (~194k postings, 4-vCPU host) measured 9.9 ms when
+    BM25 was evaluated per posting and the top-k taken from gathered
+    candidates, 3.1 ms adding cached impacts and selecting in place.
+    """
+    return _taat(term_entries, dl_lookup, topk, is_and=False)
+
+
+def taat_and(term_entries, dl_lookup, topk):
+    """Vectorized term-at-a-time AND: the taat_or accumulation plus a
+    per-doc matched-term counter — only docs carrying every distinct
+    query term survive (searcher.py:64-90 AND gate); the rest are zeroed
+    before the top-k. Scores are bit-identical to taat_or/daat_and for
+    the surviving docs (same sorted-term addition order, same impacts)."""
+    return _taat(term_entries, dl_lookup, topk, is_and=True)
 
 
 _EPOCH_RANGES = 2048  # block ranges scored per pruning epoch
 
 
-def blockmax_taat_or(
-    term_entries, term_blockmeta, dl_lookup, avgdl, topk, k1=BM25_K1, b=BM25_B
-):
+def blockmax_taat_or(term_entries, term_blockmeta, topk):
     """Vectorized block-max WAND: BMW's per-block skipping with TAAT's
     numpy scoring — no per-posting Python (VERDICT r2 #4: the cursor
     loop costs ~8 us/posting; above TAAT_MAX_POSTINGS a stopword-heavy
@@ -470,22 +495,22 @@ def blockmax_taat_or(
     computed with one searchsorted per term) selects the ranges that
     could still beat the top-k; the first _EPOCH_RANGES survivors merge
     into maximal docid intervals and score through the taat_or
-    accumulation (same sorted-term order, same float64 expression —
-    bit-identical scores); theta then rises and the next epoch re-prunes
-    the remainder. Hot queries where nothing prunes degrade to plain
-    TAAT plus a few searchsorted passes (no kernel cliff at the
-    threshold); score-skewed queries skip the union/score work for
-    pruned ranges block-wise (postings arrive pre-decoded by the
-    vectorized whole-term decode, which is memory-bandwidth cheap —
-    pruning here saves scoring, not decoding).
+    accumulation (same sorted-term order, same impacts — bit-identical
+    scores); theta then rises and the next epoch re-prunes the
+    remainder. Hot queries where nothing prunes degrade to plain TAAT
+    plus a few searchsorted passes (no kernel cliff at the threshold);
+    score-skewed queries skip the union/score work for pruned ranges
+    block-wise (postings arrive pre-decoded and pre-scored by the
+    cached whole-term decode — pruning here saves accumulation, not
+    decoding).
 
     Rank-safety matches wand_or: ranges are visited in increasing docid
     order, so a pruned candidate whose score merely EQUALS theta would
     lose the (score desc, doc_id asc) tie to the incumbent anyway.
 
-    term_entries = [(idf, weight, ids, tfs)] in sorted-term order
-    (flat decoded postings); term_blockmeta = [(last_docids, block_ubs)]
-    aligned with term_entries (block_ubs exclude the query weight).
+    term_entries = [(term, weight, ids, impacts)] in sorted-term order;
+    term_blockmeta = [(last_docids, block_ubs)] aligned with
+    term_entries (block_ubs exclude the query weight).
     """
     if not term_entries:
         return []
@@ -496,7 +521,7 @@ def blockmax_taat_or(
     while r < R:
         rem = boundaries[r:]
         ub = np.zeros(len(rem), dtype=np.float64)
-        for (idf, w, _ids, _tfs), (last, bubs) in zip(term_entries, term_blockmeta):
+        for (_term, w, _ids, _imp), (last, bubs) in zip(term_entries, term_blockmeta):
             idx = np.searchsorted(last, rem, side="left")
             v = idx < len(last)
             ub[v] += w * bubs[idx[v]]
@@ -517,86 +542,29 @@ def blockmax_taat_or(
         # gather each term's postings inside the intervals, then the
         # taat_or accumulation over the epoch's union
         subs = []
-        for idf, w, ids, tfs in term_entries:
+        for _term, w, ids, impacts in term_entries:
             s = np.searchsorted(ids, int_lo, side="right")
             e = np.searchsorted(ids, int_hi, side="right")
             counts = e - s
             total = int(counts.sum())
             if total == 0:
-                subs.append(None)
                 continue
             offs = np.concatenate(([0], np.cumsum(counts)))[:-1]
             take = np.arange(total) - np.repeat(offs, counts) + np.repeat(s, counts)
-            subs.append((ids[take], tfs[take]))
-        live_subs = [s for s in subs if s is not None]
-        if live_subs:
-            union = np.unique(np.concatenate([s[0] for s in live_subs]))
-            if hasattr(dl_lookup, "take_ids"):
-                dls = dl_lookup.take_ids(union)
-            elif isinstance(dl_lookup, np.ndarray):
-                dls = dl_lookup[union]
-            else:
-                dls = np.array([float(dl_lookup[int(d)]) for d in union])
+            subs.append((w, ids[take], impacts[take]))
+        if subs:
+            union = np.unique(np.concatenate([s[1] for s in subs]))
             scores = np.zeros(len(union), dtype=np.float64)
-            for (idf, w, _ids, _tfs), sub in zip(term_entries, subs):
-                if sub is None:
-                    continue
-                sids, stfs = sub
-                pos = np.searchsorted(union, sids)
-                tf = stfs.astype(np.float64)
-                denom = tf + k1 * (1.0 - b + b * (dls[pos] / avgdl))
-                scores[pos] += w * (idf * (tf * (k1 + 1.0)) / denom)
-            ok = dls > 0.0
+            for w, sids, simp in subs:
+                scores[np.searchsorted(union, sids)] += _weighted(w, simp)
             # only the epoch's own top-k can enter the global heap
-            for doc, sc in _topk_by_score(union[ok], scores[ok], topk):
+            for doc, sc in _topk_by_score(scores, topk, union):
                 top.offer(sc, doc)
         r = int(sel[-1]) + 1
     return top.result()
 
 
-def taat_and(term_entries, dl_lookup, avgdl, topk, k1=BM25_K1, b=BM25_B):
-    """Vectorized term-at-a-time AND: the taat_or accumulation plus a
-    per-doc matched-term counter — only docs carrying every distinct
-    query term survive (searcher.py:64-90 AND gate). Scores are
-    bit-identical to taat_or/daat_and for the surviving docs (same
-    sorted-term addition order, same float64 expression)."""
-    if not term_entries:
-        return []
-    dense = _dense_dl_array(dl_lookup, term_entries)
-    if dense is not None:
-        # scatter-add twin of the union path (see taat_or): identical
-        # additions in identical order, indexed by doc_id directly
-        scores = np.zeros(len(dense), dtype=np.float64)
-        nmatch = np.zeros(len(dense), dtype=np.int64)
-        for idf, w, ids, tfs in term_entries:
-            tf = tfs.astype(np.float64)
-            denom = tf + k1 * (1.0 - b + b * (dense[ids] / avgdl))
-            scores[ids] += w * (idf * (tf * (k1 + 1.0)) / denom)
-            nmatch[ids] += 1
-        cand = np.flatnonzero(nmatch == len(term_entries))
-        dls = dense[cand]
-        live = dls > 0.0
-        return _topk_by_score(cand[live], scores[cand][live], topk)
-    union = np.unique(np.concatenate([ids for _, _, ids, _ in term_entries]))
-    if isinstance(dl_lookup, np.ndarray):
-        dls = dl_lookup[union]
-    elif hasattr(dl_lookup, "take_ids"):
-        dls = dl_lookup.take_ids(union)
-    else:
-        dls = np.array([float(dl_lookup[int(d)]) for d in union])
-    scores = np.zeros(len(union), dtype=np.float64)
-    nmatch = np.zeros(len(union), dtype=np.int64)
-    for idf, w, ids, tfs in term_entries:
-        pos = np.searchsorted(union, ids)
-        tf = tfs.astype(np.float64)
-        denom = tf + k1 * (1.0 - b + b * (dls[pos] / avgdl))
-        scores[pos] += w * (idf * (tf * (k1 + 1.0)) / denom)
-        nmatch[pos] += 1
-    live = (dls > 0.0) & (nmatch == len(term_entries))
-    return _topk_by_score(union[live], scores[live], topk)
-
-
-def intersect_and(term_entries, dl_lookup, avgdl, topk, k1=BM25_K1, b=BM25_B):
+def intersect_and(term_entries, topk):
     """Vectorized AND above TAAT_MAX_POSTINGS (VERDICT r3 #1): the
     per-posting Python galloping loop of daat_and costs ~8 us/visited
     posting — a hot AND with a large intersection pays seconds. Here the
@@ -604,10 +572,8 @@ def intersect_and(term_entries, dl_lookup, avgdl, topk, k1=BM25_K1, b=BM25_B):
     driven from the RAREST term's decoded array (the same df-ascending
     O8 heuristic daat_and uses for cursor advancement), ~30 ns/posting.
 
-    Scoring then runs the taat_and accumulation restricted to the
-    intersection: per-doc term contributions are added in sorted-term
-    entry order with the exact float64 expression of
-    BlockCursor.score_current, so scores are bit-identical to
+    Scoring then adds each term's impacts at the intersection in
+    sorted-term entry order, so scores are bit-identical to
     taat_and/daat_and (asserted by the 3-kernel differential test).
     """
     if not term_entries:
@@ -626,27 +592,17 @@ def intersect_and(term_entries, dl_lookup, avgdl, topk, k1=BM25_K1, b=BM25_B):
         inter = inter[keep]
     if not len(inter):
         return []
-    if hasattr(dl_lookup, "take_ids"):
-        dls = dl_lookup.take_ids(inter)
-    elif isinstance(dl_lookup, np.ndarray):
-        dls = dl_lookup[inter]
-    else:
-        dls = np.array([float(dl_lookup[int(d)]) for d in inter])
     scores = np.zeros(len(inter), dtype=np.float64)
-    for idf, w, ids, tfs in term_entries:  # sorted-term order (tie policy)
-        pos = np.searchsorted(ids, inter)
-        tf = tfs[pos].astype(np.float64)
-        denom = tf + k1 * (1.0 - b + b * (dls / avgdl))
-        scores += w * (idf * (tf * (k1 + 1.0)) / denom)
-    live = dls > 0.0
-    return _topk_by_score(inter[live], scores[live], topk)
+    for _term, w, ids, impacts in term_entries:  # sorted-term order (tie policy)
+        scores += _weighted(w, impacts[np.searchsorted(ids, inter)])
+    return _topk_by_score(scores, topk, inter)
 
 
 def search_blocks(
     block_rows: dict[str, list],
     term_dfs: dict[str, int],
     codec: str,
-    dl_lookup: np.ndarray,
+    dl_lookup,
     n_docs: int,
     avgdl: float,
     query: str,
@@ -655,7 +611,7 @@ def search_blocks(
     k1: float = BM25_K1,
     b: float = BM25_B,
     use_wand: bool = True,
-    flat_cache: dict | None = None,
+    flat_cache: OrderedDict | None = None,
     force_kernel: str | None = None,
 ) -> list[tuple[int, float]]:
     """Score a query given collected block rows per term.
@@ -674,11 +630,17 @@ def search_blocks(
     ("taat" | "bmw_block" | "vec_and" | "bmw_cursor" | "daat") overrides the
     selection — used by differential tests; "bmw_cursor" is the classic
     per-posting BMW loop kept as a second independent implementation.
-    ``flat_cache`` (term -> decoded arrays) lets a serving engine
-    amortize block decodes across repeated queries.
-    """
-    from collections import Counter
+    dl_lookup is a dl store (plans.search._DenseDL / _SortedDL).
 
+    ``flat_cache`` lets a serving engine amortize decoding AND scoring
+    across repeated queries: (term, k1, b) -> (docids, impacts), the
+    BM25 impacts of bm25_impacts for this engine's fixed n_docs, avgdl
+    and dl store. 16 bytes per cached posting (int64 id, float64
+    impact). Hits move to the end (LRU order); the caller bounds its
+    size by evicting from the front. The cursor kernels ("daat",
+    "bmw_cursor") never read it: they score from tf, which keeps them
+    an independent check of the cached impacts.
+    """
     q = tokenize_query(query)
     counts = Counter(t for t in q if t in block_rows and term_dfs.get(t))
     if not counts:
@@ -696,15 +658,20 @@ def search_blocks(
     def flat_entries():
         entries = []
         for term in sorted_terms:
-            if flat_cache is not None and term in flat_cache:
-                ids, tfs = flat_cache[term]
-            else:
+            key = (term, k1, b)
+            cached = None if flat_cache is None else flat_cache.get(key)
+            if cached is None:
                 ids, tfs = decode_term_postings_fast(term_rows(term), codec)
+                idf = bm25_idf(n_docs, term_dfs[term])
+                cached = (ids, bm25_impacts(ids, tfs, idf, dl_lookup, avgdl, k1, b))
                 if flat_cache is not None:
-                    flat_cache[term] = (ids, tfs)
-            entries.append(
-                (bm25_idf(n_docs, term_dfs[term]), float(counts[term]), ids, tfs)
-            )
+                    flat_cache[key] = cached
+            else:
+                # a concurrent request may have evicted the key since the
+                # read; the entry already read stays valid
+                with suppress(KeyError):
+                    flat_cache.move_to_end(key)
+            entries.append((term, float(counts[term]), *cached))
         return entries
 
     kernel = force_kernel
@@ -719,13 +686,13 @@ def search_blocks(
     if kernel == "taat":
         entries = flat_entries()
         if is_and:
-            return taat_and(entries, dl_lookup, avgdl, topk, k1, b)
-        return taat_or(entries, dl_lookup, avgdl, topk, k1, b)
+            return taat_and(entries, dl_lookup, topk)
+        return taat_or(entries, dl_lookup, topk)
 
     if kernel == "vec_and":
         if not is_and:
             raise ValueError("vec_and is an AND kernel; OR uses taat/bmw_block")
-        return intersect_and(flat_entries(), dl_lookup, avgdl, topk, k1, b)
+        return intersect_and(flat_entries(), topk)
 
     if kernel == "bmw_block":
         if is_and:
@@ -740,7 +707,7 @@ def search_blocks(
             mtf = np.array([r[4] for r in rows], dtype=np.float64)
             idf = bm25_idf(n_docs, term_dfs[term])
             metas.append((last, idf * (mtf * (k1 + 1.0)) / (mtf + k1 * (1.0 - b))))
-        return blockmax_taat_or(entries, metas, dl_lookup, avgdl, topk, k1, b)
+        return blockmax_taat_or(entries, metas, topk)
 
     if kernel == "bmw_cursor" and is_and:
         # previously this silently fell through to daat_and, letting a

@@ -22,9 +22,12 @@ insensitive to the difference.
     table-format analog of the reference's lexicon byte offset + block
     directory seek, HW2/engine/listio.py:176-196): a term's lookup
     reads about one small row group per blocks file (see
-    _BlockDirectory). A small LRU caches decoded term block-rows for
-    repeated terms. No Spark job in the hot path; latency is
-    milliseconds like the reference's.
+    _BlockDirectory). Two LRUs of at most _TERM_CACHE_SIZE terms each
+    serve repeated terms: one holds a term's fetched block rows, the
+    other its decoded postings as (doc_ids, BM25 impacts) per
+    (term, k1, b), so a hot query neither decodes nor evaluates BM25 —
+    it only adds cached impacts (operators.wand.bm25_impacts). No Spark
+    job in the hot path; latency is milliseconds like the reference's.
 
   - batch_score(): distributed scoring of a query SET over the block
     table: prune scan on term -> decode blocks (mapInPandas) -> the same
@@ -44,6 +47,13 @@ Driver-memory scale notes:
   - block directory: one (term_min, term_max, path, row_group) entry
     per row group plus one open memory-mapped file per blocks file —
     footer metadata only, no payload read at init.
+  - impact cache: 16 bytes per cached posting (int64 doc_id + float64
+    impact — the size of the int64 doc_id + int64 tf it replaced), at
+    most _TERM_CACHE_SIZE (term, k1, b) entries.
+  - dense scatter-add accumulator (taat_or / taat_and on a _DenseDL
+    store, when the query's postings reach 1/8 of the id space): 8 bytes
+    per id slot per query, plus 8 per slot for AND's match counter,
+    freed when the query returns.
 """
 
 from __future__ import annotations
@@ -51,6 +61,7 @@ from __future__ import annotations
 import os
 from bisect import bisect_right
 from collections import OrderedDict
+from contextlib import suppress
 from itertools import accumulate
 
 import numpy as np
@@ -246,9 +257,10 @@ class SearchEngine:
         self.dl = _make_dl_store(doc_ids, dls)
         self._dir = _BlockDirectory(os.path.join(index_dir, "blocks"))
         self._term_cache: OrderedDict[str, list] = OrderedDict()
-        # term -> decoded flat (docids, tfs): lets repeated queries skip
-        # the block decode entirely (bounded alongside the block LRU)
-        self._flat_cache: OrderedDict[str, tuple] = OrderedDict()
+        # (term, k1, b) -> (doc_ids, impacts): lets repeated queries skip
+        # the block decode and the BM25 evaluation (LRU, bounded like the
+        # block LRU; see search_blocks)
+        self._flat_cache: OrderedDict[tuple, tuple] = OrderedDict()
 
     def _fetch_blocks(self, terms: list[str]) -> dict[str, list]:
         out: dict[str, list] = {}
@@ -256,7 +268,9 @@ class SearchEngine:
         for t in terms:
             cached = self._term_cache.get(t)
             if cached is not None:
-                self._term_cache.move_to_end(t)
+                # a concurrent request may have evicted t since the read
+                with suppress(KeyError):
+                    self._term_cache.move_to_end(t)
                 out[t] = cached
             else:
                 missing.append(t)
