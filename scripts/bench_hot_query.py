@@ -8,13 +8,12 @@ N synthetic docs (default 3M) and times the same hot OR query through:
 
   - taat        : vectorized exhaustive term-at-a-time (the sub-threshold
                   kernel, forced here above threshold)
-  - bmw_block   : the vectorized blockwise block-max kernel (the NEW
-                  default above threshold)
-  - bmw_cursor  : the classic per-posting BMW cursor loop (round-2
-                  default above threshold — the cliff being fixed)
+  - bmw_block   : the vectorized blockwise block-max kernel (the
+                  default above threshold; it replaced the round-2
+                  per-posting cursor loop)
 
 "no cliff" = bmw_block stays within a small factor of taat on the hot
-query (where pruning cannot bite) instead of the cursor loop's 100x.
+query (where pruning cannot bite).
 Also reports the 8-query mixed set for realistic p50 with the auto
 kernel. Prints one JSON line; results go into BENCH.md.
 
@@ -77,7 +76,7 @@ def main() -> None:
         "hot_query": hot_q,
         "hot_total_postings": total_df,
     }
-    for kern, trials in (("taat", 5), ("bmw_block", 5), ("bmw_cursor", 1)):
+    for kern, trials in (("taat", 5), ("bmw_block", 5)):
         eng.search(hot_q, "OR", 10, force_kernel=kern)  # warm (+flat cache)
         samples = []
         for _ in range(trials):

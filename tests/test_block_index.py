@@ -23,7 +23,11 @@ from web_search_engine_spark.operators.postings import (
 from web_search_engine_spark.plans.build_index import build_index
 from web_search_engine_spark.plans.query import score_queries
 from web_search_engine_spark.plans.search import SearchEngine, batch_score
-from web_search_engine_spark.sources.corpus import corpus_df, corpus_docs
+from web_search_engine_spark.sources.corpus import (
+    corpus_df,
+    corpus_docs,
+    generate_corpus_pdf,
+)
 
 QUERIES = [
     ("q2", "communication policy"),
@@ -476,6 +480,116 @@ def test_failed_blocks_write_releases_caches_and_resumes(
         ), table
 
 
+def _split_corpus(spark, n_docs, n_base, seed):
+    """(base, batch) frames over disjoint halves of one corpus, built
+    from pandas so neither is cached."""
+    pdf = generate_corpus_pdf(n_docs, seed)
+    return (
+        spark.createDataFrame(pdf[:n_base].reset_index(drop=True)),
+        spark.createDataFrame(pdf[n_base:].reset_index(drop=True)),
+    )
+
+
+def _index_tables(spark, d):
+    return {
+        table: _sorted_rows(spark, d, table, cols)
+        for table, cols in (
+            ("blocks", BLOCK_COLS),
+            ("docs_meta", META_COLS),
+            ("lexicon", ["term", "df", "nblocks", "max_tf"]),
+        )
+    }
+
+
+def test_append_takes_the_build_rules(spark, tmp_path, monkeypatch):
+    """append_batch writes through the build's shard writer, so the rows
+    it writes and the Σdl its ledger records must not depend on which
+    side of the build's rules the batch falls: dl from a second tokenize
+    pass or from the postings (_DL_AUTO_MIN_DOCS), per-shard counts from
+    Observations or post hoc (OBSERVE_MAX_SHARDS)."""
+    import web_search_engine_spark.plans.build_index as B
+    from web_search_engine_spark.streaming.incremental import (
+        _read_ledger,
+        append_batch,
+    )
+
+    first, rest = _split_corpus(spark, 200, 120, seed=17)
+    base = str(tmp_path / "base")
+    B.build_index(spark, first, base, num_shards=3)
+    dl_source = _record_rule(monkeypatch, B, "_dl_source")
+    post_hoc = _record_rule(monkeypatch, B, "_post_hoc_shard_stats")
+    outs = {}
+    for name, knob, value, want_dl in (
+        ("default", None, None, "tokenize"),
+        ("postings_dl", "_DL_AUTO_MIN_DOCS", 0, "postings"),
+        ("post_hoc_counts", "OBSERVE_MAX_SHARDS", 0, "tokenize"),
+    ):
+        d = str(tmp_path / name)
+        shutil.copytree(base, d)
+        with monkeypatch.context() as m:
+            if knob:
+                m.setattr(B, knob, value)
+            n_calls = len(post_hoc)
+            assert append_batch(spark, rest, d, batch_id=0) == 80
+        assert dl_source[-1] == want_dl, name
+        assert (len(post_hoc) > n_calls) == (knob == "OBSERVE_MAX_SHARDS"), name
+        entry = _read_ledger(d)["batches"]["0"]
+        outs[name] = (_index_tables(spark, d), entry["n_docs"], entry["sum_dl"])
+    assert outs["default"] == outs["postings_dl"] == outs["post_hoc_counts"]
+    tables, n_docs, sum_dl = outs["default"]
+    new_meta = [r for r in tables["docs_meta"] if r[0] >= 3]  # appended shards
+    assert n_docs == len(new_meta) == 80
+    assert sum_dl == sum(r[4] for r in new_meta) > 0
+
+
+@pytest.mark.parametrize("dl_source", ["tokenize", "postings"])
+def test_failed_append_blocks_write_releases_caches_and_converges(
+    spark, tmp_path, monkeypatch, dl_source
+):
+    """Fault injection on the append path: the blocks write completes
+    its job and then raises. The append must release every handle it
+    persisted, and re-delivering the batch (a replay of an uncommitted
+    batch) must converge to the tables and stats of a clean append."""
+    import web_search_engine_spark.plans.build_index as B
+    from web_search_engine_spark.sources.catalog import read_stats
+    from web_search_engine_spark.streaming.incremental import append_batch
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    first, rest = _split_corpus(spark, 160, 100, seed=23)
+    d, clean = str(tmp_path / "redelivered"), str(tmp_path / "clean")
+    B.build_index(spark, first, d, num_shards=2)
+    shutil.copytree(d, clean)
+    if dl_source == "postings":
+        monkeypatch.setattr(B, "_DL_AUTO_MIN_DOCS", 0)
+    decided = _record_rule(monkeypatch, B, "_dl_source")
+    spark.catalog.clearCache()
+    assert persisted() == 0
+    real_write = B.write_blocks
+
+    def failing_write(blocks, index_dir):
+        real_write(blocks, index_dir)
+        # the batch's source rows, and the postings when dl comes from them
+        assert persisted() >= (2 if dl_source == "postings" else 1)
+        raise RuntimeError("injected blocks-write failure")
+
+    monkeypatch.setattr(B, "write_blocks", failing_write)
+    with pytest.raises(RuntimeError, match="injected"):
+        append_batch(spark, rest, d, batch_id=0)
+    assert decided[-1] == dl_source
+    assert persisted() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    monkeypatch.setattr(B, "write_blocks", real_write)
+    assert append_batch(spark, rest, d, batch_id=0) == 60
+    assert append_batch(spark, rest, clean, batch_id=0) == 60
+    assert _index_tables(spark, d) == _index_tables(spark, clean)
+    got, want = read_stats(d), read_stats(clean)
+    assert (got["n_docs"], got["avgdl"]) == (want["n_docs"], want["avgdl"])
+    assert got["n_docs"] == 160
+
+
 def test_arrow_records_cap_derives_from_row_bound(monkeypatch):
     """ADVICE r4: with the Arrow byte cap removed, the records cap must
     come from the declared row-width bound so wide-row corpora don't
@@ -515,8 +629,8 @@ def test_doc_id_runtime_invariant_gate(spark, monkeypatch):
 
 @pytest.mark.parametrize("mode", ["OR", "AND"])
 def test_three_kernels_identical(index_dir, oracle, monkeypatch, mode):
-    """TAAT (vectorized), the pruned cursor kernel (block-max WAND for
-    OR, galloping intersection for AND) and the unpruned cursor DAAT
+    """TAAT (vectorized), the pruned kernel (block-max TAAT for OR,
+    searchsorted intersection for AND) and the unpruned cursor DAAT
     must agree doc-for-doc with bit-identical scores: all kernels sum
     the per-term contributions in sorted-term order with the same
     float64 expression (float addition is not associative — the
@@ -541,11 +655,6 @@ def test_three_kernels_identical(index_dir, oracle, monkeypatch, mode):
         pruned = eng.search(q, mode=mode, topk=10, use_wand=True)
         plain = eng.search(q, mode=mode, topk=10, use_wand=False)
         results = [taat, pruned, plain]
-        if mode == "OR":
-            # the classic per-posting BMW cursor loop — the independent
-            # second implementation of the blockwise kernel's pruning
-            results.append(eng.search(q, mode=mode, topk=10,
-                                      force_kernel="bmw_cursor"))
         first = results[0]
         for got in results[1:]:
             assert [d for d, _ in first] == [d for d, _ in got], q
@@ -558,9 +667,8 @@ def test_three_kernels_identical(index_dir, oracle, monkeypatch, mode):
     if mode == "AND":
         # forcing an OR-only kernel on AND must fail loudly, not quietly
         # validate a different kernel (ADVICE r3)
-        for bad in ("bmw_cursor", "bmw_block"):
-            with pytest.raises(ValueError):
-                eng.search("the import", mode=mode, topk=10, force_kernel=bad)
+        with pytest.raises(ValueError):
+            eng.search("the import", mode=mode, topk=10, force_kernel="bmw_block")
 
 
 def test_fast_term_decode_matches_per_block(spark, index_dir):

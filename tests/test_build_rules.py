@@ -16,7 +16,6 @@ PINNED_KNOBS = {
     "WSE_DENSE_IDS",
     "WSE_EXPECTED_ROW_BYTES",
     "WSE_READER_CHECK",
-    "WSE_SPREAD_BYTES_PER_TASK",
     "WSE_VERIFY_DOC_IDS",
 }
 

@@ -26,7 +26,7 @@ from tests.oracle import OracleIndex
 from web_search_engine_spark.functions import codec as C
 from web_search_engine_spark.plans.search import SearchEngine, _DenseDL, _SortedDL
 
-OR_KERNELS = ("taat", "bmw_block", "bmw_cursor", "daat")
+OR_KERNELS = ("taat", "bmw_block", "daat")
 AND_KERNELS = ("taat", "vec_and", "daat")
 
 
@@ -137,6 +137,19 @@ def test_kernels_bit_identical(corpus, monkeypatch, store, mode):
             seen_short |= 0 < len(full) < topk
             seen_tie_at_k |= len(full) > topk and full[topk - 1][1] == full[topk][1]
     assert seen_short and seen_tie_at_k
+
+
+@pytest.mark.parametrize("mode,kernel", [
+    ("AND", "bmw_block"), ("OR", "vec_and"), ("OR", "bmw_cursor"), ("AND", "nope"),
+])
+def test_forced_kernel_must_serve_the_mode(corpus, mode, kernel):
+    """Forcing a kernel that does not serve the query's mode, or one that
+    does not exist, raises instead of quietly running another kernel."""
+    rows, dfs, dls, n = corpus
+    with pytest.raises(ValueError):
+        W.search_blocks(rows, dfs, "varbyte", _stores(dls, n)["sorted"], n,
+                        float(dls.mean()), "alpha beta", mode=mode,
+                        force_kernel=kernel)
 
 
 def test_dense_gate_both_sides(corpus):

@@ -226,3 +226,67 @@ def test_append_batch_lexicon_merge_is_o_delta(spark, tmp_path, monkeypatch):
         ).collect()
     }
     assert merged == fresh
+
+
+def test_first_append_base_comes_from_the_manifest(spark, tmp_path):
+    """The first append starts at the first id past the last committed
+    shard. Read from manifest rows it equals the value a docs_meta
+    doc_id scan gives, on a multi-shard build and on an empty index, and
+    an unreadable docs_meta file can no longer reset it to 0 (which made
+    the append overwrite shard 0)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    from web_search_engine_spark.sources.catalog import read_stats
+    from web_search_engine_spark.streaming.incremental import _init_ledger
+
+    def docs_meta_base(d, shard_size):
+        ids = pads.dataset(
+            os.path.join(d, "docs_meta"), partitioning="hive"
+        ).to_table(columns=["doc_id"]).column("doc_id")
+        if not len(ids):
+            return 0
+        return (pc.max(ids).as_py() // shard_size + 1) * shard_size
+
+    multi, empty = str(tmp_path / "multi"), str(tmp_path / "empty")
+    src = corpus_df(spark, n_docs=130, seed=5)
+    build_index(spark, src, multi, num_shards=4)
+    build_index(spark, src.limit(0), empty)
+    for d, want in ((multi, 132), (empty, 0)):
+        shard_size = int(read_stats(d)["shard_size"])
+        assert _init_ledger(d, shard_size)["next_base"] == want
+        assert docs_meta_base(d, shard_size) == want
+
+    shard0 = os.path.join(multi, "docs_meta", "shard=0")
+    with open(os.path.join(shard0, "part-unreadable.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    assert _init_ledger(multi, 33)["next_base"] == 132
+
+
+def test_torn_manifest_part_raises(spark, tmp_path):
+    """A manifest part that cannot be read must fail the read, not look
+    like an index with no committed shards (a resume would rebuild
+    over them and an append would recount N without them). A
+    dot-prefixed part — a commit still being written — is skipped."""
+    import pyarrow as pa
+
+    from web_search_engine_spark.plans.build_index import _read_manifest_rows
+
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus_df(spark, n_docs=60, seed=3), d, num_shards=2)
+    man = os.path.join(d, "manifest")
+    parts = os.listdir(man)
+    assert len(parts) == 1 and not parts[0].startswith(".")
+    with open(os.path.join(man, parts[0]), "rb") as f:
+        data = f.read()
+    rows = _read_manifest_rows(d)
+    assert sorted(r["shard"] for r in rows) == [0, 1]
+
+    with open(os.path.join(man, ".part-inflight.parquet"), "wb") as f:
+        f.write(data[: len(data) // 2])
+    assert _read_manifest_rows(d) == rows
+
+    with open(os.path.join(man, "part-torn.parquet"), "wb") as f:
+        f.write(data[: len(data) // 2])
+    with pytest.raises(pa.ArrowInvalid):
+        _read_manifest_rows(d)

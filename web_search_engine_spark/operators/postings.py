@@ -33,9 +33,7 @@ from ..functions.tokenizer import tokenize_udf, tokens_sql_col
 # eval setup, so 32 near-empty tasks lose to 8 loaded ones (measured
 # sweep at 5k docs: 8p 0.24 s vs 32p 0.37 s; at 50k docs the rule
 # saturates to full parallelism and matches the old behavior).
-_SPREAD_BYTES_PER_TASK = int(
-    os.environ.get("WSE_SPREAD_BYTES_PER_TASK", str(64 * 1024))
-)
+_SPREAD_BYTES_PER_TASK = 64 * 1024
 
 
 def _spread_input(df: DataFrame) -> DataFrame:

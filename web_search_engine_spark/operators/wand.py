@@ -1,18 +1,22 @@
-"""Document-at-a-time BM25 scoring with block-max WAND pruning.
+"""Driver-side BM25 kernels for single queries.
 
 The interactive query path (north star): single queries score on the
-driver over the handful of posting lists the query touches — the same
-shape as the reference's cursor machinery (HW2/engine/daat.py,
-postings_cursor.py, daat_ranker.py), reimplemented over the block-row
-table with numpy block decodes and searchsorted seeks. The distributed
-batch path for query SETS lives in plans/query.py; both produce
-rank-identical results (tested).
+driver over the handful of posting lists the query touches. The
+production kernels are numpy-vectorized over cached per-term impacts:
+taat_or/taat_and, the block-max pruned OR kernel blockmax_taat_or, and
+the searchsorted intersection intersect_and. The exhaustive cursor DAAT
+(daat_or_unpruned, daat_and) — the reference's cursor machinery
+(HW2/engine/daat.py, postings_cursor.py, daat_ranker.py) over the
+block-row table — scores from tf and is the oracle every kernel is
+compared against. The distributed batch path for query SETS lives in
+plans/query.py; both produce rank-identical results (tested).
 
-Pruning is rank-safe INCLUDING the (score desc, doc_id asc) tie policy:
-docids are visited in increasing order, so a later candidate whose score
-merely EQUALS the current kth best can never enter the top-k (the
-incumbent has the smaller doc_id) — pruning when upper_bound <= theta is
-therefore exact, not approximate. Block upper bounds use
+Block-max pruning is rank-safe INCLUDING the (score desc, doc_id asc)
+tie policy: docid ranges are visited in increasing order, so a later
+candidate whose score merely EQUALS the current kth best can never enter
+the top-k (the incumbent has the smaller doc_id) — pruning when
+upper_bound <= theta is therefore exact, not approximate. Block upper
+bounds use
 ub = idf * (k1+1)*max_tf / (max_tf + k1*(1-b)), a true bound because the
 omitted b*dl/avgdl term only grows the denominator (SURVEY.md §4) and
 the bound is increasing in tf.
@@ -46,7 +50,7 @@ class BlockCursor:
 
     __slots__ = (
         "term", "df", "idf", "blocks", "codec", "k1", "b",
-        "bi", "pos", "_docids", "_tfs", "last_docids", "block_ubs", "term_ub",
+        "bi", "pos", "_docids", "_tfs", "last_docids",
     )
 
     def __init__(self, term, df, blocks, codec, n_docs, k1=BM25_K1, b=BM25_B):
@@ -59,9 +63,6 @@ class BlockCursor:
         self.k1 = k1
         self.b = b
         self.last_docids = np.array([blk[0] for blk in blocks], dtype=np.int64)
-        mtf = np.array([blk[2] for blk in blocks], dtype=np.float64)
-        self.block_ubs = self.idf * (mtf * (k1 + 1.0)) / (mtf + k1 * (1.0 - b))
-        self.term_ub = float(self.block_ubs.max()) if len(blocks) else 0.0
         self.bi = -1
         self.pos = 0
         self._docids = None
@@ -90,12 +91,6 @@ class BlockCursor:
 
     def tf(self) -> int:
         return int(self._tfs[self.pos])
-
-    def block_ub(self) -> float:
-        return float(self.block_ubs[self.bi]) if self._docids is not None else 0.0
-
-    def block_last(self) -> int:
-        return int(self.last_docids[self.bi])
 
     def advance(self) -> int | None:
         if self._docids is None:
@@ -196,8 +191,8 @@ def daat_and(cursors, weights, dl_lookup, avgdl, topk):
 
     Cursor ADVANCEMENT order is df-ascending (cheapest intersection),
     but tied-term score summation stays in the callers' sorted-term
-    cursor order: float addition is not associative, and the TAAT /
-    WAND / relational kernels all sum per-term contributions in
+    cursor order: float addition is not associative, and the vectorized
+    / relational kernels all sum per-term contributions in
     sorted-term order — AND scores must be bit-identical to them."""
     if not cursors:
         return []
@@ -227,78 +222,10 @@ def daat_and(cursors, weights, dl_lookup, avgdl, topk):
     return top.result()
 
 
-def wand_or(cursors, weights, dl_lookup, avgdl, topk, block_max=True):
-    """Block-max WAND top-k for OR queries (rank-safe, tie-safe).
-
-    Term upper bounds select the pivot (Broder et al.); per-block upper
-    bounds then refine the decision and enable jumps past block
-    boundaries (Ding & Suel BMW).
-    """
-    live = [c for c in cursors if not c.exhausted()]
-    w = {id(c): weights[i] for i, c in enumerate(cursors)}
-    top = _TopK(topk)
-    while live:
-        live = [c for c in live if not c.exhausted()]
-        if not live:
-            break
-        # secondary key TERM pins the summation order for cursors tied
-        # on one docid to sorted-term order — the same float64 addition
-        # sequence as DAAT's heap pops and the vectorized TAAT passes
-        # (bit-identical scores across all three kernels, tested)
-        live.sort(key=lambda c: (c.docid(), c.term))
-        theta = top.theta()
-        # pivot: first prefix whose term-ub sum could beat theta
-        acc = 0.0
-        pivot = -1
-        for i, c in enumerate(live):
-            acc += w[id(c)] * c.term_ub
-            if not top.full() or acc > theta:
-                pivot = i
-                break
-        if pivot < 0:
-            break  # no prefix can beat theta -> done
-        pivot_doc = live[pivot].docid()
-        if live[0].docid() == pivot_doc:
-            # everything in live[0..P] sits at pivot_doc (P >= pivot)
-            P = pivot
-            while P + 1 < len(live) and live[P + 1].docid() == pivot_doc:
-                P += 1
-            prefix = live[: P + 1]
-            if block_max and top.full():
-                # refine with CURRENT block bounds before paying the score
-                bm = sum(w[id(c)] * c.block_ub() for c in prefix)
-                if bm <= theta:
-                    # Docs in [pivot_doc, jump) can only draw from the
-                    # prefix cursors' current blocks (bounded by bm), so
-                    # the whole range is skippable — but the jump must
-                    # stop at the next cursor's docid (Ding & Suel BMW:
-                    # beyond it another term's contributions apply).
-                    jump = min(c.block_last() for c in prefix) + 1
-                    if P + 1 < len(live):
-                        jump = min(jump, live[P + 1].docid())
-                    for c in prefix:
-                        c.next_ge(jump)
-                    continue
-            s = _score_tied(
-                prefix, range(len(prefix)), pivot_doc, dl_lookup, avgdl,
-                [w[id(c)] for c in prefix],
-            )
-            if s is not None:
-                top.offer(s, pivot_doc)
-            for c in prefix:
-                c.advance()
-        else:
-            # advance the leading cursors up to the pivot document
-            for c in live[:pivot]:
-                c.next_ge(pivot_doc)
-    return top.result()
-
-
 # Below this many total postings across the query's terms, the
-# numpy-vectorized TAAT kernel beats cursor-driven WAND: the Python
-# DAAT loop costs ~8 us per visited posting while TAAT scores ~30 ns
-# per posting, so WAND only wins when pruning skips >99% of postings —
-# which needs long, score-skewed lists (big indexes), not short ones.
+# exhaustive TAAT kernels run; above it the pruned ones (block-max OR,
+# searchsorted AND), whose per-block bookkeeping only pays off on long,
+# score-skewed lists (big indexes), not short ones.
 TAAT_MAX_POSTINGS = 2_000_000
 
 
@@ -504,9 +431,9 @@ def blockmax_taat_or(term_entries, term_blockmeta, topk):
     cached whole-term decode — pruning here saves accumulation, not
     decoding).
 
-    Rank-safety matches wand_or: ranges are visited in increasing docid
-    order, so a pruned candidate whose score merely EQUALS theta would
-    lose the (score desc, doc_id asc) tie to the incumbent anyway.
+    Rank-safe: ranges are visited in increasing docid order, so a
+    pruned candidate whose score merely EQUALS theta would lose the
+    (score desc, doc_id asc) tie to the incumbent anyway.
 
     term_entries = [(term, weight, ids, impacts)] in sorted-term order;
     term_blockmeta = [(last_docids, block_ubs)] aligned with
@@ -626,10 +553,9 @@ def search_blocks(
     WAND (blockmax_taat_or) for OR, the vectorized searchsorted
     intersection (intersect_and) for AND. use_wand=False forces the
     exhaustive cursor DAAT (the differential baseline; daat_and for
-    AND). ``force_kernel``
-    ("taat" | "bmw_block" | "vec_and" | "bmw_cursor" | "daat") overrides the
-    selection — used by differential tests; "bmw_cursor" is the classic
-    per-posting BMW loop kept as a second independent implementation.
+    AND). ``force_kernel`` ("taat" | "bmw_block" | "vec_and" | "daat")
+    overrides the selection — used by differential tests; a kernel that
+    does not serve the query's mode raises ValueError.
     dl_lookup is a dl store (plans.search._DenseDL / _SortedDL).
 
     ``flat_cache`` lets a serving engine amortize decoding AND scoring
@@ -637,9 +563,9 @@ def search_blocks(
     BM25 impacts of bm25_impacts for this engine's fixed n_docs, avgdl
     and dl store. 16 bytes per cached posting (int64 id, float64
     impact). Hits move to the end (LRU order); the caller bounds its
-    size by evicting from the front. The cursor kernels ("daat",
-    "bmw_cursor") never read it: they score from tf, which keeps them
-    an independent check of the cached impacts.
+    size by evicting from the front. The cursor DAAT ("daat") never
+    reads it: it scores from tf, which keeps it an independent check of
+    the cached impacts.
     """
     q = tokenize_query(query)
     counts = Counter(t for t in q if t in block_rows and term_dfs.get(t))
@@ -709,11 +635,8 @@ def search_blocks(
             metas.append((last, idf * (mtf * (k1 + 1.0)) / (mtf + k1 * (1.0 - b))))
         return blockmax_taat_or(entries, metas, topk)
 
-    if kernel == "bmw_cursor" and is_and:
-        # previously this silently fell through to daat_and, letting a
-        # differential test "force" the cursor BMW on AND while actually
-        # validating a different kernel (ADVICE r3)
-        raise ValueError("bmw_cursor is an OR kernel; AND uses taat/vec_and/daat")
+    if kernel != "daat":
+        raise ValueError(f"unknown kernel {kernel!r}")
     cursors, weights = [], []
     for term in sorted_terms:
         cursors.append(
@@ -722,6 +645,4 @@ def search_blocks(
         weights.append(float(counts[term]))
     if is_and:
         return daat_and(cursors, weights, dl_lookup, avgdl, topk)
-    if kernel == "bmw_cursor":
-        return wand_or(cursors, weights, dl_lookup, avgdl, topk)
     return daat_or_unpruned(cursors, weights, dl_lookup, avgdl, topk)

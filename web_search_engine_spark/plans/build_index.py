@@ -185,7 +185,8 @@ def _pending_bytes(source: DataFrame, n_docs: int, pending_docs: int) -> int:
 
 def write_blocks(blocks: DataFrame, index_dir: str) -> None:
     """Shard-partitioned write of block rows with small row groups (see
-    _BLOCKS_ROW_GROUP_BYTES); the build and streaming appends share it."""
+    _BLOCKS_ROW_GROUP_BYTES). write_shards calls it through this module
+    global, for the build and the streaming append alike."""
     blocks.write.mode("overwrite").option(
         "parquet.block.size", str(_BLOCKS_ROW_GROUP_BYTES)
     ).partitionBy("shard").parquet(os.path.join(index_dir, "blocks"))
@@ -194,8 +195,8 @@ def write_blocks(blocks: DataFrame, index_dir: str) -> None:
 def write_docs_meta(
     docs_meta: DataFrame, index_dir: str, n_part: int, n_shards: int
 ) -> None:
-    """Shard-partitioned docs_meta write on ``n_part`` tasks for rows of
-    ``n_shards`` shards; the build and streaming appends share it.
+    """Shard-partitioned docs_meta write on ``n_part`` tasks (write_shards
+    passes _write_parallelism's count) for rows of ``n_shards`` shards.
 
     Repartition by (shard, doc_id-bucket) before the partitioned write:
     plain task-output writes put a file from every task into every shard
@@ -238,23 +239,25 @@ def _read_manifest_rows(index_dir: str) -> list[dict]:
     """Driver-side metadata read of manifest/ (tiny: one row per shard).
 
     Uses pyarrow directly — the resume probe and corpus-stats rollup
-    must not cost a Spark job each. Falls back to empty on a fresh dir.
+    must not cost a Spark job each. Empty only when manifest/ does not
+    exist; an unreadable part raises (treating it as "no shards" would
+    make a resume rebuild over committed shards and an append recount
+    N without them).
     """
+    import pyarrow.dataset as pads
+
     path = os.path.join(index_dir, "manifest")
     if not os.path.isdir(path):
         return []
-    try:
-        import pyarrow.dataset as pads
-
-        return pads.dataset(path, format="parquet").to_table().to_pylist()
-    except Exception:
-        return []
+    return pads.dataset(path, format="parquet").to_table().to_pylist()
 
 
 def _append_manifest_rows(index_dir: str, rows: list[dict]) -> None:
     """Driver-side manifest commit (the Iceberg-manifest analog): one
     small parquet file per completed attempt, appended after the shard
-    data is durable."""
+    data is durable. The part is written under a dot-prefixed name
+    (pyarrow and Spark skip dot files) and renamed into place, so a
+    reader never sees a torn part."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -275,7 +278,10 @@ def _append_manifest_rows(index_dir: str, rows: list[dict]) -> None:
         ]
     )
     tbl = pa.Table.from_pylist(rows, schema=schema)
-    pq.write_table(tbl, os.path.join(path, f"part-{uuid.uuid4().hex}.parquet"))
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "." + name)
+    pq.write_table(tbl, tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 # driver-side lexicon merge threshold: when the delta's block-row count
@@ -474,6 +480,160 @@ def _per_shard_observe_exprs(pending: list[int], kind: str):
     return exprs
 
 
+def _tokenize_meta(
+    toks: DataFrame, key_cols: tuple[str, ...], text_col: str
+) -> DataFrame:
+    """docs_meta rows with dl = the token count of the tokenize pass."""
+    meta_cols = [c for c in ("commit", "lang") if c in toks.columns]
+    return toks.select(
+        "shard", "doc_id", *key_cols, *meta_cols,
+        F.size("tokens").cast("long").alias("dl"),
+        F.sha2(F.col(text_col), 256).alias("content_sha256"),
+    )
+
+
+def write_shards(
+    spark: SparkSession,
+    docs: DataFrame,
+    index_dir: str,
+    pending: list[int],
+    pending_docs: int,
+    pending_bytes: int,
+    *,
+    codec: str,
+    block_size: int,
+    shard_size: int,
+    tokenizer: str,
+    key_cols: tuple[str, ...],
+    text_col: str,
+    mark=lambda label: None,
+) -> dict[int, tuple[int, int, int, int]]:
+    """Tokenize ``docs`` (id-assigned rows with ``shard``, all in
+    ``pending``; ``pending_docs`` of them, ``pending_bytes`` of source)
+    and write their blocks and docs_meta rows. Returns ``{shard: (n_docs,
+    sum_dl, n_postings, n_blocks)}`` for every pending shard.
+
+    The one writer of shard data: build_index and the streaming append
+    both call it, so the auto rules (_write_parallelism, _dl_source,
+    _dl_agg, _dl_join) decide every write the same way. The per-shard
+    counts ride the write jobs as Observation metrics up to
+    OBSERVE_MAX_SHARDS pending shards; above that they come from
+    _post_hoc_shard_stats.
+    """
+    # NOTE tokenization deliberately NOT persisted: a cheap, fully
+    # parallel map whose array<string> output cached as JVM objects
+    # costs more in GC/eviction than recomputing (the cached SOURCE
+    # ROWS feed both passes).
+    toks = with_tokens(docs, text_col, method=tokenizer)
+
+    use_observe = len(pending) <= OBSERVE_MAX_SHARDS
+    docs_obs = blocks_obs = None
+    parallelism = spark.sparkContext.defaultParallelism
+    par_pass = _write_parallelism(
+        parallelism, len(pending), pending_docs, pending_bytes
+    )
+    dl_from_postings = _dl_source(pending_docs) == "postings"
+
+    # cluster_by_doc=False: the blocks exchange re-partitions on the
+    # salted (shard, term-bucket) key right after, and the dl
+    # aggregation has its own plan rule (_dl_agg) over the narrow
+    # (doc_id, tf) projection — a doc_id exchange of the FULL postings
+    # rows here would be strictly more shuffled bytes
+    postings = build_postings(toks, cluster_by_doc=False)
+    if dl_from_postings:
+        # tokenize ONCE: the blocks write materializes the postings and
+        # the dl aggregation reuses them
+        postings = postings.persist()
+    try:
+        # postings -> blocks (the shuffle IS the merge); shard derives
+        # from doc_id with the same shard_size
+        blocks = build_block_index(
+            postings,
+            block_size=block_size,
+            codec=codec,
+            shard_size=shard_size,
+            num_partitions=par_pass,
+            shards_hint=len(pending),
+        )
+        if use_observe:
+            blocks_obs = Observation("blocks_per_shard")
+            blocks = blocks.observe(
+                blocks_obs, *_per_shard_observe_exprs(pending, "blocks")
+            )
+
+        def observed_meta(dm: DataFrame) -> DataFrame:
+            nonlocal docs_obs
+            if use_observe:
+                docs_obs = Observation("docs_meta_per_shard")
+                dm = dm.observe(docs_obs, *_per_shard_observe_exprs(pending, "docs"))
+            return dm
+
+        if not dl_from_postings:
+            # docs_meta depends only on the cached source rows, NOT on
+            # the blocks job — submit both writes concurrently so
+            # docs_meta back-fills executor slots freed by the blocks
+            # stage's tail (guide §2.6 "overlap independent jobs"). The
+            # postings-derived shape stays sequential: racing two jobs
+            # to materialize one cache would double-compute it.
+            docs_meta = observed_meta(_tokenize_meta(toks, key_cols, text_col))
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fa = pool.submit(write_blocks, blocks, index_dir)
+                fb = pool.submit(
+                    write_docs_meta, docs_meta, index_dir, par_pass, len(pending)
+                )
+                fa.result()
+                fb.result()
+            mark("blocks+docs_meta_overlapped")
+        else:
+            write_blocks(blocks, index_dir)
+            mark("blocks_write")
+            # |postings| comes from the blocks-stage Observation, already
+            # materialized by the write above
+            n_post = (
+                sum(int(blocks_obs.get[f"p_{s}"]) for s in pending)
+                if use_observe else None
+            )
+            dl_base = postings.select("doc_id", "tf")
+            if _dl_agg(pending_docs, n_post, parallelism) == "repartition":
+                dl_base = dl_base.repartition(F.col("doc_id"))
+            dl = dl_base.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
+            if _dl_join(pending_docs) == "broadcast":
+                dl = F.broadcast(dl)
+            meta_cols = [c for c in ("commit", "lang") if c in docs.columns]
+            docs_meta = (
+                docs.select(
+                    "shard", "doc_id", *key_cols, *meta_cols,
+                    F.sha2(F.col(text_col), 256).alias("content_sha256"),
+                )
+                .join(dl, "doc_id", "left")
+                # empty docs have no postings rows but stay in N/avgdl
+                # with dl=0 (reference P4 semantics)
+                .withColumn("dl", F.coalesce("dl", F.lit(0).cast("long")))
+                .select(
+                    "shard", "doc_id", *key_cols, *meta_cols,
+                    "dl", "content_sha256",
+                )
+            )
+            write_docs_meta(
+                observed_meta(docs_meta), index_dir, par_pass, len(pending)
+            )
+            mark("docs_meta_write")
+    finally:
+        if dl_from_postings:
+            postings.unpersist()
+
+    if not use_observe:
+        return _post_hoc_shard_stats(spark, index_dir, pending)
+    dv, bv = docs_obs.get, blocks_obs.get
+    return {
+        s: (
+            int(dv[f"n_{s}"]), int(dv[f"dl_{s}"]),
+            int(bv[f"p_{s}"]), int(bv[f"b_{s}"]),
+        )
+        for s in pending
+    }
+
+
 def _write_empty_index(
     spark: SparkSession,
     index_dir: str,
@@ -564,18 +724,10 @@ def build_index(
             "shard", (F.col("doc_id") / F.lit(shard_size)).cast("int")
         )
 
-        meta_cols = [c for c in ("commit", "lang") if c in source.columns]
-
-        def tokenize_meta(toks: DataFrame) -> DataFrame:
-            # docs_meta with dl = the token count of the tokenize pass
-            return toks.select(
-                "shard", "doc_id", *key_cols, *meta_cols,
-                F.size("tokens").cast("long").alias("dl"),
-                F.sha2(F.col(text_col), 256).alias("content_sha256"),
-            )
-
         if n_docs == 0:
-            empty_meta = tokenize_meta(with_tokens(docs, text_col, method=tokenizer))
+            empty_meta = _tokenize_meta(
+                with_tokens(docs, text_col, method=tokenizer), key_cols, text_col
+            )
             return _write_empty_index(
                 spark, index_dir, empty_meta, codec, block_size, shard_size
             )
@@ -586,16 +738,6 @@ def build_index(
 
         new_rows: list[dict] = []
         if pending:
-            work = docs.filter(F.col("shard").isin(pending))
-            # NOTE tokenization deliberately NOT persisted: a cheap, fully
-            # parallel map whose array<string> output cached as JVM objects
-            # costs more in GC/eviction than recomputing (the cached SOURCE
-            # ROWS feed both passes).
-            toks = with_tokens(work, text_col, method=tokenizer)
-
-            use_observe = len(pending) <= OBSERVE_MAX_SHARDS
-            docs_obs = blocks_obs = None
-
             # docs actually tokenized in THIS pass: every auto rule sizes
             # against the pending shards' docs, not the full corpus — a
             # resumed build with one small shard left must not pick plans
@@ -604,117 +746,14 @@ def build_index(
                 max(0, min((s + 1) * shard_size, n_docs) - s * shard_size)
                 for s in pending
             )
-            parallelism = spark.sparkContext.defaultParallelism
-            par_pass = _write_parallelism(
-                parallelism, len(pending), pending_docs,
+            per_shard = write_shards(
+                spark, docs.filter(F.col("shard").isin(pending)), index_dir,
+                pending, pending_docs,
                 _pending_bytes(source, n_docs, pending_docs),
+                codec=codec, block_size=block_size, shard_size=shard_size,
+                tokenizer=tokenizer, key_cols=key_cols, text_col=text_col,
+                mark=mark,
             )
-            dl_from_postings = _dl_source(pending_docs) == "postings"
-
-            # cluster_by_doc=False: the blocks exchange re-partitions on
-            # the salted (shard, term-bucket) key right after, and the dl
-            # aggregation has its own plan rule (_dl_agg) over the narrow
-            # (doc_id, tf) projection — a doc_id exchange of the FULL
-            # postings rows here would be strictly more shuffled bytes
-            postings = build_postings(toks, cluster_by_doc=False)
-            if dl_from_postings:
-                # tokenize ONCE: the blocks write materializes the
-                # postings and the dl aggregation reuses them
-                postings = postings.persist()
-            try:
-                # postings -> blocks (the shuffle IS the merge); shard
-                # derives from doc_id with the same shard_size
-                blocks = build_block_index(
-                    postings,
-                    block_size=block_size,
-                    codec=codec,
-                    shard_size=shard_size,
-                    num_partitions=par_pass,
-                    shards_hint=len(pending),
-                )
-                if use_observe:
-                    blocks_obs = Observation("blocks_per_shard")
-                    blocks = blocks.observe(
-                        blocks_obs, *_per_shard_observe_exprs(pending, "blocks")
-                    )
-
-                def observed_meta(dm: DataFrame) -> DataFrame:
-                    nonlocal docs_obs
-                    if use_observe:
-                        docs_obs = Observation("docs_meta_per_shard")
-                        dm = dm.observe(
-                            docs_obs, *_per_shard_observe_exprs(pending, "docs")
-                        )
-                    return dm
-
-                if not dl_from_postings:
-                    # docs_meta depends only on the cached source rows,
-                    # NOT on the blocks job — submit both writes
-                    # concurrently so docs_meta back-fills executor slots
-                    # freed by the blocks stage's tail (guide §2.6
-                    # "overlap independent jobs"). The postings-derived
-                    # shape stays sequential: racing two jobs to
-                    # materialize one cache would double-compute it.
-                    docs_meta = observed_meta(tokenize_meta(toks))
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        fa = pool.submit(write_blocks, blocks, index_dir)
-                        fb = pool.submit(
-                            write_docs_meta, docs_meta, index_dir,
-                            par_pass, len(pending),
-                        )
-                        fa.result()
-                        fb.result()
-                    mark("blocks+docs_meta_overlapped")
-                else:
-                    write_blocks(blocks, index_dir)
-                    mark("blocks_write")
-                    # |postings| comes from the blocks-stage Observation,
-                    # already materialized by the write above
-                    n_post = (
-                        sum(int(blocks_obs.get[f"p_{s}"]) for s in pending)
-                        if use_observe else None
-                    )
-                    dl_base = postings.select("doc_id", "tf")
-                    if _dl_agg(pending_docs, n_post, parallelism) == "repartition":
-                        dl_base = dl_base.repartition(F.col("doc_id"))
-                    dl = dl_base.groupBy("doc_id").agg(
-                        F.sum("tf").cast("long").alias("dl")
-                    )
-                    if _dl_join(pending_docs) == "broadcast":
-                        dl = F.broadcast(dl)
-                    docs_meta = (
-                        work.select(
-                            "shard", "doc_id", *key_cols, *meta_cols,
-                            F.sha2(F.col(text_col), 256).alias("content_sha256"),
-                        )
-                        .join(dl, "doc_id", "left")
-                        # empty docs have no postings rows but stay in
-                        # N/avgdl with dl=0 (reference P4 semantics)
-                        .withColumn("dl", F.coalesce("dl", F.lit(0).cast("long")))
-                        .select(
-                            "shard", "doc_id", *key_cols, *meta_cols,
-                            "dl", "content_sha256",
-                        )
-                    )
-                    write_docs_meta(
-                        observed_meta(docs_meta), index_dir, par_pass, len(pending)
-                    )
-                    mark("docs_meta_write")
-            finally:
-                if dl_from_postings:
-                    postings.unpersist()
-
-            if use_observe:
-                dv, bv = docs_obs.get, blocks_obs.get
-                per_shard = {
-                    s: (
-                        int(dv[f"n_{s}"]), int(dv[f"dl_{s}"]),
-                        int(bv[f"p_{s}"]), int(bv[f"b_{s}"]),
-                    )
-                    for s in pending
-                }
-            else:
-                per_shard = _post_hoc_shard_stats(spark, index_dir, pending)
 
             build_sec = round(time.time() - t_start, 3)
             now = time.time()
