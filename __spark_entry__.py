@@ -154,16 +154,30 @@ def _wand_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataF
 
 
 def _batch_score_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataFrame:
-    """The distributed block-table read path under the gate: batch_score
-    over the same on-disk index, so the Python decode stage
-    (blocks_to_postings) and the query_id top-k are hash-compared to
-    the relational BM25 SQL."""
+    """The block-table read path under the gate: batch_score over the
+    same on-disk index, hash-compared to the relational BM25 SQL. A
+    one-query call at this scale takes the driver route (numpy decode,
+    score and rounded-score top-k)."""
     from web_search_engine_spark.plans.search import batch_score
     from web_search_engine_spark.sources.catalog import IndexCatalog
 
     with _gate_index(spark, sf_dir) as tmp:
         top = batch_score(IndexCatalog(spark, tmp), [("q", query)], mode, 10).collect()
     return _top10_frame(spark, [(r.doc_id, r.score) for r in top])
+
+
+def _batch_score_spark_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataFrame:
+    """_batch_score_gate with the driver route off, so batch_score's
+    Spark route — the Python decode stage (blocks_to_postings) and the
+    query_id top-k — stays gated."""
+    import web_search_engine_spark.plans.search as S
+
+    saved = S.DRIVER_MAX_POSTINGS
+    S.DRIVER_MAX_POSTINGS = -1
+    try:
+        return _batch_score_gate(spark, sf_dir, query, mode)
+    finally:
+        S.DRIVER_MAX_POSTINGS = saved
 
 
 def _subset_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -344,9 +358,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # J3/A8: same physical path, AND mode (galloping intersection
         # with sorted-term summation — the pinned-order invariant)
         "wand_top10_and": _wand_top10_and,
-        # distributed read path: batch_score decodes the on-disk blocks
-        # in a Python stage, then scores and ranks per query_id
+        # block-table read path: batch_score's driver route decodes,
+        # scores and ranks the on-disk blocks in numpy...
         "batch_score_top10_or": lambda spark, sf: _batch_score_gate(
+            spark, sf, Q_OR, "OR"
+        ),
+        # ...and its Spark route decodes them in a Python stage, then
+        # scores and ranks per query_id
+        "batch_score_top10_or_spark": lambda spark, sf: _batch_score_spark_gate(
             spark, sf, Q_OR, "OR"
         ),
         # ---- training-data pipeline operators (beyond the reference) ----
@@ -997,6 +1016,7 @@ FROM pershard GROUP BY term
         "wand_top10": _bm25_sql(Q_OR, "OR"),
         "wand_top10_and": _bm25_sql(Q_AND, "AND"),
         "batch_score_top10_or": _bm25_sql(Q_OR, "OR"),
+        "batch_score_top10_or_spark": _bm25_sql(Q_OR, "OR"),
         # append-mode emits exactly the windows finalized under the
         # final watermark (max ts - 2 h); event-time jitter keeps that
         # watermark off every hour boundary, so <= is unambiguous

@@ -798,29 +798,192 @@ def test_blocks_row_groups_are_lookup_sized_and_routes_agree(spark, tmp_path):
     assert n_nonempty >= 30
 
 
+def _canon(rows):
+    """The benchmark's canonical row form (perfbench/refresh.canon)."""
+    return sorted(
+        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6)) for r in rows
+    )
+
+
+def _spark_route_calls(monkeypatch):
+    """Record each call of the Spark route's block decode."""
+    import web_search_engine_spark.plans.search as S
+
+    calls = []
+    real = S.blocks_to_postings
+    monkeypatch.setattr(
+        S, "blocks_to_postings", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    return calls
+
+
 def test_term_dfs_falls_back_to_spark_probe(spark, index_dir, monkeypatch):
     """When pyarrow cannot open the lexicon path, batch_score's df lookup
-    runs as a Spark job over the lexicon and scores identically."""
+    runs as a Spark job over the lexicon, the call takes the Spark route,
+    and the rows equal the driver route's. The same holds when only the
+    docs_meta or the blocks footers cannot be opened."""
     import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
 
     import web_search_engine_spark.plans.query as Q
     from web_search_engine_spark.sources.catalog import IndexCatalog
 
-    want = batch_score(IndexCatalog(spark, index_dir), QUERIES, topk=10).collect()
+    driver = batch_score(IndexCatalog(spark, index_dir), QUERIES, topk=10)
+    assert _is_local_relation(driver)
+    want = _canon(driver.collect())
+    assert len(want) > 0
 
     def unreachable(*args, **kwargs):
-        raise OSError("no local filesystem for the lexicon path")
+        raise OSError("no local filesystem for the index path")
 
     probes = []
     real_probe = Q.probe_lexicon
-    monkeypatch.setattr(pads, "dataset", unreachable)
-    monkeypatch.setattr(
-        Q, "probe_lexicon", lambda lex, terms: probes.append(terms) or real_probe(lex, terms)
+    spark_route = _spark_route_calls(monkeypatch)
+    with monkeypatch.context() as m:
+        m.setattr(pads, "dataset", unreachable)
+        m.setattr(
+            Q, "probe_lexicon",
+            lambda lex, terms: probes.append(terms) or real_probe(lex, terms),
+        )
+        cat = IndexCatalog(spark, index_dir)
+        got = batch_score(cat, QUERIES, topk=10).collect()
+        assert probes, "the Spark lexicon probe did not run"
+        assert spark_route, "the call did not take the Spark route"
+        assert _canon(got) == want
+        assert cat.term_dfs([]) == {}
+
+    for table, target, fake in (
+        ("docs_meta", pads, "dataset"),
+        ("blocks", pq, "ParquetFile"),
+    ):
+        real = getattr(target, fake)
+
+        def fails_on_table(path, *a, _real=real, _table=table, **k):
+            if f"/{_table}" in str(path):
+                raise OSError(f"cannot open {path}")
+            return _real(path, *a, **k)
+
+        spark_route.clear()
+        probes.clear()
+        with monkeypatch.context() as m:
+            m.setattr(target, fake, fails_on_table)
+            got = batch_score(IndexCatalog(spark, index_dir), QUERIES, topk=10)
+            assert not _is_local_relation(got), table
+            assert spark_route, table
+            assert _canon(got.collect()) == want, table
+        assert not probes, "the lexicon opened: df needs no Spark probe"
+
+
+def _is_local_relation(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+@pytest.fixture(scope="module")
+def raw_index_dir(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("raw_index"))
+    build_index(
+        spark, corpus_df(spark, n_docs=400, seed=42), d,
+        codec="raw", block_size=16, num_shards=4,
     )
-    cat = IndexCatalog(spark, index_dir)
-    got = batch_score(cat, QUERIES, topk=10).collect()
-    assert probes, "the Spark lexicon probe did not run"
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    assert sorted(got, key=key) == sorted(want, key=key)
-    assert len(want) > 0
-    assert cat.term_dfs([]) == {}
+    return d
+
+
+@pytest.fixture(scope="module")
+def appended_index_dir(spark, tmp_path_factory):
+    from web_search_engine_spark.streaming.incremental import append_batch
+
+    d = str(tmp_path_factory.mktemp("appended_index"))
+    first, rest = _split_corpus(spark, 400, 250, seed=42)
+    build_index(spark, first, d, block_size=16, num_shards=3)
+    assert append_batch(spark, rest, d, batch_id=0) == 150
+    return d
+
+
+def _routes(spark, index_dir, queries, mode, topk, monkeypatch):
+    """-> (driver frame, Spark frame) of one batch_score call, each
+    route forced through the module bound."""
+    import web_search_engine_spark.plans.search as S
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    out = []
+    for bound in (10**18, -1):
+        with monkeypatch.context() as m:
+            m.setattr(S, "DRIVER_MAX_POSTINGS", bound)
+            out.append(batch_score(IndexCatalog(spark, index_dir), queries, mode, topk))
+    driver, spark_df = out
+    assert _is_local_relation(driver)
+    assert not _is_local_relation(spark_df)
+    assert driver.schema == spark_df.schema
+    return driver, spark_df
+
+
+@pytest.mark.parametrize("index", ["varbyte", "raw", "appended"])
+@pytest.mark.parametrize("mode", ["OR", "AND"])
+def test_batch_score_driver_route_matches_spark_route(
+    spark, index_dir, raw_index_dir, appended_index_dir, monkeypatch, index, mode
+):
+    """The driver route returns the Spark route's rows under the
+    canonical form: repeated and absent terms, several query ids in one
+    call, ties at the rank-10 boundary, both codecs, and an appended
+    index, whose ids skip the shard-boundary gap, on the sorted dl store
+    (forced: at this size its ids are dense enough for the array)."""
+    import random
+
+    import web_search_engine_spark.plans.search as S
+
+    d = {"varbyte": index_dir, "raw": raw_index_dir, "appended": appended_index_dir}[index]
+    snap = S.IndexSnapshot(d)
+    assert snap.codec == ("raw" if index == "raw" else "varbyte")
+    if index == "appended":
+        monkeypatch.setattr(S, "_DENSE_DL_MAX_OVERHEAD", 0)
+        dl = S.IndexSnapshot(d).dl()
+        assert isinstance(dl, S._SortedDL)
+        assert dl.ids[-1] + 1 > len(dl.ids)  # a gap in the id space
+    dfs = snap.dfs()
+    rng = random.Random(7)
+    common = sorted(dfs, key=lambda t: (-dfs[t], t))[:40]
+    vocab = sorted(dfs)
+    queries = list(QUERIES) + [
+        ("rep", "policy policy project zzzabsent"),
+        ("absent", "zzzabsent qqqmissing"),
+    ]
+    for i in range(12):
+        words = [rng.choice(common) for _ in range(rng.randint(1, 2))]
+        words += [rng.choice(vocab) for _ in range(rng.randint(0, 1))]
+        queries.append((f"r{i}", " ".join(words)))
+
+    driver, spark_df = _routes(spark, d, queries, mode, 10, monkeypatch)
+    got, want = _canon(driver.collect()), _canon(spark_df.collect())
+    assert got == want
+    assert {r[0] for r in got} >= {"rep", "q3"} and "absent" not in {r[0] for r in got}
+
+    # the calls above must have ranked through rounded-score ties at the
+    # top-10 boundary: some query's 10th and 11th docs round equal
+    full = _canon(_routes(spark, d, queries, mode, 1000, monkeypatch)[0].collect())
+    by_q = {}
+    for qid, rank, _doc, score in full:
+        by_q.setdefault(qid, {})[rank] = score
+    assert any(10 in r and 11 in r and r[10] == r[11] for r in by_q.values())
+
+
+def test_batch_score_routes_agree_on_small_and_empty_answers(
+    spark, index_dir, monkeypatch
+):
+    """topk above the match count returns every match on both routes;
+    an all-absent call returns an empty frame with the Spark route's
+    schema, with no Spark job."""
+    queries = [("rare", "manhattan"), ("pair", "manhattan project")]
+    driver, spark_df = _routes(spark, index_dir, queries, "AND", 500, monkeypatch)
+    got = _canon(driver.collect())
+    assert got == _canon(spark_df.collect())
+    assert 0 < len(got) < 500 * len(queries)
+
+    driver, spark_df = _routes(
+        spark, index_dir, [("none", "zzzabsent qqqmissing")], "OR", 10, monkeypatch
+    )
+    assert driver.collect() == [] == spark_df.collect()
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None))
+    driver.collect()
+    assert len(tracker.getJobIdsForGroup(None)) == before

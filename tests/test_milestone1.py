@@ -156,6 +156,76 @@ def test_bm25_expr_bit_identical(spark):
         assert struct.pack("<d", x) == struct.pack("<d", y)
 
 
+def test_bm25_twin_bit_identical(spark):
+    """The numpy twin of the SQL score expression (batch_score's driver
+    route) must be BIT-identical to it on seeded random rows, its
+    StrictMath log to Spark's ln on every kind of double, and
+    round_score to F.round(x, 6) on values whose repr ends in 5 at the
+    7th decimal, where Python's round() disagrees."""
+    import math
+    import struct
+
+    import numpy as np
+    import pandas as pd
+
+    from web_search_engine_spark.functions.bm25 import (
+        bm25_idf_strict,
+        bm25_weighted_score_expr,
+        bm25_weighted_scores,
+        strict_log,
+    )
+    from web_search_engine_spark.plans.query import round_score
+
+    def bits(xs):
+        return [struct.pack("<d", float(x)) for x in xs]
+
+    rng = np.random.default_rng(20_240_601)
+    n = 20_000
+    n_docs, avgdl = 987_653, 71.3456789012345
+    pdf = pd.DataFrame({
+        "id": np.arange(n),
+        "tf": rng.integers(1, 60, n),
+        "df": rng.integers(1, n_docs + 1, n),
+        "dl": rng.integers(1, 3000, n),
+        "weight": rng.integers(1, 5, n),
+    })
+    got = spark.createDataFrame(pdf).withColumn(
+        "s", F.expr(bm25_weighted_score_expr(n_docs, avgdl, 1.2, 0.75))
+    ).orderBy("id")
+    want = [r["s"] for r in got.select("s").collect()]
+    idf = np.array([bm25_idf_strict(n_docs, d) for d in pdf["df"]])
+    twin = bm25_weighted_scores(
+        pdf["tf"].to_numpy(), pdf["dl"].to_numpy(), idf,
+        pdf["weight"].to_numpy(), avgdl, 1.2, 0.75,
+    )
+    assert bits(twin) == bits(want)
+
+    # ln over normal, subnormal, near-1 and huge doubles and inf (Spark's
+    # ln of x <= 0 is null, not StrictMath.log's value)
+    xs = np.concatenate([
+        np.exp(rng.uniform(-700, 700, 4000)),
+        1.0 + rng.uniform(-1e-5, 1e-5, 1000),
+        rng.uniform(1.0, 3.0, 2000),
+        [5e-324, 1e-310, 2.2250738585072014e-308, 1.0, 2.0, math.inf],
+    ])
+    lns = spark.createDataFrame(
+        pd.DataFrame({"i": np.arange(len(xs)), "x": xs})
+    ).selectExpr("i", "ln(x) AS y").orderBy("i").collect()
+    assert bits(strict_log(x) for x in xs) == bits(r["y"] for r in lns)
+
+    # rank-key rounding on adversarial values
+    vals = [
+        float(f"{a}.{b:06d}5")
+        for a, b in zip(rng.integers(0, 60, 3000), rng.integers(0, 10**6, 3000))
+    ]
+    vals = [v for v in vals if repr(v).endswith("5") and len(repr(v).split(".")[1]) == 7]
+    rounded = spark.createDataFrame(
+        pd.DataFrame({"i": np.arange(len(vals)), "x": vals})
+    ).select("i", F.round("x", 6).alias("r")).orderBy("i").collect()
+    assert bits(round_score(v) for v in vals) == bits(r["r"] for r in rounded)
+    assert sum(round(v, 6) != r["r"] for v, r in zip(vals, rounded)) > len(vals) // 10
+
+
 def test_terms_in_expr_matches_isin(spark):
     """The one-RPC `col IN (...)` string must filter identically to
     Column.isin, including values needing escaping (quotes, backslashes,

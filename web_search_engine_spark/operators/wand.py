@@ -355,6 +355,16 @@ def _taat(term_entries, dl_lookup, topk, is_and):
     """Shared body of taat_or / taat_and (see taat_or)."""
     if not term_entries:
         return []
+    scores, ids = taat_accumulate(term_entries, dl_lookup, is_and)
+    return _topk_by_score(scores, topk, ids)
+
+
+def taat_accumulate(term_entries, dl_lookup, is_and):
+    """The accumulation of taat_or / taat_and -> (scores, ids): each
+    doc's weighted impacts added in term_entries order; slot i is doc
+    ids[i], or doc i itself when ids is None (the dense accumulator).
+    Zero marks a slot with no result, and AND zeroes the docs missing a
+    term. term_entries must be non-empty."""
     dense = _dense_dl_array(dl_lookup, term_entries)
     if dense is None:
         ids = np.unique(np.concatenate([e[2] for e in term_entries]))
@@ -370,7 +380,7 @@ def _taat(term_entries, dl_lookup, topk, is_and):
             nmatch[at] += 1
     if is_and:
         scores[nmatch < len(term_entries)] = 0.0
-    return _topk_by_score(scores, topk, ids)
+    return scores, ids
 
 
 def taat_or(term_entries, dl_lookup, topk):

@@ -28,8 +28,10 @@ Physical design (what the reference's lexicon-dict probe becomes):
 
 from __future__ import annotations
 
+import math
 import re
 from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -172,6 +174,23 @@ def score_per_doc(
     if mode.upper() == "AND":
         per_doc = per_doc.filter(F.col("n_matched") == F.col("n_terms_present"))
     return per_doc.select("query_id", "doc_id", "score")
+
+
+_SCORE_QUANTUM = Decimal("1e-6")
+
+
+def round_score(x: float) -> float:
+    """Spark's ``round(x, 6)`` of a double, in Python, bit for bit: the
+    batch rank key. Spark rounds BigDecimal.valueOf(x) — the decimal
+    string Double.toString gives, the shortest one that reads back as x,
+    which is Python's repr — HALF_UP to 6 places. Python's round() is a
+    different function: it rounds the exact binary value half-even, and
+    so differs from F.round on values whose repr ends in 5 at the 7th
+    decimal."""
+    x = float(x)
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(_SCORE_QUANTUM, ROUND_HALF_UP))
 
 
 def score_queries(

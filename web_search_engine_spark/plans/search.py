@@ -29,10 +29,32 @@ insensitive to the difference.
     it only adds cached impacts (operators.wand.bm25_impacts). No Spark
     job in the hot path; latency is milliseconds like the reference's.
 
-  - batch_score(): distributed scoring of a query SET over the block
-    table: prune scan on term -> decode blocks (mapInPandas) -> the same
-    relational BM25 plan as plans/query.py. Use this at cluster scale or
-    for thousands of queries at once.
+  - batch_score(): top-k for a query SET under the batch contract
+    (above), over the block table, by one of two routes:
+      * driver: when the call scores at most DRIVER_MAX_POSTINGS
+        postings (Σ over queries of Σ df of each query's distinct
+        present terms — exact before any block is read, from
+        catalog.term_dfs), the terms' block rows are read through the
+        catalog's IndexSnapshot (the same directory and dl store
+        SearchEngine holds), decoded, scored with the numpy twin of the
+        SQL expression (functions.bm25.bm25_weighted_scores) and ranked
+        on the driver; the rows come back as a LocalRelation, which
+        collects with no Spark job.
+      * Spark: above the bound, or when pyarrow cannot read the index
+        in this process: prune scan on term -> decode blocks
+        (mapInPandas) -> the same relational BM25 plan as
+        plans/query.py.
+    The bound comes from a sweep of process-tree CPU and wall per call,
+    driver vs Spark route (local[4], 4-vCPU host; CHANGES.md has the
+    table), on an 8,000-doc index (perfbench's refresh base plus three
+    appends) and a 3M-doc one from the same generator. It found no
+    crossover: the driver route cost 10-32x less CPU and less wall at
+    every point, up to 17.9M postings (2.8 s vs 87.6 s of CPU) and
+    10.2M on the 3M-doc index (2.3 s vs 31.3 s). So the bound is a
+    driver-memory cap: the route's measured peak is 37-71 bytes per
+    scored posting for one-query calls (the decode of the longest list
+    dominates; a query set that shares terms needs less), about 0.9 GB
+    at 12M postings.
 
 Driver-memory scale notes:
   - doc lengths: the dense path keeps one float64 per doc_id slot
@@ -54,13 +76,19 @@ Driver-memory scale notes:
     store, when the query's postings reach 1/8 of the id space): 8 bytes
     per id slot per query, plus 8 per slot for AND's match counter,
     freed when the query returns.
+  - batch_score driver route: 16 bytes per decoded posting kept for
+    the call (doc id + unweighted score), the decode's transients of one
+    term at a time, and one query's accumulator (as taat_or's): measured
+    at most ~72 bytes per scored posting, freed when the call returns,
+    plus the snapshot's dl store and block directory (above), kept
+    until the catalog's refresh().
 """
 
 from __future__ import annotations
 
 import os
 from bisect import bisect_right
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from contextlib import suppress
 from itertools import accumulate
 
@@ -69,13 +97,19 @@ import pyarrow as pa
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from ..config import BM25_B, BM25_K1, DEFAULT_TOPK
+from ..functions.bm25 import bm25_idf_strict, bm25_weighted_scores
 from ..functions.tokenizer import tokenize_query
 from ..operators.blocks import blocks_to_postings
-from ..operators.wand import search_blocks
-from ..sources.catalog import IndexCatalog
-from .query import score_queries
+from ..operators.wand import (
+    decode_term_postings_fast, search_blocks, taat_accumulate,
+)
+from ..sources.catalog import _READ_ERRORS, IndexCatalog
+from .query import round_score, score_queries
 
 # dense dl array when max_doc_id+1 <= this multiple of the doc count
 _DENSE_DL_MAX_OVERHEAD = 4
@@ -231,31 +265,98 @@ class _BlockDirectory:
         return rows
 
 
+class IndexSnapshot:
+    """Spark-free reader over one index directory: stats.json, the
+    lexicon dataset, the block directory and the dl store — the resident
+    state of the reference's searcher (HW2/engine/searcher.py:34-50).
+
+    Each part is built on first use and then kept, so the reader pins
+    the files it listed: it lists the same lexicon/, blocks/ and
+    docs_meta/ directories as IndexCatalog's Spark handles. An open that
+    raises one of _READ_ERRORS (pyarrow cannot read the path in this
+    process, e.g. an object store it holds no credentials for) is kept
+    too and raised again on every later use, so callers fall back to
+    Spark without retrying the open. SearchEngine forces every part at
+    init; IndexCatalog owns one, built part by part as calls need them,
+    and drops it in refresh()."""
+
+    def __init__(self, index_dir: str, stats: dict | None = None):
+        from ..sources.catalog import read_stats
+
+        self.index_dir = index_dir
+        self.stats = read_stats(index_dir) if stats is None else stats
+        self.n_docs = int(self.stats["n_docs"])
+        self.avgdl = float(self.stats["avgdl"])
+        self.codec = self.stats["codec"]
+        self._parts: dict = {}
+
+    def _part(self, name: str, build):
+        part = self._parts.get(name)
+        if part is None:
+            try:
+                part = build()
+            except _READ_ERRORS as e:
+                part = e
+            self._parts[name] = part
+        if isinstance(part, BaseException):
+            # a fresh traceback per raise: the kept error does not grow
+            raise part.with_traceback(None)
+        return part
+
+    def _path(self, table: str) -> str:
+        return os.path.join(self.index_dir, table)
+
+    def lexicon(self) -> pads.Dataset:
+        return self._part(
+            "lexicon", lambda: pads.dataset(self._path("lexicon"), format="parquet")
+        )
+
+    def term_dfs(self, terms: list[str]) -> dict[str, int]:
+        """{term: df} of the given terms present in the lexicon, read
+        term-filtered per row group."""
+        import pyarrow.compute as pc
+
+        tbl = self.lexicon().to_table(
+            columns=["term", "df"], filter=pc.field("term").isin(terms)
+        )
+        return dict(zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()))
+
+    def dfs(self) -> dict[str, int]:
+        """{term: df} of the whole lexicon (not kept)."""
+        tbl = self.lexicon().to_table(columns=["term", "df"])
+        return dict(zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()))
+
+    def directory(self) -> "_BlockDirectory":
+        return self._part("blocks", lambda: _BlockDirectory(self._path("blocks")))
+
+    def dl(self):
+        """The doc_id -> dl store of docs_meta (_DenseDL or _SortedDL)."""
+
+        def load():
+            tbl = pads.dataset(self._path("docs_meta"), partitioning="hive").to_table(
+                columns=["doc_id", "dl"]
+            )
+            return _make_dl_store(
+                np.asarray(tbl.column("doc_id")),
+                np.asarray(tbl.column("dl"), dtype=np.float64),
+            )
+
+        return self._part("docs_meta", load)
+
+
 class SearchEngine:
     """In-process query engine over an index directory."""
 
     def __init__(self, index_dir: str):
-        from ..sources.catalog import read_stats
-
+        snap = IndexSnapshot(index_dir)
         self.index_dir = index_dir
-        self.stats = read_stats(index_dir)
-        self.n_docs = int(self.stats["n_docs"])
-        self.avgdl = float(self.stats["avgdl"])
-        self.codec = self.stats["codec"]
-
-        lex = pads.dataset(os.path.join(index_dir, "lexicon")).to_table(
-            columns=["term", "df"]
-        )
-        self._df = dict(
-            zip(lex.column("term").to_pylist(), lex.column("df").to_pylist())
-        )
-        ds = pads.dataset(
-            os.path.join(index_dir, "docs_meta"), partitioning="hive"
-        ).to_table(columns=["doc_id", "dl"])
-        doc_ids = np.asarray(ds.column("doc_id"))
-        dls = np.asarray(ds.column("dl"), dtype=np.float64)
-        self.dl = _make_dl_store(doc_ids, dls)
-        self._dir = _BlockDirectory(os.path.join(index_dir, "blocks"))
+        self.stats = snap.stats
+        self.n_docs = snap.n_docs
+        self.avgdl = snap.avgdl
+        self.codec = snap.codec
+        self._df = snap.dfs()
+        self.dl = snap.dl()
+        self._dir = snap.directory()
         self._term_cache: OrderedDict[str, list] = OrderedDict()
         # (term, k1, b) -> (doc_ids, impacts): lets repeated queries skip
         # the block decode and the BM25 evaluation (LRU, bounded like the
@@ -356,6 +457,117 @@ def extract_subset(docs: DataFrame, out_path: str, limit: int) -> None:
     docs.limit(limit).write.mode("overwrite").parquet(out_path)
 
 
+# batch_score scores on the driver when a call scores at most this many
+# postings: a memory cap, since the measured sweep found no CPU or wall
+# crossover below it (see the module docstring)
+DRIVER_MAX_POSTINGS = 12_000_000
+# the Spark route's output schema, nullability included
+_BATCH_SCHEMA = StructType([
+    StructField("query_id", StringType()),
+    StructField("rank", IntegerType(), nullable=False),
+    StructField("doc_id", LongType()),
+    StructField("score", DoubleType()),
+])
+_BATCH_ARROW = pa.schema([
+    ("query_id", pa.string()), ("rank", pa.int32()),
+    ("doc_id", pa.int64()), ("score", pa.float64()),
+])
+# a doc whose raw score is this far below the k-th best raw score cannot
+# round (round_score) to a key above the k-th best's
+_ROUND_MARGIN = 2e-6
+
+
+def _query_terms(queries, term_dfs) -> dict[str, list[tuple[str, int]]]:
+    """{query_id: [(term, weight)]} over each query's distinct PRESENT
+    terms, weight = multiplicity — the rows score_per_doc broadcasts
+    (a repeated query_id keeps both queries' rows, as there)."""
+    out: dict[str, list[tuple[str, int]]] = {}
+    for qid, q in queries:
+        for term, w in Counter(tokenize_query(q)).items():
+            if term in term_dfs:
+                out.setdefault(qid, []).append((term, w))
+    return out
+
+
+def _dl_of(dl_store, ids: np.ndarray) -> np.ndarray:
+    """dl of each id, 0.0 for an id the store does not hold."""
+    arr = getattr(dl_store, "arr", None)
+    if arr is not None and len(ids) and int(ids.max()) >= len(arr):
+        out = np.zeros(len(ids), dtype=np.float64)
+        inside = ids < len(arr)
+        out[inside] = arr[ids[inside]]
+        return out
+    return dl_store.take_ids(ids)
+
+
+def _rank(docs: np.ndarray, scores: np.ndarray, topk: int):
+    """-> (rank, doc_id, score) of the top-k under the batch contract:
+    round_score(score) desc, doc_id asc. Only docs within _ROUND_MARGIN
+    of the k-th best raw score can reach it, so only those are rounded,
+    once per distinct score."""
+    if len(docs) > topk > 0:
+        kth = np.partition(scores, len(scores) - topk)[len(scores) - topk]
+        keep = np.flatnonzero(scores >= kth - _ROUND_MARGIN)
+        docs, scores = docs[keep], scores[keep]
+    values, inv = np.unique(scores, return_inverse=True)
+    keys = np.array([round_score(v) for v in values.tolist()])[inv]
+    order = np.lexsort((docs, -keys))[:topk]
+    return [
+        (rank, int(docs[i]), float(scores[i])) for rank, i in enumerate(order, 1)
+    ]
+
+
+def _driver_batch(catalog, per_query, term_dfs, mode, topk, k1, b):
+    """batch_score's rows computed on the driver from the catalog's
+    snapshot, as an Arrow table; None when pyarrow cannot read the
+    index here (the caller takes the Spark route). An Arrow table, not
+    a pandas frame: PySpark turns an EMPTY pandas frame into an
+    RDD-backed relation whose collect runs a job.
+
+    Scores are bm25_weighted_scores (the SQL expression's numpy twin),
+    summed per doc in sorted-term order by the serving kernels'
+    accumulator (operators.wand.taat_accumulate); postings of docs with
+    no dl (dl = 0, or absent from docs_meta) are dropped as the inner
+    join to doc_stats drops them; AND keeps docs matching every present
+    query term."""
+    snap = catalog.snapshot()
+    terms = sorted({t for entries in per_query.values() for t, _ in entries})
+    try:
+        snap.lexicon()  # df came from it, not from a Spark probe
+        dl_store = snap.dl()
+        block_rows = snap.directory().fetch(terms) if terms else {}
+    except _READ_ERRORS:
+        return None
+
+    n_docs, avgdl = catalog.n_docs, catalog.avgdl
+    postings = {}  # term -> (doc_ids, unweighted scores) over docs with dl > 0
+    for t in terms:
+        rows = sorted(block_rows.get(t, []), key=lambda r: (r[0], r[1]))
+        ids, tfs = decode_term_postings_fast(rows, snap.codec)
+        dls = _dl_of(dl_store, ids)
+        keep = dls > 0.0
+        idf = bm25_idf_strict(n_docs, term_dfs[t])
+        # weight 1.0 leaves the bits alone; the query's weight multiplies
+        # in taat_accumulate, as ``weight * (...)`` does in the SQL
+        postings[t] = (
+            ids[keep], bm25_weighted_scores(tfs[keep], dls[keep], idf, 1.0, avgdl, k1, b)
+        )
+
+    is_and = mode.upper() == "AND"
+    out: list[tuple] = []
+    for qid, entries in per_query.items():
+        term_entries = [(t, float(w), *postings[t]) for t, w in sorted(entries)]
+        scores, ids = taat_accumulate(term_entries, dl_store, is_and)
+        hit = np.flatnonzero(scores > 0.0)
+        docs = hit if ids is None else ids[hit]
+        out.extend((qid, *row) for row in _rank(docs, scores[hit], topk))
+    cols = list(zip(*out)) or [()] * len(_BATCH_ARROW)
+    return pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, _BATCH_ARROW)],
+        schema=_BATCH_ARROW,
+    )
+
+
 def batch_score(
     catalog: IndexCatalog,
     queries: list[tuple[str, str]],
@@ -364,18 +576,28 @@ def batch_score(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """Distributed top-k for a query set, reading the block table.
+    """Top-k for a query set over the block table: (query_id, rank,
+    doc_id, score), ranked on round(score, 6) desc, doc_id asc.
 
     The query-term df lookup goes through catalog.term_dfs — a
-    driver-side, term-filtered pyarrow read of the lexicon (the same
-    way SearchEngine loads it), a few ms instead of the ~100 ms Spark
-    job probe_lexicon costs per call, with the catalog's snapshot
-    semantics (the dataset handle is memoized beside the table
-    handles, so df stays consistent with the blocks/doc_stats
-    snapshots across a concurrent append). pre_cluster_by_query: the
-    decoded postings have no reusable partitioning, so one explicit
-    query_id exchange serves both the score aggregation and the top-k
-    window (2 exchanges -> 1; see score_per_doc).
+    driver-side, term-filtered pyarrow read of the lexicon, with the
+    catalog's snapshot semantics. Then one of two routes:
+
+    - driver: when the call scores at most DRIVER_MAX_POSTINGS postings
+      (Σ over queries of Σ df of the query's distinct present terms,
+      exact from term_dfs), the terms' block rows are read through the
+      catalog's snapshot, decoded, scored and ranked in numpy
+      (_driver_batch), and returned as a LocalRelation, which collects
+      with no Spark job.
+    - Spark: above the bound, or when pyarrow cannot read the index in
+      this process, prune scan on term -> decode blocks (mapInPandas)
+      -> the relational BM25 plan of plans/query.py. pre_cluster_by_query:
+      the decoded postings have no reusable partitioning, so one
+      explicit query_id exchange serves both the score aggregation and
+      the top-k window (2 exchanges -> 1; see score_per_doc).
+
+    Both routes return the same rows up to the float rounding of the
+    per-doc sum (tests/test_block_index.py, driver vs Spark).
     """
     from .query import _terms_in_expr
 
@@ -383,6 +605,12 @@ def batch_score(
         {t for _, q in queries for t in tokenize_query(q)}
     )
     term_dfs = catalog.term_dfs(all_terms)
+    per_query = _query_terms(queries, term_dfs)
+    to_score = sum(term_dfs[t] for entries in per_query.values() for t, _ in entries)
+    if to_score <= DRIVER_MAX_POSTINGS:
+        table = _driver_batch(catalog, per_query, term_dfs, mode, topk, k1, b)
+        if table is not None:
+            return catalog.spark.createDataFrame(table, _BATCH_SCHEMA)
     pruned = catalog.blocks().filter(_terms_in_expr("term", all_terms))
     postings = blocks_to_postings(pruned, codec=catalog.codec)
     return score_queries(

@@ -35,7 +35,13 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+# pyarrow cannot read an index path in this process (e.g. an object
+# store it holds no credentials for): the driver-side readers' callers
+# take Spark instead
+_READ_ERRORS = (OSError, pa.ArrowException)
 
 
 def write_stats(index_dir: str, stats: dict) -> None:
@@ -97,15 +103,25 @@ class IndexCatalog:
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
         self._tables: dict[str, DataFrame] = {}
-        # pyarrow lexicon dataset; False when pyarrow cannot open it
-        self._lex_dataset = None
+        self._snapshot = None
 
     def refresh(self) -> "IndexCatalog":
-        """Drop memoized table handles + re-read stats.json."""
+        """Drop memoized table handles and the driver-side snapshot +
+        re-read stats.json."""
         self._tables.clear()
-        self._lex_dataset = None
+        self._snapshot = None
         self.stats = read_stats(self.index_dir)
         return self
+
+    def snapshot(self):
+        """The catalog's driver-side reader (plans.search.IndexSnapshot)
+        over this catalog's stats, built part by part on first use and
+        memoized like the table handles, until refresh()."""
+        if self._snapshot is None:
+            from ..plans.search import IndexSnapshot
+
+            self._snapshot = IndexSnapshot(self.index_dir, self.stats)
+        return self._snapshot
 
     def _table(self, name: str) -> DataFrame:
         df = self._tables.get(name)
@@ -135,39 +151,25 @@ class IndexCatalog:
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """{term: df} for the given terms, read DRIVER-SIDE via pyarrow
         (no Spark job — the lexicon is tiny by Heaps' law and the read
-        is term-filtered per row group). The dataset handle is memoized
-        with the same snapshot semantics as the Spark table handles: it
-        pins the files present at first touch, so df values stay
-        consistent with the memoized blocks/docs_meta snapshots across
-        a concurrent append; call refresh() to see new data.
+        is term-filtered per row group) through snapshot(). The lexicon
+        dataset is memoized with the same snapshot semantics as the
+        Spark table handles: it pins the files present at first touch,
+        so df values stay consistent with the memoized blocks/docs_meta
+        snapshots; call refresh() to see new data.
 
-        When pyarrow cannot open the lexicon path in this process (e.g.
+        When pyarrow cannot read the lexicon path in this process (e.g.
         an object store it holds no credentials for), the lookup runs
-        as a Spark job over the lexicon table instead (probe_lexicon),
-        until the next refresh()."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        if self._lex_dataset is None:
-            try:
-                self._lex_dataset = pads.dataset(
-                    os.path.join(self.index_dir, "lexicon"), format="parquet"
-                )
-            except (OSError, pa.ArrowException):
-                self._lex_dataset = False
+        as a Spark job over the lexicon table instead (probe_lexicon);
+        the snapshot keeps a failed open, so until the next refresh()
+        no later call retries it."""
         if not terms:
             return {}
-        if self._lex_dataset is False:
+        try:
+            return self.snapshot().term_dfs(terms)
+        except _READ_ERRORS:
             from ..plans.query import probe_lexicon
 
             return probe_lexicon(self.lexicon(), terms)
-        tbl = self._lex_dataset.to_table(
-            columns=["term", "df"], filter=pc.field("term").isin(terms)
-        )
-        return dict(
-            zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist())
-        )
 
     def docs_meta(self) -> DataFrame:
         return self._table("docs_meta")
