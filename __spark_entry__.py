@@ -125,9 +125,9 @@ def _top10_frame(spark: SparkSession, hits: list[tuple[int, float]]) -> DataFram
 
 def _wand_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataFrame:
     """Full physical path under the gate: build a blocked on-disk index,
-    serve the query through SearchEngine's cursor kernels (block-max
-    WAND for OR, galloping intersection for AND), return (rank, doc_id,
-    score).
+    serve the query through SearchEngine's pruned kernels (bmw_block,
+    the vectorized block-max WAND, for OR; vec_and, the searchsorted
+    intersection, for AND), return (rank, doc_id, score).
 
     Mirrors the reference's merged-vs-direct differential
     (HW2/engine/testrun.py:80-104): the oracle is the same relational
@@ -139,8 +139,8 @@ def _wand_gate(spark: SparkSession, sf_dir: str, query: str, mode: str) -> DataF
 
     with _gate_index(spark, sf_dir) as tmp:
         eng = SearchEngine(tmp)
-        # force the CURSOR kernels (not the small-index TAAT shortcut):
-        # the gate must cover the seek/prune machinery itself
+        # force the PRUNED kernels (not the small-index TAAT shortcut):
+        # the gate must cover the block-max and intersection machinery
         import web_search_engine_spark.operators.wand as W
 
         saved = W.TAAT_MAX_POSTINGS

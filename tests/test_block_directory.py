@@ -27,6 +27,7 @@ def _write(path, terms, write_statistics=True):
         "max_tf": pa.array([1] * n, pa.int64()),
         "doc_bytes": pa.array([bytes([0x80 | (i % 100)]) for i in range(n)]),
         "freq_bytes": pa.array([b"\x81"] * n),
+        "n": pa.array([1] * n, pa.int32()),
     })
     os.makedirs(os.path.dirname(path), exist_ok=True)
     pq.write_table(tbl, path, row_group_size=ROW_GROUP,

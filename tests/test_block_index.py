@@ -687,7 +687,7 @@ def test_fast_term_decode_matches_per_block(spark, index_dir):
     for r in blocks.collect():
         rows_by_term.setdefault(r["term"], []).append(
             (r["shard"], r["block_id"], r["last_docid"], r["base_docid"],
-             r["max_tf"], bytes(r["doc_bytes"]), bytes(r["freq_bytes"]))
+             r["max_tf"], bytes(r["doc_bytes"]), bytes(r["freq_bytes"]), r["n"])
         )
     n_multi = 0
     for term, rows in rows_by_term.items():
@@ -987,3 +987,42 @@ def test_batch_score_routes_agree_on_small_and_empty_answers(
     before = len(tracker.getJobIdsForGroup(None))
     driver.collect()
     assert len(tracker.getJobIdsForGroup(None)) == before
+
+
+@pytest.mark.parametrize("mode", ["OR", "AND"])
+def test_serving_and_batch_driver_route_score_alike(
+    spark, index_dir, monkeypatch, mode
+):
+    """SearchEngine.search and batch_score's driver route give a doc the
+    same score, bit for bit: both score through term_impacts and add in
+    sorted-term order. Only the rank key differs (raw vs rounded), so
+    the docs both return are compared, over random queries with
+    repeated and absent terms."""
+    import random
+
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    eng = SearchEngine(index_dir)
+    dfs = eng._df
+    rng = random.Random(11)
+    common = sorted(dfs, key=lambda t: (-dfs[t], t))[:40]
+    vocab = sorted(dfs)
+    queries = [("rep", "policy policy project"), ("absent", "zzzabsent policy")]
+    for i in range(60):
+        words = [rng.choice(common) for _ in range(rng.randint(1, 3))]
+        words += [rng.choice(vocab) for _ in range(rng.randint(0, 1))]
+        if rng.random() < 0.2:
+            words.append("zzzabsent")
+        queries.append((f"r{i}", " ".join(words)))
+
+    spark_route = _spark_route_calls(monkeypatch)
+    rows = batch_score(IndexCatalog(spark, index_dir), queries, mode, 10).collect()
+    assert not spark_route
+    batch = {(r["query_id"], r["doc_id"]): r["score"] for r in rows}
+    n_shared = 0
+    for qid, q in queries:
+        for doc, score in eng.search(q, mode, 10):
+            if (qid, doc) in batch:
+                assert score.hex() == batch[qid, doc].hex(), (qid, q, doc)
+                n_shared += 1
+    assert n_shared >= (300 if mode == "OR" else 100)

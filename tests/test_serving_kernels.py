@@ -2,21 +2,24 @@
 no Spark session.
 
 The interactive kernels score from cached per-term BM25 impacts
-(operators.wand.bm25_impacts); the cursor DAAT scores from tf. Every
-kernel must return the same (doc_id, score) list bit for bit, whichever
-dl store backs the engine and whichever side of the dense-accumulator
-gate a query falls on.
+(operators.wand.term_impacts: the one block decoder and the SQL
+expression's numpy twin); the cursor DAAT decodes block by block and
+scores from tf. Every kernel must return the same (doc_id, score) list
+bit for bit, whichever dl store backs the engine and whichever side of
+the dense-accumulator gate a query falls on.
 """
 
 import json
 import os
 import random
+import shutil
 import sys
 import threading
 from collections import OrderedDict
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -32,8 +35,9 @@ AND_KERNELS = ("taat", "vec_and", "daat")
 
 def _block_rows(postings, shard_of, block_size=4):
     """{term: {doc_id: tf}} -> {term: [(shard, block_id, last_docid,
-    base_docid, max_tf, doc_bytes, freq_bytes)]} in the build's layout:
-    one varbyte gap chain per (term, shard), starting from docid 0."""
+    base_docid, max_tf, doc_bytes, freq_bytes, n)]} in the build's
+    layout: one varbyte gap chain per (term, shard), starting from docid
+    0."""
     rows = {}
     for term, docs in postings.items():
         ids = np.array(sorted(docs), dtype=np.int64)
@@ -46,7 +50,7 @@ def _block_rows(postings, shard_of, block_size=4):
                 d, f = sids[s:s + block_size], stfs[s:s + block_size]
                 base = 0 if s == 0 else int(sids[s - 1])
                 db, fb = C.encode_block(d, f, base, "varbyte")
-                out.append((shard, bid, int(d[-1]), base, int(f.max()), db, fb))
+                out.append((shard, bid, int(d[-1]), base, int(f.max()), db, fb, len(d)))
         rows[term] = out
     return rows
 
@@ -164,6 +168,38 @@ def test_dense_gate_both_sides(corpus):
     assert W._dense_dl_array(stores["sorted"], entries) is None
 
 
+@pytest.mark.parametrize("codec", ["varbyte", "raw"])
+def test_decoders_reject_a_truncated_payload(codec):
+    """A block whose doc payload lost its last posting raises ValueError
+    from the driver decode and from the Spark decode (both run
+    codec.decode_blocks), instead of returning short arrays."""
+    from web_search_engine_spark.operators.blocks import _decode_arrow
+
+    ids, tfs = np.array([3, 9, 200, 201]), np.array([1, 2, 3, 1])
+    rows = []
+    for bid, s in enumerate((0, 2)):
+        base = 0 if s == 0 else int(ids[s - 1])
+        db, fb = C.encode_block(ids[s:s + 2], tfs[s:s + 2], base, codec)
+        rows.append((0, bid, int(ids[s + 1]), base, int(tfs[s:s + 2].max()), db, fb, 2))
+    got = W.decode_term_postings_fast(rows, codec)
+    assert np.array_equal(got[0], ids) and np.array_equal(got[1], tfs)
+
+    short = C.encode_block(ids[2:3], tfs[2:3], rows[1][3], codec)[0]
+    assert rows[1][5].startswith(short) and len(short) < len(rows[1][5])
+    bad = [rows[0], rows[1][:5] + (short,) + rows[1][6:]]
+    with pytest.raises(ValueError, match="posting count"):
+        W.decode_term_postings_fast(bad, codec)
+    batch = pa.RecordBatch.from_pydict({
+        "term": ["t", "t"],
+        "n": pa.array([r[7] for r in bad], pa.int32()),
+        "base_docid": pa.array([r[3] for r in bad], pa.int64()),
+        "doc_bytes": pa.array([r[5] for r in bad], pa.binary()),
+        "freq_bytes": pa.array([r[6] for r in bad], pa.binary()),
+    })
+    with pytest.raises(ValueError, match="posting count"):
+        _decode_arrow(batch, codec)
+
+
 def test_topk_by_score_threshold():
     """The partition threshold keeps boundary ties and, with fewer than
     k positive slots, every positive slot — never a zero slot."""
@@ -226,6 +262,7 @@ def _write_index(path, oracle: OracleIndex, n_shards=2):
             "max_tf": pa.array(cols[4], pa.int64()),
             "doc_bytes": pa.array(cols[5], pa.binary()),
             "freq_bytes": pa.array(cols[6], pa.binary()),
+            "n": pa.array(cols[7], pa.int32()),
         })
         out = os.path.join(path, "blocks", f"shard={shard}")
         os.makedirs(out)
@@ -263,6 +300,32 @@ def test_engine_nondefault_bm25_params_match_oracle(hand_index):
                 _assert_matches_oracle(got, oracle.search(q, mode, 10, k1=k1, b=b))
                 n_nonempty += bool(got)
     assert n_nonempty > 100
+
+
+def test_engine_skips_block_ids_past_docs_meta(hand_index, tmp_path):
+    """An append that lands after SearchEngine loaded docs_meta but
+    before it listed blocks/ leaves block ids past the dense dl array.
+    Such a doc has no dl, so on every kernel the search does not raise
+    and the doc is never a result."""
+    src, oracle = hand_index
+    d = str(tmp_path / "idx")
+    shutil.copytree(src, d)
+    last = max(oracle.doc_lengths)
+    words = _docs()[last][1].split()
+    assert words
+    meta = os.path.join(d, "docs_meta", "shard=1", "part-0.parquet")
+    tbl = pq.read_table(meta)
+    pq.write_table(tbl.filter(pc.not_equal(tbl["doc_id"], last)), meta)
+    eng = SearchEngine(d)
+    assert isinstance(eng.dl, _DenseDL) and len(eng.dl.arr) == last
+    q = " ".join(sorted(set(words))[:3])
+    n_hits = 0
+    for mode, kernels in (("OR", OR_KERNELS), ("AND", AND_KERNELS)):
+        for kernel in kernels:
+            hits = eng.search(q, mode, 1000, force_kernel=kernel)
+            assert last not in {doc for doc, _ in hits}, (mode, kernel)
+            n_hits += len(hits)
+    assert n_hits > 0
 
 
 def test_engine_cache_key_separates_bm25_params(hand_index):

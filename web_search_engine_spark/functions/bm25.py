@@ -8,11 +8,15 @@ Defaults k1=1.2, b=0.75 (HW2/engine/ranker.py:17). The "+1 inside the
 log" variant never goes negative — do not substitute Lucene's formula.
 All arithmetic in float64, matching Python floats in the reference.
 
-bm25_weighted_scores is the numpy twin of bm25_weighted_score_expr for
-the driver route of plans.search.batch_score: same operator association,
-and Spark's ``ln`` (java.lang.StrictMath.log, fdlibm) reproduced by
-strict_log, so its scores are bit-identical to the SQL expression's
-(tests/test_milestone1.py::test_bm25_twin_bit_identical).
+bm25_weighted_scores is the numpy twin of bm25_weighted_score_expr and
+the driver's one BM25 expression: operators.wand.term_impacts scores
+with it for serving (SearchEngine) and for the driver route of
+plans.search.batch_score alike. It has the SQL string's operator
+association, and Spark's ``ln`` (java.lang.StrictMath.log, fdlibm) is
+reproduced by strict_log, so its scores are bit-identical to the SQL
+expression's (tests/test_milestone1.py::test_bm25_twin_bit_identical).
+The cursor DAAT oracle (operators.wand.BlockCursor) evaluates the same
+expression per posting in plain Python floats.
 """
 
 from __future__ import annotations
@@ -185,14 +189,17 @@ def bm25_weighted_scores(
 ) -> np.ndarray:
     """numpy twin of bm25_weighted_score_expr: ``weight * (idf *
     (tf*(k1+1)) / (tf + k1*((1-b) + b*dl/avgdl)))`` with the SQL
-    string's association — note ``(b*dl)/avgdl``, where
-    operators.wand.bm25_impacts computes ``b*(dl/avgdl)`` — and its
-    literals (k1+1 and 1-b folded in Python, as the string embeds
-    them). ``idf`` is bm25_idf_strict of the row's df; it and ``weight``
-    may be scalars or arrays aligned with tf/dl."""
+    string's association — note ``(b*dl)/avgdl`` — and its literals
+    (k1+1 and 1-b folded in Python, as the string embeds them). ``idf``
+    is bm25_idf_strict of the row's df; it and ``weight`` may be scalars
+    or arrays aligned with tf/dl. A scalar weight of 1.0 skips the
+    multiply: ``1.0 * x == x`` exactly."""
     tf = np.asarray(tf, dtype=np.float64)
     dl = np.asarray(dl, dtype=np.float64)
     k1 = float(k1)
     b = float(b)
     denom = tf + k1 * ((1.0 - b) + b * dl / float(avgdl))
-    return np.asarray(weight, dtype=np.float64) * (idf * (tf * (k1 + 1.0)) / denom)
+    scores = idf * (tf * (k1 + 1.0)) / denom
+    if np.isscalar(weight) and weight == 1.0:
+        return scores
+    return np.asarray(weight, dtype=np.float64) * scores

@@ -144,3 +144,39 @@ def decode_block(doc_bytes: bytes, freq_bytes: bytes, base: int, codec: str):
     if codec == "varbyte":
         return decode_docids(doc_bytes, base), decode_freqs(freq_bytes)
     return raw_decode(doc_bytes), raw_decode(freq_bytes)
+
+
+def decode_blocks(
+    doc_bytes: np.ndarray,
+    freq_bytes: np.ndarray,
+    n_per: np.ndarray,
+    bases: np.ndarray,
+    codec: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode many blocks at once -> (docids int64, freqs int64).
+
+    doc_bytes / freq_bytes are the blocks' payloads concatenated in
+    block order (uint8 arrays); n_per is each block's posting count and
+    bases its base docid. The varbyte format is strictly per-value, so
+    the concatenation decodes in two codec calls; each block's gap chain
+    is then re-based with one segmented cumsum: docid[i] = base_b +
+    (csum[i] - csum[start_b - 1]). Raw payloads hold absolute docids.
+
+    Raises ValueError when the payloads do not hold exactly sum(n_per)
+    postings (a truncated or corrupt block)."""
+    n_per = np.asarray(n_per, dtype=np.int64)
+    total = int(n_per.sum())
+    if codec == "varbyte":
+        gaps = vb_decode(doc_bytes).astype(np.int64)
+        tfs = vb_decode(freq_bytes).astype(np.int64)
+    else:
+        gaps = doc_bytes.view("<u4").astype(np.int64)
+        tfs = freq_bytes.view("<u4").astype(np.int64)
+    if len(gaps) != total or len(tfs) != total:
+        raise ValueError("corrupt block payloads: posting count mismatch")
+    if codec != "varbyte" or total == 0:
+        return gaps, tfs
+    csum = np.cumsum(gaps)
+    starts = np.cumsum(n_per) - n_per
+    before = np.where(starts > 0, csum[starts - 1], 0)
+    return csum + np.repeat(np.asarray(bases, dtype=np.int64) - before, n_per), tfs

@@ -457,29 +457,27 @@ _ARROW_POSTING_SCHEMA = pa.schema(
 )
 
 
-def _flat_binary(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(concatenated payload bytes, per-row offsets rebased to 0) for a
-    null-free Binary/LargeBinary array (possibly sliced). Arrow binary
-    offsets are monotonic, so row payloads concatenated in row order ARE
-    the contiguous values-buffer slice — read zero-copy."""
+def _flat_binary(arr: pa.Array) -> np.ndarray:
+    """The concatenated payload bytes of a null-free Binary/LargeBinary
+    array (possibly sliced). Arrow binary offsets are monotonic, so row
+    payloads concatenated in row order ARE the contiguous values-buffer
+    slice — read zero-copy."""
     odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
     bufs = arr.buffers()
-    off = np.frombuffer(bufs[1], dtype=odt)[
-        arr.offset : arr.offset + len(arr) + 1
-    ].astype(np.int64)
+    off = np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
     vals = (
         np.frombuffer(bufs[2], dtype=np.uint8)
         if bufs[2] is not None
         else np.zeros(0, dtype=np.uint8)
     )
-    return vals[off[0] : off[-1]], off - off[0]
+    return vals[int(off[0]) : int(off[-1])]
 
 
 def _decode_arrow(batch: pa.RecordBatch, codec: str) -> pa.RecordBatch:
     """Vectorized inverse of _encode_arrow: ALL blocks of a batch decode
-    in two codec calls over the concatenated payload buffers; per-block
-    delta chains are re-based with one segmented cumsum. The only
-    per-row work is an Arrow take() for the repeated term column."""
+    at once through codec.decode_blocks over the concatenated payload
+    buffers. The only per-row work is an Arrow take() for the repeated
+    term column."""
     import pyarrow.compute as pc
 
     nb = batch.num_rows
@@ -489,26 +487,13 @@ def _decode_arrow(batch: pa.RecordBatch, codec: str) -> pa.RecordBatch:
             schema=_ARROW_POSTING_SCHEMA,
         )
     n_per = np.asarray(batch.column("n"), dtype=np.int64)
-    bases = np.asarray(batch.column("base_docid"), dtype=np.int64)
-    total = int(n_per.sum())
-    starts = np.concatenate(([0], np.cumsum(n_per)))  # len nb+1
-    doc_flat, _ = _flat_binary(batch.column("doc_bytes"))
-    freq_flat, _ = _flat_binary(batch.column("freq_bytes"))
-    if codec == CODEC_VARBYTE:
-        gaps = C.vb_decode(doc_flat).astype(np.int64)
-        tfs = C.vb_decode(freq_flat).astype(np.int64)
-        if len(gaps) != total or len(tfs) != total:
-            raise ValueError("corrupt block payloads: posting count mismatch")
-        csum = np.cumsum(gaps)
-        # docid[i] = base_b + (csum[i] - csum[start_b - 1]); vectorized
-        # as csum + repeat(per-block rebase constant)
-        before = np.where(starts[:-1] > 0, csum[starts[:-1] - 1], 0)
-        docids = csum + np.repeat(bases - before, n_per)
-    else:
-        docids = doc_flat.view("<u4").astype(np.int64)
-        tfs = freq_flat.view("<u4").astype(np.int64)
-        if len(docids) != total or len(tfs) != total:
-            raise ValueError("corrupt block payloads: posting count mismatch")
+    docids, tfs = C.decode_blocks(
+        _flat_binary(batch.column("doc_bytes")),
+        _flat_binary(batch.column("freq_bytes")),
+        n_per,
+        np.asarray(batch.column("base_docid"), dtype=np.int64),
+        codec,
+    )
     indices = pa.array(np.repeat(np.arange(nb), n_per))
     return pa.RecordBatch.from_arrays(
         [

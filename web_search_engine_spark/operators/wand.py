@@ -2,14 +2,17 @@
 
 The interactive query path (north star): single queries score on the
 driver over the handful of posting lists the query touches. The
-production kernels are numpy-vectorized over cached per-term impacts:
-taat_or/taat_and, the block-max pruned OR kernel blockmax_taat_or, and
-the searchsorted intersection intersect_and. The exhaustive cursor DAAT
+production kernels are numpy-vectorized over per-term impacts from
+term_impacts (the one block decoder and the SQL expression's numpy
+twin, shared with batch_score's driver route): taat_or/taat_and, the
+block-max pruned OR kernel blockmax_taat_or, and the searchsorted
+intersection intersect_and. The exhaustive cursor DAAT
 (daat_or_unpruned, daat_and) — the reference's cursor machinery
 (HW2/engine/daat.py, postings_cursor.py, daat_ranker.py) over the
-block-row table — scores from tf and is the oracle every kernel is
-compared against. The distributed batch path for query SETS lives in
-plans/query.py; both produce rank-identical results (tested).
+block-row table — decodes block by block, scores from tf and is the
+oracle every kernel is compared against. The distributed batch path for
+query SETS lives in plans/query.py; both produce rank-identical results
+(tested).
 
 Block-max pruning is rank-safe INCLUDING the (score desc, doc_id asc)
 tie policy: docid ranges are visited in increasing order, so a later
@@ -17,15 +20,16 @@ candidate whose score merely EQUALS the current kth best can never enter
 the top-k (the incumbent has the smaller doc_id) — pruning when
 upper_bound <= theta is therefore exact, not approximate. Block upper
 bounds use
-ub = idf * (k1+1)*max_tf / (max_tf + k1*(1-b)), a true bound because the
-omitted b*dl/avgdl term only grows the denominator (SURVEY.md §4) and
-the bound is increasing in tf.
+ub = idf * (max_tf*(k1+1)) / (max_tf + k1*(1-b)) with the impacts' idf
+and association, a true bound because the omitted b*dl/avgdl term only
+grows the denominator (SURVEY.md §4) and the bound is increasing in tf;
+with every other operation shared, float rounding keeps it >= each
+impact.
 """
 
 from __future__ import annotations
 
 import heapq
-import math
 from collections import Counter, OrderedDict
 from contextlib import suppress
 
@@ -33,11 +37,8 @@ import numpy as np
 
 from ..config import BM25_B, BM25_K1, DEFAULT_TOPK
 from ..functions import codec as C
+from ..functions.bm25 import bm25_idf_strict, bm25_weighted_scores
 from ..functions.tokenizer import tokenize_query
-
-
-def bm25_idf(n_docs: int, df: int) -> float:
-    return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
 
 class BlockCursor:
@@ -56,7 +57,7 @@ class BlockCursor:
     def __init__(self, term, df, blocks, codec, n_docs, k1=BM25_K1, b=BM25_B):
         self.term = term
         self.df = df
-        self.idf = bm25_idf(n_docs, df)
+        self.idf = bm25_idf_strict(n_docs, df)
         # blocks: list of (last_docid, base_docid, max_tf, doc_bytes, freq_bytes)
         self.blocks = blocks
         self.codec = codec
@@ -118,8 +119,10 @@ class BlockCursor:
         return self.docid()
 
     def score_current(self, dl: float, avgdl: float) -> float:
+        """BM25 of the current posting in plain Python floats, with the
+        association of functions.bm25.bm25_weighted_scores."""
         tf = float(self._tfs[self.pos])
-        denom = tf + self.k1 * (1.0 - self.b + self.b * (dl / avgdl))
+        denom = tf + self.k1 * ((1.0 - self.b) + self.b * dl / avgdl)
         return self.idf * (tf * (self.k1 + 1.0)) / denom
 
 
@@ -246,59 +249,40 @@ def decode_term_postings(blocks: list, codec: str) -> tuple[np.ndarray, np.ndarr
 
 
 def decode_term_postings_fast(rows: list, codec: str) -> tuple[np.ndarray, np.ndarray]:
-    """Whole-term decode in TWO vectorized codec calls (not one per
-    block): per-shard delta chains are continuous across a shard's
-    blocks and start at the absolute docid (base 0), so the
-    concatenation of one shard's payloads is a single varbyte gap
-    stream — decode everything at once, then one segmented-cumsum
-    rebase at shard boundaries.
+    """Whole-term decode through codec.decode_blocks: the term's payloads
+    concatenated, two vectorized codec calls, one per-block rebase.
 
     rows: [(shard, block_id, last_docid, base_docid, max_tf, doc_bytes,
-    freq_bytes)] sorted by (shard, block_id)."""
-    if not rows:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    doc_all = b"".join(r[5] for r in rows)
-    freq_all = b"".join(r[6] for r in rows)
-    if codec != "varbyte":
-        return (
-            np.frombuffer(doc_all, dtype="<u4").astype(np.int64),
-            np.frombuffer(freq_all, dtype="<u4").astype(np.int64),
-        )
-    gaps = C.vb_decode(np.frombuffer(doc_all, dtype=np.uint8)).astype(np.int64)
-    tfs = C.vb_decode(np.frombuffer(freq_all, dtype=np.uint8)).astype(np.int64)
-    shards = np.array([r[0] for r in rows], dtype=np.int64)
-    new_seg = np.empty(len(rows), dtype=bool)
-    new_seg[0] = True
-    new_seg[1:] = shards[1:] != shards[:-1]
-    seg_block = np.flatnonzero(new_seg)
-    # postings per segment = varbyte terminator count per segment's bytes
-    byte_starts = np.concatenate(
-        ([0], np.cumsum([len(r[5]) for r in rows]))
-    )[seg_block]
-    msb = ((np.frombuffer(doc_all, dtype=np.uint8) & 0x80) > 0).astype(np.int64)
-    seg_counts = np.add.reduceat(msb, byte_starts) if len(doc_all) else []
-    csum = np.cumsum(gaps)
-    seg_starts = np.concatenate(([0], np.cumsum(seg_counts)))[:-1]
-    before = np.where(seg_starts > 0, csum[seg_starts - 1], 0)
-    docids = csum - np.repeat(before, np.asarray(seg_counts, dtype=np.int64))
-    return docids, tfs
+    freq_bytes, n)] sorted by (shard, block_id). Raises ValueError on a
+    posting-count mismatch."""
+    return C.decode_blocks(
+        np.frombuffer(b"".join(r[5] for r in rows), dtype=np.uint8),
+        np.frombuffer(b"".join(r[6] for r in rows), dtype=np.uint8),
+        [r[7] for r in rows],
+        [r[3] for r in rows],
+        codec,
+    )
 
 
-def bm25_impacts(ids, tfs, idf, dl_lookup, avgdl, k1, b):
-    """One term's float64 BM25 score per posting, in posting order: the
-    exact expression of BlockCursor.score_current, so a kernel summing
-    impacts in sorted-term order reproduces the cursor DAAT scores bit
-    for bit. Postings on dl=0 docs get 0.0 — such docs are never scored
+def term_impacts(rows, codec, dl_store, n_docs, df, avgdl, k1, b):
+    """One term's (doc_ids, float64 BM25 impacts) in docid order: its
+    block rows sorted by (shard, block_id), decoded, and scored with the
+    SQL expression's numpy twin (functions.bm25.bm25_weighted_scores,
+    weight 1.0), so every impact is bit-identical to the relational
+    plan's per-posting score. Postings on docs with dl <= 0 (dl = 0, or
+    absent from the dl store) get 0.0: such docs are never scored
     (daat_ranker.py:121-123), and every real contribution is > 0 (idf >
     0, tf >= 1), so a zero accumulator slot means "not a result".
 
-    dl_lookup is a dl store (plans.search._DenseDL / _SortedDL)."""
-    dls = dl_lookup.take_ids(ids)
-    tf = tfs.astype(np.float64)
-    denom = tf + k1 * (1.0 - b + b * (dls / avgdl))
-    impacts = idf * (tf * (k1 + 1.0)) / denom
+    dl_store is a dl store (plans.search._DenseDL / _SortedDL)."""
+    rows = sorted(rows, key=lambda r: (r[0], r[1]))
+    ids, tfs = decode_term_postings_fast(rows, codec)
+    dls = dl_store.take_ids(ids)
+    impacts = bm25_weighted_scores(
+        tfs, dls, bm25_idf_strict(n_docs, df), 1.0, avgdl, k1, b
+    )
     impacts[dls <= 0.0] = 0.0
-    return impacts
+    return ids, impacts
 
 
 def _weighted(w, impacts):
@@ -388,10 +372,11 @@ def taat_or(term_entries, dl_lookup, topk):
     ranker (HW2/engine/ranker.py:52-74) as numpy array passes.
 
     term_entries = [(term, weight, docids, impacts)] in SORTED-TERM
-    order, impacts from bm25_impacts. Bit-identical to the DAAT kernels:
+    order, impacts from term_impacts. Bit-identical to the DAAT kernels:
     for each doc the per-term impacts are added in the same
     (sorted-term) order the tied-cursor sum uses, and each impact is
-    computed with the exact expression of BlockCursor.score_current.
+    the expression BlockCursor.score_current evaluates, with the same
+    idf and association.
 
     With a dense dl store (and enough postings, see _dense_dl_array) the
     accumulator is indexed directly by doc_id (scatter-add over the id
@@ -554,8 +539,8 @@ def search_blocks(
     """Score a query given collected block rows per term.
 
     block_rows[term] = [(shard, block_id, last_docid, base_docid, max_tf,
-    doc_bytes, freq_bytes)] in any order; sorted here by (shard, block_id)
-    which is global docid order.
+    doc_bytes, freq_bytes, n)] in any order; sorted here by (shard,
+    block_id) which is global docid order.
 
     Kernel choice (use_wand=True): vectorized TAAT (taat_or/taat_and)
     when the query's total posting volume is small (<= TAAT_MAX_POSTINGS);
@@ -570,8 +555,8 @@ def search_blocks(
 
     ``flat_cache`` lets a serving engine amortize decoding AND scoring
     across repeated queries: (term, k1, b) -> (docids, impacts), the
-    BM25 impacts of bm25_impacts for this engine's fixed n_docs, avgdl
-    and dl store. 16 bytes per cached posting (int64 id, float64
+    output of term_impacts for this engine's fixed n_docs, avgdl and dl
+    store. 16 bytes per cached posting (int64 id, float64
     impact). Hits move to the end (LRU order); the caller bounds its
     size by evicting from the front. The cursor DAAT ("daat") never
     reads it: it scores from tf, which keeps it an independent check of
@@ -597,9 +582,10 @@ def search_blocks(
             key = (term, k1, b)
             cached = None if flat_cache is None else flat_cache.get(key)
             if cached is None:
-                ids, tfs = decode_term_postings_fast(term_rows(term), codec)
-                idf = bm25_idf(n_docs, term_dfs[term])
-                cached = (ids, bm25_impacts(ids, tfs, idf, dl_lookup, avgdl, k1, b))
+                cached = term_impacts(
+                    block_rows[term], codec, dl_lookup, n_docs, term_dfs[term],
+                    avgdl, k1, b,
+                )
                 if flat_cache is not None:
                     flat_cache[key] = cached
             else:
@@ -641,7 +627,7 @@ def search_blocks(
             rows = term_rows(term)
             last = np.array([r[2] for r in rows], dtype=np.int64)
             mtf = np.array([r[4] for r in rows], dtype=np.float64)
-            idf = bm25_idf(n_docs, term_dfs[term])
+            idf = bm25_idf_strict(n_docs, term_dfs[term])
             metas.append((last, idf * (mtf * (k1 + 1.0)) / (mtf + k1 * (1.0 - b))))
         return blockmax_taat_or(entries, metas, topk)
 

@@ -235,25 +235,6 @@ def score_queries(
     )
 
 
-def score_query(
-    postings: DataFrame,
-    doc_stats: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    query: str,
-    mode: str = "OR",
-    topk: int = DEFAULT_TOPK,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    lexicon: DataFrame | None = None,
-) -> DataFrame:
-    """Single-query BM25 top-k -> (doc_id, score), score desc, doc_id asc."""
-    res = score_queries(
-        postings, doc_stats, n_docs, avgdl, [("q", query)], mode, topk, k1, b, lexicon
-    )
-    return res.orderBy("rank").select("doc_id", "score")
-
-
 def boolean_search(postings: DataFrame, query: str, mode: str = "AND") -> DataFrame:
     """Unranked Boolean retrieval -> (doc_id) set.
 

@@ -2,16 +2,18 @@
 
 Two paths, one semantics (tested rank-identical):
 
-Tie policy nuance (round 6): the batch paths (score_queries and
-therefore batch_score) rank on the 6-decimal ROUNDED score with the
-doc_id tie-break — required for cross-plan determinism, since float
-sums associate differently between physical plans. The interactive
-kernels rank on the raw double (unchanged since round 5; the kernel
-differential tests pin them against each other and the oracle). The
-two policies order identically unless two docs' raw scores differ by
-less than 5e-7 AND straddle the top-k boundary; every driver-gated
-query re-ranks on the rounded score itself, so the gates are
-insensitive to the difference.
+Tie policy nuance: SearchEngine and batch_score's driver route give
+each doc the same score, bit for bit (both score through
+operators.wand.term_impacts and add in sorted-term order); only the
+rank key differs. The batch paths (score_queries and therefore
+batch_score) rank on the 6-decimal ROUNDED score with the doc_id
+tie-break — required for cross-plan determinism, since float sums
+associate differently between physical plans. The interactive kernels
+rank on the raw double (the kernel differential tests pin them against
+each other and the oracle). The two keys order identically unless two
+docs' raw scores differ by less than 5e-7 AND straddle the top-k
+boundary; every driver-gated query re-ranks on the rounded score
+itself, so the gates are insensitive to the difference.
 
   - SearchEngine: interactive single-query path. Mirrors the reference's
     serving shape (lexicon + doc_lengths resident in memory, postings
@@ -26,7 +28,7 @@ insensitive to the difference.
     serve repeated terms: one holds a term's fetched block rows, the
     other its decoded postings as (doc_ids, BM25 impacts) per
     (term, k1, b), so a hot query neither decodes nor evaluates BM25 —
-    it only adds cached impacts (operators.wand.bm25_impacts). No Spark
+    it only adds cached impacts (operators.wand.term_impacts). No Spark
     job in the hot path; latency is milliseconds like the reference's.
 
   - batch_score(): top-k for a query SET under the batch contract
@@ -36,9 +38,10 @@ insensitive to the difference.
         present terms — exact before any block is read, from
         catalog.term_dfs), the terms' block rows are read through the
         catalog's IndexSnapshot (the same directory and dl store
-        SearchEngine holds), decoded, scored with the numpy twin of the
-        SQL expression (functions.bm25.bm25_weighted_scores) and ranked
-        on the driver; the rows come back as a LocalRelation, which
+        SearchEngine holds), decoded and scored by SearchEngine's
+        operators.wand.term_impacts (the numpy twin of the SQL
+        expression, functions.bm25.bm25_weighted_scores) and ranked on
+        the driver; the rows come back as a LocalRelation, which
         collects with no Spark job.
       * Spark: above the bound, or when pyarrow cannot read the index
         in this process: prune scan on term -> decode blocks
@@ -102,12 +105,9 @@ from pyspark.sql.types import (
 )
 
 from ..config import BM25_B, BM25_K1, DEFAULT_TOPK
-from ..functions.bm25 import bm25_idf_strict, bm25_weighted_scores
 from ..functions.tokenizer import tokenize_query
 from ..operators.blocks import blocks_to_postings
-from ..operators.wand import (
-    decode_term_postings_fast, search_blocks, taat_accumulate,
-)
+from ..operators.wand import search_blocks, taat_accumulate, term_impacts
 from ..sources.catalog import _READ_ERRORS, IndexCatalog
 from .query import round_score, score_queries
 
@@ -128,10 +128,18 @@ class _DenseDL:
             self.arr[doc_ids] = dls
 
     def __getitem__(self, doc_id):
-        return self.arr[doc_id]
+        return self.arr[doc_id] if doc_id < len(self.arr) else 0.0
 
     def take_ids(self, doc_ids: np.ndarray) -> np.ndarray:
-        return self.arr[doc_ids]
+        """dl of each id; 0.0 for an id past the array (a doc appended
+        after the store loaded), as _SortedDL answers an absent id."""
+        arr = self.arr
+        if len(doc_ids) == 0 or int(doc_ids.max()) < len(arr):
+            return arr[doc_ids]
+        out = np.zeros(len(doc_ids), dtype=np.float64)
+        inside = doc_ids < len(arr)
+        out[inside] = arr[doc_ids[inside]]
+        return out
 
 
 class _SortedDL:
@@ -172,7 +180,7 @@ def _make_dl_store(doc_ids: np.ndarray, dls: np.ndarray):
 
 _BLOCK_COLS = [
     "term", "block_id", "last_docid", "base_docid",
-    "max_tf", "doc_bytes", "freq_bytes",
+    "max_tf", "doc_bytes", "freq_bytes", "n",
 ]
 
 
@@ -241,7 +249,7 @@ class _BlockDirectory:
 
     def fetch(self, terms: list[str]) -> dict[str, list]:
         """-> {term: [(shard, block_id, last_docid, base_docid, max_tf,
-        doc_bytes, freq_bytes)]} reading only matching row groups."""
+        doc_bytes, freq_bytes, n)]} reading only matching row groups."""
         import pyarrow.compute as pc
 
         rows: dict[str, list] = {}
@@ -260,8 +268,10 @@ class _BlockDirectory:
             if tbl.num_rows == 0:
                 continue
             cols = [tbl.column(c).to_pylist() for c in _BLOCK_COLS]
-            for term, bid, last, base, mtf, db, fb in zip(*cols):
-                rows.setdefault(term, []).append((shard, bid, last, base, mtf, db, fb))
+            for term, bid, last, base, mtf, db, fb, n in zip(*cols):
+                rows.setdefault(term, []).append(
+                    (shard, bid, last, base, mtf, db, fb, n)
+                )
         return rows
 
 
@@ -381,8 +391,11 @@ class SearchEngine:
                 blk = fetched.get(t, [])
                 out[t] = blk
                 self._term_cache[t] = blk
+                # concurrent requests may empty the LRU between the
+                # check and the pop
                 if len(self._term_cache) > _TERM_CACHE_SIZE:
-                    self._term_cache.popitem(last=False)
+                    with suppress(KeyError):
+                        self._term_cache.popitem(last=False)
         return out
 
     def search(
@@ -405,7 +418,8 @@ class SearchEngine:
             flat_cache=self._flat_cache, force_kernel=force_kernel,
         )
         while len(self._flat_cache) > _TERM_CACHE_SIZE:
-            self._flat_cache.popitem(last=False)
+            with suppress(KeyError):
+                self._flat_cache.popitem(last=False)
         return out
 
 
@@ -489,17 +503,6 @@ def _query_terms(queries, term_dfs) -> dict[str, list[tuple[str, int]]]:
     return out
 
 
-def _dl_of(dl_store, ids: np.ndarray) -> np.ndarray:
-    """dl of each id, 0.0 for an id the store does not hold."""
-    arr = getattr(dl_store, "arr", None)
-    if arr is not None and len(ids) and int(ids.max()) >= len(arr):
-        out = np.zeros(len(ids), dtype=np.float64)
-        inside = ids < len(arr)
-        out[inside] = arr[ids[inside]]
-        return out
-    return dl_store.take_ids(ids)
-
-
 def _rank(docs: np.ndarray, scores: np.ndarray, topk: int):
     """-> (rank, doc_id, score) of the top-k under the batch contract:
     round_score(score) desc, doc_id asc. Only docs within _ROUND_MARGIN
@@ -524,12 +527,13 @@ def _driver_batch(catalog, per_query, term_dfs, mode, topk, k1, b):
     a pandas frame: PySpark turns an EMPTY pandas frame into an
     RDD-backed relation whose collect runs a job.
 
-    Scores are bm25_weighted_scores (the SQL expression's numpy twin),
-    summed per doc in sorted-term order by the serving kernels'
-    accumulator (operators.wand.taat_accumulate); postings of docs with
-    no dl (dl = 0, or absent from docs_meta) are dropped as the inner
-    join to doc_stats drops them; AND keeps docs matching every present
-    query term."""
+    Each term's impacts come from operators.wand.term_impacts, as
+    SearchEngine's do, and are summed per doc in sorted-term order by
+    the serving kernels' accumulator (operators.wand.taat_accumulate).
+    Postings of docs with no dl (dl = 0, or absent from docs_meta) score
+    0.0 and leave their docs at 0, outside the ``scores > 0`` hits, as
+    the inner join to doc_stats drops them; AND keeps docs matching
+    every present query term."""
     snap = catalog.snapshot()
     terms = sorted({t for entries in per_query.values() for t, _ in entries})
     try:
@@ -539,19 +543,15 @@ def _driver_batch(catalog, per_query, term_dfs, mode, topk, k1, b):
     except _READ_ERRORS:
         return None
 
-    n_docs, avgdl = catalog.n_docs, catalog.avgdl
-    postings = {}  # term -> (doc_ids, unweighted scores) over docs with dl > 0
-    for t in terms:
-        rows = sorted(block_rows.get(t, []), key=lambda r: (r[0], r[1]))
-        ids, tfs = decode_term_postings_fast(rows, snap.codec)
-        dls = _dl_of(dl_store, ids)
-        keep = dls > 0.0
-        idf = bm25_idf_strict(n_docs, term_dfs[t])
-        # weight 1.0 leaves the bits alone; the query's weight multiplies
-        # in taat_accumulate, as ``weight * (...)`` does in the SQL
-        postings[t] = (
-            ids[keep], bm25_weighted_scores(tfs[keep], dls[keep], idf, 1.0, avgdl, k1, b)
+    # term -> (doc_ids, unweighted scores); the query's weight multiplies
+    # in taat_accumulate, as ``weight * (...)`` does in the SQL
+    postings = {
+        t: term_impacts(
+            block_rows.get(t, []), snap.codec, dl_store, catalog.n_docs,
+            term_dfs[t], catalog.avgdl, k1, b,
         )
+        for t in terms
+    }
 
     is_and = mode.upper() == "AND"
     out: list[tuple] = []
