@@ -54,10 +54,13 @@ def oracle():
     return OracleIndex(corpus_docs(400, 42))
 
 
-def _reference_spec_blocks(postings_by_term, block_size=16):
+def _reference_spec_blocks(postings_by_term, block_size=16, shard_size=None):
     """Scalar writer implementing the published reference block format
     (HW2/engine/listio.py:44-79) — an independent second implementation
-    used to pin byte-compatibility of the Spark-built payloads."""
+    used to pin byte-compatibility of the Spark-built payloads. With a
+    ``shard_size`` each term's list splits per doc_id // shard_size, and
+    each shard's gap chain starts again at base 0. -> {(term, shard):
+    [(n, last_docid, base_docid, max_tf, doc_bytes, freq_bytes)]}"""
 
     def vb(x):
         out = bytearray()
@@ -71,7 +74,10 @@ def _reference_spec_blocks(postings_by_term, block_size=16):
 
     result = {}
     for term, postings in postings_by_term.items():
-        items = sorted(postings.items())
+        for doc_id, tf in sorted(postings.items()):
+            shard = doc_id // shard_size if shard_size else 0
+            result.setdefault((term, shard), []).append((doc_id, tf))
+    for key, items in result.items():
         blocks = []
         prev_last = 0
         for i in range(0, len(items), block_size):
@@ -84,9 +90,12 @@ def _reference_spec_blocks(postings_by_term, block_size=16):
                 doc_bytes += vb(d - prev)
                 prev = d
             freq_bytes = b"".join(vb(f) for f in freqs)
-            blocks.append((docids[-1], bytes(doc_bytes), freq_bytes))
+            blocks.append(
+                (len(chunk), docids[-1], prev_last, max(freqs),
+                 bytes(doc_bytes), freq_bytes)
+            )
             prev_last = docids[-1]
-        result[term] = blocks
+        result[key] = blocks
     return result
 
 
@@ -113,22 +122,36 @@ def test_block_invariants(spark, index_dir, oracle):
 
 
 def test_byte_compat_single_shard(spark, oracle):
-    """num_shards=1 payloads are byte-identical to the reference format."""
+    """Block payloads are byte-identical to the reference format: with
+    one shard (the reference's whole-corpus build) and with several,
+    where each shard's gap chain restarts at base 0."""
     src = assign_doc_ids(corpus_df(spark, n_docs=400, seed=42), ["repo", "path"])
-    postings = build_postings(with_tokens(src, "content"))
-    blocks = build_block_index(postings, block_size=16, codec="varbyte", shard_size=None)
-    got = {}
-    for r in blocks.collect():
-        got.setdefault(r["term"], []).append(r)
-    want = _reference_spec_blocks(oracle.index, block_size=16)
-    assert set(got) == set(want)
-    for term, wblocks in want.items():
-        grs = sorted(got[term], key=lambda r: r["block_id"])
-        assert len(grs) == len(wblocks), term
-        for gr, (wlast, wdoc, wfreq) in zip(grs, wblocks):
-            assert gr["last_docid"] == wlast, term
-            assert bytes(gr["doc_bytes"]) == wdoc, term
-            assert bytes(gr["freq_bytes"]) == wfreq, term
+    postings = build_postings(with_tokens(src, "content")).cache()
+    try:
+        for shard_size in (None, 60):
+            blocks = build_block_index(
+                postings, block_size=16, codec="varbyte", shard_size=shard_size
+            )
+            got = {}
+            for r in blocks.collect():
+                got.setdefault((r["term"], r["shard"]), []).append(r)
+            want = _reference_spec_blocks(
+                oracle.index, block_size=16, shard_size=shard_size
+            )
+            assert set(got) == set(want), shard_size
+            if shard_size:
+                assert len({s for _, s in want}) == 7
+            for key, wblocks in want.items():
+                grs = sorted(got[key], key=lambda r: r["block_id"])
+                assert [r["block_id"] for r in grs] == list(range(len(wblocks))), key
+                got_blocks = [
+                    (r["n"], r["last_docid"], r["base_docid"], r["max_tf"],
+                     bytes(r["doc_bytes"]), bytes(r["freq_bytes"]))
+                    for r in grs
+                ]
+                assert got_blocks == wblocks, key
+    finally:
+        postings.unpersist()
 
 
 def test_index_tables_consistent(spark, index_dir, oracle):
@@ -287,21 +310,25 @@ def test_empty_source_builds_clean_empty_index(spark, tmp_path):
 def test_manifest_metrics_match_tables(spark, tmp_path):
     """Per-shard manifest rows ride the writes as Observation metrics —
     they must equal what a direct aggregation of the written tables
-    says (guards the conditional-agg expressions)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from web_search_engine_spark.plans.build_index import build_index
+    says (guards the conditional-agg expressions), for a build's shards
+    and for an append's, and stats.json must equal their rollup."""
+    from web_search_engine_spark.plans.build_index import _read_manifest_rows
+    from web_search_engine_spark.sources.catalog import read_stats
+    from web_search_engine_spark.streaming.incremental import append_batch
 
     d = str(tmp_path / "idx")
-    build_index(spark, corpus_df(spark, n_docs=200, seed=42), d, num_shards=3)
+    first, rest = _split_corpus(spark, 280, 200, seed=42)
+    build_index(spark, first, d, num_shards=3)
+    assert append_batch(spark, rest, d, batch_id=0) == 80
 
+    rows = _read_manifest_rows(d)
     man = {
         int(r["shard"]): (int(r["n_docs"]), int(r["sum_dl"]),
                           int(r["n_postings"]), int(r["n_blocks"]))
-        for r in spark.read.parquet(os.path.join(d, "manifest")).collect()
+        for r in rows
     }
+    assert len(man) == len(rows)  # one row per shard
+    assert set(man) == {0, 1, 2, 3, 4}  # 3 built, 2 appended
     meta = {
         int(r["shard"]): (int(r["nd"]), int(r["sdl"]))
         for r in spark.read.parquet(os.path.join(d, "docs_meta"))
@@ -320,10 +347,8 @@ def test_manifest_metrics_match_tables(spark, tmp_path):
         assert (np_, nb) == blk[s], s
 
     # stats.json must equal the manifest rollup
-    from web_search_engine_spark.sources.catalog import read_stats
-
     st = read_stats(d)
-    assert st["n_docs"] == sum(v[0] for v in man.values())
+    assert st["n_docs"] == sum(v[0] for v in man.values()) == 280
     total_dl = sum(v[1] for v in man.values())
     assert abs(st["avgdl"] - total_dl / st["n_docs"]) < 1e-9
 
@@ -503,15 +528,13 @@ def _index_tables(spark, d):
 
 def test_append_takes_the_build_rules(spark, tmp_path, monkeypatch):
     """append_batch writes through the build's shard writer, so the rows
-    it writes and the Σdl its ledger records must not depend on which
+    it writes and the Σdl its manifest rows record must not depend on which
     side of the build's rules the batch falls: dl from a second tokenize
     pass or from the postings (_DL_AUTO_MIN_DOCS), per-shard counts from
     Observations or post hoc (OBSERVE_MAX_SHARDS)."""
     import web_search_engine_spark.plans.build_index as B
-    from web_search_engine_spark.streaming.incremental import (
-        _read_ledger,
-        append_batch,
-    )
+    from web_search_engine_spark.plans.build_index import _read_manifest_rows
+    from web_search_engine_spark.streaming.incremental import append_batch
 
     first, rest = _split_corpus(spark, 200, 120, seed=17)
     base = str(tmp_path / "base")
@@ -533,13 +556,124 @@ def test_append_takes_the_build_rules(spark, tmp_path, monkeypatch):
             assert append_batch(spark, rest, d, batch_id=0) == 80
         assert dl_source[-1] == want_dl, name
         assert (len(post_hoc) > n_calls) == (knob == "OBSERVE_MAX_SHARDS"), name
-        entry = _read_ledger(d)["batches"]["0"]
-        outs[name] = (_index_tables(spark, d), entry["n_docs"], entry["sum_dl"])
+        appended = [r for r in _read_manifest_rows(d) if r["shard"] >= 3]
+        outs[name] = (
+            _index_tables(spark, d),
+            sum(r["n_docs"] for r in appended),
+            sum(r["sum_dl"] for r in appended),
+        )
     assert outs["default"] == outs["postings_dl"] == outs["post_hoc_counts"]
     tables, n_docs, sum_dl = outs["default"]
     new_meta = [r for r in tables["docs_meta"] if r[0] >= 3]  # appended shards
     assert n_docs == len(new_meta) == 80
     assert sum_dl == sum(r[4] for r in new_meta) > 0
+
+
+def _assert_stats_match_tables(spark, d, n_docs):
+    """stats.json's n_docs/avgdl equal a scan of docs_meta, which holds
+    ``n_docs`` rows."""
+    from web_search_engine_spark.sources.catalog import read_stats
+
+    st = read_stats(d)
+    r = spark.read.parquet(os.path.join(d, "docs_meta")).agg(
+        F.count("*").alias("n"), F.sum("dl").alias("sdl")
+    ).first()
+    assert st["n_docs"] == r["n"] == n_docs
+    assert abs(st["avgdl"] - r["sdl"] / r["n"]) < 1e-9
+
+
+def test_resume_after_append_keeps_appended_docs(spark, tmp_path):
+    """An appended batch's shards are committed shards: a resumed build
+    over the same source keeps counting their docs in n_docs/avgdl."""
+    from web_search_engine_spark.sources.catalog import read_stats
+    from web_search_engine_spark.streaming.incremental import append_batch
+
+    first, rest = _split_corpus(spark, 150, 120, seed=7)
+    d = str(tmp_path / "idx")
+    build_index(spark, first, d, block_size=16, num_shards=4)
+    assert append_batch(spark, rest, d, batch_id=0) == 30
+    before = read_stats(d)
+    build_index(spark, first, d, block_size=16, num_shards=4)
+    after = read_stats(d)
+    assert (after["n_docs"], after["avgdl"]) == (before["n_docs"], before["avgdl"])
+    _assert_stats_match_tables(spark, d, 150)
+
+
+def test_rebuild_starts_a_new_index(spark, tmp_path):
+    """resume=False removes the old index's tables, manifest and ledger
+    (and nothing else) before it writes: a rebuild with fewer shards
+    leaves exactly its own shards, and a following append counts
+    right."""
+    from web_search_engine_spark.plans.build_index import _read_manifest_rows
+    from web_search_engine_spark.streaming.incremental import append_batch
+
+    first, rest = _split_corpus(spark, 150, 120, seed=7)
+    d = str(tmp_path / "idx")
+    build_index(spark, first, d, block_size=16, num_shards=4)
+    assert append_batch(spark, rest, d, batch_id=0) == 30
+    os.makedirs(os.path.join(d, "_stream_checkpoint"))
+    with open(os.path.join(d, "notes.txt"), "w") as f:
+        f.write("kept")
+
+    build_index(spark, first, d, block_size=16, num_shards=2, resume=False)
+    for table in ("blocks", "docs_meta"):
+        shard_dirs = {
+            e for e in os.listdir(os.path.join(d, table)) if e.startswith("shard=")
+        }
+        assert shard_dirs == {"shard=0", "shard=1"}, table
+    assert sorted(r["shard"] for r in _read_manifest_rows(d)) == [0, 1]
+    assert not os.path.exists(os.path.join(d, "_batch_ledger.json"))
+    assert os.path.isdir(os.path.join(d, "_stream_checkpoint"))
+    assert os.path.isfile(os.path.join(d, "notes.txt"))
+    _assert_stats_match_tables(spark, d, 120)
+
+    assert append_batch(spark, rest, d, batch_id=0) == 30
+    _assert_stats_match_tables(spark, d, 150)
+
+
+def test_append_counts_batches_of_the_pre_manifest_layout(spark, tmp_path):
+    """An index appended to before appends wrote manifest rows has only
+    its build's rows, and its committed ledger entries carry the batch's
+    n_docs/sum_dl: the rollup keeps counting those entries, and one more
+    append counts right."""
+    import json
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from web_search_engine_spark.streaming.incremental import append_batch
+
+    pdf = generate_corpus_pdf(160, 29)
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pdf[:100]), d, num_shards=2)
+    assert append_batch(spark, spark.createDataFrame(pdf[100:130]), d, batch_id=0) == 30
+
+    # rewrite to the old layout: drop the appended shards' manifest rows
+    # and move their counts into the ledger entry
+    man = os.path.join(d, "manifest")
+    rows = pads.dataset(man, format="parquet").to_table()
+    built = rows.filter(pc.less(rows["shard"], 2))
+    appended = rows.filter(pc.greater_equal(rows["shard"], 2)).to_pylist()
+    assert appended
+    shutil.rmtree(man)
+    os.makedirs(man)
+    pq.write_table(built, os.path.join(man, "part-0.parquet"))
+    ledger_path = os.path.join(d, "_batch_ledger.json")
+    with open(ledger_path) as f:
+        ledger = json.load(f)
+    ledger["batches"]["0"].update(
+        n_docs=sum(r["n_docs"] for r in appended),
+        sum_dl=sum(r["sum_dl"] for r in appended),
+    )
+    with open(ledger_path, "w") as f:
+        json.dump(ledger, f)
+
+    assert append_batch(spark, spark.createDataFrame(pdf[130:]), d, batch_id=1) == 30
+    _assert_stats_match_tables(spark, d, 160)
+    with open(ledger_path) as f:
+        entry = json.load(f)["batches"]["1"]
+    assert set(entry) == {"base", "committed"}
 
 
 @pytest.mark.parametrize("dl_source", ["tokenize", "postings"])
@@ -671,16 +805,14 @@ def test_three_kernels_identical(index_dir, oracle, monkeypatch, mode):
             eng.search("the import", mode=mode, topk=10, force_kernel="bmw_block")
 
 
-def test_fast_term_decode_matches_per_block(spark, index_dir):
+def test_fast_term_decode_matches_per_block(spark, index_dir, oracle):
     """decode_term_postings_fast (two vectorized codec calls with
-    segmented shard rebase) must equal the per-block reference decoder
+    segmented shard rebase) must return each term's postings, doc ids
+    and tfs in doc order, as the oracle's independent index has them,
     on multi-shard terms."""
     import numpy as np
 
-    from web_search_engine_spark.operators.wand import (
-        decode_term_postings,
-        decode_term_postings_fast,
-    )
+    from web_search_engine_spark.operators.wand import decode_term_postings_fast
 
     blocks = spark.read.parquet(os.path.join(index_dir, "blocks"))
     rows_by_term = {}
@@ -689,14 +821,14 @@ def test_fast_term_decode_matches_per_block(spark, index_dir):
             (r["shard"], r["block_id"], r["last_docid"], r["base_docid"],
              r["max_tf"], bytes(r["doc_bytes"]), bytes(r["freq_bytes"]), r["n"])
         )
+    assert set(rows_by_term) == set(oracle.index)
     n_multi = 0
     for term, rows in rows_by_term.items():
         rows.sort(key=lambda t: (t[0], t[1]))
-        want = decode_term_postings([(t[2], t[3], t[4], t[5], t[6]) for t in rows],
-                                    "varbyte")
+        want = sorted(oracle.index[term].items())
         got = decode_term_postings_fast(rows, "varbyte")
-        assert np.array_equal(want[0], got[0]), term
-        assert np.array_equal(want[1], got[1]), term
+        assert np.array_equal(got[0], [d for d, _ in want]), term
+        assert np.array_equal(got[1], [tf for _, tf in want]), term
         n_multi += len({t[0] for t in rows}) > 1
     assert n_multi >= 5  # the corpus must exercise multi-shard chains
 

@@ -13,7 +13,6 @@ PACKAGE = pathlib.Path(web_search_engine_spark.__file__).parent
 # therefore takes a visible edit to this list.
 PINNED_KNOBS = {
     "WSE_BUILD_TIMINGS",
-    "WSE_DENSE_IDS",
     "WSE_EXPECTED_ROW_BYTES",
     "WSE_READER_CHECK",
     "WSE_VERIFY_DOC_IDS",

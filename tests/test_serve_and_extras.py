@@ -1,34 +1,16 @@
-"""Serving wrapper (reference app.py analog), snippets, subset extract,
-and grouped-vs-mapInPandas block-builder equivalence."""
+"""Serving wrapper (reference app.py analog), snippets and subset
+extract."""
 
 import json
 import urllib.request
 
 import pytest
-from pyspark.sql import functions as F
 
-from web_search_engine_spark.operators.blocks import (
-    build_block_index,
-    build_block_index_grouped,
-)
-from web_search_engine_spark.operators.postings import (
-    assign_doc_ids,
-    build_postings,
-    with_tokens,
-)
+from web_search_engine_spark.operators.postings import assign_doc_ids
 from web_search_engine_spark.plans.build_index import build_index
 from web_search_engine_spark.plans.search import extract_subset, make_snippet
 from web_search_engine_spark.plans.serve import make_server, serve_forever_in_thread
 from web_search_engine_spark.sources.corpus import corpus_df
-
-
-def test_grouped_block_builder_identical(spark):
-    src = assign_doc_ids(corpus_df(spark, n_docs=200, seed=42), ["repo", "path"])
-    postings = build_postings(with_tokens(src, "content")).cache()
-    for shard_size in (None, 60):
-        a = build_block_index(postings, 16, "varbyte", shard_size)
-        b = build_block_index_grouped(postings, 16, "varbyte", shard_size)
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, shard_size
 
 
 def test_snippet_window():

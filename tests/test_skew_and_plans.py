@@ -173,19 +173,17 @@ def test_assign_doc_ids_is_key_rank_with_no_second_exchange(spark):
         handle.unpersist()
 
 
-def test_assign_doc_ids_dense_key_fast_path(spark, monkeypatch):
-    """WSE_DENSE_IDS=auto: a single provably-dense integral key is
-    assigned by projection (doc_id = key - min, no range exchange);
-    every non-dense shape — gaps, duplicate multisets that spoof
-    count==max-min+1, nulls — must fall back to the range path and
-    produce the identical dense-rank ids. Which path fired is read off
-    the cache handle: the range path's handle carries the internal
-    _pid column, the projection path's does not."""
+def test_assign_doc_ids_dense_key_fast_path(spark):
+    """A single provably-dense integral key is assigned by projection
+    (doc_id = key - min, no range exchange); every non-dense shape —
+    gaps, duplicate multisets that spoof count==max-min+1, nulls — must
+    fall back to the range path and produce the identical dense-rank
+    ids. Which path fired is read off the cache handle: the range
+    path's handle carries the internal _pid column, the projection
+    path's does not."""
     from web_search_engine_spark.operators.postings import (
         assign_doc_ids_counted,
     )
-
-    monkeypatch.delenv("WSE_DENSE_IDS", raising=False)  # default: auto
 
     def ids(rows, schema, keys):
         out, n, handle = assign_doc_ids_counted(
@@ -234,30 +232,6 @@ def test_assign_doc_ids_dense_key_fast_path(spark, monkeypatch):
     assert n == 3 and used_range
 
 
-def test_dense_ids_env_read_per_call(spark, monkeypatch):
-    """WSE_DENSE_IDS is read when assign_doc_ids_counted runs, not at
-    import (ADVICE): a value set after import takes effect, and an
-    invalid value is the one the error names."""
-    from web_search_engine_spark.operators.postings import (
-        assign_doc_ids_counted,
-    )
-
-    df = spark.createDataFrame(
-        [(k, "t") for k in range(20)], "orig long, text string"
-    )
-    monkeypatch.setenv("WSE_DENSE_IDS", "0")
-    out, n, handle = assign_doc_ids_counted(df, ["orig"])
-    try:
-        # a dense key, yet the range path ran: the probe is disabled
-        assert n == 20 and "_pid" in handle.columns
-        assert sorted(r["doc_id"] for r in out.collect()) == list(range(20))
-    finally:
-        handle.unpersist()
-    monkeypatch.setenv("WSE_DENSE_IDS", "bogus")
-    with pytest.raises(ValueError, match="'bogus'"):
-        assign_doc_ids_counted(df, ["orig"])
-
-
 def test_dense_probe_failure_releases_cache(spark, monkeypatch):
     """If a job of the overlapped dense-key probe raises, the persisted
     projection is released before the error propagates — the caller
@@ -266,7 +240,6 @@ def test_dense_probe_failure_releases_cache(spark, monkeypatch):
         assign_doc_ids_counted,
     )
 
-    monkeypatch.delenv("WSE_DENSE_IDS", raising=False)
     df = spark.createDataFrame(
         [(k, "t") for k in range(20)], "orig long, text string"
     )

@@ -54,15 +54,9 @@ def vb_encode_arrays(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return out, nbytes
 
 
-def vb_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """vb_encode_arrays with the byte array materialized as ``bytes``."""
-    out, nbytes = vb_encode_arrays(values)
-    return out.tobytes(), nbytes
-
-
 def vb_encode(values: np.ndarray) -> bytes:
     """Varbyte-encode an array of non-negative ints (MSB-on-last-byte)."""
-    return vb_encode_with_lengths(values)[0]
+    return vb_encode_arrays(values)[0].tobytes()
 
 
 def vb_decode(data: bytes | np.ndarray) -> np.ndarray:

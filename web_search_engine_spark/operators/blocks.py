@@ -38,7 +38,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -127,83 +126,6 @@ _ARROW_BLOCK_SCHEMA = pa.schema(
 )
 
 
-def _encode_batch(pdf: pd.DataFrame, block_size: int, codec: str) -> pd.DataFrame:
-    """Vectorized block builder for one sorted (shard, term, doc_id) batch."""
-    n = len(pdf)
-    if n == 0:
-        return pd.DataFrame(
-            columns=[
-                "term", "shard", "block_id", "n", "last_docid", "base_docid",
-                "max_tf", "doc_bytes", "freq_bytes",
-            ]
-        )
-    terms = pdf["term"].to_numpy()
-    shards = pdf["shard"].to_numpy()
-    docids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-
-    new_group = np.empty(n, dtype=bool)
-    new_group[0] = True
-    new_group[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-    group_starts = np.flatnonzero(new_group)
-    group_of_row = np.cumsum(new_group) - 1
-    row_in_group = np.arange(n) - group_starts[group_of_row]
-
-    new_block = new_group | (row_in_group % block_size == 0)
-    block_starts = np.flatnonzero(new_block)
-    block_ends = np.append(block_starts[1:] - 1, n - 1)
-    block_id = (row_in_group[block_starts] // block_size).astype(np.int32)
-    n_in_block = (block_ends - block_starts + 1).astype(np.int32)
-    last_docid = docids[block_ends]
-    # gap base: previous block's last docid within the group, 0 for block 0
-    base_docid = np.where(block_id == 0, 0, docids[np.maximum(block_starts - 1, 0)])
-    max_tf = np.maximum.reduceat(tfs, block_starts)
-
-    if codec == CODEC_VARBYTE:
-        # The delta chain is continuous across blocks of one group
-        # (first gap of block b>0 = docid - prev block last = plain diff),
-        # so gaps reduce to one diff with group starts reset to the
-        # absolute docid (base 0) — then ONE vectorized encode per batch.
-        gaps = np.empty(n, dtype=np.int64)
-        gaps[0] = docids[0]
-        np.subtract(docids[1:], docids[:-1], out=gaps[1:])
-        gaps[group_starts] = docids[group_starts]
-        if np.any(gaps < 0):
-            raise ValueError("postings not sorted by (shard, term, doc_id)")
-        doc_buf, doc_lens = C.vb_encode_with_lengths(gaps.astype(np.uint64))
-        freq_buf, freq_lens = C.vb_encode_with_lengths(tfs.astype(np.uint64))
-        doc_off = np.concatenate(([0], np.cumsum(doc_lens)))
-        freq_off = np.concatenate(([0], np.cumsum(freq_lens)))
-        doc_mv, freq_mv = memoryview(doc_buf), memoryview(freq_buf)
-        doc_bytes = [
-            bytes(doc_mv[doc_off[s] : doc_off[e + 1]])
-            for s, e in zip(block_starts, block_ends)
-        ]
-        freq_bytes = [
-            bytes(freq_mv[freq_off[s] : freq_off[e + 1]])
-            for s, e in zip(block_starts, block_ends)
-        ]
-    else:
-        d32 = docids.astype("<u4")
-        f32 = tfs.astype("<u4")
-        doc_bytes = [d32[s : e + 1].tobytes() for s, e in zip(block_starts, block_ends)]
-        freq_bytes = [f32[s : e + 1].tobytes() for s, e in zip(block_starts, block_ends)]
-
-    return pd.DataFrame(
-        {
-            "term": terms[block_starts],
-            "shard": shards[block_starts].astype(np.int32),
-            "block_id": block_id,
-            "n": n_in_block,
-            "last_docid": last_docid,
-            "base_docid": base_docid,
-            "max_tf": max_tf,
-            "doc_bytes": doc_bytes,
-            "freq_bytes": freq_bytes,
-        }
-    )
-
-
 def _empty_block_batch() -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
         [pa.array([], type=f.type) for f in _ARROW_BLOCK_SCHEMA],
@@ -247,9 +169,8 @@ def _group_change_mask(batch: pa.RecordBatch) -> np.ndarray:
 def _encode_arrow(batch: pa.RecordBatch, block_size: int, codec: str) -> pa.RecordBatch:
     """Arrow-native block builder: one sorted (shard, term, doc_id)
     RecordBatch -> block rows, with payload columns built zero-copy from
-    (values-buffer, offsets) pairs. Same block arithmetic and byte
-    format as _encode_batch (the pandas spec implementation — tested
-    identical)."""
+    (values-buffer, offsets) pairs. Byte-identical to the reference
+    block format (tested against a pure-Python writer of it)."""
     import pyarrow.compute as pc
 
     n = batch.num_rows
@@ -412,35 +333,6 @@ def build_block_index(
         "shard", "term", "doc_id"
     )
     return ordered.mapInArrow(_block_builder(block_size, codec), BLOCK_SCHEMA)
-
-
-def build_block_index_grouped(
-    postings: DataFrame,
-    block_size: int = BLOCK_SIZE,
-    codec: str = CODEC_VARBYTE,
-    shard_size: int | None = None,
-) -> DataFrame:
-    """groupBy(shard, term).applyInPandas variant of the block builder.
-
-    The literal north-star formulation: one pandas group per (shard,
-    term). Produces IDENTICAL rows to build_block_index (tested), but
-    pays one tiny pandas DataFrame per term — the mapInPandas path
-    amortizes thousands of terms per Arrow batch and is the default.
-    Kept as the semantic specification and for workloads with few,
-    huge terms where per-group isolation is preferable.
-    """
-    if shard_size:
-        sharded = postings.withColumn(
-            "shard", (F.col("doc_id") / F.lit(int(shard_size))).cast("int")
-        )
-    else:
-        sharded = postings.withColumn("shard", F.lit(0).cast("int"))
-
-    def one_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id", kind="mergesort").reset_index(drop=True)
-        return _encode_batch(pdf, block_size, codec)
-
-    return sharded.groupBy("shard", "term").applyInPandas(one_group, BLOCK_SCHEMA)
 
 
 def lexicon_from_blocks(blocks: DataFrame) -> DataFrame:

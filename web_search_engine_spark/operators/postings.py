@@ -195,21 +195,11 @@ def salted_term_counts(postings: DataFrame, n_salts: int = 16) -> DataFrame:
     return phase1.groupBy("term").agg(F.sum("partial_df").cast("long").alias("df"))
 
 
-# dense-integer-key fast path for assign_doc_ids_counted: WSE_DENSE_IDS
-# "auto" (the default) probes a single integral key and, when the keys
-# are provably dense (no nulls, exact distinct count == max-min+1 ==
-# row count), assigns doc_id = key - min as a pure projection — NO
-# range exchange of the corpus rows at all (guide §2.4 "remove shuffles
-# outright"). "0" disables the probe and always takes the range-partition
-# path. Read per call (_dense_ids_mode), so the value in effect is the
-# one a validation error names.
-def _dense_ids_mode() -> str:
-    mode = os.environ.get("WSE_DENSE_IDS", "auto")
-    if mode not in ("auto", "0"):
-        raise ValueError(f"WSE_DENSE_IDS must be auto|0, got {mode!r}")
-    return mode
-
-
+# dense-integer-key fast path for assign_doc_ids_counted: probe a single
+# integral key and, when the keys are provably dense (no nulls, exact
+# distinct count == max-min+1 == row count), assign doc_id = key - min
+# as a pure projection — NO range exchange of the corpus rows at all
+# (guide §2.4 "remove shuffles outright").
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
@@ -310,14 +300,13 @@ def assign_doc_ids_counted(
     rows are persisted because separate actions re-plan the DataFrame
     (the exchange would rerun per downstream job).
 
-    Dense-integer-key fast path (WSE_DENSE_IDS=auto, the default): when
-    the single integral key is provably dense the id is key - min — a
-    projection, zero exchanges; see _dense_key_ids.
+    Dense-integer-key fast path: when the single integral key is
+    provably dense the id is key - min — a projection, zero exchanges;
+    see _dense_key_ids.
     """
-    if _dense_ids_mode() == "auto":
-        fast = _dense_key_ids(df, key_cols)
-        if fast is not None:
-            return fast
+    fast = _dense_key_ids(df, key_cols)
+    if fast is not None:
+        return fast
     n_part = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n_part, *key_cols).withColumn(
         "_pid", F.spark_partition_id()

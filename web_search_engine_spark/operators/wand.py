@@ -232,22 +232,6 @@ def daat_and(cursors, weights, dl_lookup, avgdl, topk):
 TAAT_MAX_POSTINGS = 2_000_000
 
 
-def decode_term_postings(blocks: list, codec: str) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenate one term's blocks into flat (docids, tfs) arrays
-    (blocks pre-sorted by (shard, block_id) = global docid order)."""
-    ids, tfs = [], []
-    for last, base, _mtf, db, fb in blocks:
-        d, f = C.decode_block(db, fb, int(base), codec)
-        ids.append(d)
-        tfs.append(f)
-    if not ids:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    return (
-        np.concatenate(ids).astype(np.int64),
-        np.concatenate(tfs).astype(np.int64),
-    )
-
-
 def decode_term_postings_fast(rows: list, codec: str) -> tuple[np.ndarray, np.ndarray]:
     """Whole-term decode through codec.decode_blocks: the term's payloads
     concatenated, two vectorized codec calls, one per-block rebase.

@@ -32,20 +32,23 @@ regardless of index size: (1) doc-id offsets count, (2) blocks write,
 metrics ride the write jobs as Observation metrics (no post-hoc re-read
 of just-written parquet), the manifest append and stats.json are
 driver-side metadata writes (exactly how Iceberg commits manifest
-files), and corpus stats aggregate over manifest rows, not over data.
+files), and corpus stats aggregate over manifest rows, not over data
+(_commit_stats: the one rollup, for builds and streaming appends alike).
 
 Resumability (north rule): the SHARD (a doc_id range) is the checkpoint
 unit. Every attempt writes only the shards missing from manifest/, using
 dynamic partition overwrite (partial output from a killed attempt is
 replaced wholesale; completed shards are never touched or re-tokenized).
 A shard's manifest row is appended only after its data is fully written,
-with lineage (row counts, Σdl, build seconds) + codec config. Resume
+with lineage (row counts, Σdl, build seconds) + codec config; a streaming
+append commits its new shards the same way. Resume
 validates codec/block_size against the manifest and adopts the recorded
 shard_size (mixing incompatible shards fails fast instead of silently).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -66,7 +69,7 @@ from ..operators.postings import (
     build_postings,
     with_tokens,
 )
-from ..sources.catalog import IndexCatalog, read_stats, write_stats
+from ..sources.catalog import IndexCatalog, write_stats
 
 # Above this many pending shards the per-shard conditional Observation
 # aggregates get wide; fall back to one tiny post-hoc aggregation job.
@@ -252,15 +255,35 @@ def _read_manifest_rows(index_dir: str) -> list[dict]:
     return pads.dataset(path, format="parquet").to_table().to_pylist()
 
 
-def _append_manifest_rows(index_dir: str, rows: list[dict]) -> None:
-    """Driver-side manifest commit (the Iceberg-manifest analog): one
-    small parquet file per completed attempt, appended after the shard
-    data is durable. The part is written under a dot-prefixed name
-    (pyarrow and Spark skip dot files) and renamed into place, so a
-    reader never sees a torn part."""
+def _append_manifest_rows(
+    index_dir: str,
+    per_shard: dict[int, tuple[int, int, int, int]],
+    t_start: float,
+    *,
+    codec: str,
+    block_size: int,
+    shard_size: int,
+) -> None:
+    """Driver-side manifest commit (the Iceberg-manifest analog) of the
+    shards write_shards just wrote (``per_shard`` is its return value),
+    by a build or an append alike: one small parquet file per completed
+    attempt, one row per shard, appended after the shard data is
+    durable. The part is written under a dot-prefixed name (pyarrow and
+    Spark skip dot files) and renamed into place, so a reader never
+    sees a torn part."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    now = time.time()
+    rows = [
+        {
+            "shard": s, "n_docs": nd, "sum_dl": sdl,
+            "n_postings": np_, "n_blocks": nb,
+            "build_sec": round(now - t_start, 3), "finished_unix": now,
+            "codec": codec, "block_size": block_size, "shard_size": shard_size,
+        }
+        for s, (nd, sdl, np_, nb) in sorted(per_shard.items())
+    ]
     path = os.path.join(index_dir, "manifest")
     os.makedirs(path, exist_ok=True)
     schema = pa.schema(
@@ -282,6 +305,55 @@ def _append_manifest_rows(index_dir: str, rows: list[dict]) -> None:
     tmp = os.path.join(path, "." + name)
     pq.write_table(tbl, tmp)
     os.replace(tmp, os.path.join(path, name))
+
+
+# streaming-append idempotency ledger (streaming/incremental.py)
+_LEDGER = "_batch_ledger.json"
+
+
+def _read_ledger(index_dir: str) -> dict | None:
+    try:
+        with open(os.path.join(index_dir, _LEDGER)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def _commit_stats(index_dir: str, stats: dict) -> None:
+    """Write stats.json = ``stats`` with n_docs/avgdl rolled up from the
+    manifest: the one rollup of every commit (build, append, replayed
+    append). A shard with several rows (an uncommitted append that was
+    replayed) counts by its latest ``finished_unix``. Recomputed from
+    metadata, never read-modify-write, so replays and partial failures
+    converge — O(shards) driver work, never a rescan of docs_meta.
+
+    Ledger entries committed before appends wrote manifest rows carry
+    their batch's n_docs/sum_dl instead of rows; they still count."""
+    latest: dict[int, dict] = {}
+    for r in _read_manifest_rows(index_dir):
+        s = int(r["shard"])
+        if s not in latest or r["finished_unix"] > latest[s]["finished_unix"]:
+            latest[s] = r
+    counts = list(latest.values())
+    ledger = _read_ledger(index_dir)
+    if ledger is not None:
+        counts += [b for b in ledger["batches"].values() if "n_docs" in b]
+    n = sum(int(c["n_docs"]) for c in counts)
+    sum_dl = sum(int(c["sum_dl"]) for c in counts)
+    stats.update(n_docs=n, avgdl=(sum_dl / n) if n else 0.0)
+    write_stats(index_dir, stats)
+
+
+def _remove_index(index_dir: str) -> None:
+    """build_index(resume=False) before it writes: remove the index's own
+    tables and records — never the directory itself or any other entry
+    in it (e.g. a stream's _stream_checkpoint)."""
+    for name in ("blocks", "docs_meta", "lexicon", "lexicon_tmp", "manifest", _LEDGER):
+        path = os.path.join(index_dir, name)
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        elif os.path.exists(path):
+            os.remove(path)
 
 
 # driver-side lexicon merge threshold: when the delta's block-row count
@@ -683,6 +755,12 @@ def build_index(
 ) -> IndexCatalog:
     """Build (or resume) the blocked index under ``index_dir``.
 
+    resume=True builds only the shards that have no manifest row yet;
+    every committed shard, from a build or a streaming append, stays.
+    resume=False starts a new index: it first removes blocks/,
+    docs_meta/, lexicon/, lexicon_tmp/, manifest/ and the append ledger
+    (so appended batches go too), and nothing else under ``index_dir``.
+
     tokenizer: "pandas" (the Arrow pandas_udf with HTML unescape; the
     same-window A/B in BENCH.md round 4 measured the JVM regexp path
     slower at both parallelism levels) or "sql" (pure-JVM regexp,
@@ -691,7 +769,9 @@ def build_index(
     t_start = time.time()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    prior = _read_manifest_rows(index_dir) if resume else []
+    if not resume:
+        _remove_index(index_dir)
+    prior = _read_manifest_rows(index_dir)
     if prior:
         rec_codec = prior[0]["codec"]
         rec_block = int(prior[0]["block_size"])
@@ -711,12 +791,10 @@ def build_index(
     try:
         if prior:
             # adopt the recorded shard geometry: doc_id->shard must not
-            # move for already-committed shards (manifest is the backup
-            # authority if the attempt died before stats.json landed)
-            try:
-                shard_size = int(read_stats(index_dir)["shard_size"])
-            except FileNotFoundError:
-                shard_size = int(prior[0]["shard_size"])
+            # move for already-committed shards (the manifest, not
+            # stats.json: a rebuild that died before its stats.json
+            # landed left the old index's there)
+            shard_size = int(prior[0]["shard_size"])
         else:
             shard_size = max(1, -(-n_docs // num_shards))  # ceil
 
@@ -736,7 +814,6 @@ def build_index(
         done = {int(r["shard"]) for r in prior}
         pending = sorted(all_shards - done)
 
-        new_rows: list[dict] = []
         if pending:
             # docs actually tokenized in THIS pass: every auto rule sizes
             # against the pending shards' docs, not the full corpus — a
@@ -754,37 +831,19 @@ def build_index(
                 tokenizer=tokenizer, key_cols=key_cols, text_col=text_col,
                 mark=mark,
             )
-
-            build_sec = round(time.time() - t_start, 3)
-            now = time.time()
-            for s in pending:
-                nd, sdl, np_, nb = per_shard[s]
-                new_rows.append(
-                    {
-                        "shard": s, "n_docs": nd, "sum_dl": sdl,
-                        "n_postings": np_, "n_blocks": nb,
-                        "build_sec": build_sec, "finished_unix": now,
-                        "codec": codec, "block_size": block_size,
-                        "shard_size": shard_size,
-                    }
-                )
-            # manifest row lands only after the shard data is durable
-            _append_manifest_rows(index_dir, new_rows)
+            # manifest rows land only after the shard data is durable
+            _append_manifest_rows(
+                index_dir, per_shard, t_start,
+                codec=codec, block_size=block_size, shard_size=shard_size,
+            )
 
         # lexicon: fold ONLY the new shards into the existing table
         merge_lexicon(spark, index_dir, pending if prior else None)
         mark("lexicon_merge")
 
-        # corpus stats roll up from manifest rows — O(shards) driver work,
-        # never a rescan of docs_meta
-        all_rows = prior + new_rows
-        total_docs = sum(int(r["n_docs"]) for r in all_rows)
-        total_dl = sum(int(r["sum_dl"]) for r in all_rows)
-        write_stats(
+        _commit_stats(
             index_dir,
             {
-                "n_docs": total_docs,
-                "avgdl": (total_dl / total_docs) if total_docs else 0.0,
                 "codec": codec,
                 "block_size": block_size,
                 "shard_size": shard_size,

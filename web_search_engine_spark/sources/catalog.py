@@ -21,12 +21,15 @@ schema. Layout under <index_dir>/:
   stats.json   {n_docs, avgdl, codec, block_size, shard_size}
   manifest/    (shard, n_docs, sum_dl, n_postings, n_blocks, build_sec,
                finished_unix, codec, block_size, shard_size) — one row
-               per COMPLETED shard; the resume checkpoint AND the
-               corpus-stats rollup source (n_docs/avgdl aggregate from
-               these rows, never from a docs_meta rescan). Written
-               driver-side via pyarrow — a metadata commit, the same
-               way Iceberg writes manifest files.
-  _batch_ledger.json  streaming-append idempotency ledger (see
+               per COMMITTED shard, from a build or a streaming append
+               alike (a replayed append adds a later row for the same
+               shard, and the latest counts); the resume checkpoint AND
+               the one corpus-stats rollup source (n_docs/avgdl
+               aggregate from these rows, never from a docs_meta
+               rescan). Written driver-side via pyarrow — a metadata
+               commit, the same way Iceberg writes manifest files.
+  _batch_ledger.json  streaming-append idempotency ledger: next_base
+               and each batch's {base, committed} (see
                streaming/incremental.py).
 """
 

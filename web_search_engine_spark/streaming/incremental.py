@@ -18,21 +18,26 @@ Append semantics:
 
 Idempotency (exactly-once even under foreachBatch REPLAY): Spark can
 re-deliver a batch whose sink work partially completed before the
-checkpoint committed. The sink keeps its own ledger
-(<index>/_batch_ledger.json, atomic tmp+rename):
+checkpoint committed. Like a build, an append records its shards as
+rows of manifest/ (one row per shard, written once the shard data is
+durable); the sink's ledger (<index>/_batch_ledger.json, atomic
+tmp+rename) holds only what makes a replay safe — ``next_base`` and,
+per batch, ``{base, committed}``:
 
   - an INTENT entry {base} is recorded before any data write, so a
     replay reuses the same base and the dynamic partition overwrite
     rewrites the SAME shards wholesale (data writes are idempotent);
-  - the COMMIT entry {n_docs, sum_dl, committed: true} plus the bumped
-    next_base land in one atomic ledger write after all writes; a
-    replay of a committed batch is skipped outright;
+  - the COMMIT flag plus the bumped next_base land in one atomic ledger
+    write after all writes; a replay of a committed batch is skipped
+    outright;
   - a replay of an UNCOMMITTED batch rebuilds the lexicon from ALL
     blocks (the O(delta) merge is not idempotent — the crash window
     between lexicon swap and ledger commit would double-count df), and
-    corpus stats are always recomputed as manifest ⊕ committed-ledger
-    rollup, never read-modify-write — so every path converges to the
-    same state no matter where the previous attempt died.
+    its manifest rows are written again: corpus stats always come from
+    the build's one rollup (build_index._commit_stats), which counts
+    each shard by its latest row and is never read-modify-write — so
+    every path converges to the same state no matter where the previous
+    attempt died.
 
 Shard data goes through the build's own shard writer
 (build_index.write_shards): tokenize, blocks and docs_meta writes take
@@ -41,51 +46,41 @@ number of docs.
 
 Incremental maintenance is O(batch), not O(index): the lexicon merge
 folds only the new shards' blocks into the existing table
-(build_index.merge_lexicon — additive df/nblocks, max max_tf), batch
-Σdl is the sum of the shared writer's per-shard counts, and n_docs /
-avgdl roll up from per-shard manifest rows + ledger entries (driver-
-side metadata, no full-table aggregation per micro-batch).
+(build_index.merge_lexicon — additive df/nblocks, max max_tf), and
+n_docs / avgdl roll up from per-shard manifest rows (driver-side
+metadata, no full-table aggregation per micro-batch).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.postings import assign_doc_ids_counted
 from ..plans.build_index import (
+    _LEDGER,
+    _append_manifest_rows,
+    _commit_stats,
     _pending_bytes,
+    _read_ledger,
     _read_manifest_rows,
     merge_lexicon,
     write_shards,
 )
-from ..sources.catalog import read_stats, write_stats
+from ..sources.catalog import read_stats
 
 SOURCE_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
-_LEDGER = "_batch_ledger.json"
-
-
-def _ledger_path(index_dir: str) -> str:
-    return os.path.join(index_dir, _LEDGER)
-
-
-def _read_ledger(index_dir: str) -> dict | None:
-    try:
-        with open(_ledger_path(index_dir)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
 
 def _write_ledger(index_dir: str, ledger: dict) -> None:
-    tmp = _ledger_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
+    path = os.path.join(index_dir, _LEDGER)
+    with open(path + ".tmp", "w") as f:
         json.dump(ledger, f, indent=1)
-    os.replace(tmp, _ledger_path(index_dir))  # atomic commit
+    os.replace(path + ".tmp", path)  # atomic commit
 
 
 def _init_ledger(index_dir: str, shard_size: int) -> dict:
@@ -95,23 +90,6 @@ def _init_ledger(index_dir: str, shard_size: int) -> dict:
     shards = [int(r["shard"]) for r in _read_manifest_rows(index_dir)]
     next_base = (max(shards) + 1) * shard_size if shards else 0
     return {"next_base": next_base, "batches": {}}
-
-
-def _refresh_stats(index_dir: str, ledger: dict, stats: dict) -> None:
-    """stats.json = rollup(manifest shards) ⊕ rollup(committed batches).
-
-    Recomputed from metadata on every append (idempotent — never
-    read-modify-write, so replays and partial failures converge).
-    """
-    rows = _read_manifest_rows(index_dir)
-    n = sum(int(r["n_docs"]) for r in rows)
-    sdl = sum(int(r["sum_dl"]) for r in rows)
-    for b in ledger["batches"].values():
-        if b.get("committed"):
-            n += int(b["n_docs"])
-            sdl += int(b["sum_dl"])
-    stats.update(n_docs=n, avgdl=(sdl / n) if n else 0.0)
-    write_stats(index_dir, stats)
 
 
 def append_batch(
@@ -134,6 +112,7 @@ def append_batch(
     STATIC overwrites, wiping the existing shards (found by driving the
     surface: a fresh session's stream ingest erased the seed index).
     """
+    t_start = time.time()
     spark = batch.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     stats = read_stats(index_dir)
@@ -151,7 +130,7 @@ def append_batch(
     if entry is not None and entry.get("committed"):
         # replayed after full commit: data, lexicon and ledger are all
         # final — just make stats.json consistent and skip
-        _refresh_stats(index_dir, ledger, stats)
+        _commit_stats(index_dir, stats)
         return 0
     is_replay = entry is not None
 
@@ -164,9 +143,9 @@ def append_batch(
     docs, n_new, cached_src = assign_doc_ids_counted(batch, list(key_cols))
     try:
         if n_new == 0:
-            entry.update(committed=True, n_docs=0, sum_dl=0)
+            entry.update(committed=True)
             _write_ledger(index_dir, ledger)
-            _refresh_stats(index_dir, ledger, stats)
+            _commit_stats(index_dir, stats)
             return 0
         docs = docs.withColumn("doc_id", (F.col("doc_id") + base).cast("long"))
         docs = docs.withColumn("shard", (F.col("doc_id") / shard_size).cast("int"))
@@ -181,9 +160,13 @@ def append_batch(
             codec=codec, block_size=block_size, shard_size=shard_size,
             tokenizer=tokenizer, key_cols=key_cols, text_col=text_col,
         )
-        sum_dl = sum(sdl for _nd, sdl, _np, _nb in per_shard.values())
     finally:
         cached_src.unpersist()
+    # as in build_index: manifest rows once the shard data is durable
+    _append_manifest_rows(
+        index_dir, per_shard, t_start,
+        codec=codec, block_size=block_size, shard_size=shard_size,
+    )
 
     # O(delta) lexicon fold for fresh batches; a REPLAY of an
     # uncommitted batch may have already folded its delta in the crashed
@@ -191,10 +174,10 @@ def append_batch(
     merge_lexicon(spark, index_dir, None if is_replay else new_shards)
 
     next_base = ((base + n_new - 1) // shard_size + 1) * shard_size
-    entry.update(committed=True, n_docs=int(n_new), sum_dl=sum_dl)
+    entry.update(committed=True)
     ledger["next_base"] = max(int(ledger["next_base"]), next_base)
     _write_ledger(index_dir, ledger)  # single atomic commit point
-    _refresh_stats(index_dir, ledger, stats)
+    _commit_stats(index_dir, stats)
     return n_new
 
 
