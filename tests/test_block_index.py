@@ -1042,10 +1042,11 @@ def _routes(spark, index_dir, queries, mode, topk, monkeypatch):
     for bound in (10**18, -1):
         with monkeypatch.context() as m:
             m.setattr(S, "DRIVER_MAX_POSTINGS", bound)
+            spark_route = _spark_route_calls(m)
             out.append(batch_score(IndexCatalog(spark, index_dir), queries, mode, topk))
+            assert bool(spark_route) == (bound < 0)
     driver, spark_df = out
     assert _is_local_relation(driver)
-    assert not _is_local_relation(spark_df)
     assert driver.schema == spark_df.schema
     return driver, spark_df
 
@@ -1104,7 +1105,7 @@ def test_batch_score_routes_agree_on_small_and_empty_answers(
 ):
     """topk above the match count returns every match on both routes;
     an all-absent call returns an empty frame with the Spark route's
-    schema, with no Spark job."""
+    schema, with no Spark job on either route."""
     queries = [("rare", "manhattan"), ("pair", "manhattan project")]
     driver, spark_df = _routes(spark, index_dir, queries, "AND", 500, monkeypatch)
     got = _canon(driver.collect())
@@ -1118,6 +1119,7 @@ def test_batch_score_routes_agree_on_small_and_empty_answers(
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None))
     driver.collect()
+    spark_df.collect()
     assert len(tracker.getJobIdsForGroup(None)) == before
 
 
@@ -1158,3 +1160,184 @@ def test_serving_and_batch_driver_route_score_alike(
                 assert score.hex() == batch[qid, doc].hex(), (qid, q, doc)
                 n_shared += 1
     assert n_shared >= (300 if mode == "OR" else 100)
+
+
+# -- the relational path over a catalog -------------------------------------
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _in_cache(spark, df) -> bool:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+def test_probe_lexicon_reads_a_parquet_lexicon_without_a_job(
+    spark, index_dir, oracle, monkeypatch
+):
+    """probe_lexicon over IndexCatalog.lexicon(), a bare parquet table,
+    reads df with pyarrow from the files the frame lists: no Spark job.
+    Over a derived frame, or when the pyarrow read raises, it runs the
+    Spark probe and returns the same dict."""
+    import pyarrow.dataset as pads
+
+    from web_search_engine_spark.operators.postings import lexicon_df
+    from web_search_engine_spark.plans.query import probe_lexicon
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    cat = IndexCatalog(spark, index_dir)
+    lex = cat.lexicon()
+    terms = ["manhattan", "policy", "the", "zzzabsent", "policy"]
+    want = {t: oracle.df[t] for t in terms if t in oracle.df}
+    assert len(want) == 3
+    j0 = _next_job_id(spark)
+    assert probe_lexicon(lex, terms) == want
+    assert _next_job_id(spark) == j0
+
+    derived = lexicon_df(blocks_to_postings(cat.blocks(), codec=cat.codec))
+    j0 = _next_job_id(spark)
+    assert probe_lexicon(derived, terms) == want
+    assert _next_job_id(spark) > j0
+
+    def unreadable(*args, **kwargs):
+        raise OSError("no local filesystem for the index path")
+
+    monkeypatch.setattr(pads, "dataset", unreadable)
+    j0 = _next_job_id(spark)
+    assert probe_lexicon(lex, terms) == want
+    assert _next_job_id(spark) > j0
+
+
+def test_relational_one_query_call_runs_three_jobs(spark, index_dir):
+    """A warm relational one-query call, made as the refresh benchmark
+    makes it (cached relational postings, the catalog's doc_stats and
+    lexicon), runs at most 3 jobs and 4 stages, construct plus collect:
+    no lexicon probe, no query-term broadcast, no docs_meta scan, no
+    window exchange."""
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    sc = spark.sparkContext
+    cat = IndexCatalog(spark, index_dir)
+    rel = blocks_to_postings(cat.blocks(), codec=cat.codec).cache()
+
+    def call():
+        return _canon(score_queries(
+            rel, cat.doc_stats(), cat.n_docs, cat.avgdl,
+            [("q3", "manhattan project")], "OR", 10, lexicon=cat.lexicon(),
+        ).collect())
+
+    try:
+        want = call()  # opens the handles and fills both caches
+        assert len(want) == 10
+        j0 = _next_job_id(spark)
+        assert call() == want
+        j1 = _next_job_id(spark)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        stages = sum(len(tracker.getJobInfo(j).stageIds) for j in range(j0, j1))
+        assert j1 - j0 <= 3 and stages <= 4, (j1 - j0, stages)
+    finally:
+        rel.unpersist()
+        cat.refresh()
+
+
+def test_empty_relational_answers_run_no_job(spark, index_dir):
+    """An answer known to be empty when the plan is made (no query
+    token, or no query term in the lexicon) is an empty Arrow
+    LocalRelation with the schema of a non-empty answer: its collect
+    starts no job, under the one-query top-k and the per-query window
+    alike."""
+    from web_search_engine_spark.plans.query import boolean_search
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    cat = IndexCatalog(spark, index_dir)
+    postings = blocks_to_postings(cat.blocks(), codec=cat.codec)
+    lex, stats = cat.lexicon(), cat.doc_stats()
+
+    def call(queries, mode):
+        return score_queries(
+            postings, stats, cat.n_docs, cat.avgdl, queries, mode, 10, lexicon=lex
+        )
+
+    schema = call([("q3", "manhattan project")], "OR").schema
+    for queries in (
+        [("none", "zzzabsent qqqmissing")],
+        [("a", "zzzabsent"), ("b", "qqqmissing")],
+        [("blank", "  ")],
+    ):
+        for mode in ("OR", "AND"):
+            df = call(queries, mode)
+            assert df.schema == schema
+            j0 = _next_job_id(spark)
+            assert df.collect() == []
+            assert _next_job_id(spark) == j0, (queries, mode)
+    for mode in ("OR", "AND"):
+        df = boolean_search(postings, "  ", mode)
+        j0 = _next_job_id(spark)
+        assert df.collect() == []
+        assert _next_job_id(spark) == j0, mode
+    cat.refresh()
+
+
+def test_catalog_doc_stats_cache_is_released_by_refresh(spark, index_dir):
+    """doc_stats() is memoized and cached lazily: making it runs no job,
+    the first query fills the cache, and refresh() releases it."""
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    cat = IndexCatalog(spark, index_dir)
+    cat.docs_meta()  # the table handle's schema read is a job of its own
+    j0 = _next_job_id(spark)
+    ds = cat.doc_stats()
+    assert _next_job_id(spark) == j0
+    assert cat.doc_stats() is ds and _in_cache(spark, ds)
+    assert ds.count() == cat.n_docs == 400
+    cat.refresh()
+    assert not _in_cache(spark, ds)
+    assert cat.doc_stats() is not ds
+    cat.refresh()
+
+
+def test_catalog_doc_stats_follow_the_snapshot(spark, tmp_path):
+    """A catalog's cached doc_stats stays pinned to the docs_meta files
+    it listed, and a catalog opened after an append sees every appended
+    doc while an older catalog still holds its cache: an append landed
+    by another writer (the files change under the index with no Spark
+    write from this session), then one written from this session."""
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+    from web_search_engine_spark.streaming.incremental import append_batch
+
+    pdf = generate_corpus_pdf(200, 31)
+    part = [
+        spark.createDataFrame(pdf[a:b].reset_index(drop=True))
+        for a, b in ((0, 100), (100, 160), (160, 200))
+    ]
+    d, other = str(tmp_path / "index"), str(tmp_path / "other")
+    build_index(spark, part[0], d, num_shards=2)
+    shutil.copytree(d, other)
+
+    def ids(cat):
+        return sorted(r["doc_id"] for r in cat.doc_stats().collect())
+
+    def on_disk():
+        meta = spark.read.parquet(os.path.join(d, "docs_meta"))
+        return sorted(r["doc_id"] for r in meta.collect())
+
+    cats = [IndexCatalog(spark, d)]
+    pinned = [ids(cats[0])]
+    assert len(pinned[0]) == 100
+    assert append_batch(spark, part[1], other, batch_id=0) == 60
+    shutil.rmtree(d)
+    shutil.copytree(other, d)
+    try:
+        for batch_id, n_docs in ((None, 160), (1, 200)):
+            if batch_id is not None:
+                assert append_batch(spark, part[2], d, batch_id=batch_id) == 40
+            cats.append(IndexCatalog(spark, d))
+            pinned.append(ids(cats[-1]))
+            assert pinned[-1] == on_disk() and len(pinned[-1]) == cats[-1].n_docs == n_docs
+            assert [ids(c) for c in cats] == pinned
+    finally:
+        for c in cats:
+            c.refresh()

@@ -6,6 +6,7 @@ plus rank-identity on the reference query set (searcher.py:254-262).
 """
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -97,6 +98,97 @@ def test_rank_identity_reference_queries(built, mode):
         for (rank, doc_id, score), (odoc, oscore) in zip(got, want):
             assert doc_id == odoc, (qid, mode, rank, doc_id, odoc)
             assert math.isclose(score, oscore, rel_tol=1e-9), (qid, doc_id)
+
+
+@pytest.mark.parametrize("mode", ["OR", "AND"])
+def test_one_query_calls_match_the_multi_query_call(built, mode):
+    """Each reference query asked alone, whose top-k is a global
+    orderBy().limit(), ranks as the multi-query call's per-query window
+    ranks it, and as the oracle does, through a tie at the rank-10
+    boundary: q11's 10th and 11th docs score equal."""
+    postings, stats, n, avgdl, oracle = built
+
+    def ranked(queries):
+        res = score_queries(postings, stats, n, avgdl, queries, mode=mode, topk=10)
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 6))
+            for r in res.collect()
+        )
+
+    multi = ranked(REFERENCE_QUERIES)
+    tie = oracle.search("u.s. policy", mode=mode, topk=11)
+    assert tie[9][1] == tie[10][1]
+    for qid, query in REFERENCE_QUERIES:
+        alone = ranked([(qid, query)])
+        assert alone == [r for r in multi if r[0] == qid], (qid, mode)
+        want = oracle.search(query, mode=mode, topk=10)
+        assert [(rank, d) for _, rank, d, _ in alone] == [
+            (rank, d) for rank, (d, _) in enumerate(want, 1)
+        ], (qid, mode)
+        for (*_, score), (_, oscore) in zip(alone, want):
+            assert math.isclose(score, oscore, abs_tol=1e-6), (qid, mode)
+
+
+def test_one_query_call_with_terms_sql_cannot_quote(spark):
+    """A one-query call whose terms hold a quote or a backslash keeps
+    the query-term broadcast; it ranks as the same query does in a
+    multi-query call and alone without those terms."""
+    postings = spark.createDataFrame(
+        [("it's", 0, 2), ("it's", 1, 1), ("a\\b", 1, 3), ("x", 2, 1), ("x", 0, 1)],
+        "term string, doc_id long, tf long",
+    )
+    stats = spark.createDataFrame([(0, 5), (1, 3), (2, 4)], "doc_id long, dl long")
+
+    def ranked(queries):
+        res = score_queries(postings, stats, 3, 4.0, queries, topk=10)
+        return sorted(
+            (r["rank"], r["doc_id"], round(r["score"], 6))
+            for r in res.collect() if r["query_id"] == "q"
+        )
+
+    for query in ("it's", "it's a\\b x", "x"):
+        alone = ranked([("q", query)])
+        assert alone and alone == ranked([("q", query), ("other", "x")]), query
+
+
+def _executed_nodes(df) -> list[str]:
+    """Collect ``df``, then list its executed plan's node classes, query
+    stages included, without the plans of the cached relations it reads
+    (an InMemoryTableScan is a leaf)."""
+    df.collect()
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        out.append(name)
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_one_query_call_ranks_through_take_ordered(built):
+    """One query id: the top-k is a TakeOrderedAndProject, and the rank
+    window over its output adds no exchange. Several: the per-query
+    window, behind one more Exchange (on query_id) than the one-query
+    plan has. These postings are hash-partitioned on doc_id, so their
+    aggregation needs no exchange of its own."""
+    postings, stats, n, avgdl, _ = built
+    one = score_queries(postings, stats, n, avgdl, [("q3", "manhattan project")], topk=10)
+    nodes = _executed_nodes(one)
+    window = nodes.index("WindowExec")
+    assert nodes[window + 1] == "TakeOrderedAndProjectExec", " ".join(nodes)
+    assert nodes.count("ShuffleExchangeExec") == 0, " ".join(nodes)
+    multi = score_queries(postings, stats, n, avgdl, REFERENCE_QUERIES[:3], topk=10)
+    nodes = _executed_nodes(multi)
+    assert "TakeOrderedAndProjectExec" not in nodes and "WindowExec" in nodes
+    assert nodes.count("ShuffleExchangeExec") == 1, " ".join(nodes)
+    plan = multi._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"Window \[row_number\(\) windowspecdefinition\(query_id", plan)
 
 
 @pytest.mark.parametrize("mode", ["AND", "OR"])

@@ -7,13 +7,32 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from web_search_engine_spark.streaming.windows import (
-    sessionize_batch_oracle,
     sessionize_stream,
     stream_windowed_counts,
     windowed_event_counts,
 )
 
 EVENTS = "/root/testdata/sf0.01/events.parquet"
+
+
+def sessionize_batch_oracle(
+    events: pd.DataFrame, gap_seconds: int = 1800
+) -> list[tuple]:
+    """Pure-pandas sessionization oracle (CLOSED sessions only) for
+    tests: -> [(user_id, start, end, n_events, sum_value)]."""
+    out = []
+    for uid, grp in events.sort_values("ts").groupby("user_id"):
+        start = last = None
+        n, sv = 0, 0.0
+        for t, v in zip(grp["ts"], grp["value"]):
+            if start is None:
+                start, last, n, sv = t, t, 1, float(v)
+            elif (t - last).total_seconds() > gap_seconds:
+                out.append((uid, start, last, n, sv))
+                start, last, n, sv = t, t, 1, float(v)
+            else:
+                last, n, sv = t, n + 1, sv + float(v)
+    return out
 
 
 def test_stream_windowed_counts_match_batch(spark, tmp_path):

@@ -126,13 +126,6 @@ def raw_decode(data: bytes) -> np.ndarray:
     return np.frombuffer(data, dtype="<u4").astype(np.int64)
 
 
-def encode_block(docids: np.ndarray, freqs: np.ndarray, base: int, codec: str):
-    """Encode one block -> (doc_bytes, freq_bytes)."""
-    if codec == "varbyte":
-        return encode_docids(docids, base), encode_freqs(freqs)
-    return raw_encode(docids), raw_encode(freqs)
-
-
 def decode_block(doc_bytes: bytes, freq_bytes: bytes, base: int, codec: str):
     """Decode one block -> (docids int64, freqs int64)."""
     if codec == "varbyte":

@@ -136,8 +136,8 @@ def _dl_agg(pending_docs: int, n_postings: int | None, parallelism: int) -> str:
     structurally anti-scaling at high parallelism.
     "repartition" — hash-repartition the 16-byte (doc_id, tf) projection
     by doc_id FIRST: a constant |postings| exchange, agg maps shrinking
-    with P (1.04 vs 0.46 pair efficiency 4->16 cores,
-    scripts/probe_docsmeta.py).
+    with P (1.04 vs 0.46 pair efficiency 4->16 cores; BENCH.md,
+    "docs_meta decomposition").
 
     Partial wins only while it still reduces the exchange
     _DL_AGG_MIN_REDUCTION-fold. Without a postings count (more than

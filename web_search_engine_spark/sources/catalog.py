@@ -99,6 +99,8 @@ class IndexCatalog:
     each table is first touched. After appending to the index (e.g.
     streaming ingest), call ``refresh()`` — or construct a new catalog,
     which is what build_index returns — to pick up new files.
+    ``doc_stats()`` is also held in Spark's cache; ``refresh()`` releases
+    it.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str):
@@ -107,10 +109,14 @@ class IndexCatalog:
         self.stats = read_stats(index_dir)
         self._tables: dict[str, DataFrame] = {}
         self._snapshot = None
+        self._doc_stats: DataFrame | None = None
 
     def refresh(self) -> "IndexCatalog":
-        """Drop memoized table handles and the driver-side snapshot +
-        re-read stats.json."""
+        """Drop memoized table handles, the driver-side snapshot and the
+        cached doc_stats (unpersisted) + re-read stats.json."""
+        if self._doc_stats is not None:
+            self._doc_stats.unpersist()
+            self._doc_stats = None
         self._tables.clear()
         self._snapshot = None
         self.stats = read_stats(self.index_dir)
@@ -178,7 +184,33 @@ class IndexCatalog:
         return self._table("docs_meta")
 
     def doc_stats(self) -> DataFrame:
-        return self.docs_meta().select("doc_id", "dl")
+        """(doc_id, dl) of the docs_meta files this catalog lists, cached
+        and memoized until refresh(), which unpersists it.
+
+        The cache is lazy: the first query that reads the frame fills it
+        as part of its own job, and later queries skip the docs_meta scan.
+        The frame reads the listed files by name, not the directory, for
+        two reasons. Spark's cache manager matches a plan by its file
+        index's root paths, so a directory-rooted cache would answer a
+        newer catalog's identical plan with this snapshot's rows, and miss
+        every doc appended since. And a write into docs_meta/ from this
+        session re-lists a cached directory in place, which would unpin
+        the snapshot; re-listing named files gives back the same files.
+        Catalogs over the same files share one cache entry, and the first
+        refresh() of any of them releases it; a catalog dropped without
+        refresh() keeps it until spark.catalog.clearCache(). Storage, in
+        compressed columnar batches (MEMORY_AND_DISK): 2.3 bytes per doc
+        measured at 6,000 docs and 5.9 at 400; two uncompressed longs
+        would take 16. Listing more than
+        spark.sql.sources.parallelPartitionDiscovery.threshold (32) files
+        runs one listing job on the first call."""
+        if self._doc_stats is None:
+            meta = self.docs_meta()
+            schema = meta.select("doc_id", "dl").schema
+            self._doc_stats = (
+                self.spark.read.schema(schema).parquet(*meta.inputFiles()).cache()
+            )
+        return self._doc_stats
 
     def manifest(self) -> DataFrame:
         return self._table("manifest")

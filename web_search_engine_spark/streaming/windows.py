@@ -227,23 +227,3 @@ def sessionize_stream(
         .start()
     )
     q.awaitTermination()
-
-
-def sessionize_batch_oracle(
-    events: pd.DataFrame, gap_seconds: int = 1800
-) -> list[tuple]:
-    """Pure-pandas sessionization oracle (CLOSED sessions only) for
-    tests: -> [(user_id, start, end, n_events, sum_value)]."""
-    out = []
-    for uid, grp in events.sort_values("ts").groupby("user_id"):
-        start = last = None
-        n, sv = 0, 0.0
-        for t, v in zip(grp["ts"], grp["value"]):
-            if start is None:
-                start, last, n, sv = t, t, 1, float(v)
-            elif (t - last).total_seconds() > gap_seconds:
-                out.append((uid, start, last, n, sv))
-                start, last, n, sv = t, t, 1, float(v)
-            else:
-                last, n, sv = t, n + 1, sv + float(v)
-    return out
