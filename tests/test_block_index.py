@@ -631,6 +631,29 @@ def test_rebuild_starts_a_new_index(spark, tmp_path):
     _assert_stats_match_tables(spark, d, 150)
 
 
+def test_empty_resume_starts_a_clean_index(spark, tmp_path):
+    """build_index(resume=True) over an empty source commits an empty
+    index and drops the old index's manifest rows with its data: a
+    following append counts only its own docs."""
+    from web_search_engine_spark.plans.build_index import _read_manifest_rows
+    from web_search_engine_spark.streaming.incremental import append_batch
+
+    base, batch = _split_corpus(spark, 80, 60, seed=3)
+    d = str(tmp_path / "idx")
+    build_index(spark, base, d, block_size=16, num_shards=2)
+    assert len(_read_manifest_rows(d)) == 2
+    build_index(spark, base.limit(0), d, block_size=16, num_shards=2)
+    assert _read_manifest_rows(d) == []
+
+    assert append_batch(spark, batch, d, batch_id=0) == 20
+    _assert_stats_match_tables(spark, d, 20)
+    meta = spark.read.parquet(os.path.join(d, "docs_meta"))
+    appended = {r["shard"] for r in meta.select("shard").distinct().collect()}
+    manifest = _read_manifest_rows(d)
+    assert {r["shard"] for r in manifest} == appended
+    assert sum(r["n_docs"] for r in manifest) == 20
+
+
 def test_append_counts_batches_of_the_pre_manifest_layout(spark, tmp_path):
     """An index appended to before appends wrote manifest rows has only
     its build's rows, and its committed ledger entries carry the batch's
@@ -1128,10 +1151,9 @@ def test_serving_and_batch_driver_route_score_alike(
     spark, index_dir, monkeypatch, mode
 ):
     """SearchEngine.search and batch_score's driver route give a doc the
-    same score, bit for bit: both score through term_impacts and add in
-    sorted-term order. Only the rank key differs (raw vs rounded), so
-    the docs both return are compared, over random queries with
-    repeated and absent terms."""
+    same score, bit for bit, and return the same ranked doc_id lists:
+    both run one executor under one rank key. Compared over random
+    queries with repeated and absent terms."""
     import random
 
     from web_search_engine_spark.sources.catalog import IndexCatalog
@@ -1153,9 +1175,14 @@ def test_serving_and_batch_driver_route_score_alike(
     rows = batch_score(IndexCatalog(spark, index_dir), queries, mode, 10).collect()
     assert not spark_route
     batch = {(r["query_id"], r["doc_id"]): r["score"] for r in rows}
+    ranked = {}
+    for r in sorted(rows, key=lambda r: r["rank"]):
+        ranked.setdefault(r["query_id"], []).append(r["doc_id"])
     n_shared = 0
     for qid, q in queries:
-        for doc, score in eng.search(q, mode, 10):
+        hits = eng.search(q, mode, 10)
+        assert [doc for doc, _ in hits] == ranked.get(qid, []), (qid, q)
+        for doc, score in hits:
             if (qid, doc) in batch:
                 assert score.hex() == batch[qid, doc].hex(), (qid, q, doc)
                 n_shared += 1

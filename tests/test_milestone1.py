@@ -264,9 +264,9 @@ def test_bm25_twin_bit_identical(spark):
         bm25_idf_strict,
         bm25_weighted_score_expr,
         bm25_weighted_scores,
+        round_score,
         strict_log,
     )
-    from web_search_engine_spark.plans.query import round_score
 
     def bits(xs):
         return [struct.pack("<d", float(x)) for x in xs]

@@ -141,5 +141,5 @@ def test_search_engine_sparse_dl_rank_identical(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(search_mod, "_DENSE_DL_MAX_OVERHEAD", 0)
     sparse_eng = SearchEngine(d)
-    assert isinstance(sparse_eng.dl, _SortedDL)
+    assert isinstance(sparse_eng.snapshot.dl(), _SortedDL)
     assert sparse_eng.search("manhattan project", "OR", 10) == want

@@ -27,6 +27,7 @@ import web_search_engine_spark.operators.wand as W
 import web_search_engine_spark.plans.search as search_mod
 from tests.oracle import OracleIndex
 from web_search_engine_spark.functions import codec as C
+from web_search_engine_spark.functions.bm25 import round_score
 from web_search_engine_spark.plans.search import SearchEngine, _DenseDL, _SortedDL
 
 OR_KERNELS = ("taat", "bmw_block", "daat")
@@ -207,18 +208,119 @@ def test_decoders_reject_a_truncated_payload(codec):
         _decode_arrow(batch, codec)
 
 
-def test_topk_by_score_threshold():
+def test_top_k_threshold():
     """The partition threshold keeps boundary ties and, with fewer than
     k positive slots, every positive slot — never a zero slot."""
     scores = np.array([0.0, 2.0, 1.0, 2.0, 0.0, 1.0, 3.0])
-    assert W._topk_by_score(scores, 3) == [(6, 3.0), (1, 2.0), (3, 2.0)]
-    assert W._topk_by_score(scores, 4) == [(6, 3.0), (1, 2.0), (3, 2.0), (2, 1.0)]
-    assert W._topk_by_score(scores, 50) == [
+    assert W.top_k(scores, 3) == [(6, 3.0), (1, 2.0), (3, 2.0)]
+    assert W.top_k(scores, 4) == [(6, 3.0), (1, 2.0), (3, 2.0), (2, 1.0)]
+    assert W.top_k(scores, 50) == [
         (6, 3.0), (1, 2.0), (3, 2.0), (2, 1.0), (5, 1.0)]
     ids = np.array([10, 11, 12, 13, 14, 15, 16])
-    assert W._topk_by_score(scores, 2, ids) == [(16, 3.0), (11, 2.0)]
-    assert W._topk_by_score(scores, 0) == []
-    assert W._topk_by_score(np.zeros(0), 5) == []
+    assert W.top_k(scores, 2, ids) == [(16, 3.0), (11, 2.0)]
+    assert W.top_k(scores, 0) == []
+    assert W.top_k(np.zeros(0), 5) == []
+    assert W.top_k(np.zeros(0), 5, np.zeros(0, dtype=np.int64)) == []
+
+
+def _contract(scores, topk, ids=None):
+    """The rank contract by brute force: positive slots sorted on
+    (-round_score(score), doc_id)."""
+    docs = range(len(scores)) if ids is None else ids.tolist()
+    hits = [(d, s) for d, s in zip(docs, scores.tolist()) if s > 0.0]
+    return sorted(hits, key=lambda h: (-round_score(h[1]), h[0]))[:topk]
+
+
+def _near_tie_scores(rng, n):
+    """n scores: about 40% zero slots, the rest drawn from a few 1e-6
+    quanta, so that many round equal. Some reprs end in 5 at the 7th
+    decimal (Spark rounds them up, Python's round() may not), and some
+    pairs of raw scores that round equal sit in reverse doc order."""
+    quanta = [rng.randint(1, 3_000_000) for _ in range(rng.randint(1, 6))]
+    out = []
+    for _ in range(n):
+        r = rng.random()
+        q = rng.choice(quanta)
+        if r < 0.4:
+            out.append(0.0)
+        elif r < 0.6:  # exactly halfway: repr ends in 5 at the 7th decimal
+            out.append(float(f"{q // 1_000_000}.{q % 1_000_000:06d}5"))
+        elif r < 0.9:  # inside the quantum, on either side of its middle
+            out.append(q / 1e6 + rng.uniform(-4.9e-7, 4.9e-7))
+        else:  # an exact duplicate of an earlier score
+            out.append(rng.choice(out) if out else 1.0)
+    return np.array(out, dtype=np.float64)
+
+
+def test_top_k_matches_the_sorted_contract():
+    """top_k equals the brute-force sort on (-round_score, doc_id) for
+    the dense form and the id-array form, for k below, at and above the
+    positive count, on near-tie arrays whose raw order rounding reverses
+    across rank k."""
+    from web_search_engine_spark.functions.bm25 import round_score as rs
+
+    rng = random.Random(13)
+    reversed_at_k = halfway = 0
+    for _ in range(300):
+        n = rng.randint(0, 60)
+        scores = _near_tie_scores(rng, n)
+        ids = np.array(rng.sample(range(10**6), n), dtype=np.int64)
+        n_pos = int((scores > 0).sum())
+        halfway += sum(rs(x) != round(x, 6) for x in scores.tolist())
+        for topk in {1, 2, 5, max(n_pos - 1, 1), n_pos, n_pos + 3}:
+            for form in (None, ids):
+                want = _contract(scores, topk, form)
+                assert W.top_k(scores, topk, form) == want, (scores, topk)
+                docs = range(n) if form is None else form.tolist()
+                raw = sorted(((d, x) for d, x in zip(docs, scores.tolist()) if x > 0),
+                             key=lambda h: (-h[1], h[0]))[:topk]
+                reversed_at_k += {d for d, _ in raw} != {d for d, _ in want}
+    assert reversed_at_k > 20 and halfway > 100
+
+
+def _rank_flip_entries():
+    """Two terms over docs 0..19 with equal impacts (so AND == OR and
+    each sum is exact: x/2 + x/2 == x) whose totals round equal in
+    clusters where the larger raw score has the larger doc_id: the raw
+    and rounded orders disagree at several ranks k."""
+    totals = np.linspace(1.0, 2.0, 20)  # fillers below the clusters
+    totals[[17, 3]] = 7.0000004, 7.0000001  # raw: 17, 3; rounded: 3, 17
+    totals[[12, 4]] = 6.0000005, 6.0000009  # both round half up to 6.000001
+    totals[[15, 8, 6]] = 5.0000004, 5.0000002, 5.0000001
+    totals[[19, 0]] = 3.0000004, 3.0000001
+    ids = np.arange(20, dtype=np.int64)
+    entries = [(t, 1.0, ids, totals / 2) for t in ("a", "b")]
+    return entries, totals
+
+
+def test_kernels_rank_on_the_rounded_key(monkeypatch):
+    """Where the raw and rounded orders disagree at rank k, every
+    kernel returns the contract's list: taat on the dense and on the
+    union accumulator, taat_and, vec_and, and bmw_block pruning one
+    block range per epoch."""
+    entries, totals = _rank_flip_entries()
+    ids = entries[0][2]
+    dls = np.full(20, 10.0)
+    dense, union = _DenseDL(ids, dls, 19), _SortedDL(ids, dls)
+    assert W._dense_dl_array(dense, entries) is not None
+    last = ids[3::4]
+    metas = [(last, np.maximum.reduceat(e[3], np.arange(0, 20, 4))) for e in entries]
+    monkeypatch.setattr(W, "_EPOCH_RANGES", 1)
+    n_flips = 0
+    for topk in range(1, 22):
+        want = _contract(totals, topk)
+        got = {
+            "taat_dense": W.taat_or(entries, dense, topk),
+            "taat_union": W.taat_or(entries, union, topk),
+            "taat_and": W.taat_and(entries, union, topk),
+            "vec_and": W.intersect_and(entries, topk),
+            "bmw_block": W.blockmax_taat_or(entries, metas, topk),
+        }
+        for kernel, hits in got.items():
+            assert hits == want, (kernel, topk)
+        raw = np.argsort(-totals, kind="stable")[:topk].tolist()
+        n_flips += set(raw) != {d for d, _ in want}
+    assert n_flips >= 3
 
 
 # --- SearchEngine over a hand-written index directory -----------------
@@ -290,7 +392,11 @@ def _queries(seed, n):
             for _ in range(n)]
 
 
-def _assert_matches_oracle(got, want):
+def _assert_matches_oracle(got, hits, topk):
+    """``got`` against the oracle's full hit list ranked on the rank
+    contract (the oracle ranks on the raw score, and two equal BM25
+    scores summed in different orders can differ in the last bit)."""
+    want = sorted(hits, key=lambda h: (-round_score(h[1]), h[0]))[:topk]
     assert [d for d, _ in got] == [d for d, _ in want]
     for (_, gs), (_, ws) in zip(got, want):
         assert gs == pytest.approx(ws, rel=1e-9)
@@ -304,7 +410,8 @@ def test_engine_nondefault_bm25_params_match_oracle(hand_index):
         for mode in ("OR", "AND"):
             for k1, b in ((1.2, 0.75), (1.5, 0.6), (0.9, 0.0), (2.0, 1.0)):
                 got = eng.search(q, mode, 10, k1=k1, b=b)
-                _assert_matches_oracle(got, oracle.search(q, mode, 10, k1=k1, b=b))
+                hits = oracle.search(q, mode, 10**6, k1=k1, b=b)
+                _assert_matches_oracle(got, hits, 10)
                 n_nonempty += bool(got)
     assert n_nonempty > 100
 
@@ -324,7 +431,8 @@ def test_engine_skips_block_ids_past_docs_meta(hand_index, tmp_path):
     tbl = pq.read_table(meta)
     pq.write_table(tbl.filter(pc.not_equal(tbl["doc_id"], last)), meta)
     eng = SearchEngine(d)
-    assert isinstance(eng.dl, _DenseDL) and len(eng.dl.arr) == last
+    dl = eng.snapshot.dl()
+    assert isinstance(dl, _DenseDL) and len(dl.arr) == last
     q = " ".join(sorted(set(words))[:3])
     n_hits = 0
     for mode, kernels in (("OR", OR_KERNELS), ("AND", AND_KERNELS)):

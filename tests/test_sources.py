@@ -27,7 +27,7 @@ def test_tsv_corpus_reference_semantics(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(spark, src, idx, num_shards=2, tokenizer="sql")
     eng = SearchEngine(idx)
-    assert eng.n_docs == 4  # dl=0 doc counted, blank line not
+    assert eng.snapshot.n_docs == 4  # dl=0 doc counted, blank line not
     hits = eng.search("manhattan", "OR", 10)
     # line order is preserved by the dense-rank relabeling: the two
     # manhattan docs are lines 0 and 4 -> dense ids 0 and 3

@@ -24,7 +24,7 @@ def test_streaming_ingest_matches_full_semantics(spark, tmp_path):
     index_dir = str(tmp_path / "idx")
     build_index(spark, first, index_dir, block_size=16, num_shards=2)
     eng0 = SearchEngine(index_dir)
-    n0 = eng0.n_docs
+    n0 = eng0.snapshot.n_docs
     assert n0 == 150
 
     src_dir = str(tmp_path / "incoming")
@@ -36,7 +36,7 @@ def test_streaming_ingest_matches_full_semantics(spark, tmp_path):
     ingest_available(spark, src_dir, index_dir)
 
     eng1 = SearchEngine(index_dir)
-    assert eng1.n_docs == 300
+    assert eng1.snapshot.n_docs == 300
 
     # the streamed index must contain every streamed doc's tokens:
     # compare df for a probe term against a direct count over the union
@@ -52,7 +52,7 @@ def test_streaming_ingest_matches_full_semantics(spark, tmp_path):
     # restart-resume: running catch-up again must be a no-op
     ingest_available(spark, src_dir, index_dir)
     eng2 = SearchEngine(index_dir)
-    assert eng2.n_docs == 300
+    assert eng2.snapshot.n_docs == 300
     # and queries still work over the merged index
     hits = eng2.search("manhattan project", mode="OR", topk=5)
     assert len(hits) > 0
@@ -143,7 +143,8 @@ def test_cli_package(tmp_path):
 
 def _index_snapshot(index_dir):
     eng = SearchEngine(index_dir)
-    return eng.n_docs, round(eng.avgdl, 9), tuple(sorted(eng._df.items()))
+    snap = eng.snapshot
+    return snap.n_docs, round(snap.avgdl, 9), tuple(sorted(eng._df.items()))
 
 
 def test_append_batch_replay_paths_converge(spark, tmp_path):

@@ -21,7 +21,9 @@ expression per posting in plain Python floats.
 
 from __future__ import annotations
 
+import math
 import struct
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 from pyspark.sql import Column
@@ -203,3 +205,20 @@ def bm25_weighted_scores(
     if np.isscalar(weight) and weight == 1.0:
         return scores
     return np.asarray(weight, dtype=np.float64) * scores
+
+
+_SCORE_QUANTUM = Decimal("1e-6")
+
+
+def round_score(x: float) -> float:
+    """Spark's ``round(x, 6)`` of a double, in Python, bit for bit: the
+    rank key of every query path. Spark rounds BigDecimal.valueOf(x) —
+    the decimal string Double.toString gives, the shortest one that reads
+    back as x, which is Python's repr — HALF_UP to 6 places. Python's
+    round() is a different function: it rounds the exact binary value
+    half-even, and so differs from F.round on values whose repr ends in
+    5 at the 7th decimal."""
+    x = float(x)
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(_SCORE_QUANTUM, ROUND_HALF_UP))

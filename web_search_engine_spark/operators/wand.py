@@ -14,12 +14,15 @@ oracle every kernel is compared against. The distributed batch path for
 query SETS lives in plans/query.py; both produce rank-identical results
 (tested).
 
-Block-max pruning is rank-safe INCLUDING the (score desc, doc_id asc)
-tie policy: docid ranges are visited in increasing order, so a later
-candidate whose score merely EQUALS the current kth best can never enter
-the top-k (the incumbent has the smaller doc_id) — pruning when
-upper_bound <= theta is therefore exact, not approximate. Block upper
-bounds use
+One rank key: every kernel returns its top-k under the batch contract,
+round_score(score) desc then doc_id asc, with the raw score — the key
+plans.query.score_queries ranks on in Spark (round(score, 6)) — and
+every kernel ends in top_k, which computes it. Pruning stays exact under
+it: rounding moves a score by at most half its 1e-6 quantum, so a doc
+whose raw score is more than _ROUND_MARGIN below the k-th best raw score
+rounds to a strictly lower key than k docs already have, whatever its
+doc_id or the order docs are visited in. blockmax_taat_or skips only
+ranges whose upper bound is below that floor. Block upper bounds use
 ub = idf * (max_tf*(k1+1)) / (max_tf + k1*(1-b)) with the impacts' idf
 and association, a true bound because the omitted b*dl/avgdl term only
 grows the denominator (SURVEY.md §4) and the bound is increasing in tf;
@@ -30,14 +33,13 @@ impact.
 from __future__ import annotations
 
 import heapq
-from collections import Counter, OrderedDict
-from contextlib import suppress
+from collections import Counter
 
 import numpy as np
 
 from ..config import BM25_B, BM25_K1, DEFAULT_TOPK
 from ..functions import codec as C
-from ..functions.bm25 import bm25_idf_strict, bm25_weighted_scores
+from ..functions.bm25 import bm25_idf_strict, bm25_weighted_scores, round_score
 from ..functions.tokenizer import tokenize_query
 
 
@@ -126,37 +128,6 @@ class BlockCursor:
         return self.idf * (tf * (self.k1 + 1.0)) / denom
 
 
-class _TopK:
-    """Size-k min-heap keyed (score, -doc_id): among equal scores the
-    LARGEST doc_id is evicted first, so survivors match the engine's
-    (score desc, doc_id asc) policy."""
-
-    __slots__ = ("k", "heap")
-
-    def __init__(self, k: int):
-        self.k = k
-        self.heap: list[tuple[float, int, int]] = []
-
-    def offer(self, score: float, doc_id: int) -> None:
-        key = (score, -doc_id, doc_id)
-        if len(self.heap) < self.k:
-            heapq.heappush(self.heap, key)
-        elif key > self.heap[0]:
-            heapq.heapreplace(self.heap, key)
-
-    def theta(self) -> float:
-        return self.heap[0][0] if len(self.heap) >= self.k else float("-inf")
-
-    def full(self) -> bool:
-        return len(self.heap) >= self.k
-
-    def result(self) -> list[tuple[int, float]]:
-        return [
-            (doc_id, score)
-            for score, _negid, doc_id in sorted(self.heap, key=lambda t: (-t[0], t[2]))
-        ]
-
-
 def _score_tied(cursors, tied, d, dl_lookup, avgdl, weights):
     dl = float(dl_lookup[d])
     if dl <= 0.0:
@@ -168,10 +139,11 @@ def _score_tied(cursors, tied, d, dl_lookup, avgdl, weights):
 
 
 def daat_or_unpruned(cursors, weights, dl_lookup, avgdl, topk):
-    """Exhaustive DAAT OR — mirror of HW2/engine/daat_ranker.py:99-141."""
+    """Exhaustive DAAT OR — mirror of HW2/engine/daat_ranker.py:99-141;
+    every scored doc is collected and ranked by top_k."""
     heap = [(c.docid(), i) for i, c in enumerate(cursors) if not c.exhausted()]
     heapq.heapify(heap)
-    top = _TopK(topk)
+    docs, scores = [], []
     while heap:
         d, i = heapq.heappop(heap)
         tied = [i]
@@ -180,35 +152,32 @@ def daat_or_unpruned(cursors, weights, dl_lookup, avgdl, topk):
             tied.append(j)
         s = _score_tied(cursors, tied, d, dl_lookup, avgdl, weights)
         if s is not None:
-            top.offer(s, d)
+            docs.append(d)
+            scores.append(s)
         for idx in tied:
             nxt = cursors[idx].advance()
             if nxt is not None:
                 heapq.heappush(heap, (nxt, idx))
-    return top.result()
+    return top_k(np.array(scores, dtype=float), topk, np.array(docs, dtype=np.int64))
 
 
 def daat_and(cursors, weights, dl_lookup, avgdl, topk):
     """Intersection DAAT with galloping next_ge (HW2/engine/daat.py:21-59
-    shape), driven from the rarest term (O8 heuristic).
+    shape), driven from the rarest term (O8 heuristic); every scored doc
+    is collected and ranked by top_k.
 
     Cursor ADVANCEMENT order is df-ascending (cheapest intersection),
     but tied-term score summation stays in the callers' sorted-term
     cursor order: float addition is not associative, and the vectorized
     / relational kernels all sum per-term contributions in
     sorted-term order — AND scores must be bit-identical to them."""
-    if not cursors:
-        return []
-    order = sorted(range(len(cursors)), key=lambda i: cursors[i].df)
-    cs = [cursors[i] for i in order]
-    top = _TopK(topk)
-    d = cs[0].docid()
+    docs, scores = [], []
+    cs = sorted(cursors, key=lambda c: c.df)
+    d = cs[0].docid() if cs else None
     while d is not None:
         target = d
         for c in cs[1:]:
             nd = c.next_ge(target)
-            if nd is None:
-                return top.result()
             if nd != target:
                 target = nd
                 break
@@ -218,11 +187,12 @@ def daat_and(cursors, weights, dl_lookup, avgdl, topk):
                 cursors, range(len(cursors)), target, dl_lookup, avgdl, weights
             )
             if s is not None:
-                top.offer(s, target)
+                docs.append(target)
+                scores.append(s)
             d = cs[0].advance()
             continue
-        d = cs[0].next_ge(target)
-    return top.result()
+        d = None if target is None else cs[0].next_ge(target)
+    return top_k(np.array(scores, dtype=float), topk, np.array(docs, dtype=np.int64))
 
 
 # Below this many total postings across the query's terms, the
@@ -274,25 +244,44 @@ def _weighted(w, impacts):
     return impacts if w == 1.0 else w * impacts
 
 
-def _topk_by_score(scores, topk, ids=None):
-    """(score desc, doc_id asc) top-k of the POSITIVE slots of ``scores``
-    (zero = unmatched slot or dl=0 doc) as the kernels' return list;
-    slot i is doc ``ids[i]``, or doc i itself when ids is None (the
-    dense accumulator). np.partition finds the k-th score in O(n); only
-    the slots at or above it (boundary ties included) are lexsorted —
-    the full lexsort's output in O(n + t log t). With fewer than k
-    positive slots the k-th score is 0 and every positive slot ranks."""
+# a doc whose raw score is more than this below another's rounds
+# (round_score) to a strictly lower key: rounding moves a score by at
+# most half its 1e-6 quantum, plus float error
+_ROUND_MARGIN = 2e-6
+
+
+def top_k(scores, topk, ids=None):
+    """-> [(doc_id, score)]: the top-k POSITIVE slots of ``scores`` (zero
+    = unmatched slot or dl=0 doc) under the rank contract,
+    round_score(score) desc then doc_id asc, with the raw score. Slot i
+    is doc ``ids[i]``, or doc i itself when ids is None (the dense
+    accumulator).
+
+    np.partition finds the k-th best raw score in O(n); only positive
+    slots at most _ROUND_MARGIN below it can rank (with fewer than k
+    positive slots, every one). Those candidates are sorted by raw
+    score, and round_score runs only on one within _ROUND_MARGIN of a
+    raw-order neighbour, once per distinct score. Any other candidate's
+    raw score orders it against all the others as its rounded key
+    would, so it stays its key."""
     n = len(scores)
-    kth = n - min(topk, n)
-    if kth >= n:
+    if topk <= 0 or n == 0:
         return []
-    thr = np.partition(scores, kth)[kth]
-    cand = np.flatnonzero(scores >= thr if thr > 0.0 else scores > 0.0)
-    docs = cand if ids is None else ids[cand]
-    cand_scores = scores[cand]
-    # lexsort: last key is primary
-    order = np.lexsort((docs, -cand_scores))[:topk]
-    return [(int(docs[i]), float(cand_scores[i])) for i in order]
+    kth = n - min(topk, n)
+    floor = np.partition(scores, kth)[kth] - _ROUND_MARGIN
+    hit = np.flatnonzero(scores >= floor if floor > 0.0 else scores > 0.0)
+    s = scores[hit]
+    order = np.argsort(-s)
+    s = s[order]
+    docs = (hit if ids is None else ids[hit])[order]
+    close = s[:-1] - s[1:] <= _ROUND_MARGIN
+    near = np.append(close, False) | np.insert(close, 0, False)
+    key = s.copy()
+    if near.any():
+        values, inv = np.unique(s[near], return_inverse=True)
+        key[near] = np.array([round_score(v) for v in values.tolist()])[inv]
+    rank = np.lexsort((docs, -key))[:topk]
+    return list(zip(docs[rank].tolist(), s[rank].tolist()))
 
 
 def _dense_dl_array(dl_lookup, term_entries):
@@ -320,19 +309,12 @@ def _dense_dl_array(dl_lookup, term_entries):
 
 
 def _taat(term_entries, dl_lookup, topk, is_and):
-    """Shared body of taat_or / taat_and (see taat_or)."""
+    """Shared body of taat_or / taat_and (see taat_or): each doc's
+    weighted impacts added in term_entries order; slot i is doc ids[i],
+    or doc i itself when ids is None (the dense accumulator). AND zeroes
+    the docs missing a term."""
     if not term_entries:
         return []
-    scores, ids = taat_accumulate(term_entries, dl_lookup, is_and)
-    return _topk_by_score(scores, topk, ids)
-
-
-def taat_accumulate(term_entries, dl_lookup, is_and):
-    """The accumulation of taat_or / taat_and -> (scores, ids): each
-    doc's weighted impacts added in term_entries order; slot i is doc
-    ids[i], or doc i itself when ids is None (the dense accumulator).
-    Zero marks a slot with no result, and AND zeroes the docs missing a
-    term. term_entries must be non-empty."""
     dense = _dense_dl_array(dl_lookup, term_entries)
     if dense is None:
         ids = np.unique(np.concatenate([e[2] for e in term_entries]))
@@ -348,7 +330,7 @@ def taat_accumulate(term_entries, dl_lookup, is_and):
             nmatch[at] += 1
     if is_and:
         scores[nmatch < len(term_entries)] = 0.0
-    return scores, ids
+    return top_k(scores, topk, ids)
 
 
 def taat_or(term_entries, dl_lookup, topk):
@@ -399,20 +381,22 @@ def blockmax_taat_or(term_entries, term_blockmeta, topk):
     proceeds in EPOCHS: with the current theta, the upper bound of every
     remaining range (sum of the covering blocks' max-score bounds —
     computed with one searchsorted per term) selects the ranges that
-    could still beat the top-k; the first _EPOCH_RANGES survivors merge
+    could still reach the top-k; the first _EPOCH_RANGES survivors merge
     into maximal docid intervals and score through the taat_or
     accumulation (same sorted-term order, same impacts — bit-identical
-    scores); theta then rises and the next epoch re-prunes the
-    remainder. Hot queries where nothing prunes degrade to plain TAAT
-    plus a few searchsorted passes (no kernel cliff at the threshold);
+    scores) and join the kept candidates; theta, the k-th best raw
+    score kept, then rises, candidates more than _ROUND_MARGIN below it
+    are dropped, and the next epoch re-prunes the remainder. Hot
+    queries where nothing prunes degrade to plain TAAT plus a few
+    searchsorted passes (no kernel cliff at the threshold);
     score-skewed queries skip the union/score work for pruned ranges
     block-wise (postings arrive pre-decoded and pre-scored by the
     cached whole-term decode — pruning here saves accumulation, not
     decoding).
 
-    Rank-safe: ranges are visited in increasing docid order, so a
-    pruned candidate whose score merely EQUALS theta would lose the
-    (score desc, doc_id asc) tie to the incumbent anyway.
+    Rank-safe under the rounded key: a range is skipped, and a
+    candidate dropped, only below theta - _ROUND_MARGIN (module
+    docstring); top_k ranks the candidates left.
 
     term_entries = [(term, weight, ids, impacts)] in sorted-term order;
     term_blockmeta = [(last_docids, block_ubs)] aligned with
@@ -422,7 +406,9 @@ def blockmax_taat_or(term_entries, term_blockmeta, topk):
         return []
     boundaries = np.unique(np.concatenate([m[0] for m in term_blockmeta]))
     R = len(boundaries)
-    top = _TopK(topk)
+    docs = np.zeros(0, dtype=np.int64)
+    scores = np.zeros(0, dtype=np.float64)
+    floor = -np.inf  # theta - _ROUND_MARGIN once k candidates are kept
     r = 0
     while r < R:
         rem = boundaries[r:]
@@ -431,10 +417,7 @@ def blockmax_taat_or(term_entries, term_blockmeta, topk):
             idx = np.searchsorted(last, rem, side="left")
             v = idx < len(last)
             ub[v] += w * bubs[idx[v]]
-        if top.full():
-            live = np.flatnonzero(ub > top.theta())
-        else:
-            live = np.arange(len(rem))
+        live = np.flatnonzero(ub >= floor)
         if live.size == 0:
             break
         sel = live[:_EPOCH_RANGES] + r
@@ -460,14 +443,20 @@ def blockmax_taat_or(term_entries, term_blockmeta, topk):
             subs.append((w, ids[take], impacts[take]))
         if subs:
             union = np.unique(np.concatenate([s[1] for s in subs]))
-            scores = np.zeros(len(union), dtype=np.float64)
+            acc = np.zeros(len(union), dtype=np.float64)
             for w, sids, simp in subs:
-                scores[np.searchsorted(union, sids)] += _weighted(w, simp)
-            # only the epoch's own top-k can enter the global heap
-            for doc, sc in _topk_by_score(scores, topk, union):
-                top.offer(sc, doc)
+                acc[np.searchsorted(union, sids)] += _weighted(w, simp)
+            # ranges are disjoint: no doc is scored twice
+            docs = np.concatenate((docs, union))
+            scores = np.concatenate((scores, acc))
+            if len(scores) > topk > 0:
+                theta = np.partition(scores, len(scores) - topk)[len(scores) - topk]
+                if theta > 0.0:
+                    floor = theta - _ROUND_MARGIN
+                    keep = scores >= floor
+                    docs, scores = docs[keep], scores[keep]
         r = int(sel[-1]) + 1
-    return top.result()
+    return top_k(scores, topk, docs)
 
 
 def intersect_and(term_entries, topk):
@@ -501,7 +490,7 @@ def intersect_and(term_entries, topk):
     scores = np.zeros(len(inter), dtype=np.float64)
     for _term, w, ids, impacts in term_entries:  # sorted-term order (tie policy)
         scores += _weighted(w, impacts[np.searchsorted(ids, inter)])
-    return _topk_by_score(scores, topk, inter)
+    return top_k(scores, topk, inter)
 
 
 def search_blocks(
@@ -517,14 +506,18 @@ def search_blocks(
     k1: float = BM25_K1,
     b: float = BM25_B,
     use_wand: bool = True,
-    flat_cache: OrderedDict | None = None,
+    flat_cache: dict | None = None,
     force_kernel: str | None = None,
 ) -> list[tuple[int, float]]:
-    """Score a query given collected block rows per term.
+    """Score a query given collected block rows per term: the one driver
+    query executor, of SearchEngine.search and of batch_score's driver
+    route, ranked by top_k.
 
     block_rows[term] = [(shard, block_id, last_docid, base_docid, max_tf,
     doc_bytes, freq_bytes, n)] in any order; sorted here by (shard,
-    block_id) which is global docid order.
+    block_id) which is global docid order. A query term counts when it
+    is in term_dfs, as in the relational plan: a present term with no
+    block rows scores nothing, and AND then matches no doc.
 
     Kernel choice (use_wand=True): vectorized TAAT (taat_or/taat_and)
     when the query's total posting volume is small (<= TAAT_MAX_POSTINGS);
@@ -537,17 +530,17 @@ def search_blocks(
     does not serve the query's mode raises ValueError.
     dl_lookup is a dl store (plans.search._DenseDL / _SortedDL).
 
-    ``flat_cache`` lets a serving engine amortize decoding AND scoring
-    across repeated queries: (term, k1, b) -> (docids, impacts), the
-    output of term_impacts for this engine's fixed n_docs, avgdl and dl
-    store. 16 bytes per cached posting (int64 id, float64
-    impact). Hits move to the end (LRU order); the caller bounds its
-    size by evicting from the front. The cursor DAAT ("daat") never
-    reads it: it scores from tf, which keeps it an independent check of
-    the cached impacts.
+    ``flat_cache`` amortizes decoding AND scoring across queries: a
+    mapping (term, k1, b) -> (docids, impacts), the output of
+    term_impacts for the caller's fixed n_docs, avgdl and dl store, read
+    and filled here. 16 bytes per cached posting (int64 id, float64
+    impact). A serving engine keeps it as an LRU across calls and bounds
+    it; batch_score keeps a plain dict for one call. The cursor DAAT
+    ("daat") never reads it: it scores from tf, which keeps it an
+    independent check of the cached impacts.
     """
     q = tokenize_query(query)
-    counts = Counter(t for t in q if t in block_rows and term_dfs.get(t))
+    counts = Counter(t for t in q if t in term_dfs)
     if not counts:
         return []
     sorted_terms = sorted(counts)  # fixed accumulation order (tie policy)
@@ -555,7 +548,7 @@ def search_blocks(
     is_and = mode.upper() == "AND"
 
     def term_rows(term):
-        return sorted(block_rows[term], key=lambda r: (r[0], r[1]))
+        return sorted(block_rows.get(term, ()), key=lambda r: (r[0], r[1]))
 
     def term_blocks(term):
         return [(r[2], r[3], r[4], r[5], r[6]) for r in term_rows(term)]
@@ -567,16 +560,11 @@ def search_blocks(
             cached = None if flat_cache is None else flat_cache.get(key)
             if cached is None:
                 cached = term_impacts(
-                    block_rows[term], codec, dl_lookup, n_docs, term_dfs[term],
+                    block_rows.get(term, ()), codec, dl_lookup, n_docs, term_dfs[term],
                     avgdl, k1, b,
                 )
                 if flat_cache is not None:
                     flat_cache[key] = cached
-            else:
-                # a concurrent request may have evicted the key since the
-                # read; the entry already read stays valid
-                with suppress(KeyError):
-                    flat_cache.move_to_end(key)
             entries.append((term, float(counts[term]), *cached))
         return entries
 

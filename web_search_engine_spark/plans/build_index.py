@@ -715,9 +715,12 @@ def _write_empty_index(
     shard_size: int,
 ) -> IndexCatalog:
     """n_docs == 0: commit a clean empty index (schema'd tables + stats)
-    instead of crashing on a missing blocks/ dir later."""
+    instead of crashing on a missing blocks/ dir later. The old index's
+    tables, manifest and append ledger go first, so no record outlives
+    the data it describes."""
     from ..operators.blocks import BLOCK_SCHEMA
 
+    _remove_index(index_dir)
     # non-partitioned writes: a dynamic partitionBy of an empty frame
     # writes no files and the tables would be unreadable
     docs_meta.write.mode("overwrite").parquet(os.path.join(index_dir, "docs_meta"))

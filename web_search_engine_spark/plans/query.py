@@ -39,10 +39,8 @@ Physical design (what the reference's lexicon-dict probe becomes):
 
 from __future__ import annotations
 
-import math
 import re
 from collections import Counter
-from decimal import ROUND_HALF_UP, Decimal
 from urllib.parse import unquote, urlparse
 
 import pandas as pd
@@ -53,7 +51,7 @@ from pyspark.sql import functions as F
 from ..config import BM25_B, BM25_K1, DEFAULT_TOPK
 from ..functions.bm25 import bm25_weighted_score_expr
 from ..functions.tokenizer import tokenize_query
-from ..sources.catalog import _READ_ERRORS
+from ..sources.catalog import _READ_ERRORS, read_dfs
 
 
 # terms whose literal form is identical under BOTH parser modes
@@ -114,15 +112,11 @@ def probe_lexicon(lexicon: DataFrame, terms: list[str]) -> dict[str, int]:
     terms = sorted(set(terms))
     files = _parquet_files(lexicon)
     if files:
-        import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
         paths = [unquote(urlparse(f).path) if f.startswith("file:") else f for f in files]
         try:
-            tbl = pads.dataset(paths, format="parquet").to_table(
-                columns=["term", "df"], filter=pc.field("term").isin(terms)
-            )
-            return dict(zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()))
+            return read_dfs(pads.dataset(paths, format="parquet"), terms)
         except _READ_ERRORS:
             pass
     rows = lexicon.filter(_terms_in_expr("term", terms)).collect()
@@ -260,23 +254,6 @@ def score_per_doc(
     if mode.upper() == "AND":
         per_doc = per_doc.filter(F.col("n_matched") == F.col("n_terms_present"))
     return per_doc.select("query_id", "doc_id", "score")
-
-
-_SCORE_QUANTUM = Decimal("1e-6")
-
-
-def round_score(x: float) -> float:
-    """Spark's ``round(x, 6)`` of a double, in Python, bit for bit: the
-    batch rank key. Spark rounds BigDecimal.valueOf(x) — the decimal
-    string Double.toString gives, the shortest one that reads back as x,
-    which is Python's repr — HALF_UP to 6 places. Python's round() is a
-    different function: it rounds the exact binary value half-even, and
-    so differs from F.round on values whose repr ends in 5 at the 7th
-    decimal."""
-    x = float(x)
-    if not math.isfinite(x):
-        return x
-    return float(Decimal(repr(x)).quantize(_SCORE_QUANTUM, ROUND_HALF_UP))
 
 
 def score_queries(

@@ -2,18 +2,14 @@
 
 Two paths, one semantics (tested rank-identical):
 
-Tie policy nuance: SearchEngine and batch_score's driver route give
-each doc the same score, bit for bit (both score through
-operators.wand.term_impacts and add in sorted-term order); only the
-rank key differs. The batch paths (score_queries and therefore
-batch_score) rank on the 6-decimal ROUNDED score with the doc_id
-tie-break — required for cross-plan determinism, since float sums
-associate differently between physical plans. The interactive kernels
-rank on the raw double (the kernel differential tests pin them against
-each other and the oracle). The two keys order identically unless two
-docs' raw scores differ by less than 5e-7 AND straddle the top-k
-boundary; every driver-gated query re-ranks on the rounded score
-itself, so the gates are insensitive to the difference.
+Rank contract: every path ranks on the 6-decimal ROUNDED score
+(round(score, 6) in Spark, functions.bm25.round_score on the driver)
+desc, then doc_id asc, and returns the raw score. Rounding makes the
+order deterministic across physical plans, whose float sums associate
+differently. SearchEngine and batch_score's driver route run one
+executor (operators.wand.search_blocks), so they give each doc the same
+score, bit for bit, and return the same ranked list; every kernel under
+it ends in operators.wand.top_k, the one top-k of that key.
 
   - SearchEngine: interactive single-query path. Mirrors the reference's
     serving shape (lexicon + doc_lengths resident in memory, postings
@@ -38,11 +34,11 @@ itself, so the gates are insensitive to the difference.
         present terms — exact before any block is read, from
         catalog.term_dfs), the terms' block rows are read through the
         catalog's IndexSnapshot (the same directory and dl store
-        SearchEngine holds), decoded and scored by SearchEngine's
-        operators.wand.term_impacts (the numpy twin of the SQL
-        expression, functions.bm25.bm25_weighted_scores) and ranked on
-        the driver; the rows come back as a LocalRelation, which
-        collects with no Spark job.
+        SearchEngine holds) and each query runs through SearchEngine's
+        executor, operators.wand.search_blocks (impacts from the numpy
+        twin of the SQL expression, functions.bm25.bm25_weighted_scores);
+        the rows come back as a LocalRelation, which collects with no
+        Spark job.
       * Spark: above the bound, or when pyarrow cannot read the index
         in this process: prune scan on term -> decode blocks
         (mapInPandas) -> the same relational BM25 plan as
@@ -80,9 +76,10 @@ Driver-memory scale notes:
     per id slot per query, plus 8 per slot for AND's match counter,
     freed when the query returns.
   - batch_score driver route: 16 bytes per decoded posting kept for
-    the call (doc id + unweighted score), the decode's transients of one
-    term at a time, and one query's accumulator (as taat_or's): measured
-    at most ~72 bytes per scored posting, freed when the call returns,
+    the call (doc id + unweighted impact), the decode's transients of one
+    term at a time, and one query's kernel state (as SearchEngine's):
+    measured at most ~72 bytes per scored posting, freed when the call
+    returns,
     plus the snapshot's dl store and block directory (above), kept
     until the catalog's refresh().
 """
@@ -91,7 +88,7 @@ from __future__ import annotations
 
 import os
 from bisect import bisect_right
-from collections import Counter, OrderedDict
+from collections import OrderedDict
 from contextlib import suppress
 from itertools import accumulate
 
@@ -99,7 +96,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
@@ -107,9 +103,9 @@ from pyspark.sql.types import (
 from ..config import BM25_B, BM25_K1, DEFAULT_TOPK
 from ..functions.tokenizer import tokenize_query
 from ..operators.blocks import blocks_to_postings
-from ..operators.wand import search_blocks, taat_accumulate, term_impacts
-from ..sources.catalog import _READ_ERRORS, IndexCatalog
-from .query import round_score, score_queries
+from ..operators.wand import search_blocks
+from ..sources.catalog import _READ_ERRORS, IndexCatalog, read_dfs
+from .query import score_queries
 
 # dense dl array when max_doc_id+1 <= this multiple of the doc count
 _DENSE_DL_MAX_OVERHEAD = 4
@@ -321,20 +317,10 @@ class IndexSnapshot:
             "lexicon", lambda: pads.dataset(self._path("lexicon"), format="parquet")
         )
 
-    def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """{term: df} of the given terms present in the lexicon, read
-        term-filtered per row group."""
-        import pyarrow.compute as pc
-
-        tbl = self.lexicon().to_table(
-            columns=["term", "df"], filter=pc.field("term").isin(terms)
-        )
-        return dict(zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()))
-
-    def dfs(self) -> dict[str, int]:
-        """{term: df} of the whole lexicon (not kept)."""
-        tbl = self.lexicon().to_table(columns=["term", "df"])
-        return dict(zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()))
+    def dfs(self, terms: list[str] | None = None) -> dict[str, int]:
+        """{term: df} of the whole lexicon, or of the given terms present
+        in it (not kept)."""
+        return read_dfs(self.lexicon(), terms)
 
     def directory(self) -> "_BlockDirectory":
         return self._part("blocks", lambda: _BlockDirectory(self._path("blocks")))
@@ -355,18 +341,15 @@ class IndexSnapshot:
 
 
 class SearchEngine:
-    """In-process query engine over an index directory."""
+    """In-process query engine over an index directory: an IndexSnapshot
+    with every part loaded at init, plus the df dict and two term LRUs."""
 
     def __init__(self, index_dir: str):
-        snap = IndexSnapshot(index_dir)
-        self.index_dir = index_dir
-        self.stats = snap.stats
-        self.n_docs = snap.n_docs
-        self.avgdl = snap.avgdl
-        self.codec = snap.codec
-        self._df = snap.dfs()
-        self.dl = snap.dl()
-        self._dir = snap.directory()
+        self.snapshot = IndexSnapshot(index_dir)
+        self._df = self.snapshot.dfs()
+        # open the dl store and block directory now, not in a query
+        self.snapshot.dl()
+        self.snapshot.directory()
         self._term_cache: OrderedDict[str, list] = OrderedDict()
         # (term, k1, b) -> (doc_ids, impacts): lets repeated queries skip
         # the block decode and the BM25 evaluation (LRU, bounded like the
@@ -386,7 +369,7 @@ class SearchEngine:
             else:
                 missing.append(t)
         if missing:
-            fetched = self._dir.fetch(missing)
+            fetched = self.snapshot.directory().fetch(missing)
             for t in missing:
                 blk = fetched.get(t, [])
                 out[t] = blk
@@ -411,12 +394,17 @@ class SearchEngine:
         terms = sorted({t for t in tokenize_query(query) if t in self._df})
         if not terms:
             return []
-        block_rows = self._fetch_blocks(terms)
+        snap = self.snapshot
         out = search_blocks(
-            block_rows, self._df, self.codec, self.dl, self.n_docs, self.avgdl,
-            query, mode=mode, topk=topk, k1=k1, b=b, use_wand=use_wand,
+            self._fetch_blocks(terms), self._df, snap.codec, snap.dl(), snap.n_docs,
+            snap.avgdl, query, mode=mode, topk=topk, k1=k1, b=b, use_wand=use_wand,
             flat_cache=self._flat_cache, force_kernel=force_kernel,
         )
+        # the query's impacts move to the LRU's end; a concurrent request
+        # may have evicted a key since search_blocks read it
+        for t in terms:
+            with suppress(KeyError):
+                self._flat_cache.move_to_end((t, k1, b))
         while len(self._flat_cache) > _TERM_CACHE_SIZE:
             with suppress(KeyError):
                 self._flat_cache.popitem(last=False)
@@ -486,56 +474,27 @@ _BATCH_ARROW = pa.schema([
     ("query_id", pa.string()), ("rank", pa.int32()),
     ("doc_id", pa.int64()), ("score", pa.float64()),
 ])
-# a doc whose raw score is this far below the k-th best raw score cannot
-# round (round_score) to a key above the k-th best's
-_ROUND_MARGIN = 2e-6
 
 
-def _query_terms(queries, term_dfs) -> dict[str, list[tuple[str, int]]]:
-    """{query_id: [(term, weight)]} over each query's distinct PRESENT
-    terms, weight = multiplicity — the rows score_per_doc broadcasts
-    (a repeated query_id keeps both queries' rows, as there)."""
-    out: dict[str, list[tuple[str, int]]] = {}
-    for qid, q in queries:
-        for term, w in Counter(tokenize_query(q)).items():
-            if term in term_dfs:
-                out.setdefault(qid, []).append((term, w))
-    return out
-
-
-def _rank(docs: np.ndarray, scores: np.ndarray, topk: int):
-    """-> (rank, doc_id, score) of the top-k under the batch contract:
-    round_score(score) desc, doc_id asc. Only docs within _ROUND_MARGIN
-    of the k-th best raw score can reach it, so only those are rounded,
-    once per distinct score."""
-    if len(docs) > topk > 0:
-        kth = np.partition(scores, len(scores) - topk)[len(scores) - topk]
-        keep = np.flatnonzero(scores >= kth - _ROUND_MARGIN)
-        docs, scores = docs[keep], scores[keep]
-    values, inv = np.unique(scores, return_inverse=True)
-    keys = np.array([round_score(v) for v in values.tolist()])[inv]
-    order = np.lexsort((docs, -keys))[:topk]
-    return [
-        (rank, int(docs[i]), float(scores[i])) for rank, i in enumerate(order, 1)
-    ]
-
-
-def _driver_batch(catalog, per_query, term_dfs, mode, topk, k1, b):
+def _driver_batch(catalog, texts, term_dfs, mode, topk, k1, b):
     """batch_score's rows computed on the driver from the catalog's
     snapshot, as an Arrow table; None when pyarrow cannot read the
     index here (the caller takes the Spark route). An Arrow table, not
     a pandas frame: PySpark turns an EMPTY pandas frame into an
     RDD-backed relation whose collect runs a job.
 
-    Each term's impacts come from operators.wand.term_impacts, as
-    SearchEngine's do, and are summed per doc in sorted-term order by
-    the serving kernels' accumulator (operators.wand.taat_accumulate).
-    Postings of docs with no dl (dl = 0, or absent from docs_meta) score
-    0.0 and leave their docs at 0, outside the ``scores > 0`` hits, as
-    the inner join to doc_stats drops them; AND keeps docs matching
-    every present query term."""
+    Each query text runs through SearchEngine.search's executor
+    (operators.wand.search_blocks) over the snapshot's block rows and dl
+    store, with the call's term_dfs, so both give a doc the same score
+    and rank alike; a dict shared by the call's queries holds each
+    term's impacts, decoded and scored once per call. Postings of docs
+    with no dl (dl = 0, or absent from docs_meta) score 0.0 and never
+    rank, as the inner join to doc_stats drops them; AND keeps docs
+    matching every present query term."""
     snap = catalog.snapshot()
-    terms = sorted({t for entries in per_query.values() for t, _ in entries})
+    terms = sorted(
+        {t for q in texts.values() for t in tokenize_query(q) if t in term_dfs}
+    )
     try:
         snap.lexicon()  # df came from it, not from a Spark probe
         dl_store = snap.dl()
@@ -543,24 +502,14 @@ def _driver_batch(catalog, per_query, term_dfs, mode, topk, k1, b):
     except _READ_ERRORS:
         return None
 
-    # term -> (doc_ids, unweighted scores); the query's weight multiplies
-    # in taat_accumulate, as ``weight * (...)`` does in the SQL
-    postings = {
-        t: term_impacts(
-            block_rows.get(t, []), snap.codec, dl_store, catalog.n_docs,
-            term_dfs[t], catalog.avgdl, k1, b,
-        )
-        for t in terms
-    }
-
-    is_and = mode.upper() == "AND"
+    impacts: dict = {}
     out: list[tuple] = []
-    for qid, entries in per_query.items():
-        term_entries = [(t, float(w), *postings[t]) for t, w in sorted(entries)]
-        scores, ids = taat_accumulate(term_entries, dl_store, is_and)
-        hit = np.flatnonzero(scores > 0.0)
-        docs = hit if ids is None else ids[hit]
-        out.extend((qid, *row) for row in _rank(docs, scores[hit], topk))
+    for qid, q in texts.items():
+        hits = search_blocks(
+            block_rows, term_dfs, snap.codec, dl_store, snap.n_docs, snap.avgdl, q,
+            mode=mode, topk=topk, k1=k1, b=b, flat_cache=impacts,
+        )
+        out.extend((qid, rank, doc, score) for rank, (doc, score) in enumerate(hits, 1))
     cols = list(zip(*out)) or [()] * len(_BATCH_ARROW)
     return pa.table(
         [pa.array(c, type=f.type) for c, f in zip(cols, _BATCH_ARROW)],
@@ -586,9 +535,9 @@ def batch_score(
     - driver: when the call scores at most DRIVER_MAX_POSTINGS postings
       (Σ over queries of Σ df of the query's distinct present terms,
       exact from term_dfs), the terms' block rows are read through the
-      catalog's snapshot, decoded, scored and ranked in numpy
-      (_driver_batch), and returned as a LocalRelation, which collects
-      with no Spark job.
+      catalog's snapshot and each query is scored and ranked by
+      SearchEngine.search's executor (_driver_batch); the rows return as
+      a LocalRelation, which collects with no Spark job.
     - Spark: above the bound, or when pyarrow cannot read the index in
       this process, prune scan on term -> decode blocks (mapInPandas)
       -> the relational BM25 plan of plans/query.py. pre_cluster_by_query:
@@ -601,14 +550,18 @@ def batch_score(
     """
     from .query import _terms_in_expr
 
-    all_terms = sorted(
-        {t for _, q in queries for t in tokenize_query(q)}
-    )
+    texts: dict[str, str] = {}
+    for qid, q in queries:
+        # a repeated query_id scores its queries' terms together, as
+        # score_per_doc's rows do
+        texts[qid] = f"{texts[qid]} {q}" if qid in texts else q
+    all_terms = sorted({t for q in texts.values() for t in tokenize_query(q)})
     term_dfs = catalog.term_dfs(all_terms)
-    per_query = _query_terms(queries, term_dfs)
-    to_score = sum(term_dfs[t] for entries in per_query.values() for t, _ in entries)
+    to_score = sum(
+        term_dfs.get(t, 0) for q in texts.values() for t in set(tokenize_query(q))
+    )
     if to_score <= DRIVER_MAX_POSTINGS:
-        table = _driver_batch(catalog, per_query, term_dfs, mode, topk, k1, b)
+        table = _driver_batch(catalog, texts, term_dfs, mode, topk, k1, b)
         if table is not None:
             return catalog.spark.createDataFrame(table, _BATCH_SCHEMA)
     pruned = catalog.blocks().filter(_terms_in_expr("term", all_terms))

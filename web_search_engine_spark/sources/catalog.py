@@ -47,6 +47,18 @@ from pyspark.sql import DataFrame, SparkSession
 _READ_ERRORS = (OSError, pa.ArrowException)
 
 
+def read_dfs(lexicon, terms: list[str] | None = None) -> dict[str, int]:
+    """{term: df} of a pyarrow lexicon dataset; with ``terms``, of those
+    terms only, read term-filtered per row group."""
+    import pyarrow.compute as pc
+
+    tbl = lexicon.to_table(
+        columns=["term", "df"],
+        filter=None if terms is None else pc.field("term").isin(terms),
+    )
+    return dict(zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()))
+
+
 def write_stats(index_dir: str, stats: dict) -> None:
     os.makedirs(index_dir, exist_ok=True)
     tmp = os.path.join(index_dir, "stats.json.tmp")
@@ -174,7 +186,7 @@ class IndexCatalog:
         if not terms:
             return {}
         try:
-            return self.snapshot().term_dfs(terms)
+            return self.snapshot().dfs(terms)
         except _READ_ERRORS:
             from ..plans.query import probe_lexicon
 
