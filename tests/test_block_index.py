@@ -859,13 +859,21 @@ def test_fast_term_decode_matches_per_block(spark, index_dir, oracle):
 def test_lexicon_driver_merge_matches_spark(spark, tmp_path, monkeypatch):
     """Small-delta lexicon merges run driver-side via pyarrow (round 6);
     the table must be row-identical to the Spark aggregation on BOTH the
-    full-rebuild and the additive-append paths. The append folds df and
-    nblocks by sum and max_tf by max: one term's max_tf rises in the
-    appended batch, another's stays below its old value."""
+    full-rebuild and the additive-append paths, and on the full rebuild
+    of a replayed (uncommitted) append. The append folds df and nblocks
+    by sum and max_tf by max: one term's max_tf rises in the appended
+    batch, another's stays below its old value. Every lexicon/ part of
+    both indexes, and of an empty build's index, has LEXICON_SCHEMA."""
     import pandas as pd
+    import pyarrow.parquet as pq
 
     import web_search_engine_spark.plans.build_index as B
-    from web_search_engine_spark.streaming.incremental import append_batch
+    from web_search_engine_spark.operators.blocks import ARROW_LEXICON_SCHEMA
+    from web_search_engine_spark.streaming.incremental import (
+        _read_ledger,
+        _write_ledger,
+        append_batch,
+    )
 
     full = corpus_df(spark, n_docs=200, seed=13).cache()
 
@@ -881,21 +889,43 @@ def test_lexicon_driver_merge_matches_spark(spark, tmp_path, monkeypatch):
         one_doc("zz/append.txt", "maxtfrise " * 7 + "maxtfkeep")
     )
 
-    def build_and_append(d):
-        B.build_index(spark, first, d, num_shards=2)
-        append_batch(spark, rest, d, batch_id=0)
+    def lexicon(d):
         return {
             r["term"]: (r["df"], r["nblocks"], r["max_tf"])
             for r in spark.read.parquet(os.path.join(d, "lexicon")).collect()
         }
 
-    drv = build_and_append(str(tmp_path / "driver_path"))
+    def build_and_append(d):
+        B.build_index(spark, first, d, num_shards=2)
+        append_batch(spark, rest, d, batch_id=0)
+        appended = lexicon(d)
+        # replay the append as uncommitted: a full rebuild from every shard
+        led = _read_ledger(d)
+        led["batches"]["0"]["committed"] = False
+        _write_ledger(d, led)
+        append_batch(spark, rest, d, batch_id=0)
+        assert lexicon(d) == appended
+        return appended
+
+    def parts(d):
+        lex_dir = os.path.join(d, "lexicon")
+        return [os.path.join(lex_dir, f) for f in os.listdir(lex_dir) if f.endswith(".parquet")]
+
+    drv_dir, spk_dir = str(tmp_path / "driver_path"), str(tmp_path / "spark_path")
+    drv = build_and_append(drv_dir)
     monkeypatch.setattr(B, "_LEXICON_DRIVER_MAX_BLOCKS", -1)  # force Spark
-    spk = build_and_append(str(tmp_path / "spark_path"))
+    spk = build_and_append(spk_dir)
     assert drv == spk and len(drv) > 0
     # (df, nblocks, max_tf): one posting and one block on each side
     assert drv["maxtfrise"] == (2, 2, 7)
     assert drv["maxtfkeep"] == (2, 2, 6)
+
+    empty_dir = str(tmp_path / "empty")
+    B.build_index(spark, full.limit(0), empty_dir, num_shards=2)
+    for d in (drv_dir, spk_dir, empty_dir):
+        assert parts(d), d
+        for part in parts(d):
+            assert pq.read_schema(part).equals(ARROW_LEXICON_SCHEMA), part
     full.unpersist()
 
 
@@ -1123,6 +1153,38 @@ def test_batch_score_driver_route_matches_spark_route(
     assert any(10 in r and 11 in r and r[10] == r[11] for r in by_q.values())
 
 
+def test_batch_score_spark_route_clusters_by_query_only_for_several(
+    spark, index_dir, monkeypatch
+):
+    """The Spark route repartitions its scored term rows on query_id only
+    when the call has several query ids. A one-query call would put every
+    row in one partition that way; it aggregates on (query_id, doc_id)
+    across the shuffle partitions and ranks through
+    TakeOrderedAndProject instead."""
+    import re
+
+    import web_search_engine_spark.plans.search as S
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    monkeypatch.setattr(S, "DRIVER_MAX_POSTINGS", -1)
+    cat = IndexCatalog(spark, index_dir)
+    by_query = re.compile(r"Exchange hashpartitioning\(query_id#\d+, \d+\)")
+
+    def executed_plan(queries):
+        df = batch_score(cat, queries, "OR", 10)
+        assert df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    try:
+        one = executed_plan([("q3", "manhattan project")])
+        assert not by_query.search(one), one
+        assert re.search(r"hashpartitioning\(query_id#\d+, doc_id#\d+L?, \d+\)", one)
+        assert "TakeOrderedAndProject" in one, one
+        assert by_query.search(executed_plan(QUERIES[:3]))
+    finally:
+        cat.refresh()
+
+
 def test_batch_score_routes_agree_on_small_and_empty_answers(
     spark, index_dir, monkeypatch
 ):
@@ -1235,6 +1297,37 @@ def test_probe_lexicon_reads_a_parquet_lexicon_without_a_job(
     j0 = _next_job_id(spark)
     assert probe_lexicon(lex, terms) == want
     assert _next_job_id(spark) > j0
+
+
+def test_catalog_lexicon_opens_without_a_job(spark, index_dir, oracle):
+    """IndexCatalog.lexicon() reads with LEXICON_SCHEMA: opening it runs
+    no Spark job, where the same read left to infer its schema runs one,
+    and probe_lexicon still reads the handle with pyarrow (no job)."""
+    from web_search_engine_spark.plans.query import _parquet_files, probe_lexicon
+    from web_search_engine_spark.sources.catalog import IndexCatalog
+
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    lex, n_jobs = jobs_of("open-lexicon", IndexCatalog(spark, index_dir).lexicon)
+    assert n_jobs == 0
+    _, n_jobs = jobs_of(
+        "infer-lexicon", lambda: spark.read.parquet(os.path.join(index_dir, "lexicon"))
+    )
+    assert n_jobs >= 1
+    assert _parquet_files(lex)
+    terms = ["manhattan", "policy", "zzzabsent"]
+    want = {t: oracle.df[t] for t in terms if t in oracle.df}
+    assert jobs_of("probe-lexicon", lambda: probe_lexicon(lex, terms)) == (want, 0)
 
 
 def test_relational_one_query_call_runs_three_jobs(spark, index_dir):

@@ -185,6 +185,39 @@ def test_append_batch_replay_paths_converge(spark, tmp_path):
     assert meta.count() == meta.select("doc_id").distinct().count() == 200
 
 
+def test_append_of_token_free_docs_commits(spark, tmp_path):
+    """Docs with no tokens write docs_meta rows and a manifest row but
+    no blocks/shard=N/ directory. Their append commits: the ledger marks
+    it, stats.json counts the docs, and the lexicon is unchanged."""
+    from web_search_engine_spark.sources.catalog import read_stats
+    from web_search_engine_spark.streaming.incremental import (
+        _read_ledger,
+        append_batch,
+    )
+
+    full = corpus_df(spark, n_docs=200, seed=5)
+    idx = str(tmp_path / "idx")
+    build_index(spark, full, idx, block_size=16, num_shards=2)
+
+    def lexicon_rows():
+        return sorted(
+            tuple(r) for r in spark.read.parquet(os.path.join(idx, "lexicon")).collect()
+        )
+
+    before = lexicon_rows()
+    empty = full.limit(5).toPandas()
+    empty = empty.assign(path=[f"zz/empty{i}.txt" for i in range(5)], content="")
+    assert append_batch(spark, spark.createDataFrame(empty, full.schema), idx) == 5
+
+    entry = _read_ledger(idx)["batches"]["0"]
+    assert entry["committed"]
+    shard = entry["base"] // int(read_stats(idx)["shard_size"])
+    assert not os.path.exists(os.path.join(idx, "blocks", f"shard={shard}"))
+    n_meta = spark.read.parquet(os.path.join(idx, "docs_meta")).count()
+    assert read_stats(idx)["n_docs"] == n_meta == 205
+    assert lexicon_rows() == before
+
+
 def test_append_batch_lexicon_merge_is_o_delta(spark, tmp_path, monkeypatch):
     """A fresh micro-batch must fold ONLY the new shards' block files
     into the lexicon — never rescan the whole index per batch."""

@@ -41,6 +41,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import BLOCK_SIZE, CODEC_VARBYTE
 from ..functions import codec as C
@@ -49,6 +51,22 @@ BLOCK_SCHEMA = (
     "term string, shard int, block_id int, n int, last_docid long, "
     "base_docid long, max_tf long, doc_bytes binary, freq_bytes binary"
 )
+
+# lexicon/ rows, one per term: df = sum of n over the term's blocks,
+# nblocks, max_tf = max over them. Every lexicon writer writes this
+# schema (lexicon_from_blocks, both folds of build_index.merge_lexicon,
+# the empty build), and IndexCatalog.lexicon() reads with it instead of
+# inferring it with a Spark job.
+LEXICON_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("nblocks", T.IntegerType()),
+        T.StructField("max_tf", T.LongType()),
+    ]
+)
+ARROW_LEXICON_SCHEMA = to_arrow_schema(LEXICON_SCHEMA)
+
 
 def _mmh3_int32(value: int, seed: int = 42) -> int:
     """Murmur3 x86_32 of one int32 block — bit-identical to Spark's
@@ -336,12 +354,21 @@ def build_block_index(
 
 
 def lexicon_from_blocks(blocks: DataFrame) -> DataFrame:
-    """(term, df, nblocks, max_tf) — df = Σ n over blocks (exact)."""
-    return blocks.groupBy("term").agg(
-        F.sum("n").cast("long").alias("df"),
-        F.count("*").cast("int").alias("nblocks"),
-        F.max("max_tf").cast("long").alias("max_tf"),
+    """LEXICON_SCHEMA rows of block rows — df = Σ n over blocks (exact).
+    nblocks is a sum of ones, not a count: a count is a non-nullable
+    column, which parquet stores as a required one, unlike the schema's."""
+    return as_lexicon(
+        blocks.groupBy("term").agg(
+            F.sum("n").alias("df"),
+            F.sum(F.lit(1)).alias("nblocks"),
+            F.max("max_tf").alias("max_tf"),
+        )
     )
+
+
+def as_lexicon(df: DataFrame) -> DataFrame:
+    """``df``'s lexicon columns, cast to LEXICON_SCHEMA."""
+    return df.select(*(F.col(f.name).cast(f.dataType) for f in LEXICON_SCHEMA))
 
 
 _ARROW_POSTING_SCHEMA = pa.schema(

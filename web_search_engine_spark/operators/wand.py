@@ -505,7 +505,6 @@ def search_blocks(
     topk: int = DEFAULT_TOPK,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    use_wand: bool = True,
     flat_cache: dict | None = None,
     force_kernel: str | None = None,
 ) -> list[tuple[int, float]]:
@@ -519,15 +518,15 @@ def search_blocks(
     is in term_dfs, as in the relational plan: a present term with no
     block rows scores nothing, and AND then matches no doc.
 
-    Kernel choice (use_wand=True): vectorized TAAT (taat_or/taat_and)
-    when the query's total posting volume is small (<= TAAT_MAX_POSTINGS);
-    beyond that, block-max pruned kernels — the vectorized blockwise
-    WAND (blockmax_taat_or) for OR, the vectorized searchsorted
-    intersection (intersect_and) for AND. use_wand=False forces the
+    Kernel choice: vectorized TAAT (taat_or/taat_and) when the query's
+    total posting volume is small (<= TAAT_MAX_POSTINGS); beyond that,
+    block-max pruned kernels — the vectorized blockwise WAND
+    (blockmax_taat_or) for OR, the vectorized searchsorted intersection
+    (intersect_and) for AND. ``force_kernel`` ("taat" | "bmw_block" |
+    "vec_and" | "daat") overrides the selection; "daat" is the
     exhaustive cursor DAAT (the differential baseline; daat_and for
-    AND). ``force_kernel`` ("taat" | "bmw_block" | "vec_and" | "daat")
-    overrides the selection — used by differential tests; a kernel that
-    does not serve the query's mode raises ValueError.
+    AND). A kernel that does not serve the query's mode raises
+    ValueError.
     dl_lookup is a dl store (plans.search._DenseDL / _SortedDL).
 
     ``flat_cache`` amortizes decoding AND scoring across queries: a
@@ -570,9 +569,7 @@ def search_blocks(
 
     kernel = force_kernel
     if kernel is None:
-        if not use_wand:
-            kernel = "daat"
-        elif total_df <= TAAT_MAX_POSTINGS:
+        if total_df <= TAAT_MAX_POSTINGS:
             kernel = "taat"
         else:
             kernel = "vec_and" if is_and else "bmw_block"

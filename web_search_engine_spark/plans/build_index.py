@@ -26,9 +26,10 @@ end of the build). The only corpus-sized shuffles are the postings
 aggregation and the blocks exchange itself.
 
 Job discipline: every Spark action costs seconds of fixed scheduling
-latency regardless of cluster size, so the build runs exactly FOUR jobs
+latency regardless of cluster size, so the build runs at most FOUR jobs
 regardless of index size: (1) doc-id offsets count, (2) blocks write,
-(3) docs_meta write, (4) incremental lexicon merge. Per-shard manifest
+(3) docs_meta write, (4) the lexicon merge, a job only when its fold is
+too large for the driver. Per-shard manifest
 metrics ride the write jobs as Observation metrics (no post-hoc re-read
 of just-written parquet), the manifest append and stats.json are
 driver-side metadata writes (exactly how Iceberg commits manifest
@@ -44,6 +45,13 @@ with lineage (row counts, Σdl, build seconds) + codec config; a streaming
 append commits its new shards the same way. Resume
 validates codec/block_size against the manifest and adopts the recorded
 shard_size (mixing incompatible shards fails fast instead of silently).
+
+Lexicon: every commit, build or append, ends in merge_lexicon. It lists
+the commit's block files once (its new shards, or every shard for a
+full rebuild), folds them into the old table on the driver in pyarrow
+or, past a footer census, in one Spark job, and replaces lexicon/
+through one write-then-swap (_swap_lexicon). Every writer writes
+operators/blocks.LEXICON_SCHEMA.
 """
 
 from __future__ import annotations
@@ -60,6 +68,11 @@ from pyspark.sql import functions as F
 
 from ..config import BLOCK_SIZE, CODEC_VARBYTE
 from ..operators.blocks import (
+    _ARROW_BLOCK_SCHEMA,
+    ARROW_LEXICON_SCHEMA,
+    BLOCK_SCHEMA,
+    LEXICON_SCHEMA,
+    as_lexicon,
     build_block_index,
     identity_partition_key,
     lexicon_from_blocks,
@@ -356,111 +369,81 @@ def _remove_index(index_dir: str) -> None:
             os.remove(path)
 
 
-# driver-side lexicon merge threshold: when the delta's block-row count
-# (from parquet FOOTERS only — no payload read) is at or below this, the
-# merge aggregates driver-side via pyarrow instead of running a Spark
-# job (~0.35 s of scan/agg/write job latency at bench scale for a
-# few-hundred-row aggregate). Above it — the corpus-scale case — the
-# Spark path runs unchanged. File-count short-circuit: past
-# _LEXICON_DRIVER_MAX_FILES footers the footer census itself is no
-# longer cheap, so skip straight to Spark.
+# lexicon fold thresholds: when the commit's block files number at most
+# _LEXICON_DRIVER_MAX_FILES and hold at most _LEXICON_DRIVER_MAX_BLOCKS
+# block rows (a census of parquet FOOTERS, no payload read), the fold
+# runs on the driver in pyarrow instead of as a Spark job (~0.35 s of
+# scan/agg/write job latency at bench scale for a few-hundred-row
+# aggregate). Past the file count the census itself is no longer cheap.
 _LEXICON_DRIVER_MAX_BLOCKS = 262_144
 _LEXICON_DRIVER_MAX_FILES = 256
 
 
-def _lexicon_delta_files(
-    blocks_dir: str, new_shards: list[int] | None
-) -> list[str] | None:
-    """Block data files the merge must read, or None when the layout is
-    not a plain local shard=N/ tree (fall back to the Spark reader)."""
-    if not os.path.isdir(blocks_dir):
-        return None
-    out: list[str] = []
-    if new_shards is None:
-        shard_dirs = [
-            d for d in sorted(os.listdir(blocks_dir)) if d.startswith("shard=")
-        ]
-    else:
-        shard_dirs = [f"shard={s}" for s in new_shards]
-    for d in shard_dirs:
-        full = os.path.join(blocks_dir, d)
-        if not os.path.isdir(full):
-            return None
-        out.extend(
-            os.path.join(full, f)
-            for f in sorted(os.listdir(full))
-            if f.endswith(".parquet")
-        )
-    return out
+def _listdir(path: str) -> list[str]:
+    """Sorted entries of ``path``; none when it does not exist."""
+    return sorted(os.listdir(path)) if os.path.isdir(path) else []
 
 
-def _merge_lexicon_driver(
-    index_dir: str, files: list[str], fold_old: bool
-) -> None:
-    """Driver-side merge: aggregate (term, n, max_tf) over ``files`` with
-    pyarrow, fold into the existing lexicon when ``fold_old`` (the
-    append case; a full rebuild ignores any stale table), atomic-swap.
-    df and nblocks fold by sum, max_tf by max. Sums/maxes of integers are
-    order-independent, so the table is row-identical to the Spark
-    aggregation (differentially tested)."""
-    import numpy as np
-    import pandas as pd
+def _fold_driver(files: list[str], old_dir: str | None):
+    """The fold as a pyarrow Table: the lexicon of ``files``' block rows,
+    grouped again with the table under ``old_dir`` when given. Single-
+    threaded grouping keeps the row order, and so the written file,
+    deterministic."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
-    lex_dir = os.path.join(index_dir, "lexicon")
-    if files:
-        tbl = pads.dataset(files, format="parquet").to_table(
-            columns=["term", "n", "max_tf"]
+    def group(tbl, aggs):
+        out = tbl.group_by("term", use_threads=False).aggregate(aggs)
+        cols = ["term", *(f"{c}_{op}" for c, op in aggs)]
+        return out.select(cols).rename_columns(ARROW_LEXICON_SCHEMA.names).cast(
+            ARROW_LEXICON_SCHEMA
         )
-        pdf = tbl.to_pandas()
-        agg = pdf.groupby("term", sort=False).agg(
-            df=("n", "sum"), nblocks=("n", "size"), max_tf=("max_tf", "max")
-        )
-    else:
-        agg = pd.DataFrame(
-            {c: pd.Series([], dtype="int64") for c in ("df", "nblocks", "max_tf")},
-            index=pd.Index([], name="term"),
-        )
-    if fold_old:
-        old = (
-            pads.dataset(lex_dir, format="parquet")
-            .to_table(columns=["term", "df", "nblocks", "max_tf"])
-            .to_pandas()
-            .set_index("term")
-        )
-        # align both sides on the union of terms (a term absent from one
-        # side contributes 0), then fold each column by its own operator
-        terms = old.index.union(agg.index)
-        o = old.reindex(terms, fill_value=0)
-        a = agg.reindex(terms, fill_value=0)
-        agg = pd.DataFrame(
-            {
-                "df": o["df"] + a["df"],
-                "nblocks": o["nblocks"] + a["nblocks"],
-                "max_tf": np.maximum(o["max_tf"], a["max_tf"]),
-            },
-            index=terms.rename("term"),
-        )
-    agg = agg.reset_index()
-    out = pa.table(
-        {
-            "term": pa.array(agg["term"].astype(str) if len(agg) else [], type=pa.string()),
-            "df": pa.array(agg["df"].astype("int64"), type=pa.int64()),
-            "nblocks": pa.array(
-                agg["nblocks"].astype("int32"), type=pa.int32()
-            ),
-            "max_tf": pa.array(
-                agg["max_tf"].astype("int64"), type=pa.int64()
-            ),
-        }
-    )
-    import pyarrow.parquet as pq
 
+    blocks = pads.dataset(files, schema=_ARROW_BLOCK_SCHEMA, format="parquet")
+    delta = group(
+        blocks.to_table(columns=["term", "n", "max_tf"]),
+        [("n", "sum"), ("n", "count"), ("max_tf", "max")],
+    )
+    if old_dir is None:
+        return delta
+    old = pads.dataset(old_dir, schema=ARROW_LEXICON_SCHEMA, format="parquet")
+    return group(
+        pa.concat_tables([old.to_table(), delta]),
+        [("df", "sum"), ("nblocks", "sum"), ("max_tf", "max")],
+    )
+
+
+def _fold_spark(spark: SparkSession, files: list[str], old_dir: str | None):
+    """The fold as a Spark frame, the same rows as _fold_driver. Both
+    reads name their schema, so neither runs an inference job."""
+    delta = lexicon_from_blocks(spark.read.schema(BLOCK_SCHEMA).parquet(*files))
+    if old_dir is None:
+        return delta
+    old = spark.read.schema(LEXICON_SCHEMA).parquet(old_dir)
+    return as_lexicon(
+        old.unionByName(delta).groupBy("term").agg(
+            F.sum("df").alias("df"),
+            F.sum("nblocks").alias("nblocks"),
+            F.max("max_tf").alias("max_tf"),
+        )
+    )
+
+
+def _swap_lexicon(index_dir: str, lexicon) -> None:
+    """Write ``lexicon`` (a pyarrow Table or a Spark frame) to
+    lexicon_tmp/, then swap it in for lexicon/: Spark cannot overwrite a
+    path it is reading, and a fold reads the old table. The one place
+    the lexicon is replaced."""
+    lex_dir = os.path.join(index_dir, "lexicon")
     tmp_dir = lex_dir + "_tmp"
     shutil.rmtree(tmp_dir, ignore_errors=True)
-    os.makedirs(tmp_dir)
-    pq.write_table(out, os.path.join(tmp_dir, f"part-{uuid.uuid4().hex}.parquet"))
+    if isinstance(lexicon, DataFrame):
+        lexicon.write.parquet(tmp_dir)
+    else:
+        import pyarrow.parquet as pq
+
+        os.makedirs(tmp_dir)
+        pq.write_table(lexicon, os.path.join(tmp_dir, f"part-{uuid.uuid4().hex}.parquet"))
     if os.path.isdir(lex_dir):
         shutil.rmtree(lex_dir)
     os.rename(tmp_dir, lex_dir)
@@ -469,70 +452,47 @@ def _merge_lexicon_driver(
 def merge_lexicon(
     spark: SparkSession, index_dir: str, new_shards: list[int] | None
 ) -> list[str]:
-    """Rewrite lexicon/ = existing lexicon ⊕ lexicon of ``new_shards``.
+    """Rewrite lexicon/ = existing lexicon ⊕ lexicon of ``new_shards``;
+    returns the block files the merge read.
 
-    The lexicon merge is ADDITIVE on (df, nblocks) and MAX on max_tf, so
-    an append only has to aggregate the NEW shards' blocks and fold them
-    into the existing table — O(delta), not O(index). ``new_shards=None``
-    forces a full rebuild from all blocks (also the fallback when no
-    lexicon exists yet, e.g. after a crash mid-swap: the lexicon is
-    derived state and always reconstructible).
+    The merge is ADDITIVE on (df, nblocks) and MAX on max_tf, so a
+    commit folds only its NEW shards' blocks into the existing table:
+    O(delta), not O(index). ``new_shards=None``, or a missing lexicon/
+    (e.g. after a crash mid-swap: the lexicon is derived state), takes
+    a full rebuild from every shard instead.
 
-    Small deltas (<= _LEXICON_DRIVER_MAX_BLOCKS block rows by footer
-    census) merge DRIVER-SIDE via pyarrow — the aggregate is a few
-    hundred rows and the Spark job around it was pure latency; the
-    Spark path is unchanged for corpus-scale deltas.
-
-    Returns the list of block data files the merge read — tests assert
-    an append touched only the new shards' files.
+    One listing names the files: the block files under the shards'
+    ``shard=N/`` directories, where a missing directory (a shard whose
+    docs have no tokens) lists none. A fold with no new files leaves the
+    lexicon as it is. Up to _LEXICON_DRIVER_MAX_FILES files and
+    _LEXICON_DRIVER_MAX_BLOCKS block rows fold on the driver
+    (_fold_driver), larger ones in a Spark job (_fold_spark); both give
+    the same rows, and _swap_lexicon writes either.
     """
     blocks_dir = os.path.join(index_dir, "blocks")
     lex_dir = os.path.join(index_dir, "lexicon")
-    have_old = os.path.isdir(lex_dir)
-    if new_shards is not None and have_old and not new_shards:
-        return []  # nothing new, existing lexicon already correct
-
-    files = _lexicon_delta_files(
-        blocks_dir, None if (new_shards is None or not have_old) else new_shards
-    )
-    if files is not None and len(files) <= _LEXICON_DRIVER_MAX_FILES:
-        try:
-            import pyarrow.parquet as pq
-
-            n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        except Exception:
-            n_rows = None
-        if n_rows is not None and n_rows <= _LEXICON_DRIVER_MAX_BLOCKS:
-            _merge_lexicon_driver(
-                index_dir, files, have_old and new_shards is not None
-            )
-            return files
-
-    if new_shards is None or not have_old:
-        delta_blocks = spark.read.parquet(blocks_dir)
-        merged = lexicon_from_blocks(delta_blocks)
+    old_dir = lex_dir if new_shards is not None and os.path.isdir(lex_dir) else None
+    if old_dir is None:
+        shard_dirs = [d for d in _listdir(blocks_dir) if d.startswith("shard=")]
     else:
-        paths = [os.path.join(blocks_dir, f"shard={s}") for s in new_shards]
-        delta_blocks = spark.read.option("basePath", blocks_dir).parquet(*paths)
-        delta = lexicon_from_blocks(delta_blocks)
-        old = spark.read.parquet(lex_dir)
-        merged = (
-            old.unionByName(delta)
-            .groupBy("term")
-            .agg(
-                F.sum("df").cast("long").alias("df"),
-                F.sum("nblocks").cast("int").alias("nblocks"),
-                F.max("max_tf").cast("long").alias("max_tf"),
-            )
-        )
+        shard_dirs = [f"shard={s}" for s in new_shards]
+    files = [
+        os.path.join(blocks_dir, d, f)
+        for d in shard_dirs
+        for f in _listdir(os.path.join(blocks_dir, d))
+        if f.endswith(".parquet")
+    ]
+    if old_dir is not None and not files:
+        return []  # nothing new: the existing lexicon is already right
 
-    # write-new-then-swap: Spark cannot overwrite a path it is reading
-    tmp_dir = lex_dir + "_tmp"
-    merged.write.mode("overwrite").parquet(tmp_dir)
-    if have_old:
-        shutil.rmtree(lex_dir)
-    os.rename(tmp_dir, lex_dir)
-    return list(delta_blocks.inputFiles())
+    import pyarrow.parquet as pq
+
+    on_driver = len(files) <= _LEXICON_DRIVER_MAX_FILES and (
+        sum(pq.read_metadata(f).num_rows for f in files) <= _LEXICON_DRIVER_MAX_BLOCKS
+    )
+    fold = _fold_driver(files, old_dir) if on_driver else _fold_spark(spark, files, old_dir)
+    _swap_lexicon(index_dir, fold)
+    return files
 
 
 def _per_shard_observe_exprs(pending: list[int], kind: str):
@@ -718,8 +678,6 @@ def _write_empty_index(
     instead of crashing on a missing blocks/ dir later. The old index's
     tables, manifest and append ledger go first, so no record outlives
     the data it describes."""
-    from ..operators.blocks import BLOCK_SCHEMA
-
     _remove_index(index_dir)
     # non-partitioned writes: a dynamic partitionBy of an empty frame
     # writes no files and the tables would be unreadable
@@ -727,9 +685,9 @@ def _write_empty_index(
     spark.createDataFrame([], BLOCK_SCHEMA).write.mode("overwrite").parquet(
         os.path.join(index_dir, "blocks")
     )
-    spark.createDataFrame(
-        [], "term string, df long, nblocks int, max_tf long"
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, "lexicon"))
+    spark.createDataFrame([], LEXICON_SCHEMA).write.mode("overwrite").parquet(
+        os.path.join(index_dir, "lexicon")
+    )
     write_stats(
         index_dir,
         {

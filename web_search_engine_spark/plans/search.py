@@ -391,13 +391,18 @@ class SearchEngine:
         use_wand: bool = True,
         force_kernel: str | None = None,
     ) -> list[tuple[int, float]]:
+        """Top-k (doc_id, score) of ``query`` through search_blocks.
+        ``use_wand=False`` is ``force_kernel="daat"``, the exhaustive
+        cursor DAAT, unless a kernel is forced."""
         terms = sorted({t for t in tokenize_query(query) if t in self._df})
         if not terms:
             return []
+        if not use_wand and force_kernel is None:
+            force_kernel = "daat"
         snap = self.snapshot
         out = search_blocks(
             self._fetch_blocks(terms), self._df, snap.codec, snap.dl(), snap.n_docs,
-            snap.avgdl, query, mode=mode, topk=topk, k1=k1, b=b, use_wand=use_wand,
+            snap.avgdl, query, mode=mode, topk=topk, k1=k1, b=b,
             flat_cache=self._flat_cache, force_kernel=force_kernel,
         )
         # the query's impacts move to the LRU's end; a concurrent request
@@ -540,10 +545,11 @@ def batch_score(
       a LocalRelation, which collects with no Spark job.
     - Spark: above the bound, or when pyarrow cannot read the index in
       this process, prune scan on term -> decode blocks (mapInPandas)
-      -> the relational BM25 plan of plans/query.py. pre_cluster_by_query:
-      the decoded postings have no reusable partitioning, so one
-      explicit query_id exchange serves both the score aggregation and
-      the top-k window (2 exchanges -> 1; see score_per_doc).
+      -> the relational BM25 plan of plans/query.py. Several query ids
+      pre-cluster: the decoded postings have no reusable partitioning,
+      so one query_id exchange serves both the score aggregation and the
+      top-k window (2 exchanges -> 1; see score_per_doc). One query id
+      would put every row in one partition that way.
 
     Both routes return the same rows up to the float rounding of the
     per-doc sum (tests/test_block_index.py, driver vs Spark).
@@ -577,5 +583,5 @@ def batch_score(
         k1=k1,
         b=b,
         term_dfs=term_dfs,
-        pre_cluster_by_query=True,
+        pre_cluster_by_query=len(texts) > 1,
     )

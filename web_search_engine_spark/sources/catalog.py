@@ -13,7 +13,7 @@ schema. Layout under <index_dir>/:
                table-format analog of the reference's lexicon byte
                offsets + block directory binary search
                (HW2/engine/listio.py:176-196).
-  lexicon/     (term, df, nblocks, max_tf)
+  lexicon/     (term, df, nblocks, max_tf): operators/blocks.LEXICON_SCHEMA
   docs_meta/   (shard, doc_id, repo, path, commit, lang, dl,
                content_sha256) — doc stats + lineage + the per-row
                sha256 invariant vs the source table (input_hint), in
@@ -40,6 +40,8 @@ import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+from ..operators.blocks import LEXICON_SCHEMA
 
 # pyarrow cannot read an index path in this process (e.g. an object
 # store it holds no credentials for): the driver-side readers' callers
@@ -144,10 +146,11 @@ class IndexCatalog:
             self._snapshot = IndexSnapshot(self.index_dir, self.stats)
         return self._snapshot
 
-    def _table(self, name: str) -> DataFrame:
+    def _table(self, name: str, schema=None) -> DataFrame:
         df = self._tables.get(name)
         if df is None:
-            df = self.spark.read.parquet(os.path.join(self.index_dir, name))
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            df = reader.parquet(os.path.join(self.index_dir, name))
             self._tables[name] = df
         return df
 
@@ -167,7 +170,10 @@ class IndexCatalog:
         return self._table("blocks")
 
     def lexicon(self) -> DataFrame:
-        return self._table("lexicon")
+        """The lexicon table, read with LEXICON_SCHEMA: opening it runs no
+        schema-inference job (the other handles infer theirs; docs_meta's
+        columns depend on the build's key columns)."""
+        return self._table("lexicon", LEXICON_SCHEMA)
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """{term: df} for the given terms, read DRIVER-SIDE via pyarrow
