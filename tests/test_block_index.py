@@ -929,6 +929,56 @@ def test_lexicon_driver_merge_matches_spark(spark, tmp_path, monkeypatch):
     full.unpersist()
 
 
+def test_spark_lexicon_fold_jobs_do_not_grow_with_block_files(
+    spark, index_dir, tmp_path, monkeypatch
+):
+    """The Spark fold reads shard directories, not block files: the same
+    blocks rebuilt into a lexicon from one file per shard, or from 40
+    files per shard (more than Spark's 32-path listing threshold), run
+    the same number of jobs and write the same rows as the driver fold."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import web_search_engine_spark.plans.build_index as B
+
+    blocks = pa.concat_tables(
+        pq.read_table(f).drop_columns(["shard"])
+        if "shard" in pq.read_schema(f).names else pq.read_table(f)
+        for f in _blocks_files(index_dir)
+    )
+    sc = spark.sparkContext
+
+    def spark_fold(name, n_files):
+        d = str(tmp_path / name)
+        for shard in (0, 1):
+            shard_dir = os.path.join(d, "blocks", f"shard={shard}")
+            os.makedirs(shard_dir)
+            step = -(-blocks.num_rows // n_files)
+            for i in range(n_files):
+                pq.write_table(
+                    blocks.slice(i * step, step), os.path.join(shard_dir, f"part-{i:03}.parquet")
+                )
+        sc.setJobGroup(name, name)
+        try:
+            files = B.merge_lexicon(spark, d, None)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(files) == 2 * n_files
+        rows = pq.read_table(os.path.join(d, "lexicon")).sort_by("term")
+        return rows, len(sc.statusTracker().getJobIdsForGroup(name))
+
+    monkeypatch.setattr(B, "_LEXICON_DRIVER_MAX_BLOCKS", -1)  # force Spark
+    few, few_jobs = spark_fold("few", 1)
+    many, many_jobs = spark_fold("many", 40)
+    assert few_jobs == many_jobs >= 1
+    monkeypatch.setattr(B, "_LEXICON_DRIVER_MAX_BLOCKS", 10**9)
+    driver, no_jobs = spark_fold("driver", 40)
+    assert no_jobs == 0
+    assert few.equals(many) and many.equals(driver) and few.num_rows > 0
+
+
 def _blocks_files(index_dir):
     for d, _dirs, files in sorted(os.walk(os.path.join(index_dir, "blocks"))):
         for f in sorted(files):

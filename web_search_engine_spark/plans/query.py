@@ -288,13 +288,19 @@ def score_queries(
     — at 250k docs the relational and block paths genuinely returned
     the same rounded scores with different rank<->doc assignments. The
     returned ``score`` column stays raw.
+
+    ``pre_cluster_by_query`` (see score_per_doc) applies to a call with
+    several query ids only: one query id would hash every scored row
+    into one partition, and its top-k needs no per-query window.
     """
+    one_query = len({qid for qid, _ in queries}) == 1
     per_doc = score_per_doc(
         postings, doc_stats, n_docs, avgdl, queries, mode, k1, b, lexicon,
-        term_dfs=term_dfs, pre_cluster_by_query=pre_cluster_by_query,
+        term_dfs=term_dfs,
+        pre_cluster_by_query=pre_cluster_by_query and not one_query,
     )
     order = [F.desc(F.round("score", 6)), F.asc("doc_id")]
-    if len({qid for qid, _ in queries}) == 1:
+    if one_query:
         per_doc = per_doc.orderBy(*order).limit(topk)
         w = Window.orderBy(*order)
     else:

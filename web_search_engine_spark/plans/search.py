@@ -545,11 +545,11 @@ def batch_score(
       a LocalRelation, which collects with no Spark job.
     - Spark: above the bound, or when pyarrow cannot read the index in
       this process, prune scan on term -> decode blocks (mapInPandas)
-      -> the relational BM25 plan of plans/query.py. Several query ids
-      pre-cluster: the decoded postings have no reusable partitioning,
-      so one query_id exchange serves both the score aggregation and the
-      top-k window (2 exchanges -> 1; see score_per_doc). One query id
-      would put every row in one partition that way.
+      -> the relational BM25 plan of plans/query.py. pre_cluster_by_query:
+      the decoded postings have no reusable partitioning, so for several
+      query ids one query_id exchange serves both the score aggregation
+      and the top-k window (2 exchanges -> 1; see score_per_doc);
+      score_queries drops it for a one-query call.
 
     Both routes return the same rows up to the float rounding of the
     per-doc sum (tests/test_block_index.py, driver vs Spark).
@@ -583,5 +583,5 @@ def batch_score(
         k1=k1,
         b=b,
         term_dfs=term_dfs,
-        pre_cluster_by_query=len(texts) > 1,
+        pre_cluster_by_query=True,
     )
