@@ -41,8 +41,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import BLOCK_SIZE, CODEC_VARBYTE
 from ..functions import codec as C
@@ -57,15 +56,10 @@ BLOCK_SCHEMA = (
 # schema (lexicon_from_blocks, both folds of build_index.merge_lexicon,
 # the empty build), and IndexCatalog.lexicon() reads with it instead of
 # inferring it with a Spark job.
-LEXICON_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("df", T.LongType()),
-        T.StructField("nblocks", T.IntegerType()),
-        T.StructField("max_tf", T.LongType()),
-    ]
+ARROW_LEXICON_SCHEMA = pa.schema(
+    [("term", pa.string()), ("df", pa.int64()), ("nblocks", pa.int32()), ("max_tf", pa.int64())]
 )
-ARROW_LEXICON_SCHEMA = to_arrow_schema(LEXICON_SCHEMA)
+LEXICON_SCHEMA = from_arrow_schema(ARROW_LEXICON_SCHEMA)
 
 
 def _mmh3_int32(value: int, seed: int = 42) -> int:

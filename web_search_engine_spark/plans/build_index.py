@@ -372,15 +372,12 @@ def _remove_index(index_dir: str) -> None:
 
 # lexicon fold thresholds: when the commit's block files number at most
 # _LEXICON_DRIVER_MAX_FILES and hold at most _LEXICON_DRIVER_MAX_BLOCKS
-# block rows (a census of parquet FOOTERS, no payload read), the fold
-# runs on the driver in pyarrow instead of as a Spark job. The driver
-# fold was the faster one at every size measured (full rebuild, local[4],
-# 4-vCPU host): 0.16 s wall / 0.3 s CPU against 0.9 s / 1.5-3.2 s for
-# 639k block rows and 100k terms, and 0.6 s / 0.85 s against 2.6-3.4 s /
-# 7-9 s for 5.1M rows and 800k terms, where its peak RSS rose by 280 MB.
-# The Spark fold is kept for inputs the driver should not hold: the row
-# bound caps the driver fold near 0.5 GB. Past the file count the census
-# itself is no longer cheap.
+# block rows (a census of parquet FOOTERS), the fold runs on the driver
+# in pyarrow. It beat the Spark fold at every size measured (full
+# rebuild, local[4], 4 vCPUs): 0.16 s against 0.9 s of wall at 639k
+# block rows, 0.6 s against 2.6-3.4 s at 5.1M, where its RSS rose by
+# 280 MB. The Spark fold is kept for inputs the driver should not hold.
+# Past the file count the census itself is no longer cheap.
 _LEXICON_DRIVER_MAX_BLOCKS = 8_388_608
 _LEXICON_DRIVER_MAX_FILES = 256
 
@@ -419,15 +416,12 @@ def _fold_driver(files: list[str], old_dir: str | None):
     )
 
 
-def _fold_spark(
-    spark: SparkSession, blocks_dir: str, files: list[str], old_dir: str | None
-):
+def _fold_spark(spark: SparkSession, blocks_dir: str, files: list[str], old_dir: str | None):
     """The fold as a Spark frame, the same rows as _fold_driver. It reads
-    the shard directories that hold ``files``, one root path per shard:
-    up to spark.sql.sources.parallelPartitionDiscovery.threshold (32)
-    shards are listed on the driver, more add one listing job, whatever
-    the number of files in them. Both reads name their schema, so
-    neither runs an inference job."""
+    the shard directories of ``files``: their count, not the files',
+    decides whether Spark lists them in a job (past 32, the
+    parallelPartitionDiscovery threshold). Both reads name their schema:
+    no inference job."""
     shard_dirs = sorted({os.path.dirname(f) for f in files})
     blocks = spark.read.schema(BLOCK_SCHEMA).option("basePath", blocks_dir)
     delta = lexicon_from_blocks(blocks.parquet(*shard_dirs))
@@ -445,10 +439,9 @@ def _fold_spark(
 
 @contextmanager
 def _swap_lexicon(index_dir: str):
-    """Yield an empty lexicon_tmp/ to write the new table into, then swap
-    it in for lexicon/: Spark cannot overwrite a path it is reading, and
-    a fold reads the old table. A write that raises swaps nothing. The
-    one place the lexicon is replaced."""
+    """Yield an empty lexicon_tmp/ for the new table, then swap it in for
+    lexicon/ (Spark cannot overwrite a path a fold reads); a write that
+    raises swaps nothing. The one place the lexicon is replaced."""
     lex_dir = os.path.join(index_dir, "lexicon")
     tmp_dir = lex_dir + "_tmp"
     shutil.rmtree(tmp_dir, ignore_errors=True)
@@ -475,9 +468,8 @@ def merge_lexicon(
     docs have no tokens) lists none. A fold with no new files leaves the
     lexicon as it is. Up to _LEXICON_DRIVER_MAX_FILES files and
     _LEXICON_DRIVER_MAX_BLOCKS block rows fold on the driver
-    (_fold_driver, written with pyarrow), larger ones in a Spark job
-    (_fold_spark, written by Spark); both give the same rows, into the
-    directory that _swap_lexicon swaps in.
+    (_fold_driver), larger ones in a Spark job (_fold_spark); both write
+    the same rows into the directory that _swap_lexicon swaps in.
     """
     blocks_dir = os.path.join(index_dir, "blocks")
     lex_dir = os.path.join(index_dir, "lexicon")
@@ -503,10 +495,8 @@ def merge_lexicon(
     with _swap_lexicon(index_dir) as tmp_dir:
         if on_driver:
             os.makedirs(tmp_dir)
-            pq.write_table(
-                _fold_driver(files, old_dir),
-                os.path.join(tmp_dir, f"part-{uuid.uuid4().hex}.parquet"),
-            )
+            part = os.path.join(tmp_dir, f"part-{uuid.uuid4().hex}.parquet")
+            pq.write_table(_fold_driver(files, old_dir), part)
         else:
             _fold_spark(spark, blocks_dir, files, old_dir).write.parquet(tmp_dir)
     return files

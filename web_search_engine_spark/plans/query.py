@@ -287,11 +287,9 @@ def score_queries(
     raw double makes top-k membership at a tie boundary path-dependent
     — at 250k docs the relational and block paths genuinely returned
     the same rounded scores with different rank<->doc assignments. The
-    returned ``score`` column stays raw.
-
-    ``pre_cluster_by_query`` (see score_per_doc) applies to a call with
-    several query ids only: one query id would hash every scored row
-    into one partition, and its top-k needs no per-query window.
+    returned ``score`` column stays raw. ``pre_cluster_by_query`` (see
+    score_per_doc) holds only with several query ids: one would hash
+    every scored row into one partition.
     """
     one_query = len({qid for qid, _ in queries}) == 1
     per_doc = score_per_doc(

@@ -546,10 +546,9 @@ def batch_score(
     - Spark: above the bound, or when pyarrow cannot read the index in
       this process, prune scan on term -> decode blocks (mapInPandas)
       -> the relational BM25 plan of plans/query.py. pre_cluster_by_query:
-      the decoded postings have no reusable partitioning, so for several
-      query ids one query_id exchange serves both the score aggregation
-      and the top-k window (2 exchanges -> 1; see score_per_doc);
-      score_queries drops it for a one-query call.
+      the decoded postings have no reusable partitioning, so one
+      explicit query_id exchange serves both the score aggregation and
+      the top-k window (2 exchanges -> 1; see score_per_doc).
 
     Both routes return the same rows up to the float rounding of the
     per-doc sum (tests/test_block_index.py, driver vs Spark).
